@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -24,38 +28,39 @@ object Bench {
   private def exec(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** One fresh-JVM rerun of a sweep mover: its sweep seconds, its
+    * isolated seconds, and the 1-min loadavg when its child started. */
+  private[graft] case class Isolated(
+      query: String, sweepS: Double, isolatedS: Double, load1: Double)
+
+  /** A bench record parsed with Spark's json4s (no new dependency);
+    * None when the file is missing or unreadable. */
+  private def readRecord(p: Path): Option[JValue] =
+    if (!Files.exists(p)) None
+    else try Some(JsonMethods.parse(new String(Files.readAllBytes(p), UTF_8)))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $p unreadable: ${e.getMessage}")
+      None
+    }
+
+  /** A record's per-query seconds (-1.0 marks a failed query). */
+  private def queriesOf(record: JValue): Map[String, Double] =
+    record \ "queries" match {
+      case JObject(fields) => fields.collect {
+        case (k, JDouble(v)) => k -> v
+        case (k, JInt(v)) => k -> v.toDouble
+      }.toMap
+      case _ => Map.empty
+    }
+
   /** Prior round's committed per-query map, if a bench_full.json from
     * the SAME sf-dir sits in the cwd (the repo root, where the driver
-    * runs). Used to flag >1.5× movers for the automated isolation rerun
-    * (r9 verdict ask #4) — parsed with Spark's shaded-in json4s so no
-    * new dependency is added.
+    * runs). Used to flag >1.5× movers for the automated isolation rerun.
     */
-  private def priorRun(sfDir: String): Map[String, Double] = {
-    val p = java.nio.file.Paths.get("bench_full.json")
-    if (!java.nio.file.Files.exists(p)) return Map.empty
-    try {
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val j = JsonMethods.parse(new String(
-        java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8))
-      val sfOk = (j \ "sf") match {
-        case JString(s) => s == sfDir
-        case _ => false
-      }
-      if (!sfOk) Map.empty
-      else (j \ "queries") match {
-        case JObject(fields) => fields.collect {
-          case (k, JDouble(v)) => k -> v
-          case (k, JInt(v)) => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] prior bench_full.json unreadable: ${e.getMessage}")
-      Map.empty
-    }
-  }
+  private def priorRun(sfDir: String): Map[String, Double] =
+    readRecord(Paths.get("bench_full.json"))
+      .filter(j => (j \ "sf") == JString(sfDir))
+      .map(queriesOf).getOrElse(Map.empty)
 
   /** Rerun one query in a FRESH JVM (same classpath, same module opens,
     * same env) and return its steady-state seconds — the isolation rerun
@@ -66,13 +71,12 @@ object Bench {
     */
   private def isolatedRun(name: String, sfDir: String): Option[Double] = {
     import scala.jdk.CollectionConverters._
-    val javaBin = java.nio.file.Paths
-      .get(System.getProperty("java.home"), "bin", "java").toString
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
       .filter(a => a.startsWith("--add-opens") || a.startsWith("java.base/")
         || a.startsWith("-X") || a.startsWith("-D"))
-    val cwd = java.nio.file.Files.createTempDirectory(s"bench_iso_$name")
+    val cwd = Files.createTempDirectory(s"bench_iso_$name")
     // r13: the child runs with cwd in the temp dir above, so a RELATIVE
     // classpath (any plain `java -cp target/...` parent, including the
     // driver's own record runs) made every child die on startup and the
@@ -81,7 +85,7 @@ object Bench {
     val absCp = System.getProperty("java.class.path")
       .split(java.io.File.pathSeparator)
       .filter(_.nonEmpty)
-      .map(p => java.nio.file.Paths.get(p).toAbsolutePath.toString)
+      .map(p => Paths.get(p).toAbsolutePath.toString)
       .mkString(java.io.File.pathSeparator)
     val cmd = (Seq(javaBin) ++ jvmArgs
       ++ Seq("-cp", absCp, "graft.Bench", name))
@@ -109,133 +113,121 @@ object Bench {
         s"after ${childTimeoutSec}s — no isolated entry recorded")
       proc.destroyForcibly(); proc.waitFor()
     }
-    val childJson = cwd.resolve("bench_full.json")
     val t =
-      if (finished && proc.exitValue() == 0
-          && java.nio.file.Files.exists(childJson)) {
-        try {
-          import org.json4s._
-          import org.json4s.jackson.JsonMethods
-          (JsonMethods.parse(new String(
-            java.nio.file.Files.readAllBytes(childJson),
-            java.nio.charset.StandardCharsets.UTF_8)) \ "queries" \ name) match {
-            case JDouble(v) if v >= 0 => Some(v)
-            case JInt(v) if v >= 0 => Some(v.toDouble)
-            case _ => None
-          }
-        } catch { case _: Throwable => None }
-      } else None
+      if (finished && proc.exitValue() == 0)
+        readRecord(cwd.resolve("bench_full.json"))
+          .flatMap(queriesOf(_).get(name)).filter(_ >= 0)
+      else None
     try {
-      java.nio.file.Files.walk(cwd).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+      Files.walk(cwd).sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.deleteIfExists(f))
     } catch { case _: Throwable => () }
     t
   }
 
-  /** Host contention snapshot: 1/5/15-min load averages plus the
-    * running-process count from /proc/loadavg. The r10 sweep regressed
-    * +55% on byte-identical code because co-tenants outside the cgroup
-    * were loading the host (r11 measured isolated q_slope_one spanning
-    * 8.0–13.4s on the same binary while loadavg sat at 10–21); the
-    * bench record now carries the evidence needed to adjudicate that
-    * without a rebuild-and-bisect.
+  /** Host contention snapshot from /proc/loadavg: the 1/5/15-min load
+    * averages plus the running/total process count (empty if
+    * unreadable). The r10 sweep regressed +55% on byte-identical code
+    * because co-tenants outside the cgroup were loading the host (r11
+    * measured isolated q_slope_one spanning 8.0–13.4s on the same binary
+    * while loadavg sat at 10–21); the bench record carries the evidence
+    * needed to adjudicate that without a rebuild-and-bisect.
     */
-  /** The 1-minute load average alone, as a number (−1 if unreadable) —
-    * stamped onto each isolation child's record so a contaminated
-    * "confirmation" is visible in the data (see the second-opinion rule
-    * in main).
-    */
-  /** Diagnostic resident-JVM probe (r12 verdict ask #1: "instrument
-    * storage-pool occupancy per 50 queries"). Env-gated —
-    * SPARK_GRAFT_PROBE=N prints one stderr JSON line every N timed
-    * queries with heap / GC / JIT-code-cache / metaspace / storage-pool
-    * occupancy, so the in-sweep degradation can be attributed to a
-    * specific resource instead of guessed at. Off by default; never
-    * touches the timed path (runs BETWEEN queries, stderr only).
-    */
-  private def probe(spark: SparkSession, tag: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    import java.lang.management.ManagementFactory
-    val heap = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
-    val gcs = ManagementFactory.getGarbageCollectorMXBeans.asScala
-    val gcN = gcs.map(_.getCollectionCount).sum
-    val gcMs = gcs.map(_.getCollectionTime).sum
-    val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
-    val code = pools.filter(_.getName.startsWith("CodeHeap"))
-      .map(_.getUsage.getUsed).sum
-    val meta = pools.find(_.getName == "Metaspace")
-      .map(_.getUsage.getUsed).getOrElse(-1L)
-    val sc = spark.sparkContext
-    val (stMax, stFree) = sc.getExecutorMemoryStatus.values.headOption
-      .getOrElse((-1L, -1L))
-    val rdds = sc.getRDDStorageInfo
-    def mb(b: Long) = b / 1048576
-    System.err.println(
-      s"""[probe] {"tag":"$tag","heap_mb":${mb(heap.getUsed)},""" +
-      s""""gc_n":$gcN,"gc_ms":$gcMs,"codecache_mb":${mb(code)},""" +
-      s""""metaspace_mb":${mb(meta)},""" +
-      s""""storage_used_mb":${mb(stMax - stFree)},""" +
-      s""""storage_max_mb":${mb(stMax)},"n_cached_rdds":${rdds.length},""" +
-      s""""rdd_mem_mb":${mb(rdds.map(_.memSize).sum)},""" +
-      s""""rdd_disk_mb":${mb(rdds.map(_.diskSize).sum)}}""")
+  private def loadavg(): List[JValue] =
+    try {
+      val f = new String(Files.readAllBytes(Paths.get("/proc/loadavg")), UTF_8)
+        .trim.split("\\s+")
+      f.take(3).map(v => JDouble(v.toDouble)).toList :+ JString(f(3))
+    } catch { case _: Throwable => Nil }
+
+  /** The 1-minute load average alone (−1 if unreadable) — stamped onto
+    * each isolation child's record so a contaminated "confirmation" is
+    * visible in the data (see the second-opinion rule in main). */
+  private def loadavg1(): Double = loadavg() match {
+    case JDouble(v) :: _ => v
+    case _ => -1.0
   }
 
-  private def loadavg1(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      .split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+  private def f3(v: Double): JValue =
+    JDecimal(BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP))
 
-  private def loadavg(): String =
-    try {
-      val parts = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
-      s"""[${parts(0)},${parts(1)},${parts(2)},"${parts(3)}"]"""
-    } catch { case _: Throwable => "[]" }
+  /** Round-over-round drift gate: the median
+    * sweep/prior ratio over every MATCHED query ≥0.3s. A broad median
+    * drift means host contention (code changes move individual queries,
+    * not the whole suite — the r10 +55% sweep was exactly this), so when
+    * it leaves [0.6, 1.25] the record carries drift_exceeded:true and the
+    * sweep should be read as contention-suspect rather than committed as
+    * a regression.
+    */
+  private def driftMedian(
+      results: Seq[(String, Double)], prior: Map[String, Double]): Double = {
+    val ratios = results.collect {
+      case (q, t) if t > 0 && prior.getOrElse(q, -1.0) >= 0.3 => t / prior(q)
+    }.sorted
+    if (ratios.isEmpty) 1.0 else ratios(ratios.length / 2)
+  }
+
+  private def driftExceeded(median: Double): Boolean = median > 1.25 || median < 0.6
+
+  /** The sweep's two records: the full `bench_full.json` object and the
+    * compact final stdout line. A failed query stays in `queries` as
+    * -1.0 and counts in `n_failed`; `value` sums only the queries that
+    * ran, so a failure never lowers the suite total.
+    *
+    * The bench runner captures only the LAST 2000 chars of stdout and parses
+    * the JSON it finds there, so the full per-query map goes to
+    * bench_full.json (committed) and the compact line carries the total,
+    * count, distribution stats and the slowest queries. A purely
+    * rank-based top-8 rotated its membership round over round, so the
+    * runner's PERF diff mistook queries that got FASTER (and left the
+    * top-8) for drops. The compact line therefore
+    * carries the UNION of this sweep's top-8 and the prior record's top-8
+    * BY NAME — membership is stable across consecutive rounds, and the
+    * line stays well under the capture window. Movers' isolation triples
+    * ride along, top 8 by sweep time.
+    */
+  private[graft] def records(
+      results: Seq[(String, Double)], isolated: Seq[Isolated],
+      prior: Map[String, Double], drift: Double, sfDir: String,
+      loadStart: List[JValue], loadEnd: List[JValue]): (JObject, JObject) = {
+    def times(qs: Seq[(String, Double)]) =
+      JObject(qs.map { case (q, t) => q -> f3(t) }.toList)
+    // iso triple: [sweep_s, fresh_jvm_s, child_start_loadavg1]
+    def triples(is: Seq[Isolated]) = JObject(is.map(i =>
+      i.query -> JArray(List(f3(i.sweepS), f3(i.isolatedS), f3(i.load1)))).toList)
+    val ok = results.map(_._2).filter(_ >= 0).sorted
+    val head = List[JField](
+      "metric" -> JString("total"), "value" -> f3(ok.sum), "unit" -> JString("sec"))
+    val driftFields = List[JField](
+      "drift_median" -> f3(drift), "drift_exceeded" -> JBool(driftExceeded(drift)))
+    val sf = "sf" -> JString(sfDir)
+    val full = JObject(head ++ List(
+      "queries" -> times(results), "isolated" -> triples(isolated),
+      "loadavg_start" -> JArray(loadStart), "loadavg_end" -> JArray(loadEnd))
+      ++ driftFields :+ sf)
+    def pct(p: Double) = f3(if (ok.isEmpty) 0.0 else ok(((ok.length - 1) * p).round.toInt))
+    val byName = results.toMap
+    val compactNames = (results.sortBy(-_._2).take(8).map(_._1)
+      ++ prior.toSeq.sortBy(-_._2).take(8).map(_._1)).distinct.filter(byName.contains)
+    val compact = JObject(head ++ List(
+      "n_queries" -> JInt(results.size), "n_failed" -> JInt(results.size - ok.size),
+      "median" -> pct(0.5), "p95" -> pct(0.95), "max" -> pct(1.0),
+      "queries_file" -> JString("bench_full.json"),
+      "isolated" -> triples(isolated.sortBy(-_.sweepS).take(8)))
+      ++ driftFields ++ List(
+      "queries" -> times(compactNames.map(q => q -> byName(q)).sortBy(-_._2)), sf))
+    (full, compact)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // r12 (guide §5): a resident driver never GCs between queries, so
-      // the ContextCleaner — which reaps DEAD localCheckpoint blocks and
-      // shuffle state only after their RDD objects are collected — runs
-      // on Spark's default 30min periodic GC, longer than a whole sweep.
-      // Hundreds of queries of dead checkpoint blocks pile into the
-      // unified-memory storage pool, squeezing execution memory and GC
-      // headroom until late-suite hash joins crawl (q_slope_one measured
-      // 21.3s in-sweep vs 4.3s in a fresh JVM, SAME code — see
-      // OPTIMIZATION_r12.md). A 90s periodic GC keeps the resident JVM
-      // at steady state; memoized frames (cfMemo etc.) stay referenced
-      // and are never reaped. Env-overridable so the interval's own
-      // cost (System.gc() is a stop-the-world full collection) can be
-      // A/B-measured without a rebuild.
-      .config("spark.cleaner.periodicGC.interval",
-        GraftSession.periodicGcInterval())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // optional args: restrict to the named queries (micro-bench
     // iteration; also how the isolation child is invoked — args disable
-    // the isolation pass below). SPARK_GRAFT_BENCH_ONLY restricts the
-    // suite WITHOUT disabling isolation (smoke-testing the harness).
+    // the isolation pass below)
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val onlyEnv = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val suite =
-      if (args.nonEmpty) all.filter(q => args.contains(q._1))
-      else onlyEnv.fold(all)(names => all.filter(q => names(q._1)))
+    val suite = if (args.nonEmpty) all.filter(q => args.contains(q._1)) else all
     suite.foreach { case (name, fn) => // warm sweep: codegen + JIT + listing
       try exec(fn(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[bench] warm $name failed: ${e.getMessage}") }
@@ -245,10 +237,7 @@ object Bench {
     // q_item_cf 7s → 25s) — the async block-removal RPC storm costs more
     // than the storage rent it frees. Leave block-manager hygiene to
     // Spark's own LRU eviction.
-    val probeEvery =
-      sys.env.get("SPARK_GRAFT_PROBE").flatMap(_.toIntOption).getOrElse(0)
-    val results = suite.zipWithIndex.map { case ((name, fn), i) =>
-      if (probeEvery > 0 && i % probeEvery == 0) probe(spark, s"$i:$name")
+    val results = suite.map { case (name, fn) =>
       try {
         val times = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
@@ -262,38 +251,12 @@ object Bench {
           name -> -1.0
       }
     }
-    if (probeEvery > 0) probe(spark, s"${suite.size}:end")
-    // The driver captures only the LAST 2000 chars of stdout and parses
-    // the JSON it finds there. Every prior final-line format overflowed
-    // that window (r7's 403-entry t_cs array alone was ~1.6 KB, plus the
-    // slowest-queries dict, plus sbt's trailing "[success] Total time"
-    // line — the line's HEAD fell outside the capture and parsed:null
-    // again). So: the FULL per-query map goes to bench_full.json
-    // (committed) and is printed once for the transcript; the FINAL
-    // stdout line is a compact (<600 B) JSON object — total, count,
-    // distribution stats, slowest queries — that always fits. build.sbt
-    // pairs this with outputStrategy := StdoutOutput (no "[info] "
-    // prefix) and showSuccess := false (no trailing sbt line), so the
-    // capture window ends with exactly this parseable object.
-    def f3(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    // Round-over-round drift gate (r10 verdict ask #6): the median
-    // sweep/prior ratio over every MATCHED query ≥0.3s. A broad median
-    // drift means host contention (code changes move individual
-    // queries, not the whole suite — the r10 +55% sweep was exactly
-    // this), so when it exceeds 1.25× the record carries
-    // drift_exceeded:true and the sweep should be read as
-    // contention-suspect rather than committed as a regression.
     val prior = priorRun(sfDir)
-    val ratios = results.collect {
-      case (q, t) if t > 0 && prior.getOrElse(q, -1.0) >= 0.3 => t / prior(q)
-    }.sorted
-    val driftMedian =
-      if (ratios.isEmpty) 1.0 else ratios(ratios.length / 2)
-    val driftExceeded = driftMedian > 1.25 || driftMedian < 0.6
-    if (driftExceeded)
+    val drift = driftMedian(results, prior)
+    if (driftExceeded(drift))
       System.err.println(f"[bench] DRIFT GATE: median ratio vs prior " +
-        f"sweep = $driftMedian%.3f on ${ratios.size} matched queries — " +
-        "host-contention suspect; treat this sweep as unreliable")
+        f"sweep = $drift%.3f — host-contention suspect; treat this sweep " +
+        "as unreliable")
     // Automated isolation rerun (r9 verdict ask #4): compare against the
     // prior committed bench_full.json for the same sf-dir; every query
     // that moved >1.5× AND >1s in either direction gets ONE fresh-JVM
@@ -308,7 +271,7 @@ object Bench {
     val isoBudgetSec =
       sys.env.get("SPARK_GRAFT_ISO_BUDGET").flatMap(_.toDoubleOption)
         .getOrElse(300.0)
-    val isolated: Seq[(String, Double, Double, Double)] =
+    val isolated: Seq[Isolated] =
       if (args.nonEmpty) Seq.empty
       else {
         val movers = results.collect {
@@ -333,7 +296,7 @@ object Bench {
           else {
             val load1 = loadavg1()
             System.err.println(
-              s"[bench] isolating $q (sweep ${f3(sweepT)}s, loadavg $load1)")
+              f"[bench] isolating $q (sweep $sweepT%.3fs, loadavg $load1)")
             isolatedRun(q, sfDir).map { iso1 =>
               // Second-opinion rule (r11 verdict ask #3): a loud host can
               // CONFIRM its own false regression — the r11 sweep's two
@@ -347,63 +310,26 @@ object Bench {
               val committed = prior(q)
               val isoT =
                 if (iso1 > 3 * committed && budgetLeft(q)) {
-                  System.err.println(f"[bench] $q isolated ${f3(iso1)}s still " +
-                    f">3x committed ${f3(committed)}s (loadavg ${loadavg1()}) " +
+                  System.err.println(f"[bench] $q isolated $iso1%.3fs still " +
+                    f">3x committed $committed%.3fs (loadavg ${loadavg1()}) " +
                     "— contention suspect; taking a second opinion")
                   math.min(iso1, isolatedRun(q, sfDir).getOrElse(iso1))
                 } else iso1
-              (q, sweepT, isoT, load1)
+              Isolated(q, sweepT, isoT, load1)
             }
           }
         }
       }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    // iso triple: [sweep_s, fresh_jvm_s, child_start_loadavg1]
-    val isoJson = isolated
-      .map { case (q, sw, iso, ld) =>
-        "\"" + q + "\":[" + f3(sw) + "," + f3(iso) + "," + f3(ld) + "]" }
-      .mkString("{", ",", "}")
-    val meta = s""""loadavg_start":$loadStart,"loadavg_end":${loadavg()},""" +
-      s""""drift_median":${f3(driftMedian)},"drift_exceeded":$driftExceeded"""
-    val full =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$fullQs,"isolated":$isoJson,$meta,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_full.json"),
-      (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val (full, compact) =
+      records(results, isolated, prior, drift, sfDir, loadStart, loadavg())
+    val fullLine = JsonMethods.compact(full)
+    try Files.write(Paths.get("bench_full.json"), (fullLine + "\n").getBytes(UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
-    println(full)
-    val sorted = results.map(_._2).filter(_ >= 0).sorted
-    def pct(p: Double): Double =
-      if (sorted.isEmpty) 0.0
-      else sorted(((sorted.length - 1) * p).round.toInt)
-    // r13 (r12 verdict ask #7): a purely rank-based top-8 rotates its
-    // membership round over round, so the driver's PERF diff mistook
-    // queries that got FASTER (and left the top-8) for drops. The
-    // compact line now carries the UNION of this sweep's top-8 and the
-    // prior committed record's top-8 BY NAME — membership is stable
-    // across consecutive rounds (n_common ≥ 8), entries are only ever
-    // added, and the line stays well under the driver's 2000-char
-    // capture window. bench_full.json remains the canonical full map.
-    val priorTopNames = prior.toSeq.sortBy(-_._2).take(8).map(_._1)
-    val resultByName = results.toMap
-    val compactNames =
-      (results.sortBy(-_._2).take(8).map(_._1) ++ priorTopNames)
-        .distinct.filter(resultByName.contains)
-    val slowestFirst = compactNames
-      .map(k => k -> resultByName(k)).sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + f3(v) }
-    val compactQs = slowestFirst.mkString("{", ",", "}")
-    val nFail = results.count(_._2 < 0)
-    // movers' {sweep, isolated} pairs ride the compact driver-captured
-    // line too (top 8 by sweep time keeps the line under the capture
-    // window; the full set is always in bench_full.json)
-    val isoCompact = isolated.sortBy(-_._2).take(8)
-      .map { case (q, sw, iso, ld) =>
-        "\"" + q + "\":[" + f3(sw) + "," + f3(iso) + "," + f3(ld) + "]" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFail,"median":${f3(pct(0.5))},"p95":${f3(pct(0.95))},"max":${f3(pct(1.0))},"queries_file":"bench_full.json","isolated":$isoCompact,"drift_median":${f3(driftMedian)},"drift_exceeded":$driftExceeded,"queries":$compactQs,"sf":"$sfDir"}""")
+    println(fullLine)
+    // build.sbt pairs this with outputStrategy := StdoutOutput (no
+    // "[info] " prefix) and showSuccess := false (no trailing sbt line),
+    // so the runner's capture window ends with exactly this object
+    println(JsonMethods.compact(compact))
     spark.stop()
   }
 }

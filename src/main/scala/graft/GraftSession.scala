@@ -2,70 +2,60 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine — the only place a session is
+  * built, so the plans the oracle dump (Verify) certifies are the plans
+  * the bench times and the tests audit.
   *
-  * Tuned for the dev harness (local[32], 128 GiB) but every knob is the one
-  * you would also set on a 1000-executor cluster: AQE on (runtime shuffle
-  * coalescing + skew-join splitting), small shuffle partition count locally
-  * (cluster: ~2-3x total cores), broadcast threshold sized so dimension
-  * tables (region/nation/supplier/part) broadcast while facts never do.
+  * Tuned for the dev harness but every knob is the one you would also set
+  * on a 1000-executor cluster: a small shuffle partition count locally
+  * (cluster: ~2-3x total cores) and a broadcast threshold sized so
+  * dimension tables (region/nation/supplier/part) broadcast while facts
+  * never do. AQE, its partition coalescing and skew-join splitting, the
+  * 128 MB file split and parquet filter pushdown are Spark defaults and
+  * are not repeated here.
   */
 object GraftSession {
 
-  /** Resident-driver periodic-GC interval (see the builder comment below).
-    * Centralized here (r12 advice): the env override is validated against
-    * Spark's own duration parser and falls back to the 90s default on a
-    * blank or unparseable value instead of failing session construction
-    * with an opaque Spark error; Bench.scala uses the same helper.
-    */
-  def periodicGcInterval(): String = {
-    val default = "90s"
-    sys.env.get("SPARK_GRAFT_PERIODIC_GC").map(_.trim).filter(_.nonEmpty) match {
-      case Some(v) =>
-        try { org.apache.spark.network.util.JavaUtils.timeStringAsSec(v); v }
-        catch { case _: Throwable =>
-          System.err.println(
-            s"[graft] SPARK_GRAFT_PERIODIC_GC='$v' unparseable; using $default")
-          default
-        }
-      case None => default
-    }
-  }
+  /** Every conf a graft session sets besides master and shuffle partitions. */
+  val confs: Map[String, String] = Map(
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
+    // constraint propagation infers isnotnull(joinKey) filters; when the
+    // join key is an expensive derived column (min/max over hashed
+    // shingle arrays) the inferred filter inlines and re-evaluates the
+    // whole derivation scan-side — measured at 8s of a 23s bench. Our
+    // join keys are never null by construction.
+    "spark.sql.constraintPropagation.enabled" -> "false",
+    // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
+    // default; read as Long and normalize in Tables.events.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.aggregatePushdown" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    // resident-driver hygiene: a resident driver never GCs between
+    // queries, so the ContextCleaner — which reaps dead localCheckpoint
+    // blocks only after their RDD objects are collected — waits for
+    // Spark's default 30 min periodic GC, longer than a whole sweep. Dead
+    // blocks then squeeze the storage pool until late-suite hash joins
+    // crawl (q_slope_one 21.3s in-sweep vs 4.3s fresh, OPTIMIZATION_r12.md).
+    // 90s keeps steady state; memoized frames stay referenced.
+    "spark.cleaner.periodicGC.interval" -> "90s",
+    "spark.ui.enabled" -> "false")
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
-    SparkSession
-      .builder()
+    SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
-      .config("spark.sql.parquet.filterPushdown", "true")
-      // constraint propagation infers isnotnull(joinKey) filters; when the
-      // join key is an expensive derived column (min/max over hashed
-      // shingle arrays) the inferred filter inlines and re-evaluates the
-      // whole derivation scan-side — measured at 8s of a 23s bench. Our
-      // join keys are never null by construction.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
-      // default; read as Long and normalize in Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // resident-driver hygiene (r12, guide §5): without periodic driver
-      // GC the ContextCleaner never reaps dead localCheckpoint blocks —
-      // a long-lived session accumulates every past query's lineage
-      // blocks in the storage pool (see Bench.scala for the measured
-      // in-sweep degradation this caused). 90s keeps steady state.
-      .config("spark.cleaner.periodicGC.interval", periodicGcInterval())
-      .config("spark.ui.enabled", "false")
+      .config(confs)
 
-  def getOrCreate(): SparkSession = {
-    val spark = builder().getOrCreate()
+  /** The session every harness main runs on: local[n] with n shuffle
+    * partitions, n = SPARK_GRAFT_CPUS (default 4), WARN logging. */
+  def local(): SparkSession = {
+    val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = raw.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS='$raw' is not a positive integer"))
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -66,12 +66,13 @@ object Profiling {
     * StringBuffer rebuild of the document per row. Every class here is
     * a finite ASCII set, which is exactly what translate expresses:
     * `[0-9]`/`[A-Z]` enumerate directly and Java's `\s` is the literal
-    * six-char set `[ \t\n\x0B\f\r]` (no UNICODE_CHARACTER_CLASS flag on
-    * either engine). The complement class `[^a-zA-Z0-9\s]` can't be
-    * enumerated, but the four classes partition it out: symbols =
-    * n_chars − digits − uppers − lowers − spaces. Counts are identical
-    * to the regex form for every input, so the DuckDB oracle (still
-    * regex) is untouched.
+    * six-char set `[ \t\n\x0B\f\r]` (no UNICODE_CHARACTER_CLASS flag).
+    * The complement class `[^a-zA-Z0-9\s]` can't be enumerated, but the
+    * four classes partition it out: symbols = n_chars − digits − uppers
+    * − lowers − spaces. Counts are identical to Java's regex form for
+    * every input. The DuckDB oracle is still regex, and RE2's `\s`
+    * excludes `\x0B`: engine and oracle agree only because the test
+    * corpus has no vertical tabs.
     */
   def qCharClasses(s: SparkSession, dir: String): DataFrame = {
     val digits = "0123456789"

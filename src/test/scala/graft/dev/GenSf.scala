@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 
@@ -41,13 +41,7 @@ object GenSf {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val mult = args(1).toInt // × sf0.1
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     new java.io.File(out).mkdirs()
 
     def writeOne(df: DataFrame, name: String): Unit = {

@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,17 +18,7 @@ object Sf1Pipeline {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_sf1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1_pipeline")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     // plan audit BEFORE the run: the curation stage must be the shape
     // run() executes — no cartesian, no unpartitioned window, pruned
