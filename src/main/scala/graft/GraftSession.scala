@@ -39,6 +39,15 @@ object GraftSession {
     // crawl (q_slope_one 21.3s in-sweep vs 4.3s fresh, OPTIMIZATION_r12.md).
     // 90s keeps steady state; memoized frames stay referenced.
     "spark.cleaner.periodicGC.interval" -> "90s",
+    // compiled-class cache sized to a resident session's working set:
+    // with Spark's default of 100 entries every warm pass of the
+    // perfbench resident_mix (five queries, 163 classes on first run)
+    // recompiled 64-83 classes. At 200, the smallest round size that
+    // reached it, a warm pass compiles none, bar an occasional 4-class
+    // AQE re-plan of q_cf_coverage that every size shows (CodegenMetrics,
+    // C1 JIT, 4 cores). Static conf: the JVM-wide cache is built once,
+    // so only the first session in the JVM sets its size.
+    "spark.sql.codegen.cache.maxEntries" -> "200",
     "spark.ui.enabled" -> "false")
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =

@@ -6,11 +6,13 @@ import org.apache.spark.sql.SparkSession
   * contract (the r9 verdict's resident-engine question, answered in
   * code).
   *
-  * Several operator families memoize a localCheckpoint'd frame per
+  * Two operator families memoize a localCheckpoint'd frame per
   * (session, sf-dir) — the co-occurrence edge frames
   * ([[graft.operators.Graph]]), the CF table
   * ([[graft.operators.Recsys]]) — because every consumer re-deriving
-  * them measured seconds per query. In this harness the memo lives for
+  * them measured seconds per query. [[graft.sources.Tables.read]]
+  * memoizes each table's inferred schema per (session, path), so a
+  * query's loads run no footer-reading job. In this harness the memo lives for
   * the session and that is correct; a RESIDENT engine needs the other
   * half of the contract: a way to drop them so the corpus can be
   * re-ingested or executor storage reclaimed.

@@ -175,10 +175,12 @@ object Curation {
         // stripping [a-zA-Z0-9 ] leaves exactly the symbol characters;
         // r13: the class is a finite ASCII set, so `translate` (per-char
         // dictionary lookup) replaces the regex scan + string rebuild —
-        // identical count for every input (see qCharClasses)
-        round(length(translate(col("text"),
-            "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 ", ""))
-          / length(col("text")), 4).as("symbol_ratio"),
+        // identical count for every input (see qCharClasses). An empty
+        // document has no ratio: NULL, as in qCharClasses, never 0/0
+        when(length(col("text")) > 0,
+          round(length(translate(col("text"),
+              "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 ", ""))
+            / length(col("text")), 4)).as("symbol_ratio"),
         col("n_stop"))
       .select(col("doc_id"), col("n_tokens"), col("mean_word_len"),
         col("symbol_ratio"), col("n_stop"),
@@ -200,8 +202,8 @@ object Curation {
        |), m AS (
        |  SELECT doc_id, n_tokens,
        |    round(sum_word_len / n_tokens, 4) AS mean_word_len,
-       |    round(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / length(text), 4) AS symbol_ratio,
+       |    CASE WHEN length(text) > 0 THEN round(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
+       |      / length(text), 4) END AS symbol_ratio,
        |    n_stop
        |  FROM c
        |)
@@ -963,12 +965,15 @@ object Curation {
         size(col("toks")).as("n_tokens"),
         round(aggregate(transform(col("toks"), t => length(t)), lit(0),
           (a, x) => a + x) / size(col("toks")), 4).as("mean_word_len"),
-        round(length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", ""))
-          / length(col("text")), 4).as("symbol_ratio"),
+        // an empty document has no symbol ratio (NULL, as in qGopherQuality)
+        when(length(col("text")) > 0,
+          round(length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", ""))
+            / length(col("text")), 4)).as("symbol_ratio"),
         size(filter(col("toks"), t => t.isin(StopWords.map(w => lit(w): Any): _*)))
           .as("n_stop"),
-        (length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", ""))
-          / length(col("text")).cast("double")).as("sym_raw"))
+        when(length(col("text")) > 0,
+          length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", ""))
+            / length(col("text")).cast("double")).as("sym_raw"))
       .withColumn("stop_raw", col("n_stop") / col("n_tokens").cast("double"))
       .withColumn("z",
         lit(-1.0) + lit(0.6) * log(lit(1.0) + col("n_tokens"))
@@ -1014,11 +1019,11 @@ object Curation {
        |    len(toks) AS n_tokens,
        |    round(list_sum(list_transform(toks, x -> length(x)))
        |      / CAST(len(toks) AS DOUBLE), 4) AS mean_word_len,
-       |    round(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / CAST(length(text) AS DOUBLE), 4) AS symbol_ratio,
+       |    CASE WHEN length(text) > 0 THEN round(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
+       |      / CAST(length(text) AS DOUBLE), 4) END AS symbol_ratio,
        |    len(list_filter(toks, x -> x IN ($stopListSql))) AS n_stop,
-       |    length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / CAST(length(text) AS DOUBLE) AS sym_raw,
+       |    CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
+       |      / CAST(length(text) AS DOUBLE) END AS sym_raw,
        |    len(list_filter(toks, x -> x IN ($stopListSql)))
        |      / CAST(len(toks) AS DOUBLE) AS stop_raw
        |  FROM t JOIN k USING (fp)

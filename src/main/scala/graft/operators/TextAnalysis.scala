@@ -318,12 +318,12 @@ object TextAnalysis {
   /** Bigram language-model scoring: train the LM on the corpus itself
     * (bigram/unigram conditional MLE) and score every document by its
     * mean log-probability — the perplexity-style fluency signal quality
-    * pipelines use beside rule filters. Two grouped counts build the
-    * model; scoring joins each document's bigrams to the model on the
-    * bigram key. Both model sides are derived from the corpus, so the
-    * joins carry `shuffle_hash` (the §5 cliff: never let Catalyst
+    * pipelines use beside rule filters. One grouped count plus a window
+    * sum builds the model; scoring joins each document's bigrams to the
+    * model on the bigram key. The model is derived from the corpus, so
+    * the join carries `shuffle_hash` (the §5 cliff: never let Catalyst
     * broadcast-build a derived corpus on the driver). At 100 TB the
-    * model tables persist bucketed by their key and scoring is one
+    * model table persists bucketed by its key and scoring is one
     * co-located join per batch.
     */
   def qBigramLm(s: SparkSession, dir: String): DataFrame =
@@ -335,9 +335,9 @@ object TextAnalysis {
     * MLE bigram model.
     */
   def bigramScores(docs: DataFrame): DataFrame = {
-    // materialized once: the model counts AND the scoring join all read
+    // materialized once: the model count AND the scoring join both read
     // this frame — without the checkpoint the tokenize+explode (the
-    // dominant stage) executes three times
+    // dominant stage) executes twice
     val bg = docs
       .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
@@ -349,11 +349,14 @@ object TextAnalysis {
             element_at(col("toks"), i + 1).as("w1")))).as("b"))
       .select(col("doc_id"), col("b.bigram").as("bigram"), col("b.w1").as("w1"))
       .localCheckpoint()
-    val bigramCounts = bg.groupBy(col("bigram")).agg(count(lit(1)).as("c2"))
-    val unigramCounts = bg.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
+    // tokens hold no space, so a bigram determines its w1 and the unigram
+    // count c1(w1) is Σ c2 over w1's bigrams: one grouped count of bg
+    // yields the whole (bigram, c2, c1) model, and bg is joined once
+    val model = bg.groupBy(col("bigram"), col("w1")).agg(count(lit(1)).as("c2"))
+      .select(col("bigram"), col("c2"),
+        sum(col("c2")).over(Window.partitionBy(col("w1"))).as("c1"))
     bg
-      .join(bigramCounts.hint("shuffle_hash"), Seq("bigram"))
-      .join(unigramCounts.hint("shuffle_hash"), Seq("w1"))
+      .join(model.hint("shuffle_hash"), Seq("bigram"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         graft.functions.NumFns.stableMean(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
 import graft.operators.Curation
+import graft.sources.Tables
 
 /** Streaming corpus curation — the continuous-ingest mirror of the batch
   * [[graft.operators.Curation]] path. A training corpus at 100 TB is not
@@ -99,8 +100,7 @@ object CorpusStream {
     * semantics are reproducible.
     */
   def streamDocumentsFrom(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
-    spark.readStream.schema(raw.schema)
+    spark.readStream.schema(Tables.read(spark, s"$dir/documents.parquet").schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .withColumn("ingest_ts", timestamp_micros(col("doc_id") * 1000000L))
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.Tables
+
 /** Structured Streaming mirror of the batch event operators
   * (Relational.qEventsHourly / qSessionize): the same logical
   * transformations declared over an unbounded source.
@@ -429,9 +431,8 @@ object EventPipeline {
     */
   def streamEventsFrom(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = spark.read.parquet(s"$dir/events.parquet")
     // the file-stream source wants a directory; glob down to the one table
-    val st = spark.readStream.schema(raw.schema)
+    val st = spark.readStream.schema(Tables.read(spark, s"$dir/events.parquet").schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     st.schema("ts").dataType match {
       case LongType =>

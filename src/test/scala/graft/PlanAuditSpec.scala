@@ -542,4 +542,29 @@ class PlanAuditSpec extends SparkSpec {
     val mc = PlanReport.of(SparkEntry.queries("q_median_ci")(spark, sf001))
     assert(mc.cartesianProducts == 0, s"q_median_ci: ${mc.summary}")
   }
+
+  test("q_pagerank_iter derives its edge list once, with no eager checkpoint") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // the edge list feeds the out-degree count and the scatter join; AQE
+    // must run its orders⋈lineitem derivation in one stage (reusing the
+    // distinct exchange for the second consumer), never once per consumer
+    val df = SparkEntry.queries("q_pagerank_iter")(spark, sf001)
+    df.collect()
+    val root = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+    def stages(p: SparkPlan): Seq[QueryStageExec] =
+      p.collect { case s: QueryStageExec => s }.flatMap(s => s +: stages(s.plan))
+    val all = stages(root)
+    val lineitemStages = all.count(_.plan.collectFirst {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.getName == "lineitem.parquet") => f
+    }.nonEmpty)
+    val edgesReused = all.exists(_.plan match {
+      case r: ReusedExchangeExec => r.output.map(_.name) == Seq("c", "su")
+      case _ => false
+    })
+    assert(lineitemStages == 1 || edgesReused,
+      s"lineitem read in $lineitemStages stages and no reused edge exchange:\n$root")
+  }
 }

@@ -56,6 +56,36 @@ class CurationSpec extends SparkSpec {
     }
   }
 
+  /** A documents table of an empty document (doc 1) and one plain
+    * document that passes every Gopher rule and the quality gate (doc 2).
+    */
+  private def emptyAndPlainDocs(): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_doc").toString
+    val text = "the cat sat on a mat today"
+    Seq((1L, "", "en", "src0", 0L), (2L, text, "en", "src0", text.length.toLong))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("gopher quality gives an empty document no symbol ratio and no keep") {
+    val rows = Curation.qGopherQuality(spark, emptyAndPlainDocs()).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r).toMap
+    assert(rows.keySet == Set(1L, 2L))
+    assert(rows(1L).isNullAt(rows(1L).fieldIndex("symbol_ratio")), s"empty doc: ${rows(1L)}")
+    assert(!rows(1L).getAs[Boolean]("keep"), s"empty doc kept: ${rows(1L)}")
+    assert(rows(2L).getAs[Double]("symbol_ratio") == 0.0 && rows(2L).getAs[Boolean]("keep"),
+      s"plain doc: ${rows(2L)}")
+  }
+
+  test("filter funnel drops an empty document at the length stage") {
+    val survivors = Curation.qFilterFunnel(spark, emptyAndPlainDocs()).collect()
+      .map(r => r.getAs[String]("stage") -> r.getAs[Long]("survivors")).toSeq
+    assert(survivors == Seq("input" -> 2L, "dedup" -> 2L, "length" -> 1L,
+      "word_shape" -> 1L, "symbol" -> 1L, "stopword" -> 1L, "quality" -> 1L))
+  }
+
   test("n-gram repetition ratio is a proper fraction of repeated trigrams") {
     val rows = Curation.qNgramRepetition(spark, sf001).collect()
     assert(rows.nonEmpty)
