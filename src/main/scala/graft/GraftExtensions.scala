@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.expressions.{MinHashSigs, RollingHash, VecDot}
+import graft.expressions.{MinHashSigs, RollingHash, VecDot, WsTokens}
 
 /** Session extensions for the graft engine: registers the native
   * expressions as SQL functions. Activate with
@@ -23,26 +23,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // then carries k rows per key instead of every row
     ext.injectOptimizerRule(_ => graft.plans.GroupedTopKRule)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        RollingHash(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"minhash_sigs numPerms must be an int literal, got $other")
-        }
-        MinHashSigs(children.head, n)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VecDot(children(0), children(1))))
+    // the native functions: (SQL name, expression class, builder)
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      ("rolling_hash", classOf[RollingHash], c => RollingHash(c.head)),
+      ("minhash_sigs", classOf[MinHashSigs], c => c(1) match {
+        case Literal(n: Int, _) => MinHashSigs(c.head, n)
+        case other => throw new IllegalArgumentException(
+          s"minhash_sigs numPerms must be an int literal, got $other")
+      }),
+      ("vec_dot", classOf[VecDot], c => VecDot(c(0), c(1))),
+      ("ws_tokens", classOf[WsTokens], c => WsTokens(c.head))
+    ).foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

@@ -14,6 +14,20 @@ import org.apache.spark.sql.functions._
   * (`('0x' || substr(md5(x),1,n))::BIGINT`) can compute it bit-identically,
   * which is what makes the MinHash/SimHash oracles exact rather than
   * statistical.
+  *
+  * Tokenizing is [[graft.expressions.WsTokens]] (`ws_tokens`): Spark's
+  * space-only `trim`, `lower`, then a split on runs of the bytes
+  * `[ \t\n\x0B\f\r]` (Java's `\s`). The oracle twin [[toksSql]] splits
+  * on DuckDB's RE2 `\s`, which lacks `\x0B`, so the two agree only on
+  * text without vertical tabs.
+  *
+  * Per-token paths use no lambda functions: Spark 4.1 evaluates
+  * `transform`, `filter` and `aggregate` interpreted (`CodegenFallback`),
+  * once per array element. Adjacent pairs are [[adjacentPairs]]
+  * (`slice` + `arrays_zip`, both codegen'd). Lambda sites left on token
+  * arrays are follow-ups, among them: [[shingles]], the `Curation`
+  * trigram sort, the `PipelineOps` n-grams, the `Dedup` spans, and the
+  * stopword `filter` and word-length `aggregate` of the quality rules.
   */
 object TextFns {
 
@@ -23,7 +37,15 @@ object TextFns {
   val MinHashPrime = 1000000007L
 
   /** lower/trim/whitespace-split token sequence (duplicates kept). */
-  def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")
+  def tokens(text: Column): Column = call_function("ws_tokens", text)
+
+  /** (w1, w2) struct of every adjacent token pair, in order; the struct
+    * fields are named "0" and "1". Callers must filter size >= 2 tokens.
+    */
+  def adjacentPairs(toks: Column): Column = {
+    val n = size(toks) - 1
+    arrays_zip(slice(toks, lit(1), n), slice(toks, lit(2), n))
+  }
 
   /** distinct token set. */
   def tokenSet(text: Column): Column = array_distinct(tokens(text))
@@ -63,7 +85,10 @@ object TextFns {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
-  /** Canonical whitespace-normalized form used for fingerprinting. */
-  def normalized(text: Column): Column =
-    regexp_replace(lower(trim(text)), "\\s+", " ")
+  /** Canonical whitespace-normalized form used for fingerprinting: every
+    * whitespace run becomes one space, as
+    * `regexp_replace(lower(trim(text)), "\\s+", " ")` gives. NULL stays
+    * NULL, which `concat_ws` would turn into "".
+    */
+  def normalized(text: Column): Column = array_join(tokens(text), " ")
 }

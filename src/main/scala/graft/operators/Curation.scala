@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -172,15 +172,7 @@ object Curation {
           .as("n_stop"))
       .select(col("doc_id"), col("n_tokens"),
         round(col("sum_word_len") / col("n_tokens"), 4).as("mean_word_len"),
-        // stripping [a-zA-Z0-9 ] leaves exactly the symbol characters;
-        // r13: the class is a finite ASCII set, so `translate` (per-char
-        // dictionary lookup) replaces the regex scan + string rebuild —
-        // identical count for every input (see qCharClasses). An empty
-        // document has no ratio: NULL, as in qCharClasses, never 0/0
-        when(length(col("text")) > 0,
-          round(length(translate(col("text"),
-              "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 ", ""))
-            / length(col("text")), 4)).as("symbol_ratio"),
+        round(symbolRatio(col("text")), 4).as("symbol_ratio"),
         col("n_stop"))
       .select(col("doc_id"), col("n_tokens"), col("mean_word_len"),
         col("symbol_ratio"), col("n_stop"),
@@ -550,6 +542,19 @@ object Curation {
         col("keep"))
       .orderBy(col("doc_id"))
 
+  /** Gopher's symbol ratio: the share of characters outside
+    * [a-zA-Z0-9 ]. The class is a finite ASCII set, so `translate` (a
+    * per-char dictionary lookup) deletes it instead of a regex scan and
+    * string rebuild, with the identical count for every input (see
+    * Profiling.qCharClasses). An empty document has no ratio: NULL, as
+    * in qCharClasses, never 0/0 — so its z, score and keep are NULL too.
+    */
+  private def symbolRatio(text: Column): Column =
+    when(length(text) > 0,
+      length(translate(text,
+        "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 ", ""))
+        / length(text).cast("double"))
+
   /** Appends the quality columns (n_tokens, z, score, keep) scan-side —
     * the SINGLE definition of the classifier, executed unchanged by the
     * batch query above and by [[graft.streaming.CorpusStream]]: in this
@@ -562,9 +567,7 @@ object Curation {
       .withColumn("stop_ratio",
         size(filter(col("toks"), t => t.isin(StopWords.map(w => lit(w): Any): _*)))
           / col("n_tokens").cast("double"))
-      .withColumn("symbol_ratio",
-        length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", ""))
-          / length(col("text")).cast("double"))
+      .withColumn("symbol_ratio", symbolRatio(col("text")))
       .withColumn("z",
         lit(-1.0) + lit(0.6) * log(lit(1.0) + col("n_tokens"))
           + lit(2.0) * col("stop_ratio") - lit(4.0) * col("symbol_ratio"))
@@ -581,8 +584,8 @@ object Curation {
     s"""SELECT doc_id, len(toks) AS n_tokens,
        |    len(list_filter(toks, x -> x IN ($stopListSql)))
        |      / CAST(len(toks) AS DOUBLE) AS stop_ratio,
-       |    length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / CAST(length(text) AS DOUBLE) AS symbol_ratio
+       |    CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
+       |      / CAST(length(text) AS DOUBLE) END AS symbol_ratio
        |  FROM (SELECT doc_id, text, $toksSql AS toks FROM documents) tq""".stripMargin
 
   /** SQL twin of [[withQuality]]'s linear form z, over the columns of
@@ -636,8 +639,8 @@ object Curation {
        |    len(toks) AS n_tokens,
        |    len(list_filter(toks, x -> x IN ($stopListSql)))
        |      / CAST(len(toks) AS DOUBLE) AS stop_ratio,
-       |    length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / CAST(length(text) AS DOUBLE) AS symbol_ratio
+       |    CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
+       |      / CAST(length(text) AS DOUBLE) END AS symbol_ratio
        |  FROM t
        |),
        |z AS (
@@ -965,15 +968,10 @@ object Curation {
         size(col("toks")).as("n_tokens"),
         round(aggregate(transform(col("toks"), t => length(t)), lit(0),
           (a, x) => a + x) / size(col("toks")), 4).as("mean_word_len"),
-        // an empty document has no symbol ratio (NULL, as in qGopherQuality)
-        when(length(col("text")) > 0,
-          round(length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", ""))
-            / length(col("text")), 4)).as("symbol_ratio"),
+        round(symbolRatio(col("text")), 4).as("symbol_ratio"),
         size(filter(col("toks"), t => t.isin(StopWords.map(w => lit(w): Any): _*)))
           .as("n_stop"),
-        when(length(col("text")) > 0,
-          length(regexp_replace(col("text"), "[a-zA-Z0-9 ]", ""))
-            / length(col("text")).cast("double")).as("sym_raw"))
+        symbolRatio(col("text")).as("sym_raw"))
       .withColumn("stop_raw", col("n_stop") / col("n_tokens").cast("double"))
       .withColumn("z",
         lit(-1.0) + lit(0.6) * log(lit(1.0) + col("n_tokens"))

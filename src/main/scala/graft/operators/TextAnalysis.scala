@@ -336,18 +336,14 @@ object TextAnalysis {
     */
   def bigramScores(docs: DataFrame): DataFrame = {
     // materialized once: the model count AND the scoring join both read
-    // this frame — without the checkpoint the tokenize+explode (the
-    // dominant stage) executes twice
+    // this frame — without the checkpoint the tokenize+explode executes
+    // twice
     val bg = docs
       .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(
-        transform(sequence(lit(0), size(col("toks")) - 2), i =>
-          struct(
-            concat_ws(" ", element_at(col("toks"), i + 1),
-              element_at(col("toks"), i + 2)).as("bigram"),
-            element_at(col("toks"), i + 1).as("w1")))).as("b"))
-      .select(col("doc_id"), col("b.bigram").as("bigram"), col("b.w1").as("w1"))
+      .select(col("doc_id"), explode(TextFns.adjacentPairs(col("toks"))).as("b"))
+      .select(col("doc_id"), concat_ws(" ", col("b.0"), col("b.1")).as("bigram"),
+        col("b.0").as("w1"))
       .localCheckpoint()
     // tokens hold no space, so a bigram determines its w1 and the unigram
     // count c1(w1) is Σ c2 over w1's bigrams: one grouped count of bg
@@ -1145,11 +1141,8 @@ object TextAnalysis {
     val bg = docs
       .select(TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
-      .select(explode(
-        transform(sequence(lit(0), size(col("toks")) - 2), i =>
-          struct(element_at(col("toks"), i + 1).as("w1"),
-            element_at(col("toks"), i + 2).as("w2")))).as("b"))
-      .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
+      .select(explode(TextFns.adjacentPairs(col("toks"))).as("b"))
+      .select(col("b.0").as("w1"), col("b.1").as("w2"))
       .localCheckpoint() // three marginal aggregates share it
     val pair = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
     val uni = bg.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
@@ -1247,11 +1240,8 @@ object TextAnalysis {
           % CondEntropySampleMod === 0).cast("long").as("samp"),
         TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
-      .select(col("samp"), explode(
-        transform(sequence(lit(0), size(col("toks")) - 2), i =>
-          struct(element_at(col("toks"), i + 1).as("w1"),
-            element_at(col("toks"), i + 2).as("w2")))).as("b"))
-      .select(col("b.w1").as("w1"), col("b.w2").as("w2"), col("samp"))
+      .select(col("samp"), explode(TextFns.adjacentPairs(col("toks"))).as("b"))
+      .select(col("b.0").as("w1"), col("b.1").as("w2"), col("samp"))
       .localCheckpoint() // three marginal aggregates share it
     val pair = bg.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c2"), sum(col("samp")).as("c2s"))
@@ -1953,11 +1943,8 @@ object TextAnalysis {
     val bg = Tables.documents(s, dir)
       .select(TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
-      .select(explode(
-        transform(sequence(lit(1), size(col("toks")) - 1), i =>
-          struct(element_at(col("toks"), i).as("w1"),
-            element_at(col("toks"), i + 1).as("w2")))).as("b"))
-      .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
+      .select(explode(TextFns.adjacentPairs(col("toks"))).as("b"))
+      .select(col("b.0").as("w1"), col("b.1").as("w2"))
       .localCheckpoint()
     val pairC = bg.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))

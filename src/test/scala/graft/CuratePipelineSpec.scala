@@ -53,6 +53,23 @@ class CuratePipelineSpec extends SparkSpec {
     }
   }
 
+  test("an empty and a whitespace-only document are dropped, not a failed run") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_blank").toString
+    val good = (1L to 6L).map(i => (i,
+      s"the cat and the dog ran to the park $i and sat in the sun with a friend", "en"))
+    val texts = good ++ Seq((7L, "", "en"), (8L, " \t\n ", "en"))
+    texts.map { case (id, t, lang) => (id, t, lang, s"src$id", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val out = java.nio.file.Files.createTempDirectory("graft_pipe_blank_out").toString
+    val s = CuratePipeline.run(spark, dir, out)
+    assert(s.nInput == 8L && s.nWritten > 0L)
+    val ids = spark.read.parquet(s"$out/corpus").select(col("doc_id"))
+      .collect().map(_.getLong(0)).toSet
+    assert(ids.nonEmpty && ids.subsetOf((1L to 6L).toSet), ids)
+  }
+
   test("the pipeline handles an empty corpus without erroring") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_pipe_empty").toString
