@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   *
   * Tokenizing is [[graft.expressions.WsTokens]] (`ws_tokens`): Spark's
   * space-only `trim`, `lower`, then a split on runs of the bytes
-  * `[ \t\n\x0B\f\r]` (Java's `\s`). The oracle twin [[toksSql]] splits
-  * on DuckDB's RE2 `\s`, which lacks `\x0B`, so the two agree only on
-  * text without vertical tabs.
+  * `[ \t\n\x0B\f\r]` (Java's `\s`). The oracle twins [[toksSql]] and
+  * [[normalizedSql]] split on the same byte class, [[wsClassSql]], not on
+  * DuckDB's RE2 `\s`, which lacks `\x0B`.
   *
   * Per-token paths use no lambda functions: Spark 4.1 evaluates
   * `transform`, `filter` and `aggregate` interpreted (`CodegenFallback`),
@@ -27,7 +27,9 @@ import org.apache.spark.sql.functions._
   * (`slice` + `arrays_zip`, both codegen'd). Lambda sites left on token
   * arrays are follow-ups, among them: [[shingles]], the `Curation`
   * trigram sort, the `PipelineOps` n-grams, the `Dedup` spans, and the
-  * stopword `filter` and word-length `aggregate` of the quality rules.
+  * word-length `aggregate` of the quality rules. The stopword `filter` of
+  * every quality feature is one site, [[stopCount]], so a native count
+  * kernel replaces it in one line.
   */
 object TextFns {
 
@@ -38,6 +40,24 @@ object TextFns {
 
   /** lower/trim/whitespace-split token sequence (duplicates kept). */
   def tokens(text: Column): Column = call_function("ws_tokens", text)
+
+  /** English stopwords of the quality rules, the quality classifier and
+    * the language heuristics. Counted only through [[stopCount]] and
+    * [[stopCountSql]], never spelled out at a call site.
+    */
+  val StopWords = Seq("the", "a", "of", "and", "to")
+
+  /** Number of tokens of `toks` that are in `words`, duplicates counted. */
+  def stopCount(toks: Column, words: Seq[String] = StopWords): Column =
+    size(filter(toks, t => t.isin(words.map(w => lit(w): Any): _*)))
+
+  /** floor(scale · stopCount / size) as a bigint: a non-empty token
+    * array's stopword share as an integer score out of `scale`. Callers
+    * drop empty arrays (0/0). The multiply is 64-bit: a 32-bit one
+    * overflows past 2^31 / scale stopwords, an ANSI-mode error.
+    */
+  def stopScore(toks: Column, scale: Long): Column =
+    floor(lit(scale) * stopCount(toks) / size(toks))
 
   /** (w1, w2) struct of every adjacent token pair, in order; the struct
     * fields are named "0" and "1". Callers must filter size >= 2 tokens.
@@ -69,8 +89,18 @@ object TextFns {
   /** DuckDB SQL twins of the primitives above, spliced into the oracle
     * strings. ONE definition per contract: these are parity-critical —
     * a drifted copy in an operator file is a silent oracle divergence.
+    * [[wsClassSql]] is the byte set `ws_tokens` splits on, as an RE2
+    * class; RE2's own `\s` lacks `\x0B`.
     */
-  val toksSql = "regexp_split_to_array(lower(trim(text)), '\\s+')"
+  val wsClassSql = "[ \\t\\n\\x0B\\f\\r]"
+  val toksSql = s"regexp_split_to_array(lower(trim(text)), '$wsClassSql+')"
+  def normalizedSql(text: String): String =
+    s"regexp_replace(lower(trim($text)), '$wsClassSql+', ' ', 'g')"
+  /** [[stopCount]] and [[stopScore]] over the column `toks`. */
+  def stopCountSql(words: Seq[String] = StopWords): String =
+    s"len(list_filter(toks, x -> x IN (${words.map(w => s"'$w'").mkString(", ")})))"
+  def stopScoreSql(scale: Long): String =
+    s"CAST(floor($scale * ${stopCountSql()} / len(toks)) AS BIGINT)"
   def hash28Sql(x: String): String = s"('0x' || substr(md5($x), 1, 7))::BIGINT"
   def hash60Sql(x: String): String = s"('0x' || substr(md5($x), 1, 15))::BIGINT"
 
@@ -88,7 +118,8 @@ object TextFns {
   /** Canonical whitespace-normalized form used for fingerprinting: every
     * whitespace run becomes one space, as
     * `regexp_replace(lower(trim(text)), "\\s+", " ")` gives. NULL stays
-    * NULL, which `concat_ws` would turn into "".
+    * NULL, which `concat_ws` would turn into "". Oracle twin:
+    * [[normalizedSql]].
     */
   def normalized(text: Column): Column = array_join(tokens(text), " ")
 }

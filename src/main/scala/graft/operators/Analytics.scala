@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.NumFns
+import graft.functions.{NumFns, TextFns}
 import graft.sources.Tables
 
 /** Second-tier analytic operators (SURVEY.md §2): multi-level rollups,
@@ -316,15 +316,15 @@ object Analytics {
     */
   def qExplodeWordcount(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .select(explode(graft.functions.TextFns.tokens(col("text"))).as("word"))
+      .select(explode(TextFns.tokens(col("text"))).as("word"))
       .groupBy(col("word"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("word"))
       .limit(50)
 
   val qExplodeWordcountOracle: String =
-    """SELECT word, count(*) AS n
-      |FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS word
+    s"""SELECT word, count(*) AS n
+      |FROM (SELECT unnest(${TextFns.toksSql}) AS word
       |      FROM documents) t
       |GROUP BY word
       |ORDER BY n DESC, word

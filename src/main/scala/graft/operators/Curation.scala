@@ -22,13 +22,6 @@ object Curation {
   private val toksSql = TextFns.toksSql
   private def hash28Sql(x: String) = TextFns.hash28Sql(x)
 
-  /** Stopword set shared by the Gopher rules and the quality classifier.
-    * Spliced into the oracle SQL below (never hand-copied) so the two
-    * engines cannot silently drift.
-    */
-  val StopWords = Seq("the", "a", "of", "and", "to")
-  val stopListSql: String = StopWords.map(w => s"'$w'").mkString(", ")
-
   /** Email-matching regex shared by [[qTextRedact]], its oracle, and the
     * production scrub in [[graft.CuratePipeline]] — one definition, no
     * drifted copies. The pattern is POSIX-basic on purpose: identical
@@ -168,8 +161,7 @@ object Curation {
         size(col("toks")).as("n_tokens"),
         aggregate(transform(col("toks"), t => length(t)), lit(0), (a, x) => a + x)
           .as("sum_word_len"),
-        size(filter(col("toks"), t => t.isin(StopWords.map(w => lit(w): Any): _*)))
-          .as("n_stop"))
+        TextFns.stopCount(col("toks")).as("n_stop"))
       .select(col("doc_id"), col("n_tokens"),
         round(col("sum_word_len") / col("n_tokens"), 4).as("mean_word_len"),
         round(symbolRatio(col("text")), 4).as("symbol_ratio"),
@@ -189,13 +181,12 @@ object Curation {
        |  SELECT doc_id, text,
        |    len(toks) AS n_tokens,
        |    list_sum(list_transform(toks, x -> length(x))) AS sum_word_len,
-       |    len(list_filter(toks, x -> x IN ($stopListSql))) AS n_stop
+       |    ${TextFns.stopCountSql()} AS n_stop
        |  FROM t
        |), m AS (
        |  SELECT doc_id, n_tokens,
        |    round(sum_word_len / n_tokens, 4) AS mean_word_len,
-       |    CASE WHEN length(text) > 0 THEN round(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / length(text), 4) END AS symbol_ratio,
+       |    round(${symbolRatioSql("text")}, 4) AS symbol_ratio,
        |    n_stop
        |  FROM c
        |)
@@ -555,6 +546,17 @@ object Curation {
         "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 ", ""))
         / length(text).cast("double"))
 
+  /** SQL twin of [[symbolRatio]]: the regex form of the same class. */
+  private def symbolRatioSql(text: String): String =
+    s"CASE WHEN length($text) > 0 THEN length(regexp_replace($text, '[a-zA-Z0-9 ]', '', 'g'))" +
+      s" / CAST(length($text) AS DOUBLE) END"
+
+  /** The classifier's linear form over its three features; the oracle
+    * twin is [[qualityZSql]].
+    */
+  private def qualityZ(nTokens: Column, stopRatio: Column, symbolRatio: Column): Column =
+    lit(-1.0) + lit(0.6) * log(lit(1.0) + nTokens) + lit(2.0) * stopRatio - lit(4.0) * symbolRatio
+
   /** Appends the quality columns (n_tokens, z, score, keep) scan-side —
     * the SINGLE definition of the classifier, executed unchanged by the
     * batch query above and by [[graft.streaming.CorpusStream]]: in this
@@ -564,13 +566,9 @@ object Curation {
     df
       .withColumn("toks", TextFns.tokens(col("text")))
       .withColumn("n_tokens", size(col("toks")))
-      .withColumn("stop_ratio",
-        size(filter(col("toks"), t => t.isin(StopWords.map(w => lit(w): Any): _*)))
-          / col("n_tokens").cast("double"))
+      .withColumn("stop_ratio", TextFns.stopCount(col("toks")) / col("n_tokens").cast("double"))
       .withColumn("symbol_ratio", symbolRatio(col("text")))
-      .withColumn("z",
-        lit(-1.0) + lit(0.6) * log(lit(1.0) + col("n_tokens"))
-          + lit(2.0) * col("stop_ratio") - lit(4.0) * col("symbol_ratio"))
+      .withColumn("z", qualityZ(col("n_tokens"), col("stop_ratio"), col("symbol_ratio")))
       .withColumn("score", lit(1.0) / (lit(1.0) + exp(-col("z"))))
       .withColumn("keep", col("z") > 0)
       .drop("toks", "stop_ratio", "symbol_ratio")
@@ -582,10 +580,8 @@ object Curation {
     */
   val qualityFeaturesSql: String =
     s"""SELECT doc_id, len(toks) AS n_tokens,
-       |    len(list_filter(toks, x -> x IN ($stopListSql)))
-       |      / CAST(len(toks) AS DOUBLE) AS stop_ratio,
-       |    CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / CAST(length(text) AS DOUBLE) END AS symbol_ratio
+       |    ${TextFns.stopCountSql()} / CAST(len(toks) AS DOUBLE) AS stop_ratio,
+       |    ${symbolRatioSql("text")} AS symbol_ratio
        |  FROM (SELECT doc_id, text, $toksSql AS toks FROM documents) tq""".stripMargin
 
   /** SQL twin of [[withQuality]]'s linear form z, over the columns of
@@ -633,20 +629,12 @@ object Curation {
   }
 
   val qSourceCapsOracle: String =
-    s"""WITH t AS (SELECT doc_id, source, text, $toksSql AS toks FROM documents),
-       |f AS (
-       |  SELECT doc_id, source,
-       |    len(toks) AS n_tokens,
-       |    len(list_filter(toks, x -> x IN ($stopListSql)))
-       |      / CAST(len(toks) AS DOUBLE) AS stop_ratio,
-       |    CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / CAST(length(text) AS DOUBLE) END AS symbol_ratio
-       |  FROM t
+    s"""WITH f AS (
+       |  $qualityFeaturesSql
        |),
        |z AS (
-       |  SELECT doc_id, source,
-       |    -1.0 + 0.6 * ln(1.0 + n_tokens) + 2.0 * stop_ratio - 4.0 * symbol_ratio AS z
-       |  FROM f
+       |  SELECT f.doc_id, d.source, $qualityZSql AS z
+       |  FROM f JOIN documents d ON f.doc_id = d.doc_id
        |),
        |r AS (
        |  SELECT doc_id, source, z,
@@ -969,13 +957,10 @@ object Curation {
         round(aggregate(transform(col("toks"), t => length(t)), lit(0),
           (a, x) => a + x) / size(col("toks")), 4).as("mean_word_len"),
         round(symbolRatio(col("text")), 4).as("symbol_ratio"),
-        size(filter(col("toks"), t => t.isin(StopWords.map(w => lit(w): Any): _*)))
-          .as("n_stop"),
+        TextFns.stopCount(col("toks")).as("n_stop"),
         symbolRatio(col("text")).as("sym_raw"))
       .withColumn("stop_raw", col("n_stop") / col("n_tokens").cast("double"))
-      .withColumn("z",
-        lit(-1.0) + lit(0.6) * log(lit(1.0) + col("n_tokens"))
-          + lit(2.0) * col("stop_raw") - lit(4.0) * col("sym_raw"))
+      .withColumn("z", qualityZ(col("n_tokens"), col("stop_raw"), col("sym_raw")))
       .withColumn("p2", col("f1") && col("n_tokens").between(5, 1000))
       .withColumn("p3", col("p2") && col("mean_word_len").between(2.0, 10.0))
       .withColumn("p4", col("p3") && col("symbol_ratio") <= 0.1)
@@ -1006,25 +991,23 @@ object Curation {
 
   val qFilterFunnelOracle: String =
     s"""WITH t AS (
-       |  SELECT doc_id, text, $toksSql AS toks,
-       |    md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
+       |  SELECT doc_id, $toksSql AS toks, md5(${TextFns.normalizedSql("text")}) AS fp
        |  FROM documents
        |),
        |k AS (SELECT fp, min(doc_id) AS keeper FROM t GROUP BY fp),
+       |q AS (
+       |  SELECT doc_id, symbol_ratio, $qualityZSql AS z FROM ($qualityFeaturesSql) fq
+       |),
        |f AS (
        |  SELECT t.doc_id,
        |    t.doc_id = k.keeper AS f1,
        |    len(toks) AS n_tokens,
        |    round(list_sum(list_transform(toks, x -> length(x)))
        |      / CAST(len(toks) AS DOUBLE), 4) AS mean_word_len,
-       |    CASE WHEN length(text) > 0 THEN round(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / CAST(length(text) AS DOUBLE), 4) END AS symbol_ratio,
-       |    len(list_filter(toks, x -> x IN ($stopListSql))) AS n_stop,
-       |    CASE WHEN length(text) > 0 THEN length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
-       |      / CAST(length(text) AS DOUBLE) END AS sym_raw,
-       |    len(list_filter(toks, x -> x IN ($stopListSql)))
-       |      / CAST(len(toks) AS DOUBLE) AS stop_raw
-       |  FROM t JOIN k USING (fp)
+       |    round(q.symbol_ratio, 4) AS symbol_ratio,
+       |    ${TextFns.stopCountSql()} AS n_stop,
+       |    q.z
+       |  FROM t JOIN k USING (fp) JOIN q USING (doc_id)
        |),
        |p AS (
        |  SELECT f1,
@@ -1039,9 +1022,7 @@ object Curation {
        |      AND symbol_ratio <= 0.1 AND n_stop >= 1 AS p5,
        |    f1 AND n_tokens BETWEEN 5 AND 1000
        |      AND mean_word_len BETWEEN 2.0 AND 10.0
-       |      AND symbol_ratio <= 0.1 AND n_stop >= 1
-       |      AND (-1.0 + 0.6 * ln(1.0 + n_tokens)
-       |           + 2.0 * stop_raw - 4.0 * sym_raw) > 0 AS p6
+       |      AND symbol_ratio <= 0.1 AND n_stop >= 1 AND z > 0 AS p6
        |  FROM f
        |),
        |a AS (
@@ -1381,9 +1362,7 @@ object Curation {
     val scored = Tables.documents(s, dir)
       .select(TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
-      .select(floor(lit(1000L) * size(filter(col("toks"),
-        t => t.isin(StopWords.map(w => lit(w): Any): _*)))
-        / size(col("toks"))).as("sq"))
+      .select(TextFns.stopScore(col("toks"), 1000).as("sq"))
     val cells = scored.groupBy(col("sq")).agg(count(lit(1)).as("c"))
     val tot = cells.agg(sum(col("c")).as("n"),
       sum(col("sq").cast(D0) * col("c")).as("ssum"))
@@ -1411,8 +1390,7 @@ object Curation {
        |  SELECT ${TextFns.toksSql} AS toks FROM documents
        |),
        |sc AS (
-       |  SELECT CAST(floor(1000 * len(list_filter(toks,
-       |      x -> x IN ($stopListSql))) / len(toks)) AS BIGINT) AS sq
+       |  SELECT ${TextFns.stopScoreSql(1000)} AS sq
        |  FROM t WHERE len(toks) > 0
        |),
        |cells AS (SELECT sq, count(*) AS c FROM sc GROUP BY sq),

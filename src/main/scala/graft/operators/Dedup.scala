@@ -105,7 +105,7 @@ object Dedup {
       .orderBy(col("fingerprint"))
 
   val qDedupExactOracle: String =
-    """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
+    s"""SELECT md5(${TextFns.normalizedSql("text")}) AS fingerprint,
       |  min(doc_id) AS keeper_id,
       |  count(*) AS n_copies
       |FROM documents
@@ -758,7 +758,7 @@ object Dedup {
 
   val qIncrementalDedupOracle: String =
     s"""WITH fp AS (
-       |  SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
+       |  SELECT doc_id, md5(${TextFns.normalizedSql("text")}) AS fingerprint
        |  FROM documents
        |)
        |SELECT doc_id, fingerprint

@@ -20,6 +20,25 @@ object Evaluation {
 
   private val D12 = DecimalType(38, 12)
 
+  /** (score, pos) per non-empty document, the scored frame of the
+    * stopword-share language classifier: score is
+    * [[TextFns.stopScore]] out of `scale`, pos is 1 for English. Empty
+    * documents have no score (0/0) and are dropped.
+    */
+  private def scoredDocs(s: SparkSession, dir: String, scale: Long): DataFrame =
+    Tables.documents(s, dir)
+      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) > 0)
+      .select(TextFns.stopScore(col("toks"), scale).as("score"),
+        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+
+  /** SQL twin of [[scoredDocs]], the body of a CTE. */
+  private def scoredDocsSql(scale: Long): String =
+    s"""SELECT ${TextFns.stopScoreSql(scale)} AS score,
+       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
+       |  FROM (SELECT lang, ${TextFns.toksSql} AS toks FROM documents) t
+       |  WHERE len(toks) > 0""".stripMargin
+
   /** Exact ROC AUC of the stopword-ratio signal as an English-language
     * classifier — the Mann-Whitney rank-sum form
     * AUC = (Σ ranks⁺ − P(P+1)/2) / (P·N) with average ranks over ties.
@@ -35,14 +54,7 @@ object Evaluation {
     */
   def qAuc(s: SparkSession, dir: String): DataFrame = {
     val D1 = DecimalType(38, 1)
-    val scored = Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0) // empty docs have no score (0/0)
-      .select(
-        floor(lit(1000) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))).as("score"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+    val scored = scoredDocs(s, dir, 1000)
     val cells = scored.groupBy(col("score"))
       .agg(count(lit(1)).as("n"), sum(col("pos")).as("np"))
     // running count of rows ranked strictly below this cell — a window
@@ -67,16 +79,7 @@ object Evaluation {
   }
 
   val qAucOracle: String =
-    s"""WITH t AS (
-       |  SELECT lang, ${TextFns.toksSql} AS toks FROM documents
-       |),
-       |sc AS (
-       |  SELECT CAST(floor(1000 * len(list_filter(toks,
-       |      x -> x IN (${Curation.stopListSql}))) / len(toks)) AS BIGINT)
-       |    AS score,
-       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-       |  FROM t WHERE len(toks) > 0
-       |),
+    s"""WITH sc AS (${scoredDocsSql(1000)}),
        |cells AS (
        |  SELECT score, count(*) AS n, sum(pos) AS np FROM sc GROUP BY score
        |),
@@ -166,14 +169,7 @@ object Evaluation {
     */
   def qCalibration(s: SparkSession, dir: String): DataFrame = {
     val D1 = DecimalType(38, 12)
-    val scored = Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .select(
-        floor(lit(1000) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))).as("score"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+    val scored = scoredDocs(s, dir, 1000)
     val bins = scored
       .select(least(floor(col("score") / 100), lit(9L)).as(
         "bin"), col("score"), col("pos"))
@@ -201,16 +197,7 @@ object Evaluation {
   }
 
   val qCalibrationOracle: String =
-    s"""WITH t AS (
-       |  SELECT lang, ${TextFns.toksSql} AS toks FROM documents
-       |),
-       |sc AS (
-       |  SELECT CAST(floor(1000 * len(list_filter(toks,
-       |      x -> x IN (${Curation.stopListSql}))) / len(toks)) AS BIGINT)
-       |    AS score,
-       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-       |  FROM t WHERE len(toks) > 0
-       |),
+    s"""WITH sc AS (${scoredDocsSql(1000)}),
        |bins AS (
        |  SELECT least(CAST(floor(score / 100) AS BIGINT), 9) AS bin,
        |    count(*) AS n, sum(score) AS ssum, sum(pos) AS npos
@@ -317,8 +304,7 @@ object Evaluation {
       .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
       .select((col("lang") === "en").as("label"),
-        (size(filter(col("toks"), t => t.isin("the", "a", "of", "and", "to")))
-          / size(col("toks")).cast("double")).as("score"))
+        (TextFns.stopCount(col("toks")) / size(col("toks")).cast("double")).as("score"))
     val th = spark_range_df(s)
     scored.crossJoin(broadcast(th))
       .groupBy(col("threshold"))
@@ -351,8 +337,7 @@ object Evaluation {
   val qPrCurveOracle: String =
     s"""WITH sc AS (
        |  SELECT lang = 'en' AS label,
-       |    len(list_filter(toks, t -> t IN ('the', 'a', 'of', 'and', 'to')))
-       |      / CAST(len(toks) AS DOUBLE) AS score
+       |    ${TextFns.stopCountSql()} / CAST(len(toks) AS DOUBLE) AS score
        |  FROM (SELECT lang, ${TextFns.toksSql} AS toks FROM documents) t
        |  WHERE len(toks) > 0
        |),
@@ -449,14 +434,7 @@ object Evaluation {
     * row-scale after the scan.
     */
   def qYoudenThreshold(s: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .select(
-        floor(lit(1000) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))).as("score"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+    val scored = scoredDocs(s, dir, 1000)
     val cells = scored.groupBy(col("score"))
       .agg(count(lit(1)).as("n"), sum(col("pos")).as("np"))
     // cumulative predicted-positive counts for threshold t = this score:
@@ -495,16 +473,7 @@ object Evaluation {
   }
 
   val qYoudenThresholdOracle: String =
-    s"""WITH t AS (
-       |  SELECT lang, ${TextFns.toksSql} AS toks FROM documents
-       |),
-       |sc AS (
-       |  SELECT CAST(floor(1000 * len(list_filter(toks,
-       |      x -> list_contains([${Curation.stopListSql}], x)))
-       |      / len(toks)) AS BIGINT) AS score,
-       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-       |  FROM t WHERE len(toks) > 0
-       |),
+    s"""WITH sc AS (${scoredDocsSql(1000)}),
        |cells AS (
        |  SELECT score, count(*) AS n, CAST(sum(pos) AS BIGINT) AS np
        |  FROM sc GROUP BY score
@@ -559,14 +528,8 @@ object Evaluation {
     * outputs round portably.
     */
   def qIsotonicCalibration(s: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .select(
-        least(floor(lit(20) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))), lit(19L)).as("bucket"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+    val scored = scoredDocs(s, dir, 20)
+      .select(least(col("score"), lit(19L)).as("bucket"), col("pos"))
     val w = Window.orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // contiguous index rn over the nonempty buckets + inclusive prefix
@@ -600,15 +563,8 @@ object Evaluation {
   }
 
   val qIsotonicCalibrationOracle: String =
-    s"""WITH t AS (
-       |  SELECT lang, ${TextFns.toksSql} AS toks FROM documents
-       |),
-       |sc AS (
-       |  SELECT least(CAST(floor(20 * len(list_filter(toks,
-       |      x -> x IN (${Curation.stopListSql}))) / len(toks)) AS BIGINT),
-       |      19) AS bucket,
-       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-       |  FROM t WHERE len(toks) > 0
+    s"""WITH sc AS (
+       |  SELECT least(score, 19) AS bucket, pos FROM (${scoredDocsSql(20)}) s
        |),
        |cells AS (
        |  SELECT bucket, count(*) AS n, CAST(sum(pos) AS BIGINT) AS np
@@ -774,14 +730,8 @@ object Evaluation {
     * All counts are exact integers; ratios are final-step doubles.
     */
   def qLiftDeciles(s: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .select(
-        least(floor(lit(20) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))), lit(19L)).as("bucket"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+    val scored = scoredDocs(s, dir, 20)
+      .select(least(col("score"), lit(19L)).as("bucket"), col("pos"))
     val cells = scored.groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("pos")).as("np"))
     val tot = cells.agg(sum(col("n")).as("nt"), sum(col("np")).as("pt"))
@@ -801,15 +751,8 @@ object Evaluation {
   }
 
   val qLiftDecilesOracle: String =
-    s"""WITH t AS (
-       |  SELECT lang, ${TextFns.toksSql} AS toks FROM documents
-       |),
-       |sc AS (
-       |  SELECT least(CAST(floor(20 * len(list_filter(toks,
-       |      x -> x IN (${Curation.stopListSql}))) / len(toks)) AS BIGINT),
-       |      19) AS bucket,
-       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-       |  FROM t WHERE len(toks) > 0
+    s"""WITH sc AS (
+       |  SELECT least(score, 19) AS bucket, pos FROM (${scoredDocsSql(20)}) s
        |),
        |cells AS (
        |  SELECT bucket, count(*) AS n, CAST(sum(pos) AS BIGINT) AS np
@@ -1017,14 +960,7 @@ object Evaluation {
     * frame and one broadcast global row. Scan-side at any scale.
     */
   def qBrier(s: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .select(
-        floor(lit(1000) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))).as("score"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+    val scored = scoredDocs(s, dir, 1000)
     val p = col("score") / 1000.0
     val bins = scored
       .select(least(floor(col("score") / 100), lit(9L)).as("bin"),
@@ -1060,16 +996,7 @@ object Evaluation {
   }
 
   val qBrierOracle: String =
-    s"""WITH t AS (
-       |  SELECT lang, ${TextFns.toksSql} AS toks FROM documents
-       |),
-       |sc AS (
-       |  SELECT CAST(floor(1000 * len(list_filter(toks,
-       |      x -> x IN (${Curation.stopListSql}))) / len(toks)) AS BIGINT)
-       |    AS score,
-       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-       |  FROM t WHERE len(toks) > 0
-       |),
+    s"""WITH sc AS (${scoredDocsSql(1000)}),
        |bins AS (
        |  SELECT least(CAST(floor(score / 100) AS BIGINT), 9) AS bin,
        |    count(*) AS n, sum(score) AS ssum, sum(pos) AS npos,
@@ -1115,14 +1042,7 @@ object Evaluation {
     */
   def qHosmerLemeshow(s: SparkSession, dir: String): DataFrame = {
     val D = DecimalType(38, 12)
-    val scored = Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .select(
-        floor(lit(1000L) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))).as("score"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
+    val scored = scoredDocs(s, dir, 1000)
     val bins = scored
       .select(least(floor(col("score") / 100), lit(9L)).as("bin"),
         col("score"), col("pos"))
@@ -1149,16 +1069,7 @@ object Evaluation {
   }
 
   val qHosmerLemeshowOracle: String =
-    s"""WITH t AS (
-       |  SELECT lang, ${TextFns.toksSql} AS toks FROM documents
-       |),
-       |sc AS (
-       |  SELECT CAST(floor(1000 * len(list_filter(toks,
-       |      x -> x IN (${Curation.stopListSql}))) / len(toks)) AS BIGINT)
-       |    AS score,
-       |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-       |  FROM t WHERE len(toks) > 0
-       |),
+    s"""WITH sc AS (${scoredDocsSql(1000)}),
        |bins AS (
        |  SELECT least(CAST(floor(score / 100) AS BIGINT), 9) AS bin,
        |    count(*) AS n, CAST(sum(score) AS BIGINT) AS ssum,

@@ -1593,12 +1593,7 @@ object PipelineOps {
     val scored = Tables.documents(s, dir)
       .select(col("source"), TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
-      .select(col("source"),
-        // 64-bit multiply: a 32-bit lit(10000) * size wraps past ~214k
-        // stopword hits while the oracle's double multiply does not
-        floor(lit(10000L) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))).cast("long").as("sq"))
+      .select(col("source"), TextFns.stopScore(col("toks"), 10000).as("sq"))
     val cells = scored.groupBy(col("sq")).agg(count(lit(1)).as("c"))
     val wCum = Window.orderBy(col("sq"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1618,15 +1613,13 @@ object PipelineOps {
       .orderBy(col("source"))
   }
 
-  val qQualityGateOracle: String = {
-    val stopList = Curation.StopWords.map(w => s"'$w'").mkString(", ")
+  val qQualityGateOracle: String =
     s"""WITH t AS (
        |  SELECT source, ${TextFns.toksSql} AS toks FROM documents
        |),
        |sc AS (
        |  SELECT source,
-       |    CAST(floor(10000.0 * len(list_filter(toks, x -> x IN ($stopList)))
-       |      / len(toks)) AS BIGINT) AS sq
+       |    ${TextFns.stopScoreSql(10000)} AS sq
        |  FROM t WHERE len(toks) > 0
        |),
        |cells AS (SELECT sq, count(*) AS c FROM sc GROUP BY sq),
@@ -1648,7 +1641,6 @@ object PipelineOps {
        |FROM sc, cut
        |GROUP BY source
        |ORDER BY source""".stripMargin
-  }
 
   /** Mixture prior scale τ for [[qSprt]], in units of the event value
     * (the anticipated effect-size scale of the mixture mSPRT).

@@ -70,9 +70,8 @@ object Profiling {
     * The complement class `[^a-zA-Z0-9\s]` can't be enumerated, but the
     * four classes partition it out: symbols = n_chars − digits − uppers
     * − lowers − spaces. Counts are identical to Java's regex form for
-    * every input. The DuckDB oracle is still regex, and RE2's `\s`
-    * excludes `\x0B`: engine and oracle agree only because the test
-    * corpus has no vertical tabs.
+    * every input. The DuckDB oracle is still regex, over the same byte
+    * set ([[TextFns.wsClassSql]]; RE2's own `\s` lacks `\x0B`).
     */
   def qCharClasses(s: SparkSession, dir: String): DataFrame = {
     val digits = "0123456789"
@@ -103,8 +102,8 @@ object Profiling {
     s"""SELECT doc_id, CAST(length(text) AS INTEGER) AS n_chars,
        |  ${r("[0-9]", "digit_ratio")},
        |  ${r("[A-Z]", "upper_ratio")},
-       |  ${r("\\s", "space_ratio")},
-       |  ${r("[^a-zA-Z0-9\\s]", "symbol_ratio")}
+       |  ${r(TextFns.wsClassSql, "space_ratio")},
+       |  ${r(TextFns.wsClassSql.replace("[", "[^a-zA-Z0-9"), "symbol_ratio")}
        |FROM documents
        |ORDER BY doc_id""".stripMargin
   }
@@ -693,7 +692,7 @@ object Profiling {
 
   val qJsdDriftOracle: String =
     s"""WITH toks AS (
-       |  SELECT source, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS word
+       |  SELECT source, unnest(${TextFns.toksSql}) AS word
        |  FROM documents
        |),
        |cells AS (SELECT source, word, count(*) AS nsw FROM toks GROUP BY source, word),
@@ -930,7 +929,7 @@ object Profiling {
        |),
        |d AS (
        |  SELECT d.source, d.lang, d.n_chars, sc.n_tokens, sc.score,
-       |    md5(regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g')) AS fp
+       |    md5(${TextFns.normalizedSql("d.text")}) AS fp
        |  FROM documents d JOIN sc ON d.doc_id = sc.doc_id
        |),
        |g AS (
@@ -1541,12 +1540,10 @@ object Profiling {
       .select(toks.as("toks"))
       .filter(size(col("toks")) > 0)
       .select(
-        floor(lit(1000) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))).as("i1"),
-        floor(lit(1000) * size(array_distinct(col("toks")))
+        TextFns.stopScore(col("toks"), 1000).as("i1"),
+        floor(lit(1000L) * size(array_distinct(col("toks")))
           / size(col("toks"))).as("i2"),
-        floor(lit(1000) * size(filter(col("toks"), t => length(t) <= 3))
+        floor(lit(1000L) * size(filter(col("toks"), t => length(t) <= 3))
           / size(col("toks"))).as("i3"))
       .withColumn("t", col("i1") + col("i2") + col("i3"))
     val m = base.agg(count(lit(1)).cast(D0).as("n"),
@@ -1574,9 +1571,7 @@ object Profiling {
        |),
        |it AS (
        |  SELECT
-       |    CAST(floor(1000 * len(list_filter(toks,
-       |      x -> x IN (${Curation.stopListSql}))) / len(toks)) AS BIGINT)
-       |      AS i1,
+       |    ${TextFns.stopScoreSql(1000)} AS i1,
        |    CAST(floor(1000 * len(list_distinct(toks)) / len(toks))
        |      AS BIGINT) AS i2,
        |    CAST(floor(1000 * len(list_filter(toks, x -> len(x) <= 3))
@@ -2917,9 +2912,7 @@ object Profiling {
       .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(
-        (floor(lit(1000L) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-          / size(col("toks"))) >= MccThreshold).as("pred"),
+        (TextFns.stopScore(col("toks"), 1000) >= MccThreshold).as("pred"),
         (col("lang") === "en").as("truth"))
     val c = scored.agg(
       sum((col("pred") && col("truth")).cast("long")).as("tp"),
@@ -2947,9 +2940,7 @@ object Profiling {
        |),
        |sc AS (
        |  SELECT
-       |    floor(1000 * len(list_filter(toks, x -> x IN
-       |      (${Curation.stopListSql}))) / len(toks)) >= $MccThreshold
-       |      AS pred,
+       |    ${TextFns.stopScoreSql(1000)} >= $MccThreshold AS pred,
        |    lang = 'en' AS truth
        |  FROM t WHERE len(toks) > 0
        |),

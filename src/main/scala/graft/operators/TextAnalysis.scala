@@ -15,18 +15,18 @@ import graft.sources.Tables
   */
 object TextAnalysis {
 
-  private val EnStop = Seq("the", "a", "of", "and", "to")
   private val EsStop = Seq("el", "la", "de", "y", "en")
   private val DeStop = Seq("der", "die", "das", "und", "zu")
   private val FrStop = Seq("le", "un", "une", "et", "dans")
 
-  private def stopCount(toksCol: String, words: Seq[String]): org.apache.spark.sql.Column =
-    size(filter(col(toksCol), t => t.isin(words.map(w => lit(w): Any): _*)))
-
-  private def stopCountSql(words: Seq[String]): String =
-    s"len(list_filter(toks, t -> t IN (${words.map(w => s"'$w'").mkString(", ")})))"
-
   private val toksSql = TextFns.toksSql
+
+  /** BPE-ish segmentation: letter runs, single digits, single other
+    * non-whitespace characters. The oracle twin spells Java's `\s` as
+    * [[TextFns.wsClassSql]].
+    */
+  private val BpeRe = "[a-z]+|[0-9]|[^a-z0-9\\s]"
+  private val bpeReSql = s"[a-z]+|[0-9]|${TextFns.wsClassSql.replace("[", "[^a-z0-9")}"
 
   /** Token counting: whitespace tokens + a BPE-ish regex segmentation
     * (letter runs / single digits / single punctuation marks).
@@ -37,14 +37,14 @@ object TextAnalysis {
         col("doc_id"),
         size(TextFns.tokens(col("text"))).as("n_ws_tokens"),
         size(regexp_extract_all(lower(col("text")),
-          lit("[a-z]+|[0-9]|[^a-z0-9\\s]"), lit(0))).as("n_bpe_tokens"),
+          lit(BpeRe), lit(0))).as("n_bpe_tokens"),
         length(col("text")).as("n_chars_measured"))
       .orderBy(col("doc_id"))
 
   val qTextTokensOracle: String =
     s"""SELECT doc_id,
        |  CAST(len($toksSql) AS INTEGER) AS n_ws_tokens,
-       |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\s]')) AS INTEGER) AS n_bpe_tokens,
+       |  CAST(len(regexp_extract_all(lower(text), '$bpeReSql')) AS INTEGER) AS n_bpe_tokens,
        |  CAST(length(text) AS INTEGER) AS n_chars_measured
        |FROM documents
        |ORDER BY doc_id""".stripMargin
@@ -59,7 +59,7 @@ object TextAnalysis {
       .select(
         col("doc_id"),
         size(col("toks")).as("n_tokens"),
-        stopCount("toks", EnStop).as("n_stop"),
+        TextFns.stopCount(col("toks")).as("n_stop"),
         size(array_distinct(col("toks"))).as("n_types"))
       .select(
         col("doc_id"), col("n_tokens"), col("n_stop"),
@@ -73,7 +73,7 @@ object TextAnalysis {
     s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |c AS (
        |  SELECT doc_id, len(toks) AS n_tokens,
-       |    ${stopCountSql(EnStop)} AS n_stop,
+       |    ${TextFns.stopCountSql()} AS n_stop,
        |    len(list_distinct(toks)) AS n_types
        |  FROM t
        |)
@@ -94,10 +94,10 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"), TextFns.tokens(col("text")).as("toks"))
       .select(
         col("doc_id"), col("lang"),
-        stopCount("toks", EnStop).as("s_en"),
-        stopCount("toks", EsStop).as("s_es"),
-        stopCount("toks", DeStop).as("s_de"),
-        stopCount("toks", FrStop).as("s_fr"))
+        TextFns.stopCount(col("toks")).as("s_en"),
+        TextFns.stopCount(col("toks"), EsStop).as("s_es"),
+        TextFns.stopCount(col("toks"), DeStop).as("s_de"),
+        TextFns.stopCount(col("toks"), FrStop).as("s_fr"))
       .withColumn("predicted",
         when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de") && col("s_en") >= col("s_fr"), "en")
           .when(col("s_es") >= col("s_de") && col("s_es") >= col("s_fr"), "es")
@@ -111,10 +111,10 @@ object TextAnalysis {
     s"""WITH t AS (SELECT doc_id, lang, $toksSql AS toks FROM documents),
        |sc AS (
        |  SELECT doc_id, lang,
-       |    ${stopCountSql(EnStop)} AS s_en,
-       |    ${stopCountSql(EsStop)} AS s_es,
-       |    ${stopCountSql(DeStop)} AS s_de,
-       |    ${stopCountSql(FrStop)} AS s_fr
+       |    ${TextFns.stopCountSql()} AS s_en,
+       |    ${TextFns.stopCountSql(EsStop)} AS s_es,
+       |    ${TextFns.stopCountSql(DeStop)} AS s_de,
+       |    ${TextFns.stopCountSql(FrStop)} AS s_fr
        |  FROM t
        |)
        |SELECT doc_id, lang,
@@ -146,10 +146,10 @@ object TextAnalysis {
       .select(
         col("doc_id"), col("text"),
         size(col("toks")).as("n_tokens"),
-        stopCount("toks", EnStop).as("s_en"),
-        stopCount("toks", EsStop).as("s_es"),
-        stopCount("toks", DeStop).as("s_de"),
-        stopCount("toks", FrStop).as("s_fr"))
+        TextFns.stopCount(col("toks")).as("s_en"),
+        TextFns.stopCount(col("toks"), EsStop).as("s_es"),
+        TextFns.stopCount(col("toks"), DeStop).as("s_de"),
+        TextFns.stopCount(col("toks"), FrStop).as("s_fr"))
       .withColumn("predicted",
         when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de") && col("s_en") >= col("s_fr"), "en")
           .when(col("s_es") >= col("s_de") && col("s_es") >= col("s_fr"), "es")
@@ -173,10 +173,10 @@ object TextAnalysis {
     s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
        |sc AS (
        |  SELECT doc_id, len(toks) AS n_tokens,
-       |    ${stopCountSql(EnStop)} AS s_en,
-       |    ${stopCountSql(EsStop)} AS s_es,
-       |    ${stopCountSql(DeStop)} AS s_de,
-       |    ${stopCountSql(FrStop)} AS s_fr
+       |    ${TextFns.stopCountSql()} AS s_en,
+       |    ${TextFns.stopCountSql(EsStop)} AS s_es,
+       |    ${TextFns.stopCountSql(DeStop)} AS s_de,
+       |    ${TextFns.stopCountSql(FrStop)} AS s_fr
        |  FROM t
        |),
        |lq AS (
@@ -192,7 +192,7 @@ object TextAnalysis {
        |),
        |k AS (
        |  SELECT min(doc_id) AS doc_id
-       |  FROM (SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp, doc_id
+       |  FROM (SELECT md5(${TextFns.normalizedSql("text")}) AS fp, doc_id
        |        FROM documents) f
        |  GROUP BY fp
        |)
@@ -213,8 +213,8 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
 
   val qTextFingerprintOracle: String =
-    """SELECT doc_id,
-      |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
+    s"""SELECT doc_id,
+      |  md5(${TextFns.normalizedSql("text")}) AS fingerprint,
       |  CAST(length(text) AS INTEGER) AS n_chars_measured
       |FROM documents
       |ORDER BY doc_id""".stripMargin
@@ -253,8 +253,8 @@ object TextAnalysis {
   }
 
   val qTfidfOracle: String =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS word
+    s"""WITH toks AS (
+      |  SELECT doc_id, unnest($toksSql) AS word
       |  FROM documents
       |),
       |tf AS (SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY doc_id, word),
@@ -361,7 +361,7 @@ object TextAnalysis {
 
   val qBigramLmOracle: String =
     s"""WITH t AS (
-      |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+      |  SELECT doc_id, $toksSql AS toks
       |  FROM documents
       |),
       |bg AS (
@@ -1410,7 +1410,7 @@ object TextAnalysis {
 
   val qPplBucketOracle: String =
     s"""WITH t AS (
-      |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+      |  SELECT doc_id, $toksSql AS toks
       |  FROM documents
       |),
       |bg AS (
@@ -1733,7 +1733,7 @@ object TextAnalysis {
       .select(col("source"),
         size(TextFns.tokens(col("text"))).cast("long").as("ws"),
         size(regexp_extract_all(lower(col("text")),
-          lit("[a-z]+|[0-9]|[^a-z0-9\\s]"), lit(0))).cast("long").as("bpe"),
+          lit(BpeRe), lit(0))).cast("long").as("bpe"),
         length(col("text")).cast("long").as("ch"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1751,7 +1751,7 @@ object TextAnalysis {
     s"""WITH c AS (
        |  SELECT source,
        |    CAST(len($toksSql) AS BIGINT) AS ws,
-       |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\s]')) AS BIGINT) AS bpe,
+       |    CAST(len(regexp_extract_all(lower(text), '$bpeReSql')) AS BIGINT) AS bpe,
        |    CAST(length(text) AS BIGINT) AS ch
        |  FROM documents
        |),
@@ -2074,10 +2074,10 @@ object TextAnalysis {
     val hits = Tables.documents(s, dir)
       .select(col("source"), TextFns.tokens(col("text")).as("toks"))
       .select(col("source"),
-        stopCount("toks", EnStop).cast("long").as("s_en"),
-        stopCount("toks", EsStop).cast("long").as("s_es"),
-        stopCount("toks", DeStop).cast("long").as("s_de"),
-        stopCount("toks", FrStop).cast("long").as("s_fr"))
+        TextFns.stopCount(col("toks")).cast("long").as("s_en"),
+        TextFns.stopCount(col("toks"), EsStop).cast("long").as("s_es"),
+        TextFns.stopCount(col("toks"), DeStop).cast("long").as("s_de"),
+        TextFns.stopCount(col("toks"), FrStop).cast("long").as("s_fr"))
       .withColumn("t", col("s_en") + col("s_es") + col("s_de") + col("s_fr"))
     def nlnn(c: org.apache.spark.sql.Column) =
       when(c > 0, c * log(c.cast("double"))).otherwise(lit(0.0))
@@ -2106,10 +2106,10 @@ object TextAnalysis {
     s"""WITH t AS (SELECT source, $toksSql AS toks FROM documents),
        |hits AS (
        |  SELECT source,
-       |    CAST(${stopCountSql(EnStop)} AS BIGINT) AS s_en,
-       |    CAST(${stopCountSql(EsStop)} AS BIGINT) AS s_es,
-       |    CAST(${stopCountSql(DeStop)} AS BIGINT) AS s_de,
-       |    CAST(${stopCountSql(FrStop)} AS BIGINT) AS s_fr
+       |    CAST(${TextFns.stopCountSql()} AS BIGINT) AS s_en,
+       |    CAST(${TextFns.stopCountSql(EsStop)} AS BIGINT) AS s_es,
+       |    CAST(${TextFns.stopCountSql(DeStop)} AS BIGINT) AS s_de,
+       |    CAST(${TextFns.stopCountSql(FrStop)} AS BIGINT) AS s_fr
        |  FROM t
        |),
        |sc AS (
@@ -2153,8 +2153,7 @@ object TextAnalysis {
       .select(toks.as("toks"))
       .filter(size(col("toks")) > 0)
       .select(
-        when(size(filter(col("toks"),
-          t => t.isin(EnStop.map(w => lit(w): Any): _*))) > 0, 1L)
+        when(TextFns.stopCount(col("toks")) > 0, 1L)
           .otherwise(0L).as("c1"),
         when(aggregate(col("toks"), lit(0L),
           (acc, t) => acc + length(t)) * 10 <= size(col("toks")) * 55, 1L)
@@ -2186,8 +2185,7 @@ object TextAnalysis {
        |),
        |b AS (
        |  SELECT
-       |    CASE WHEN len(list_filter(toks, x -> x IN (${
-            EnStop.map(w => s"'$w'").mkString(", ")}))) > 0
+       |    CASE WHEN ${TextFns.stopCountSql()} > 0
        |      THEN 1 ELSE 0 END AS c1,
        |    CASE WHEN list_sum(list_transform(toks, x -> len(x))) * 10
        |        <= len(toks) * 55
@@ -2238,9 +2236,7 @@ object TextAnalysis {
       .select(col("text"), TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
     val votes = docs.select(
-      (when(floor(lit(1000L) * size(filter(col("toks"),
-        t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
-        / size(col("toks"))) >= 100L, 1L).otherwise(0L)
+      (when(TextFns.stopScore(col("toks"), 1000) >= 100L, 1L).otherwise(0L)
         + when(size(col("toks")) >= 50, 1L).otherwise(0L)
         + when(length(col("text")) >= 200, 1L).otherwise(0L)).as("n1"))
     val m = votes.agg(count(lit(1)).as("n"), sum(col("n1")).as("s1"),
@@ -2263,8 +2259,7 @@ object TextAnalysis {
        |),
        |v AS (
        |  SELECT
-       |    (CASE WHEN floor(1000 * len(list_filter(toks, x -> x IN
-       |        (${Curation.stopListSql}))) / len(toks)) >= 100
+       |    (CASE WHEN ${TextFns.stopScoreSql(1000)} >= 100
        |      THEN 1 ELSE 0 END)
        |    + (CASE WHEN len(toks) >= 50 THEN 1 ELSE 0 END)
        |    + (CASE WHEN length(text) >= 200 THEN 1 ELSE 0 END) AS n1

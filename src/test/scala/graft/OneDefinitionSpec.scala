@@ -1,0 +1,46 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The document-quality features behind the curation and evaluation
+  * families are each written once per engine (`TextFns`, `Curation`);
+  * operators and oracles call or splice them. A copy spelled out at a
+  * call site is how an oracle drifts from its engine twin, so this scans
+  * `src/main` for the spellings each definition replaced.
+  */
+class OneDefinitionSpec extends AnyFunSuite {
+
+  private lazy val sources: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+      .toList
+  }
+
+  /** (test name, pattern, the file of each site that may match it) */
+  private val definitions = Seq(
+    ("the English stopword list is written once, in TextFns",
+      """"the",\s*"a",\s*"of",\s*"and",\s*"to"""", Seq("TextFns.scala")),
+    ("isin over a stop list is only TextFns.stopCount",
+      """isin\((?:\w+\.)*(?:StopWords|\w+Stop|words)\b""", Seq("TextFns.scala")),
+    ("the DuckDB stopword filter is only TextFns.stopCountSql",
+      """list_filter\(toks,\s*(\w+)\s*->\s*(?:\1\s+IN\b|list_contains\()""",
+      Seq("TextFns.scala")),
+    ("the engine z coefficients are only Curation.qualityZ",
+      """lit\(0\.6\)""", Seq("Curation.scala")),
+    ("the oracle z coefficients are only Curation.qualityZSql",
+      """0\.6 \* ln\(""", Seq("Curation.scala")),
+    ("the oracle symbol class is only Curation.symbolRatioSql",
+      """'\[a-zA-Z0-9 \]'""", Seq("Curation.scala")),
+    // RE2's \s lacks \x0B; oracles split on TextFns.wsClassSql instead
+    ("no oracle splits on RE2's \\s", """'\\{1,2}s\+'""", Seq()))
+
+  for ((name, pattern, expected) <- definitions)
+    test(name) {
+      val sites = sources.flatMap { case (file, text) =>
+        pattern.r.findAllIn(text).map(_ => file)
+      }
+      assert(sites.sorted === expected.sorted)
+    }
+}

@@ -23,7 +23,7 @@ class EvaluationSpec extends SparkSpec {
       .filter(size(col("toks")) > 0)
       .select(
         floor(lit(1000) * size(filter(col("toks"),
-          t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
+          t => t.isin(TextFns.StopWords.map(w => lit(w): Any): _*)))
           / size(col("toks"))).as("score"),
         (col("lang") === "en").as("pos"))
       .collect()
@@ -105,5 +105,22 @@ class EvaluationSpec extends SparkSpec {
     val total = rows.head.getAs[Double]("psi_total")
     assert(rows.forall(r => math.abs(r.getAs[Double]("psi_total") - total) < 1e-12))
     assert(total >= 0.0)
+  }
+
+  test("a document of 2.2M stopwords scores 1000, not a 32-bit overflow") {
+    import spark.implicits._
+    import graft.functions.TextFns
+    val dir = java.nio.file.Files.createTempDirectory("graft_eval_long").toString
+    // 1000 * 2.2M stopwords is past Int.MaxValue: an ANSI int multiply throws
+    Seq((1L, "a " * 2200000, "en"), (2L, "der hund", "de"))
+      .map { case (id, t, lang) => (id, t, lang, s"src$id", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val docs = graft.sources.Tables.documents(spark, dir)
+    val scores = docs.orderBy(col("doc_id"))
+      .select(TextFns.stopScore(TextFns.tokens(col("text")), 1000))
+      .collect().map(_.getLong(0))
+    assert(scores.toSeq == Seq(1000L, 0L))
+    assert(Evaluation.qAuc(spark, dir).head.getAs[Double]("auc") == 1.0)
   }
 }

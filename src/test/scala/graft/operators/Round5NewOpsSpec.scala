@@ -277,7 +277,7 @@ class Round5NewOpsSpec extends SparkSpec {
       .select(col("lang"), graft.functions.TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(floor(lit(1000) * size(filter(col("toks"),
-        t => t.isin(Curation.StopWords.map(w => lit(w): Any): _*)))
+        t => t.isin(graft.functions.TextFns.StopWords.map(w => lit(w): Any): _*)))
         / size(col("toks"))).as("score"),
         when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
       .collect().map(x => (x.getLong(0), x.getLong(1)))
