@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.expressions.{MinHashSigs, RollingHash, VecDot, WsTokens}
+import graft.expressions.{CountIn, MinHashSigs, RollingHash, SymbolCount, VecDot, WsTokens}
 
 /** Session extensions for the graft engine: registers the native
   * expressions as SQL functions. Activate with
@@ -32,7 +34,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           s"minhash_sigs numPerms must be an int literal, got $other")
       }),
       ("vec_dot", classOf[VecDot], c => VecDot(c(0), c(1))),
-      ("ws_tokens", classOf[WsTokens], c => WsTokens(c.head))
+      ("ws_tokens", classOf[WsTokens], c => WsTokens(c.head)),
+      ("count_in", classOf[CountIn], c => CountIn(c.head, c.tail.map {
+        case Literal(w: UTF8String, _: StringType) => w
+        case other => throw new IllegalArgumentException(
+          s"count_in words must be string literals, got $other")
+      })),
+      ("symbol_count", classOf[SymbolCount], c => SymbolCount(c.head))
     ).foreach { case (name, cls, build) =>
       ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     }

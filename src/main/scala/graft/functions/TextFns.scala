@@ -24,12 +24,14 @@ import org.apache.spark.sql.functions._
   * Per-token paths use no lambda functions: Spark 4.1 evaluates
   * `transform`, `filter` and `aggregate` interpreted (`CodegenFallback`),
   * once per array element. Adjacent pairs are [[adjacentPairs]]
-  * (`slice` + `arrays_zip`, both codegen'd). Lambda sites left on token
-  * arrays are follow-ups, among them: [[shingles]], the `Curation`
-  * trigram sort, the `PipelineOps` n-grams, the `Dedup` spans, and the
-  * word-length `aggregate` of the quality rules. The stopword `filter` of
-  * every quality feature is one site, [[stopCount]], so a native count
-  * kernel replaces it in one line.
+  * (`slice` + `arrays_zip`, both codegen'd), and every stopword count is
+  * [[stopCount]], the native [[graft.expressions.CountIn]] (`count_in`).
+  * Lambda sites left on token arrays are follow-ups: [[shingles]] and
+  * [[minhash]], the `Dedup` shingle hashes and spans, the `Curation`
+  * trigram sort, the `PipelineOps` n-grams, the word-length `aggregate`
+  * of `Curation.qGopherQuality`, `Curation.qFilterFunnel` and
+  * `TextAnalysis.qCochranQ`, and the short-word `filter` of
+  * `Profiling`'s quality signals.
   */
 object TextFns {
 
@@ -47,9 +49,11 @@ object TextFns {
     */
   val StopWords = Seq("the", "a", "of", "and", "to")
 
-  /** Number of tokens of `toks` that are in `words`, duplicates counted. */
+  /** Number of tokens of `toks` that are in `words`, duplicates counted
+    * (NULL tokens never): `count_in`, one native loop per array.
+    */
   def stopCount(toks: Column, words: Seq[String] = StopWords): Column =
-    size(filter(toks, t => t.isin(words.map(w => lit(w): Any): _*)))
+    call_function("count_in", toks +: words.map(lit): _*)
 
   /** floor(scale · stopCount / size) as a bigint: a non-empty token
     * array's stopword share as an integer score out of `scale`. Callers

@@ -29,6 +29,17 @@ object Curation {
     */
   val EmailRe = "[a-z0-9._]+@[a-z0-9.]+"
 
+  /** `text` with every [[EmailRe]] match replaced by `<EMAIL>`: the one
+    * engine scrub, used by [[qTextRedact]] and [[graft.CuratePipeline]].
+    * Every match contains '@', so text without one skips the regex and
+    * is returned as is; NULL stays NULL. Oracle twin: [[scrubEmailsSql]].
+    */
+  def scrubEmails(text: Column): Column =
+    when(instr(text, "@") > 0, regexp_replace(text, EmailRe, "<EMAIL>")).otherwise(text)
+
+  def scrubEmailsSql(text: String): String =
+    s"regexp_replace($text, '$EmailRe', '<EMAIL>', 'g')"
+
   /** Uniform [0, mod) draw keyed on (salt, doc_id) — content-addressed
     * randomness both engines compute identically.
     */
@@ -70,8 +81,11 @@ object Curation {
     */
   def splitCol: org.apache.spark.sql.Column = {
     val u = draw("split", 100)
-    when(u < 80, "train").when(u < 90, "val").otherwise("test")
+    when(u < 80, Splits(0)).when(u < 90, Splits(1)).otherwise(Splits(2))
   }
+
+  /** The values of [[splitCol]], in its order. */
+  val Splits: Seq[String] = Seq("train", "val", "test")
 
   /** SQL twin of [[splitCol]] — spliced into every oracle that needs the
     * split (here, decontamination, n-gram eval overlap), never copied.
@@ -126,7 +140,7 @@ object Curation {
     val synth = when(col("doc_id") % 3 === 0,
       concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
         lit("@example.com"))).otherwise(col("text"))
-    val redacted = regexp_replace(synth, EmailRe, "<EMAIL>")
+    val redacted = scrubEmails(synth)
     Tables.documents(s, dir)
       .select(col("doc_id"),
         (synth =!= redacted).as("was_redacted"),
@@ -143,8 +157,8 @@ object Curation {
        |  FROM documents
        |)
        |SELECT doc_id,
-       |  synth != regexp_replace(synth, '$EmailRe', '<EMAIL>', 'g') AS was_redacted,
-       |  md5(regexp_replace(synth, '$EmailRe', '<EMAIL>', 'g')) AS redacted_fp
+       |  synth != ${scrubEmailsSql("synth")} AS was_redacted,
+       |  md5(${scrubEmailsSql("synth")}) AS redacted_fp
        |FROM t
        |ORDER BY doc_id""".stripMargin
 
@@ -534,17 +548,14 @@ object Curation {
       .orderBy(col("doc_id"))
 
   /** Gopher's symbol ratio: the share of characters outside
-    * [a-zA-Z0-9 ]. The class is a finite ASCII set, so `translate` (a
-    * per-char dictionary lookup) deletes it instead of a regex scan and
-    * string rebuild, with the identical count for every input (see
-    * Profiling.qCharClasses). An empty document has no ratio: NULL, as
-    * in qCharClasses, never 0/0 — so its z, score and keep are NULL too.
+    * [a-zA-Z0-9 ], counted by the native `symbol_count`
+    * ([[graft.expressions.SymbolCount]]) in one byte pass. An empty
+    * document has no ratio: NULL, as in qCharClasses, never 0/0 — so its
+    * z, score and keep are NULL too.
     */
   private def symbolRatio(text: Column): Column =
     when(length(text) > 0,
-      length(translate(text,
-        "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 ", ""))
-        / length(text).cast("double"))
+      call_function("symbol_count", text) / length(text).cast("double"))
 
   /** SQL twin of [[symbolRatio]]: the regex form of the same class. */
   private def symbolRatioSql(text: String): String =

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.functions.{NumFns, TextFns}
 import graft.sources.Tables
@@ -1358,6 +1359,43 @@ object TextAnalysis {
       .orderBy(col("w_a"), col("w_b"))
   }
 
+  /** One (avg_logp, n_cell) cell of a scored frame, with its bucket. */
+  case class PplCell(avgLogp: Option[Double], n: Long, bucket: String)
+
+  /** The exact-thirds rule, its one definition: a cell with `cumBefore`
+    * of `tot` scored documents ranked above it is head while fewer than
+    * a third rank above, then middle while fewer than two thirds do.
+    */
+  private def bucketOf(cumBefore: Long, tot: Long): String =
+    if (cumBefore * 3 < tot) "head" else if (cumBefore * 3 < tot * 2) "middle" else "tail"
+
+  /** The cells of `scored` best first (descending avg_logp, NULL last, as
+    * `ORDER BY avg_logp DESC` sorts), each with its bucket. One grouped
+    * count, collected: there are at most as many cells as distinct
+    * 4-decimal scores, and the cumulative pass is a local loop.
+    */
+  def pplCells(scored: DataFrame): Seq[PplCell] = {
+    val cells = scored.groupBy(col("avg_logp")).agg(count(lit(1)))
+      .collect().toSeq
+      .map(r => (if (r.isNullAt(0)) None else Some(r.getDouble(0)), r.getLong(1)))
+      .sortBy(_._1)(Ordering.Option(Ordering.Double.TotalOrdering).reverse)
+    val tot = cells.map(_._2).sum
+    cells.zip(cells.scanLeft(0L)(_ + _._2)).map { case ((v, n), before) =>
+      PplCell(v, n, bucketOf(before, tot))
+    }
+  }
+
+  /** The exact-thirds bucket map behind [[qPplBucket]]: (avg_logp,
+    * bucket) per cell of [[pplCells]], a local frame to broadcast back
+    * onto the scored frame.
+    */
+  def pplBuckets(scored: DataFrame): DataFrame = {
+    val schema = StructType(Seq(StructField("avg_logp", DoubleType),
+      StructField("bucket", StringType, nullable = false)))
+    val rows = pplCells(scored).map(c => Row(c.avgLogp.map(Double.box).orNull, c.bucket))
+    scored.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
   /** CCNet-style perplexity bucketing: every document scored by the
     * corpus's own bigram LM ([[qBigramLm]]'s avg log-prob — perplexity
     * is its exponential), then split into head/middle/tail THIRDS of
@@ -1366,34 +1404,14 @@ object TextAnalysis {
     * is the point: a source whose documents land mostly in tail is
     * machine-generated or scraped noise. Exact thirds without a global
     * sort: scores are rounded at 4 (hash-stable decimal means), so the
-    * distinct-value CELL frame is bounded; the cumulative-count window
-    * runs over that aggregate (the exactPercentiles trick), and the
+    * distinct-value CELL frame is bounded; the cumulative count is a
+    * local loop over that collected aggregate ([[pplCells]]), and the
     * boundary CELL goes wholly to the better bucket — a deterministic
     * integer rule (cum_before·3 < total) both engines reproduce. The
     * doc→bucket assignment is a broadcast join of the cell map onto the
     * scored docs; source arrives via one shuffle_hash doc_id join; the
     * output is sources×3 rows.
     */
-  /** The exact-thirds bucket map behind [[qPplBucket]] and the
-    * pipeline's tail-drop stage: a frame carrying `avg_logp` →
-    * (avg_logp, bucket) with head/middle/tail split by the cumulative
-    * integer rule over the rounded-score cell frame. Broadcast it back
-    * onto the scored frame to assign buckets.
-    */
-  def pplBuckets(scored: DataFrame): DataFrame = {
-    val wCum = Window.orderBy(col("avg_logp").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cells = scored.groupBy(col("avg_logp")).agg(count(lit(1)).as("n_cell"))
-    val total = cells.agg(sum(col("n_cell")).as("tot"))
-    cells
-      .withColumn("cum_before", coalesce(sum(col("n_cell")).over(wCum), lit(0L)))
-      .crossJoin(broadcast(total))
-      .select(col("avg_logp"),
-        when(col("cum_before") * 3 < col("tot"), "head")
-          .when(col("cum_before") * 3 < col("tot") * 2, "middle")
-          .otherwise("tail").as("bucket"))
-  }
-
   def qPplBucket(s: SparkSession, dir: String): DataFrame = {
     val lm = bigramScores(Tables.documents(s, dir))
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"))
@@ -2156,7 +2174,7 @@ object TextAnalysis {
         when(TextFns.stopCount(col("toks")) > 0, 1L)
           .otherwise(0L).as("c1"),
         when(aggregate(col("toks"), lit(0L),
-          (acc, t) => acc + length(t)) * 10 <= size(col("toks")) * 55, 1L)
+          (acc, t) => acc + length(t)) * 10 <= lit(55L) * size(col("toks")), 1L)
           .otherwise(0L).as("c2"),
         when(array_contains(col("toks"), "the"), 1L).otherwise(0L).as("c3"))
       .withColumn("l", col("c1") + col("c2") + col("c3"))

@@ -37,4 +37,11 @@ object Fence {
     */
   def filterNoPushdown(df: DataFrame, valueCol: Column, cond: Column => Column): DataFrame =
     df.filter(cond(noPush(valueCol)))
+
+  /** `df.filter(cond)` pinned where it is written, for a boolean column:
+    * `cond <=> true` with the true read from a nondeterministic term, one
+    * predicate that no rule pushes or splits. NULL still drops the row.
+    */
+  def filterNoPushdown(df: DataFrame, cond: Column): DataFrame =
+    df.filter(cond <=> (monotonically_increasing_id() >= 0))
 }

@@ -1,14 +1,49 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Curation
+import graft.operators.{Curation, Packing}
+import graft.sources.Tables
 
 class CuratePipelineSpec extends SparkSpec {
 
+  /** Every Summary field against a plain-Spark recount of what the run
+    * wrote (corpus, manifest) and of the curated frame it cut the tail
+    * from. Schemas are explicit: an empty sink writes no data file.
+    */
+  private def assertRecounted(dir: String, out: String, s: CuratePipeline.Summary): Unit = {
+    val curated = CuratePipeline.curatedFrame(spark, dir)
+    val corpus = spark.read.schema(curated.schema).parquet(s"$out/corpus")
+    val bySplit = corpus.groupBy(col("split")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val manifestSchema = Packing.packOffsets(
+      curated.select(col("doc_id"), col("n_tokens").cast("long").as("n_toks"))).schema
+    val nSeqs = spark.read.schema(manifestSchema).parquet(s"$out/pack_manifest")
+      .agg(coalesce(max(col("last_seq")) + 1, lit(0L))).head().getLong(0)
+    val nWritten = corpus.count()
+    assert(s == CuratePipeline.Summary(Tables.documents(spark, dir).count(), nWritten,
+      bySplit, curated.count() - nWritten, nSeqs))
+  }
+
+  /** Writes `texts` as a documents table and returns its directory. */
+  private def corpusOf(texts: Seq[String]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_in").toString
+    texts.zipWithIndex.map { case (t, i) => (i + 1L, t, "en", s"src$i", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  private def outDir(): String =
+    java.nio.file.Files.createTempDirectory("graft_pipe_out").toString
+
   test("the end-to-end curation run writes a consistent, split-partitioned corpus") {
-    val out = java.nio.file.Files.createTempDirectory("graft_pipeline").toString
+    val out = outDir()
     val s = CuratePipeline.run(spark, sf001, out)
+    assertRecounted(sf001, out, s)
     assert(s.nInput == 500L)
     assert(s.nWritten > 0L && s.nWritten <= s.nInput)
     assert(s.bySplit.values.sum == s.nWritten)
@@ -54,16 +89,12 @@ class CuratePipelineSpec extends SparkSpec {
   }
 
   test("an empty and a whitespace-only document are dropped, not a failed run") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_blank").toString
-    val good = (1L to 6L).map(i => (i,
-      s"the cat and the dog ran to the park $i and sat in the sun with a friend", "en"))
-    val texts = good ++ Seq((7L, "", "en"), (8L, " \t\n ", "en"))
-    texts.map { case (id, t, lang) => (id, t, lang, s"src$id", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = java.nio.file.Files.createTempDirectory("graft_pipe_blank_out").toString
+    val good = (1 to 6).map(i =>
+      s"the cat and the dog ran to the park $i and sat in the sun with a friend")
+    val dir = corpusOf(good ++ Seq("", " \t\n "))
+    val out = outDir()
     val s = CuratePipeline.run(spark, dir, out)
+    assertRecounted(dir, out, s)
     assert(s.nInput == 8L && s.nWritten > 0L)
     val ids = spark.read.parquet(s"$out/corpus").select(col("doc_id"))
       .collect().map(_.getLong(0)).toSet
@@ -71,13 +102,43 @@ class CuratePipelineSpec extends SparkSpec {
   }
 
   test("the pipeline handles an empty corpus without erroring") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_empty").toString
-    Seq.empty[(Long, String, String, String, Long)]
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = java.nio.file.Files.createTempDirectory("graft_pipe_empty_out").toString
+    val dir = corpusOf(Seq.empty)
+    val out = outDir()
     val s = CuratePipeline.run(spark, dir, out)
+    assertRecounted(dir, out, s)
     assert(s.nInput == 0L && s.nWritten == 0L && s.bySplit.isEmpty)
+  }
+
+  test("a corpus with no keepable document still counts its input") {
+    val dir = corpusOf(Seq("", " \t\n ", ""))
+    val out = outDir()
+    val s = CuratePipeline.run(spark, dir, out)
+    assertRecounted(dir, out, s)
+    assert(s == CuratePipeline.Summary(3L, 0L, Map.empty, 0L, 0L))
+  }
+
+  test("a run starts a bounded number of jobs, each named for its pipeline stage") {
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(String.valueOf(e.properties.getProperty("callSite.short")))
+    }
+    sc.setCallSite("the caller's site")
+    sc.addSparkListener(l)
+    try {
+      CuratePipeline.run(spark, sf001, outDir())
+      ListenerBusDrain(sc)
+      assert(sc.getLocalProperty("callSite.short") == "the caller's site")
+    } finally {
+      sc.removeSparkListener(l)
+      sc.clearCallSite()
+    }
+    import scala.jdk.CollectionConverters._
+    val jobs = sites.asScala.toSeq
+    // 27 at sf0.001; 43 when the Summary came from count and read-back
+    // jobs and the tail cut from a window/crossJoin chain
+    assert(jobs.size <= 30, jobs.groupBy(identity).map { case (k, v) => s"$k: ${v.size}" })
+    assert(jobs.forall(_.matches(".+ at CuratePipeline\\.scala:\\d+")), jobs.distinct)
   }
 }

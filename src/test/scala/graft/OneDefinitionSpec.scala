@@ -22,8 +22,9 @@ class OneDefinitionSpec extends AnyFunSuite {
   private val definitions = Seq(
     ("the English stopword list is written once, in TextFns",
       """"the",\s*"a",\s*"of",\s*"and",\s*"to"""", Seq("TextFns.scala")),
+    // TextFns.stopCount is the native count_in, so no isin site is left
     ("isin over a stop list is only TextFns.stopCount",
-      """isin\((?:\w+\.)*(?:StopWords|\w+Stop|words)\b""", Seq("TextFns.scala")),
+      """isin\((?:\w+\.)*(?:StopWords|\w+Stop|words)\b""", Seq()),
     ("the DuckDB stopword filter is only TextFns.stopCountSql",
       """list_filter\(toks,\s*(\w+)\s*->\s*(?:\1\s+IN\b|list_contains\()""",
       Seq("TextFns.scala")),
@@ -34,7 +35,17 @@ class OneDefinitionSpec extends AnyFunSuite {
     ("the oracle symbol class is only Curation.symbolRatioSql",
       """'\[a-zA-Z0-9 \]'""", Seq("Curation.scala")),
     // RE2's \s lacks \x0B; oracles split on TextFns.wsClassSql instead
-    ("no oracle splits on RE2's \\s", """'\\{1,2}s\+'""", Seq()))
+    ("no oracle splits on RE2's \\s", """'\\{1,2}s\+'""", Seq()),
+    ("the email regex is applied only by Curation.scrubEmails and its SQL twin",
+      """regexp_replace\(.{0,40}?EmailRe""", Seq("Curation.scala", "Curation.scala")),
+    ("the engine email scrub is guarded by instr(text, '@')",
+      """instr\(text, "@"\) > 0, regexp_replace\(text, EmailRe""", Seq("Curation.scala")),
+    // Curation.symbolRatio counts it natively; no translate of the class is left
+    ("the symbol class is spelled only in SymbolCount",
+      """abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 """",
+      Seq("SymbolCount.scala")),
+    ("the perplexity bucket thresholds are only TextAnalysis.bucketOf and its oracle",
+      """\* 3 < [\w.()"]+ \* 2""", Seq("TextAnalysis.scala", "TextAnalysis.scala")))
 
   for ((name, pattern, expected) <- definitions)
     test(name) {

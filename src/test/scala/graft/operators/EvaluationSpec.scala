@@ -123,4 +123,16 @@ class EvaluationSpec extends SparkSpec {
     assert(scores.toSeq == Seq(1000L, 0L))
     assert(Evaluation.qAuc(spark, dir).head.getAs[Double]("auc") == 1.0)
   }
+
+  test("cochran Q's word-length gate multiplies the token count in 64 bits") {
+    import org.apache.spark.sql.catalyst.expressions.{Multiply, Size}
+    import org.apache.spark.sql.types.LongType
+    // a 32-bit size * 55 throws under ANSI past 2^31 / 55 ≈ 39M tokens,
+    // a document of ~80 MB, so the analyzed plan is checked instead
+    val products = TextAnalysis.qCochranQ(spark, sf001).queryExecution.analyzed
+      .flatMap(_.expressions).flatMap(_.collect {
+        case m: Multiply if m.exists(_.isInstanceOf[Size]) => m
+      })
+    assert(products.nonEmpty && products.forall(_.dataType == LongType), products)
+  }
 }
