@@ -8,6 +8,10 @@ that moved more than THRESH x in either direction — the short list to
 rerun in isolation (`sbt "runMain graft.Bench <name> ..."`) before
 believing (or dismissing) the movement.
 
+When both records carry the per-query `cpu` map (process CPU seconds),
+movers are also flagged by CPU ratio and printed with both readings: a
+query that moved in wall time but not in CPU points at the host.
+
 Inputs are file paths or git revs of bench_full.json:
     python3 dev/bench_compare.py bench_full.json HEAD~1:bench_full.json
     python3 dev/bench_compare.py a1205da:bench_full.json bench_full.json
@@ -56,6 +60,8 @@ def main(old_spec: str, new_spec: str) -> int:
         if r > THRESH or r < 1 / THRESH:
             movers.append((r, q, a, b))
     movers.sort(reverse=True)
+    if "cpu" in old_doc and "cpu" in new_doc:
+        report_cpu_movers(old_doc, new_doc, common)
     if movers:
         print(f"\n{len(movers)} queries moved >{THRESH}x:")
         for r, q, a, b in movers:
@@ -76,6 +82,20 @@ def main(old_spec: str, new_spec: str) -> int:
         print(f"\nnew queries this round: {len(added)}, "
               f"{sum(new[q] for q in added):.1f}s total")
     return 0
+
+
+def report_cpu_movers(old_doc: dict, new_doc: dict, common: list) -> None:
+    cpu_old, cpu_new = old_doc["cpu"], new_doc["cpu"]
+    movers = []
+    for q in common:
+        a, b = cpu_old.get(q, -1.0), cpu_new.get(q, -1.0)
+        if a > 0 and b > 0 and (b / a > THRESH or b / a < 1 / THRESH):
+            movers.append((b / a, q, a, b))
+    movers.sort(reverse=True)
+    print(f"\n{len(movers)} queries moved >{THRESH}x in process CPU:")
+    for r, q, a, b in movers:
+        print(f"  {q}: cpu {a:.2f}s -> {b:.2f}s  ({r:.2f}x)  "
+              f"[wall {old_doc['queries'][q]:.2f}s -> {new_doc['queries'][q]:.2f}s]")
 
 
 if __name__ == "__main__":

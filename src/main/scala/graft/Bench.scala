@@ -1,5 +1,6 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
@@ -16,6 +17,14 @@ import org.json4s.jackson.JsonMethods
   * query is timed as the min of two runs — steady-state numbers, which
   * is what a resident engine on a cluster actually delivers.
   *
+  * Each timed run reads both wall time and the process CPU time
+  * (`OperatingSystemMXBean.getProcessCpuTime`). In `local[n]` the
+  * executors are threads of this JVM, so that one reading covers driver
+  * and task CPU; it also covers GC, JIT and Spark's background threads,
+  * which is why two sweeps of one tree agree on it less well than on
+  * wall time (ROADMAP item 8), and why the wall-clock movers below still
+  * get isolation reruns.
+  *
   * Methodology (r2): each run is timed against the `noop` sink
   * (`df.write.format("noop")`), not `.count()`. Counting lets
   * ColumnPruning drop every computed column from the timed plan (q1's
@@ -27,6 +36,17 @@ import org.json4s.jackson.JsonMethods
 object Bench {
   private def exec(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  private val osBean = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** CPU seconds this JVM has used so far, over all its threads. */
+  private def processCpuSeconds(): Double = osBean.getProcessCpuTime / 1e9
+
+  /** One query's steady-state reading: the min wall seconds and the min
+    * process CPU seconds of its two timed runs, each -1.0 if it failed.
+    */
+  private[graft] case class Timing(query: String, wallS: Double, cpuS: Double)
 
   /** One fresh-JVM rerun of a sweep mover: its sweep seconds, its
     * isolated seconds, and the 1-min loadavg when its child started. */
@@ -170,9 +190,10 @@ object Bench {
   private def driftExceeded(median: Double): Boolean = median > 1.25 || median < 0.6
 
   /** The sweep's two records: the full `bench_full.json` object and the
-    * compact final stdout line. A failed query stays in `queries` as
-    * -1.0 and counts in `n_failed`; `value` sums only the queries that
-    * ran, so a failure never lowers the suite total.
+    * compact final stdout line. `queries` maps each query to its wall
+    * seconds and `cpu` to its process CPU seconds. A failed query stays
+    * in both as -1.0 and counts in `n_failed`; `value` and `cpu_total`
+    * sum only the queries that ran, so a failure never lowers a total.
     *
     * The bench runner captures only the LAST 2000 chars of stdout and parses
     * the JSON it finds there, so the full per-query map goes to
@@ -187,11 +208,12 @@ object Bench {
     * ride along, top 8 by sweep time.
     */
   private[graft] def records(
-      results: Seq[(String, Double)], isolated: Seq[Isolated],
+      timings: Seq[Timing], isolated: Seq[Isolated],
       prior: Map[String, Double], drift: Double, sfDir: String,
       loadStart: List[JValue], loadEnd: List[JValue]): (JObject, JObject) = {
     def times(qs: Seq[(String, Double)]) =
       JObject(qs.map { case (q, t) => q -> f3(t) }.toList)
+    val results = timings.map(t => t.query -> t.wallS)
     // iso triple: [sweep_s, fresh_jvm_s, child_start_loadavg1]
     def triples(is: Seq[Isolated]) = JObject(is.map(i =>
       i.query -> JArray(List(f3(i.sweepS), f3(i.isolatedS), f3(i.load1)))).toList)
@@ -202,14 +224,17 @@ object Bench {
       "drift_median" -> f3(drift), "drift_exceeded" -> JBool(driftExceeded(drift)))
     val sf = "sf" -> JString(sfDir)
     val full = JObject(head ++ List(
-      "queries" -> times(results), "isolated" -> triples(isolated),
+      "queries" -> times(results), "cpu" -> times(timings.map(t => t.query -> t.cpuS)),
+      "isolated" -> triples(isolated),
       "loadavg_start" -> JArray(loadStart), "loadavg_end" -> JArray(loadEnd))
       ++ driftFields :+ sf)
     def pct(p: Double) = f3(if (ok.isEmpty) 0.0 else ok(((ok.length - 1) * p).round.toInt))
     val byName = results.toMap
     val compactNames = (results.sortBy(-_._2).take(8).map(_._1)
       ++ prior.toSeq.sortBy(-_._2).take(8).map(_._1)).distinct.filter(byName.contains)
+    val cpuTotal = timings.filter(_.wallS >= 0).map(_.cpuS).sum
     val compact = JObject(head ++ List(
+      "cpu_total" -> f3(cpuTotal),
       "n_queries" -> JInt(results.size), "n_failed" -> JInt(results.size - ok.size),
       "median" -> pct(0.5), "p95" -> pct(0.95), "max" -> pct(1.0),
       "queries_file" -> JString("bench_full.json"),
@@ -237,20 +262,21 @@ object Bench {
     // q_item_cf 7s → 25s) — the async block-removal RPC storm costs more
     // than the storage rent it frees. Leave block-manager hygiene to
     // Spark's own LRU eviction.
-    val results = suite.map { case (name, fn) =>
+    val timings = suite.map { case (name, fn) =>
       try {
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
+        val runs = (1 to 2).map { _ =>
+          val (t0, c0) = (System.nanoTime(), processCpuSeconds())
           exec(fn(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
+          ((System.nanoTime() - t0) / 1e9, processCpuSeconds() - c0)
         }
-        name -> times.min
+        Timing(name, runs.map(_._1).min, runs.map(_._2).min)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          name -> -1.0
+          Timing(name, -1.0, -1.0)
       }
     }
+    val results = timings.map(t => t.query -> t.wallS)
     val prior = priorRun(sfDir)
     val drift = driftMedian(results, prior)
     if (driftExceeded(drift))
@@ -321,7 +347,7 @@ object Bench {
         }
       }
     val (full, compact) =
-      records(results, isolated, prior, drift, sfDir, loadStart, loadavg())
+      records(timings, isolated, prior, drift, sfDir, loadStart, loadavg())
     val fullLine = JsonMethods.compact(full)
     try Files.write(Paths.get("bench_full.json"), (fullLine + "\n").getBytes(UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }

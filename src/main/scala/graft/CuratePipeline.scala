@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
 import graft.operators.{Curation, Packing, TextAnalysis}
-import graft.plans.Fence
 import graft.sources.{CloudOptimize, Interchange, Tables}
 
 /** The end-to-end curation run a user of this library actually executes:
@@ -45,13 +44,9 @@ object CuratePipeline {
     val keepers = input.fold(fps)(fps.observe(_, count(lit(1)).as("n")))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
-    val scored = Curation.withQuality(
+    Curation.scoreAndKeep(
       docs.join(keepers, Seq("doc_id"), "left_semi")
         .withColumn("text", Curation.scrubEmails(col("text"))))
-    // pinned above the projection: pushed below the semi-join, the
-    // filter would inline the whole quality derivation, which the
-    // projection then computes a second time
-    Fence.filterNoPushdown(scored, col("keep"))
       .withColumn("split", Curation.splitCol)
       .select(col("doc_id"), col("source"), col("lang"), col("text"),
         col("n_tokens"), round(col("score"), 4).as("quality_score"), col("split"))

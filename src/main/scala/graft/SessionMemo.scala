@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.SparkSession
 
 /** Registry of session-scoped derived-frame memos and their eviction
@@ -17,9 +19,10 @@ import org.apache.spark.sql.SparkSession
   * half of the contract: a way to drop them so the corpus can be
   * re-ingested or executor storage reclaimed.
   *
-  * Mechanics: each memo site registers an evictor under a stable name
-  * at object-initialization (i.e. on the family's first use — an
-  * untouched family has nothing memoized and nothing registered).
+  * Mechanics: each memo site builds its map with [[keyed]], which
+  * registers its evictor under a stable name at object-initialization
+  * (i.e. on the family's first use — an untouched family has nothing
+  * memoized and nothing registered).
   * [[evict]] drops every memo entry belonging to the given session.
   * Dropping the map entry releases the last strong reference to the
   * checkpointed DataFrame; Spark's ContextCleaner then frees the
@@ -38,8 +41,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionMemo {
 
-  private val evictors = scala.collection.concurrent.TrieMap
-    .empty[String, SparkSession => Int]
+  private val evictors = TrieMap.empty[String, SparkSession => Int]
 
   /** Register (or replace) the evictor for one memo site. The evictor
     * returns HOW MANY entries it actually dropped (r10 advice: an
@@ -48,6 +50,20 @@ object SessionMemo {
     */
   def register(name: String)(f: SparkSession => Int): Unit =
     evictors.put(name, f)
+
+  /** A memo map keyed by session, with its evictor registered under
+    * `name`: the evictor drops the given session's entries and every
+    * stopped session's, and returns how many it dropped.
+    */
+  def keyed[K, V](name: String): TrieMap[(SparkSession, K), V] = {
+    val memo = TrieMap.empty[(SparkSession, K), V]
+    register(name) { s =>
+      val before = memo.size
+      memo.filterInPlace((k, _) => (k._1 ne s) && !k._1.sparkContext.isStopped)
+      before - memo.size
+    }
+    memo
+  }
 
   /** Drop every registered memo's entries for `s` (and, as a hygiene
     * sweep, entries belonging to any STOPPED session — memo maps are

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NumFns, TextFns}
+import graft.plans.Fence
 import graft.sources.Tables
 
 /** Corpus-curation operators — the selection/splitting/cleaning stages of
@@ -584,6 +585,15 @@ object Curation {
       .withColumn("keep", col("z") > 0)
       .drop("toks", "stop_ratio", "symbol_ratio")
   }
+
+  /** [[withQuality]] with only the rows it keeps, for the batch
+    * [[graft.CuratePipeline]] and the stream alike. The filter is fenced
+    * above the projection: pushed below it, the filter would inline the
+    * whole quality derivation, which the projection then computes a
+    * second time.
+    */
+  def scoreAndKeep(df: DataFrame): DataFrame =
+    Fence.filterNoPushdown(withQuality(df), col("keep"))
 
   /** SQL twin of [[withQuality]]'s feature projection — the ONE
     * definition of the classifier features on the oracle side, spliced

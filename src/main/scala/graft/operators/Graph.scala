@@ -807,18 +807,10 @@ object Graph {
     * fact pair join. In a resident engine the edge frame IS a
     * materialized artifact every graph health check reads.
     */
-  private val edgeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, String), DataFrame]
-
-  // eviction contract: see graft.SessionMemo — drops this session's
-  // edge frames (plus any stopped session's) so the next consumer
-  // re-derives from current tables; returns the dropped-entry count
-  graft.SessionMemo.register("graph.edgeMemo") { s =>
-    val before = edgeMemo.size
-    edgeMemo.filterInPlace((k, _) =>
-      (k._1 ne s) && !k._1.sparkContext.isStopped)
-    before - edgeMemo.size
-  }
+  // eviction drops a session's edge frames, so the next consumer
+  // re-derives from current tables (see graft.SessionMemo)
+  private val edgeMemo =
+    graft.SessionMemo.keyed[(String, String, String), DataFrame]("graph.edgeMemo")
 
   /** The un-checkpointed edge derivation — split out so its plan shape
     * stays auditable (the memoized frame's lineage is truncated).
@@ -852,7 +844,7 @@ object Graph {
 
   private[graft] def cappedPairEdges(s: SparkSession, dir: String,
       keyCol: String, itemCol: String): DataFrame =
-    edgeMemo.getOrElseUpdate((s, dir, keyCol, itemCol),
+    edgeMemo.getOrElseUpdate((s, (dir, keyCol, itemCol)),
       pairEdgesFrame(s, dir, keyCol, itemCol).localCheckpoint())
 
   /** Supplier co-supply edges (suppliers sharing a part), hub-capped. */

@@ -145,16 +145,7 @@ object Recsys {
     * reads it. localCheckpoint truncates the lineage so the consumer's
     * plan starts from the ≤ 5·|parts|-row table, not the fact join.
     */
-  private val cfMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  // eviction contract: see graft.SessionMemo; returns the dropped count
-  graft.SessionMemo.register("recsys.cfMemo") { s =>
-    val before = cfMemo.size
-    cfMemo.filterInPlace((k, _) =>
-      (k._1 ne s) && !k._1.sparkContext.isStopped)
-    before - cfMemo.size
-  }
+  private val cfMemo = graft.SessionMemo.keyed[String, DataFrame]("recsys.cfMemo")
 
   private def cfTable(s: SparkSession, dir: String): DataFrame =
     cfMemo.getOrElseUpdate((s, dir), qItemCf(s, dir).localCheckpoint())

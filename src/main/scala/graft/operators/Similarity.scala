@@ -515,7 +515,7 @@ object Similarity {
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("b.vec_id").as("vec_id"), col("b.cell").as("cell"),
         col("a.vec_id").as("keeper"), simCol.as("sim"))
-    graft.plans.Fence.filterNoPushdown(pairs, col("sim"), _ >= NearDupThreshold)
+    graft.plans.Fence.filterNoPushdown(pairs, col("sim") >= NearDupThreshold)
       .groupBy(col("vec_id"))
       .agg(min(col("cell")).as("cell"),
         min(col("keeper")).as("kept_by"),
@@ -1032,7 +1032,7 @@ object Similarity {
       .join(cells.as("b").hint("shuffle_hash"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.label").as("label"), col("b.label").as("lb"), simCol.as("sim"))
-    val fenced = graft.plans.Fence.filterNoPushdown(pairs, col("sim"), _ >= NearDupThreshold)
+    val fenced = graft.plans.Fence.filterNoPushdown(pairs, col("sim") >= NearDupThreshold)
     // sims carry 4 decimals, so a decimal-sum ÷ n CAN land exactly on a
     // rounding boundary — quantize to exact int64 ten-thousandths and
     // divide/round portably instead (same discipline as the temperature

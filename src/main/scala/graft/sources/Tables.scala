@@ -1,6 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
 import scala.util.Try
 
 import org.apache.hadoop.fs.Path
@@ -21,14 +20,8 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   // (session, table path) -> (table modification time, on-disk schema)
-  private val schemaMemo = TrieMap.empty[(SparkSession, String), (Long, StructType)]
-
-  // eviction contract: see graft.SessionMemo
-  graft.SessionMemo.register("tables.schemaMemo") { s =>
-    val before = schemaMemo.size
-    schemaMemo.filterInPlace((k, _) => (k._1 ne s) && !k._1.sparkContext.isStopped)
-    before - schemaMemo.size
-  }
+  private val schemaMemo =
+    graft.SessionMemo.keyed[String, (Long, StructType)]("tables.schemaMemo")
 
   /** The parquet table at `path`, with its schema inferred once per
     * session and table version. Inference runs a footer-reading job,

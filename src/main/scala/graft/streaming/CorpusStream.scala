@@ -22,8 +22,7 @@ object CorpusStream {
     * not corpus size.
     */
   def curated(docs: DataFrame): DataFrame =
-    Curation.withQuality(docs)
-      .filter(col("keep"))
+    Curation.scoreAndKeep(docs)
       .select(col("doc_id"), col("source"), col("n_tokens"),
         round(col("score"), 4).as("quality_score"))
 

@@ -85,6 +85,13 @@ class CorpusStreamSpec extends SparkSpec {
       val plan = q.lastProgress.toString
       assert(!plan.contains("stateOperators\" : [ {"),
         "quality curation must not register state stores")
+      // the keep filter stays above the quality projection: pushed below
+      // it, the filter would inline the derivation and tokenize each
+      // document again
+      val executed = q.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+      assert("ws_tokens\\(".r.findAllMatchIn(executed).size == 1, executed)
     } finally q.stop()
   }
 
