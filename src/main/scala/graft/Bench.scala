@@ -23,7 +23,8 @@ import org.json4s.jackson.JsonMethods
   * and task CPU; it also covers GC, JIT and Spark's background threads,
   * which is why two sweeps of one tree agree on it less well than on
   * wall time (ROADMAP item 8), and why the wall-clock movers below still
-  * get isolation reruns.
+  * get isolation reruns. The GC and JIT time of the same run ride beside
+  * it, so a CPU gap between sweeps can be checked against them.
   *
   * Methodology (r2): each run is timed against the `noop` sink
   * (`df.write.format("noop")`), not `.count()`. Counting lets
@@ -43,10 +44,23 @@ object Bench {
   /** CPU seconds this JVM has used so far, over all its threads. */
   private def processCpuSeconds(): Double = osBean.getProcessCpuTime / 1e9
 
+  /** Elapsed seconds this JVM has spent so far in garbage collection,
+    * summed over its collectors, and in JIT compilation: the two
+    * background costs that the process CPU reading also carries. */
+  private def gcSeconds(): Double = {
+    import scala.jdk.CollectionConverters._
+    ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime.max(0L)).sum / 1e3
+  }
+  private def jitSeconds(): Double =
+    ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3
+
   /** One query's steady-state reading: the min wall seconds and the min
-    * process CPU seconds of its two timed runs, each -1.0 if it failed.
+    * process CPU seconds of its two timed runs, and the GC and JIT
+    * seconds of the run whose CPU is kept; each -1.0 if it failed.
     */
-  private[graft] case class Timing(query: String, wallS: Double, cpuS: Double)
+  private[graft] case class Timing(
+      query: String, wallS: Double, cpuS: Double, gcS: Double, jitS: Double)
 
   /** One fresh-JVM rerun of a sweep mover: its sweep seconds, its
     * isolated seconds, and the 1-min loadavg when its child started. */
@@ -191,9 +205,11 @@ object Bench {
 
   /** The sweep's two records: the full `bench_full.json` object and the
     * compact final stdout line. `queries` maps each query to its wall
-    * seconds and `cpu` to its process CPU seconds. A failed query stays
-    * in both as -1.0 and counts in `n_failed`; `value` and `cpu_total`
-    * sum only the queries that ran, so a failure never lowers a total.
+    * seconds and `cpu` to its process CPU seconds; the full record's `gc`
+    * and `jit` hold the elapsed GC and JIT seconds of the run `cpu`
+    * keeps. A failed query stays in every map as -1.0 and counts in
+    * `n_failed`; `value` and `cpu_total` sum only the queries that ran,
+    * so a failure never lowers a total.
     *
     * The bench runner captures only the LAST 2000 chars of stdout and parses
     * the JSON it finds there, so the full per-query map goes to
@@ -225,6 +241,8 @@ object Bench {
     val sf = "sf" -> JString(sfDir)
     val full = JObject(head ++ List(
       "queries" -> times(results), "cpu" -> times(timings.map(t => t.query -> t.cpuS)),
+      "gc" -> times(timings.map(t => t.query -> t.gcS)),
+      "jit" -> times(timings.map(t => t.query -> t.jitS)),
       "isolated" -> triples(isolated),
       "loadavg_start" -> JArray(loadStart), "loadavg_end" -> JArray(loadEnd))
       ++ driftFields :+ sf)
@@ -265,15 +283,18 @@ object Bench {
     val timings = suite.map { case (name, fn) =>
       try {
         val runs = (1 to 2).map { _ =>
-          val (t0, c0) = (System.nanoTime(), processCpuSeconds())
+          val (t0, c0, g0, j0) =
+            (System.nanoTime(), processCpuSeconds(), gcSeconds(), jitSeconds())
           exec(fn(spark, sfDir))
-          ((System.nanoTime() - t0) / 1e9, processCpuSeconds() - c0)
+          ((System.nanoTime() - t0) / 1e9, processCpuSeconds() - c0,
+            gcSeconds() - g0, jitSeconds() - j0)
         }
-        Timing(name, runs.map(_._1).min, runs.map(_._2).min)
+        val kept = runs.minBy(_._2)
+        Timing(name, runs.map(_._1).min, kept._2, kept._3, kept._4)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          Timing(name, -1.0, -1.0)
+          Timing(name, -1.0, -1.0, -1.0, -1.0)
       }
     }
     val results = timings.map(t => t.query -> t.wallS)

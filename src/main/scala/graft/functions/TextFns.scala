@@ -63,6 +63,12 @@ object TextFns {
   def stopScore(toks: Column, scale: Long): Column =
     floor(lit(scale) * stopCount(toks) / size(toks))
 
+  /** Total characters over the tokens of `toks`, as a bigint (0 for an
+    * empty array): one lambda pass.
+    */
+  def wordChars(toks: Column): Column =
+    aggregate(toks, lit(0L), (acc, t) => acc + length(t))
+
   /** (w1, w2) struct of every adjacent token pair, in order; the struct
     * fields are named "0" and "1". Callers must filter size >= 2 tokens.
     */
@@ -103,6 +109,9 @@ object TextFns {
   /** [[stopCount]] and [[stopScore]] over the column `toks`. */
   def stopCountSql(words: Seq[String] = StopWords): String =
     s"len(list_filter(toks, x -> x IN (${words.map(w => s"'$w'").mkString(", ")})))"
+  /** [[wordChars]] over the column `toks`; NULL for an empty list, where
+    * every caller divides by or filters on the token count. */
+  val wordCharsSql = "list_sum(list_transform(toks, x -> length(x)))"
   def stopScoreSql(scale: Long): String =
     s"CAST(floor($scale * ${stopCountSql()} / len(toks)) AS BIGINT)"
   def hash28Sql(x: String): String = s"('0x' || substr(md5($x), 1, 7))::BIGINT"

@@ -174,8 +174,7 @@ object Curation {
       .select(col("doc_id"), col("text"), TextFns.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("text"),
         size(col("toks")).as("n_tokens"),
-        aggregate(transform(col("toks"), t => length(t)), lit(0), (a, x) => a + x)
-          .as("sum_word_len"),
+        TextFns.wordChars(col("toks")).as("sum_word_len"),
         TextFns.stopCount(col("toks")).as("n_stop"))
       .select(col("doc_id"), col("n_tokens"),
         round(col("sum_word_len") / col("n_tokens"), 4).as("mean_word_len"),
@@ -195,7 +194,7 @@ object Curation {
        |c AS (
        |  SELECT doc_id, text,
        |    len(toks) AS n_tokens,
-       |    list_sum(list_transform(toks, x -> length(x))) AS sum_word_len,
+       |    ${TextFns.wordCharsSql} AS sum_word_len,
        |    ${TextFns.stopCountSql()} AS n_stop
        |  FROM t
        |), m AS (
@@ -975,8 +974,7 @@ object Curation {
       .select(col("doc_id"),
         (col("doc_id") === col("keeper")).as("f1"),
         size(col("toks")).as("n_tokens"),
-        round(aggregate(transform(col("toks"), t => length(t)), lit(0),
-          (a, x) => a + x) / size(col("toks")), 4).as("mean_word_len"),
+        round(TextFns.wordChars(col("toks")) / size(col("toks")), 4).as("mean_word_len"),
         round(symbolRatio(col("text")), 4).as("symbol_ratio"),
         TextFns.stopCount(col("toks")).as("n_stop"),
         symbolRatio(col("text")).as("sym_raw"))
@@ -1023,8 +1021,7 @@ object Curation {
        |  SELECT t.doc_id,
        |    t.doc_id = k.keeper AS f1,
        |    len(toks) AS n_tokens,
-       |    round(list_sum(list_transform(toks, x -> length(x)))
-       |      / CAST(len(toks) AS DOUBLE), 4) AS mean_word_len,
+       |    round(${TextFns.wordCharsSql} / CAST(len(toks) AS DOUBLE), 4) AS mean_word_len,
        |    round(q.symbol_ratio, 4) AS symbol_ratio,
        |    ${TextFns.stopCountSql()} AS n_stop,
        |    q.z

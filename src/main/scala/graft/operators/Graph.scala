@@ -90,19 +90,13 @@ object Graph {
     ranks
   }
 
-  /** Triangle count over the nation co-trade graph (an undirected edge
-    * links two nations when any order ships a supplier's part of one to
-    * a customer of the other). The classic clustering-coefficient
-    * numerator, computed the scalable way: edges are canonicalized
-    * a < b and MATERIALIZED once (the fact⋈fact derivation must not run
-    * three times), then triangles enumerate as the ordered 2-path join
-    * e(a,b)⋈e(b,c) closed by e(a,c) — the a<b<c ordering counts each
-    * triangle exactly once and caps the join fan-out at the out-degree
-    * of the middle node. At 100 TB the edge frame is the persisted
-    * artifact; the joins shuffle bare (node, node) pairs.
+  /** The nation co-trade graph's edge rows `(a, b)`, a < b: one row per
+    * lineitem whose customer's and supplier's nations differ, the pair
+    * canonicalized so each undirected edge has one spelling. Callers take
+    * `.distinct()` for the edge list or group it into per-edge support.
     */
-  def qTriangleCount(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.orders(s, dir)
+  def coTrade(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
       .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .join(Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey").as("nc")),
@@ -112,8 +106,30 @@ object Graph {
         col("l_suppkey") === col("s_suppkey"))
       .filter(col("nc") =!= col("ns"))
       .select(least(col("nc"), col("ns")).as("a"), greatest(col("nc"), col("ns")).as("b"))
-      .distinct()
-      .localCheckpoint()
+
+  /** SQL twin of [[coTrade]]. */
+  val coTradeSql: String =
+    """SELECT least(c_nationkey, s_nationkey) AS a,
+      |  greatest(c_nationkey, s_nationkey) AS b
+      |FROM orders
+      |JOIN lineitem ON o_orderkey = l_orderkey
+      |JOIN customer ON o_custkey = c_custkey
+      |JOIN supplier ON l_suppkey = s_suppkey
+      |WHERE c_nationkey != s_nationkey""".stripMargin
+
+  /** Triangle count over the nation co-trade graph (an undirected edge
+    * links two nations when any order ships a supplier's part of one to
+    * a customer of the other). The classic clustering-coefficient
+    * numerator, computed the scalable way: the [[coTrade]] edge list is
+    * MATERIALIZED once (the fact⋈fact derivation must not run
+    * three times), then triangles enumerate as the ordered 2-path join
+    * e(a,b)⋈e(b,c) closed by e(a,c) — the a<b<c ordering counts each
+    * triangle exactly once and caps the join fan-out at the out-degree
+    * of the middle node. At 100 TB the edge frame is the persisted
+    * artifact; the joins shuffle bare (node, node) pairs.
+    */
+  def qTriangleCount(s: SparkSession, dir: String): DataFrame = {
+    val e = coTrade(s, dir).distinct().localCheckpoint()
     val nodes = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
       .distinct().agg(count(lit(1)).as("n_nodes"))
     val edges = e.agg(count(lit(1)).as("n_edges"))
@@ -126,14 +142,8 @@ object Graph {
   }
 
   val qTriangleCountOracle: String =
-    """WITH e AS MATERIALIZED (
-      |  SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-      |    greatest(c_nationkey, s_nationkey) AS b
-      |  FROM orders
-      |  JOIN lineitem ON o_orderkey = l_orderkey
-      |  JOIN customer ON o_custkey = c_custkey
-      |  JOIN supplier ON l_suppkey = s_suppkey
-      |  WHERE c_nationkey != s_nationkey
+    s"""WITH e AS MATERIALIZED (
+      |  SELECT DISTINCT a, b FROM ($coTradeSql)
       |)
       |SELECT
       |  (SELECT count(*) FROM
@@ -157,7 +167,7 @@ object Graph {
        |ORDER BY s_suppkey""".stripMargin
 
   /** BFS shortest-hop levels from nation 0 over the undirected nation
-    * co-trade graph (same canonical edge list as [[qTriangleCount]]):
+    * co-trade graph (the [[coTrade]] edge list):
     * frontier expansion to a fixpoint — level k+1 = neighbors of the
     * level-k frontier not yet visited. The iterate-until-empty QUERY
     * form of the loop discipline ([[Dedup.connectedComponents]] /
@@ -174,17 +184,7 @@ object Graph {
   val BfsMaxRounds = 64
 
   def qBfsLevels(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey").as("nc")),
-        col("o_custkey") === col("c_custkey"))
-      .join(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_nationkey").as("ns")),
-        col("l_suppkey") === col("s_suppkey"))
-      .filter(col("nc") =!= col("ns"))
-      .select(least(col("nc"), col("ns")).as("a"), greatest(col("nc"), col("ns")).as("b"))
-      .distinct()
+    val e = coTrade(s, dir).distinct()
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
@@ -214,12 +214,7 @@ object Graph {
 
   val qBfsLevelsOracle: String =
     s"""WITH RECURSIVE e AS (
-       |  SELECT DISTINCT least(c_nationkey, s_nationkey) AS src,
-       |    greatest(c_nationkey, s_nationkey) AS dst
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  WHERE c_nationkey != s_nationkey
+       |  SELECT DISTINCT a AS src, b AS dst FROM ($coTradeSql)
        |), sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
        |walk(id, lvl) AS (
        |  SELECT CAST($BfsSource AS BIGINT) AS id, CAST(0 AS BIGINT) AS lvl
@@ -249,18 +244,7 @@ object Graph {
 
   def qCloseness(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val e = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey").as("nc")),
-        col("o_custkey") === col("c_custkey"))
-      .join(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_nationkey").as("ns")),
-        col("l_suppkey") === col("s_suppkey"))
-      .filter(col("nc") =!= col("ns"))
-      .select(least(col("nc"), col("ns")).as("a"),
-        greatest(col("nc"), col("ns")).as("b"))
-      .distinct()
+    val e = coTrade(s, dir).distinct()
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
@@ -300,12 +284,7 @@ object Graph {
 
   val qClosenessOracle: String =
     s"""WITH RECURSIVE e AS (
-       |  SELECT DISTINCT least(c_nationkey, s_nationkey) AS src,
-       |    greatest(c_nationkey, s_nationkey) AS dst
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  WHERE c_nationkey != s_nationkey
+       |  SELECT DISTINCT a AS src, b AS dst FROM ($coTradeSql)
        |), sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
        |walk(seed, id, lvl) AS (
        |  SELECT CAST(src AS BIGINT), CAST(src AS BIGINT), CAST(0 AS BIGINT)
@@ -471,7 +450,7 @@ object Graph {
   /** Global clustering coefficient of the nation co-trade graph —
     * 3·triangles / wedges, the "how cliquish is the trade network"
     * number beside the raw q_triangle_count: wedges = Σᵥ C(deg v, 2)
-    * from the SAME canonical a<b edge frame (materialized once, feeds
+    * from the [[coTrade]] edge list (materialized once, feeds
     * the degree aggregate and the triangle join), triangles from the
     * ordered 2-path closure. Every input is an integer — the ratio is
     * the only double, computed once. Dimension-sized throughout (≤25
@@ -479,19 +458,7 @@ object Graph {
     * and wedge summing are one grouped pass at ANY node count.
     */
   def qClusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey").as("nc")),
-        col("o_custkey") === col("c_custkey"))
-      .join(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_nationkey").as("ns")),
-        col("l_suppkey") === col("s_suppkey"))
-      .filter(col("nc") =!= col("ns"))
-      .select(least(col("nc"), col("ns")).as("a"),
-        greatest(col("nc"), col("ns")).as("b"))
-      .distinct()
-      .localCheckpoint()
+    val e = coTrade(s, dir).distinct().localCheckpoint()
     val deg = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
     val wedges = deg.agg(sum(col("d") * (col("d") - 1) / 2).as("wedges"))
@@ -509,13 +476,7 @@ object Graph {
 
   val qClusteringCoeffOracle: String =
     s"""WITH e AS MATERIALIZED (
-       |  SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-       |    greatest(c_nationkey, s_nationkey) AS b
-       |  FROM orders
-       |  JOIN lineitem ON o_orderkey = l_orderkey
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  WHERE c_nationkey != s_nationkey
+       |  SELECT DISTINCT a, b FROM ($coTradeSql)
        |),
        |deg AS (
        |  SELECT id, count(*) AS d FROM
@@ -545,19 +506,7 @@ object Graph {
     * ≤|regions|-sized.
     */
   def qModularity(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey").as("nc")),
-        col("o_custkey") === col("c_custkey"))
-      .join(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_nationkey").as("ns")),
-        col("l_suppkey") === col("s_suppkey"))
-      .filter(col("nc") =!= col("ns"))
-      .select(least(col("nc"), col("ns")).as("a"),
-        greatest(col("nc"), col("ns")).as("b"))
-      .distinct()
-      .localCheckpoint()
+    val e = coTrade(s, dir).distinct().localCheckpoint()
     val reg = Tables.nation(s, dir)
       .select(col("n_nationkey"), col("n_regionkey"))
     val tagged = e
@@ -586,13 +535,7 @@ object Graph {
 
   val qModularityOracle: String =
     s"""WITH e AS MATERIALIZED (
-       |  SELECT DISTINCT least(c_nationkey, s_nationkey) AS a,
-       |    greatest(c_nationkey, s_nationkey) AS b
-       |  FROM orders
-       |  JOIN lineitem ON o_orderkey = l_orderkey
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  WHERE c_nationkey != s_nationkey
+       |  SELECT DISTINCT a, b FROM ($coTradeSql)
        |),
        |tg AS (
        |  SELECT e.a, e.b, na.n_regionkey AS ra, nb.n_regionkey AS rb
@@ -1263,18 +1206,8 @@ object Graph {
     * division.
     */
   def qKtruss(s: SparkSession, dir: String): DataFrame = {
-    val sup = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey").as("nc")),
-        col("o_custkey") === col("c_custkey"))
-      .join(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_nationkey").as("ns")),
-        col("l_suppkey") === col("s_suppkey"))
-      .filter(col("nc") =!= col("ns"))
-      .groupBy(least(col("nc"), col("ns")).as("a"),
-        greatest(col("nc"), col("ns")).as("b"))
-      .agg(count(lit(1)).as("sup"))
+    val sup = coTrade(s, dir)
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
     val tot = sup.agg(count(lit(1)).as("np"), sum(col("sup")).as("ss"))
     var edges = sup.crossJoin(broadcast(tot))
       .filter(col("sup") * col("np") >= col("ss"))
@@ -1347,14 +1280,7 @@ object Graph {
     }.mkString(",\n")
     val R = TrussRounds
     s"""WITH f AS MATERIALIZED (
-       |  SELECT least(c_nationkey, s_nationkey) AS a,
-       |    greatest(c_nationkey, s_nationkey) AS b, count(*) AS sup
-       |  FROM orders
-       |  JOIN lineitem ON o_orderkey = l_orderkey
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  WHERE c_nationkey != s_nationkey
-       |  GROUP BY 1, 2
+       |  SELECT a, b, count(*) AS sup FROM ($coTradeSql) GROUP BY 1, 2
        |),
        |tot AS (SELECT count(*) AS np, sum(sup) AS ss FROM f),
        |e0 AS MATERIALIZED (
@@ -1422,18 +1348,8 @@ object Graph {
     * is the forest invariant the output exposes.
     */
   def qMstBoruvka(s: SparkSession, dir: String): DataFrame = {
-    val f = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey").as("nc")),
-        col("o_custkey") === col("c_custkey"))
-      .join(Tables.supplier(s, dir)
-        .select(col("s_suppkey"), col("s_nationkey").as("ns")),
-        col("l_suppkey") === col("s_suppkey"))
-      .filter(col("nc") =!= col("ns"))
-      .groupBy(least(col("nc"), col("ns")).as("a"),
-        greatest(col("nc"), col("ns")).as("b"))
-      .agg(count(lit(1)).as("sup"))
+    val f = coTrade(s, dir)
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("sup"))
       .localCheckpoint()
     val nodes = f.select(col("a").as("id"))
       .union(f.select(col("b").as("id"))).distinct().localCheckpoint()
@@ -1533,14 +1449,7 @@ object Graph {
     }.mkString(",\n")
     val R = MstRounds
     s"""WITH RECURSIVE f AS MATERIALIZED (
-       |  SELECT least(c_nationkey, s_nationkey) AS a,
-       |    greatest(c_nationkey, s_nationkey) AS b, count(*) AS sup
-       |  FROM orders
-       |  JOIN lineitem ON o_orderkey = l_orderkey
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN supplier ON l_suppkey = s_suppkey
-       |  WHERE c_nationkey != s_nationkey
-       |  GROUP BY 1, 2
+       |  SELECT a, b, count(*) AS sup FROM ($coTradeSql) GROUP BY 1, 2
        |),
        |nodes AS MATERIALIZED (
        |  SELECT DISTINCT id FROM (

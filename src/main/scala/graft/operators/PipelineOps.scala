@@ -1655,34 +1655,18 @@ object PipelineOps {
     * closed form on the mean difference θ̂ with V = v₀/n₀+v₁/n₁:
     * ln Λ = ½·ln(V/(V+τ²)) + θ̂²τ²/(2V(V+τ²)); always-valid
     * p = min(1, e^{−ln Λ}). The log form never overflows. Discipline:
-    * moments DECIMAL-fold; ln/exp are libm so the p and log-Λ are
-    * emitted rounded and the reject gate compares the ROUNDED log-Λ
+    * the moments are [[Profiling.armMoments]]; ln/exp are libm so the p
+    * and log-Λ are emitted rounded and the reject gate compares the ROUNDED log-Λ
     * against ln(1/α) — never an unrounded libm value. Shape: one
     * events scan → 2 arm cells → 1-row scalar algebra.
     */
   def qSprt(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val cells = Tables.events(s, dir)
-      .groupBy((col("user_id") % 2).as("arm"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(D)).as("sx"),
-        sum((col("value") * col("value")).cast(D)).as("sx2"))
-    def armCol(a: Int, c: String) = max(when(col("arm") === a, col(c)))
-    val wide = cells.agg(
-      armCol(0, "n").as("n0"), armCol(0, "sx").cast("double").as("sx0"),
-      armCol(0, "sx2").cast("double").as("sq0"),
-      armCol(1, "n").as("n1"), armCol(1, "sx").cast("double").as("sx1"),
-      armCol(1, "sx2").cast("double").as("sq1"))
-    val m0 = col("sx0") / col("n0")
-    val m1 = col("sx1") / col("n1")
-    val v0 = (col("sq0") - col("n0") * (m0 * m0)) / (col("n0") - 1)
-    val v1 = (col("sq1") - col("n1") * (m1 * m1)) / (col("n1") - 1)
-    val vv = v0 / col("n0") + v1 / col("n1")
-    val theta = m1 - m0
+    val vv = col("v0") / col("n0") + col("v1") / col("n1")
+    val theta = col("m1") - col("m0")
     val t2 = SprtTau * SprtTau
     val logL = lit(0.5) * log(vv / (vv + t2)) +
       theta * theta * t2 / (lit(2.0) * vv * (vv + t2))
-    wide.select(col("n0"), col("n1"),
+    Profiling.armMoments(Tables.events(s, dir)).select(col("n0"), col("n1"),
         NumFns.roundPortable(theta, 6).as("mean_diff"),
         NumFns.roundPortable(logL, 4).as("log_lambda"),
         NumFns.roundPortable(least(lit(1.0), exp(-logL)), 6)
@@ -1693,27 +1677,11 @@ object PipelineOps {
 
   val qSprtOracle: String = {
     val t2 = SprtTau * SprtTau
-    val vv = "(((sq0 - n0 * ((sx0 / n0) * (sx0 / n0))) / (n0 - 1)) / n0" +
-      " + ((sq1 - n1 * ((sx1 / n1) * (sx1 / n1))) / (n1 - 1)) / n1)"
-    val theta = "(sx1 / n1 - sx0 / n0)"
+    val vv = "(v0 / n0 + v1 / n1)"
+    val theta = "(m1 - m0)"
     val logL = s"(0.5 * ln($vv / ($vv + $t2))" +
       s" + $theta * $theta * $t2 / (2.0 * $vv * ($vv + $t2)))"
-    s"""WITH a AS (
-       |  SELECT user_id % 2 AS arm, count(*) AS n,
-       |    sum(CAST(value AS DECIMAL(38,12))) AS sx,
-       |    sum(CAST(value * value AS DECIMAL(38,12))) AS sx2
-       |  FROM events GROUP BY 1
-       |),
-       |w AS (
-       |  SELECT
-       |    max(CASE WHEN arm = 0 THEN n END) AS n0,
-       |    CAST(max(CASE WHEN arm = 0 THEN sx END) AS DOUBLE) AS sx0,
-       |    CAST(max(CASE WHEN arm = 0 THEN sx2 END) AS DOUBLE) AS sq0,
-       |    max(CASE WHEN arm = 1 THEN n END) AS n1,
-       |    CAST(max(CASE WHEN arm = 1 THEN sx END) AS DOUBLE) AS sx1,
-       |    CAST(max(CASE WHEN arm = 1 THEN sx2 END) AS DOUBLE) AS sq1
-       |  FROM a
-       |)
+    s"""WITH ${Profiling.armMomentsSql("events")}
        |SELECT n0, n1,
        |  ${NumFns.roundPortableSql(theta, 6)} AS mean_diff,
        |  ${NumFns.roundPortableSql(logL, 4)} AS log_lambda,

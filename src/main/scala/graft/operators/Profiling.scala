@@ -716,75 +716,94 @@ object Profiling {
        |FROM agg
        |ORDER BY source""".stripMargin
 
-  /** Welch's two-sample t-test per event type — the experimentation
-    * primitive (is arm B's metric different from arm A's?) with the
-    * unequal-variance form that is the safe default. Arms are assigned
-    * deterministically by user-id parity, so the test is reproducible
-    * and the assignment is itself auditable. Exactness: Σx and Σx² are
-    * DECIMAL-cast sums (order-independent; x² is one deterministic IEEE
-    * multiply per row), both cast to double ONCE, and the t statistic
-    * and Welch–Satterthwaite df are then identical scalar arithmetic on
-    * identical doubles — variances via the textbook
-    * (Σx² − n·mean²)/(n−1) form, acceptable here because determinism
-    * (not extra precision) is what the cross-engine gate needs. Shape:
-    * one events scan, one map-side-combined (event_type × arm)
-    * aggregate (≤ 2·types cells), arms pivoted by a second tiny agg —
-    * no p-value column because the incomplete-beta special function is
-    * not portable arithmetic; t and df are the decision inputs.
+  /** Two-arm moments of event `value` per `keys` group, the input of
+    * every A/B test here: users split into arm 0 and arm 1 by user-id
+    * parity; per arm the event count `n`, mean `m` and sample variance
+    * `v`. Σx and Σx² are DECIMAL(38,12) sums (order-independent), each
+    * cast to double once; v is the textbook (Σx² − n·m²)/(n − 1), fine
+    * here because determinism, not extra precision, is what the
+    * cross-engine gate needs. Returns `keys…, n0, n1, m0, m1, v0, v1`.
     */
-  def qWelchTtest(s: SparkSession, dir: String): DataFrame = {
+  def armMoments(events: DataFrame, keys: String*): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val arms = Tables.events(s, dir)
-      .select(col("event_type"), (col("user_id") % 2).as("arm"), col("value"))
-      .groupBy(col("event_type"), col("arm"))
+    def armCol(a: Int, c: String) = max(when(col("arm") === a, col(c)))
+    val m0 = col("sx0") / col("n0")
+    val m1 = col("sx1") / col("n1")
+    events
+      .groupBy(keys.map(col) :+ (col("user_id") % 2).as("arm"): _*)
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(D)).as("sx"),
         sum((col("value") * col("value")).cast(D)).as("sx2"))
-    def armCol(a: Int, c: String) = max(when(col("arm") === a, col(c)))
-    val wide = arms.groupBy(col("event_type"))
+      .groupBy(keys.map(col): _*)
       .agg(armCol(0, "n").as("n0"), armCol(0, "sx").cast("double").as("sx0"),
         armCol(0, "sx2").cast("double").as("sq0"),
         armCol(1, "n").as("n1"), armCol(1, "sx").cast("double").as("sx1"),
         armCol(1, "sx2").cast("double").as("sq1"))
-    val m0 = col("sx0") / col("n0")
-    val m1 = col("sx1") / col("n1")
-    val v0 = (col("sq0") - col("n0") * (m0 * m0)) / (col("n0") - 1)
-    val v1 = (col("sq1") - col("n1") * (m1 * m1)) / (col("n1") - 1)
-    val se0 = v0 / col("n0")
-    val se1 = v1 / col("n1")
-    val t = (m0 - m1) / sqrt(se0 + se1)
+      .select(keys.map(col) ++ Seq(col("n0"), col("n1"), m0.as("m0"), m1.as("m1"),
+        ((col("sq0") - col("n0") * (m0 * m0)) / (col("n0") - 1)).as("v0"),
+        ((col("sq1") - col("n1") * (m1 * m1)) / (col("n1") - 1)).as("v1")): _*)
+  }
+
+  /** SQL twin of [[armMoments]]: CTEs `a` and `w`, `w` holding `keys…,
+    * n0, n1, m0, m1, v0, v1`; `from` must carry `user_id`, `value` and
+    * the keys.
+    */
+  def armMomentsSql(from: String, keys: String*): String = {
+    val k = keys.map(_ + ", ").mkString
+    s"""a AS (
+       |  SELECT ${k}user_id % 2 AS arm, count(*) AS n,
+       |    sum(CAST(value AS DECIMAL(38,12))) AS sx,
+       |    sum(CAST(value * value AS DECIMAL(38,12))) AS sx2
+       |  FROM $from GROUP BY ALL
+       |), w AS (
+       |  SELECT ${k}n0, n1, sx0 / n0 AS m0, sx1 / n1 AS m1,
+       |    (sq0 - n0 * ((sx0 / n0) * (sx0 / n0))) / (n0 - 1) AS v0,
+       |    (sq1 - n1 * ((sx1 / n1) * (sx1 / n1))) / (n1 - 1) AS v1
+       |  FROM (
+       |    SELECT $k
+       |      max(CASE WHEN arm = 0 THEN n END) AS n0,
+       |      CAST(max(CASE WHEN arm = 0 THEN sx END) AS DOUBLE) AS sx0,
+       |      CAST(max(CASE WHEN arm = 0 THEN sx2 END) AS DOUBLE) AS sq0,
+       |      max(CASE WHEN arm = 1 THEN n END) AS n1,
+       |      CAST(max(CASE WHEN arm = 1 THEN sx END) AS DOUBLE) AS sx1,
+       |      CAST(max(CASE WHEN arm = 1 THEN sx2 END) AS DOUBLE) AS sq1
+       |    FROM a GROUP BY ALL
+       |  )
+       |)""".stripMargin
+  }
+
+  /** Welch's two-sample t-test per event type — the experimentation
+    * primitive (is arm B's metric different from arm A's?) with the
+    * unequal-variance form that is the safe default. Arms are assigned
+    * deterministically by user-id parity, so the test is reproducible
+    * and the assignment is itself auditable. Exactness: the moments are
+    * [[armMoments]]' identical doubles, so the t statistic and the
+    * Welch–Satterthwaite df are identical scalar arithmetic on both
+    * engines. Shape: one events scan, one map-side-combined
+    * (event_type × arm) aggregate (≤ 2·types cells), arms pivoted by a
+    * second tiny agg — no p-value column because the incomplete-beta
+    * special function is not portable arithmetic; t and df are the
+    * decision inputs.
+    */
+  def qWelchTtest(s: SparkSession, dir: String): DataFrame = {
+    val se0 = col("v0") / col("n0")
+    val se1 = col("v1") / col("n1")
+    val t = (col("m0") - col("m1")) / sqrt(se0 + se1)
     val df = ((se0 + se1) * (se0 + se1)) /
       ((se0 * se0) / (col("n0") - 1) + (se1 * se1) / (col("n1") - 1))
-    wide.select(col("event_type"), col("n0"), col("n1"),
-        NumFns.roundPortable(m0, 4).as("mean0"),
-        NumFns.roundPortable(m1, 4).as("mean1"),
+    armMoments(Tables.events(s, dir), "event_type")
+      .select(col("event_type"), col("n0"), col("n1"),
+        NumFns.roundPortable(col("m0"), 4).as("mean0"),
+        NumFns.roundPortable(col("m1"), 4).as("mean1"),
         NumFns.roundPortable(t, 4).as("t_stat"),
         NumFns.roundPortable(df, 2).as("welch_df"))
       .orderBy(col("event_type"))
   }
 
   val qWelchTtestOracle: String =
-    s"""WITH a AS (
-       |  SELECT event_type, user_id % 2 AS arm, count(*) AS n,
-       |    sum(CAST(value AS DECIMAL(38,12))) AS sx,
-       |    sum(CAST(value * value AS DECIMAL(38,12))) AS sx2
-       |  FROM events GROUP BY event_type, user_id % 2
-       |),
-       |w AS (
-       |  SELECT event_type,
-       |    max(CASE WHEN arm = 0 THEN n END) AS n0,
-       |    CAST(max(CASE WHEN arm = 0 THEN sx END) AS DOUBLE) AS sx0,
-       |    CAST(max(CASE WHEN arm = 0 THEN sx2 END) AS DOUBLE) AS sq0,
-       |    max(CASE WHEN arm = 1 THEN n END) AS n1,
-       |    CAST(max(CASE WHEN arm = 1 THEN sx END) AS DOUBLE) AS sx1,
-       |    CAST(max(CASE WHEN arm = 1 THEN sx2 END) AS DOUBLE) AS sq1
-       |  FROM a GROUP BY event_type
-       |),
+    s"""WITH ${armMomentsSql("events", "event_type")},
        |c AS (
-       |  SELECT event_type, n0, n1,
-       |    sx0 / n0 AS m0, sx1 / n1 AS m1,
-       |    ((sq0 - n0 * ((sx0 / n0) * (sx0 / n0))) / (n0 - 1)) / n0 AS se0,
-       |    ((sq1 - n1 * ((sx1 / n1) * (sx1 / n1))) / (n1 - 1)) / n1 AS se1
+       |  SELECT event_type, n0, n1, m0, m1, v0 / n0 AS se0, v1 / n1 AS se1
        |  FROM w
        |)
        |SELECT event_type, n0, n1,
@@ -1092,7 +1111,7 @@ object Profiling {
   /** A/B power analysis from observed data — "how many users would the
     * NEXT experiment need": per event type, the observed arm difference
     * is the minimum detectable effect candidate, the pooled variance
-    * comes from the same DECIMAL-exact moment cells as q_welch_ttest,
+    * comes from the same [[armMoments]] cells as q_welch_ttest,
     * and n = 2σ²(z_α+z_β)²/δ² per arm (α=.05 two-sided, 80 % power) with
     * Cohen's d = δ/σ as the standardized effect. Planning and post-hoc
     * read in one pass: one events scan → ≤2·types cells → types rows.
@@ -1100,28 +1119,11 @@ object Profiling {
     * so the output is render-identical by construction.
     */
   def qPowerAnalysis(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val arms = Tables.events(s, dir)
-      .select(col("event_type"), (col("user_id") % 2).as("arm"), col("value"))
-      .groupBy(col("event_type"), col("arm"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(D)).as("sx"),
-        sum((col("value") * col("value")).cast(D)).as("sx2"))
-    def armCol(a: Int, c: String) = max(when(col("arm") === a, col(c)))
-    val wide = arms.groupBy(col("event_type"))
-      .agg(armCol(0, "n").as("n0"), armCol(0, "sx").cast("double").as("sx0"),
-        armCol(0, "sx2").cast("double").as("sq0"),
-        armCol(1, "n").as("n1"), armCol(1, "sx").cast("double").as("sx1"),
-        armCol(1, "sx2").cast("double").as("sq1"))
-    val m0 = col("sx0") / col("n0")
-    val m1 = col("sx1") / col("n1")
-    val v0 = (col("sq0") - col("n0") * (m0 * m0)) / (col("n0") - 1)
-    val v1 = (col("sq1") - col("n1") * (m1 * m1)) / (col("n1") - 1)
-    val pooled = ((col("n0") - 1) * v0 + (col("n1") - 1) * v1) /
+    val pooled = ((col("n0") - 1) * col("v0") + (col("n1") - 1) * col("v1")) /
       (col("n0") + col("n1") - 2)
-    val delta = abs(m1 - m0)
+    val delta = abs(col("m1") - col("m0"))
     val z2 = (ZAlpha + ZBeta) * (ZAlpha + ZBeta)
-    wide.select(col("event_type"),
+    armMoments(Tables.events(s, dir), "event_type").select(col("event_type"),
         NumFns.roundPortable(delta, 6).as("observed_delta"),
         NumFns.roundPortable(sqrt(pooled), 6).as("pooled_sd"),
         NumFns.roundPortable(delta / sqrt(pooled), 6).as("cohens_d"),
@@ -1132,28 +1134,10 @@ object Profiling {
 
   val qPowerAnalysisOracle: String = {
     val z2 = s"(($ZAlpha + $ZBeta) * ($ZAlpha + $ZBeta))"
-    s"""WITH a AS (
-       |  SELECT event_type, user_id % 2 AS arm, count(*) AS n,
-       |    sum(CAST(value AS DECIMAL(38,12))) AS sx,
-       |    sum(CAST(value * value AS DECIMAL(38,12))) AS sx2
-       |  FROM events GROUP BY event_type, user_id % 2
-       |),
-       |w AS (
-       |  SELECT event_type,
-       |    max(CASE WHEN arm = 0 THEN n END) AS n0,
-       |    CAST(max(CASE WHEN arm = 0 THEN sx END) AS DOUBLE) AS sx0,
-       |    CAST(max(CASE WHEN arm = 0 THEN sx2 END) AS DOUBLE) AS sq0,
-       |    max(CASE WHEN arm = 1 THEN n END) AS n1,
-       |    CAST(max(CASE WHEN arm = 1 THEN sx END) AS DOUBLE) AS sx1,
-       |    CAST(max(CASE WHEN arm = 1 THEN sx2 END) AS DOUBLE) AS sq1
-       |  FROM a GROUP BY event_type
-       |),
+    s"""WITH ${armMomentsSql("events", "event_type")},
        |c AS (
-       |  SELECT event_type,
-       |    abs(sx1 / n1 - sx0 / n0) AS delta,
-       |    (((n0 - 1) * ((sq0 - n0 * ((sx0 / n0) * (sx0 / n0))) / (n0 - 1))
-       |      + (n1 - 1) * ((sq1 - n1 * ((sx1 / n1) * (sx1 / n1))) / (n1 - 1)))
-       |      / (n0 + n1 - 2)) AS pooled
+       |  SELECT event_type, abs(m1 - m0) AS delta,
+       |    ((n0 - 1) * v0 + (n1 - 1) * v1) / (n0 + n1 - 2) AS pooled
        |  FROM w
        |)
        |SELECT event_type,
@@ -1379,26 +1363,11 @@ object Profiling {
     * types·cohorts·2 moment cells; the returned frame is ≤25 rows.
     */
   private def testBattery(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val cells = Tables.events(s, dir)
-      .select(col("event_type"), expr("(user_id div 2) % 5").as("cohort"),
-        (col("user_id") % 2).as("arm"), col("value"))
-      .groupBy(col("event_type"), col("cohort"), col("arm"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(D)).as("sx"),
-        sum((col("value") * col("value")).cast(D)).as("sx2"))
-    def armCol(a: Int, c: String) = max(when(col("arm") === a, col(c)))
-    val wide = cells.groupBy(col("event_type"), col("cohort"))
-      .agg(armCol(0, "n").as("n0"), armCol(0, "sx").cast("double").as("sx0"),
-        armCol(0, "sx2").cast("double").as("sq0"),
-        armCol(1, "n").as("n1"), armCol(1, "sx").cast("double").as("sx1"),
-        armCol(1, "sx2").cast("double").as("sq1"))
-    val m0 = col("sx0") / col("n0")
-    val m1 = col("sx1") / col("n1")
-    val v0 = (col("sq0") - col("n0") * (m0 * m0)) / (col("n0") - 1)
-    val v1 = (col("sq1") - col("n1") * (m1 * m1)) / (col("n1") - 1)
-    val z = (m1 - m0) / sqrt(v0 / col("n0") + v1 / col("n1"))
-    wide.select(col("event_type"), col("cohort"), z.as("z"))
+    val z = (col("m1") - col("m0")) /
+      sqrt(col("v0") / col("n0") + col("v1") / col("n1"))
+    armMoments(Tables.events(s, dir).withColumn("cohort", expr("(user_id div 2) % 5")),
+        "event_type", "cohort")
+      .select(col("event_type"), col("cohort"), z.as("z"))
       .withColumn("p", NumFns.normTwoSidedP(col("z")))
   }
 
@@ -1406,26 +1375,10 @@ object Profiling {
     * `sc(event_type, cohort, z, p)`.
     */
   private val testBatterySql: String =
-    s"""a AS (
-       |  SELECT event_type, (user_id // 2) % 5 AS cohort, user_id % 2 AS arm,
-       |    count(*) AS n,
-       |    sum(CAST(value AS DECIMAL(38,12))) AS sx,
-       |    sum(CAST(value * value AS DECIMAL(38,12))) AS sx2
-       |  FROM events GROUP BY 1, 2, 3
-       |), w AS (
+    s"""${armMomentsSql("(SELECT *, (user_id // 2) % 5 AS cohort FROM events)",
+            "event_type", "cohort")}, sc0 AS (
        |  SELECT event_type, cohort,
-       |    max(CASE WHEN arm = 0 THEN n END) AS n0,
-       |    CAST(max(CASE WHEN arm = 0 THEN sx END) AS DOUBLE) AS sx0,
-       |    CAST(max(CASE WHEN arm = 0 THEN sx2 END) AS DOUBLE) AS sq0,
-       |    max(CASE WHEN arm = 1 THEN n END) AS n1,
-       |    CAST(max(CASE WHEN arm = 1 THEN sx END) AS DOUBLE) AS sx1,
-       |    CAST(max(CASE WHEN arm = 1 THEN sx2 END) AS DOUBLE) AS sq1
-       |  FROM a GROUP BY event_type, cohort
-       |), sc0 AS (
-       |  SELECT event_type, cohort,
-       |    (sx1 / n1 - sx0 / n0) /
-       |      sqrt(((sq0 - n0 * ((sx0 / n0) * (sx0 / n0))) / (n0 - 1)) / n0
-       |         + ((sq1 - n1 * ((sx1 / n1) * (sx1 / n1))) / (n1 - 1)) / n1) AS z
+       |    (m1 - m0) / sqrt(v0 / n0 + v1 / n1) AS z
        |  FROM w
        |), sc AS (
        |  SELECT event_type, cohort, z, ${NumFns.normTwoSidedPSql("z")} AS p
@@ -2593,10 +2546,7 @@ object Profiling {
     */
   def qJarqueBera(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg((sum(NumFns.roundAwayLong(col("o_totalprice") * 100)) / 100.0)
-        .as("y"))
+    val days = Temporal.dailyCents(s, dir).select(col("di"), (col("yc") / 100.0).as("y"))
     val mean = days.agg(count(lit(1)).as("n"),
       (sum(col("y").cast(D)).cast("double") / count(lit(1))).as("mu"))
     val d = days.crossJoin(broadcast(mean))
@@ -2620,13 +2570,7 @@ object Profiling {
   }
 
   val qJarqueBeraOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      / 100.0 AS y
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (SELECT di, yc / 100.0 AS y FROM (${Temporal.dailyCentsSql()})),
        |mu AS (
        |  SELECT count(*) AS n,
        |    CAST(sum(CAST(y AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS mu

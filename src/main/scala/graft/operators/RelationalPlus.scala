@@ -837,16 +837,10 @@ object RelationalPlus {
     */
   def qRevenueBridge(s: SparkSession, dir: String): DataFrame = {
     val (y1, y2) = BridgeYears
-    val geo = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("r_name"))
     val cells = Tables.orders(s, dir)
       .filter(year(col("o_orderdate")).isin(y1, y2))
       .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(geo, col("o_custkey") === col("c_custkey"))
+      .join(Temporal.custRegion(s, dir), col("o_custkey") === col("c_custkey"))
       .groupBy(col("r_name"), year(col("o_orderdate")).as("yr"))
       .agg(sum(NumFns.roundAwayLong(col("l_extendedprice") * 100)).as("rev"),
         sum(NumFns.roundAwayLong(col("l_quantity"))).as("vol"))
@@ -879,9 +873,7 @@ object RelationalPlus {
        |    CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS vol
        |  FROM orders
        |  JOIN lineitem ON o_orderkey = l_orderkey
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN nation ON c_nationkey = n_nationkey
-       |  JOIN region ON n_regionkey = r_regionkey
+       |  JOIN (${Temporal.custRegionSql}) ON o_custkey = c_custkey
        |  WHERE year(o_orderdate) IN ($y1, $y2)
        |  GROUP BY 1, 2
        |),

@@ -137,6 +137,30 @@ object Temporal {
       |FROM g GROUP BY user_id
       |ORDER BY user_id""".stripMargin
 
+  /** First-order event-type transition counts `(from_type, to_type, n)`:
+    * each user's events in (time, event_id) order, every event paired
+    * with the one before it by one lag window, then one grouped count.
+    */
+  private def transitions(s: SparkSession, dir: String): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
+    Tables.events(s, dir)
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
+        col("event_type"))
+      .withColumn("from_type", lag(col("event_type"), 1).over(w))
+      .filter(col("from_type").isNotNull)
+      .groupBy(col("from_type"), col("event_type").as("to_type"))
+      .agg(count(lit(1)).as("n"))
+  }
+
+  /** SQL twin of [[transitions]]. */
+  private val transitionsSql: String =
+    """SELECT from_type, to_type, count(*) AS n FROM (
+      |  SELECT event_type AS to_type,
+      |    lag(event_type, 1) OVER (PARTITION BY user_id
+      |      ORDER BY epoch_us(ts), event_id) AS from_type
+      |  FROM events
+      |) WHERE from_type IS NOT NULL GROUP BY 1, 2""".stripMargin
+
   /** First-order Markov transition matrix over the event-type stream:
     * P(next | current) estimated by MLE over per-user consecutive pairs.
     * One lag window per user (the sequence-match shape) then a grouped
@@ -145,31 +169,14 @@ object Temporal {
     * exactly one shuffle-free lag pass plus one map-side-combined count.
     */
   def qMarkovChain(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val wFrom = Window.partitionBy(col("from_type"))
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"))
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("event_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
+    transitions(s, dir)
       .withColumn("p", round(col("n") / sum(col("n")).over(wFrom), 6))
       .orderBy(col("from_type"), col("to_type"))
   }
 
   val qMarkovChainOracle: String =
-    """WITH o AS (
-      |  SELECT user_id, event_id, epoch_us(ts) AS us, event_type FROM events
-      |), g AS (
-      |  SELECT user_id, event_type AS to_type,
-      |    lag(event_type, 1) OVER (PARTITION BY user_id ORDER BY us, event_id) AS from_type
-      |  FROM o
-      |), c AS (
-      |  SELECT from_type, to_type, count(*) AS n
-      |  FROM g WHERE from_type IS NOT NULL
-      |  GROUP BY from_type, to_type
-      |)
+    s"""WITH c AS ($transitionsSql)
       |SELECT from_type, to_type, n,
       |  round(n / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS p
       |FROM c
@@ -831,6 +838,24 @@ object Temporal {
        |FROM r WHERE rk = 1
        |ORDER BY event_type""".stripMargin
 
+  /** The daily revenue series `(di, yc)` behind the trend, seasonality
+    * and change-point tests: one row per order day, `di` its whole days
+    * since 1992-01-01 and `yc` its revenue in integer cents (each
+    * `o_totalprice` rounded half away from zero, then summed), so the
+    * series is exact and accumulation-order-free. `more` adds per-day
+    * aggregates beside `yc`; callers rename, cast or scale on their side.
+    */
+  def dailyCents(s: SparkSession, dir: String, more: Column*): DataFrame =
+    Tables.orders(s, dir)
+      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
+      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"), more: _*)
+
+  /** SQL twin of [[dailyCents]]; `di` and `yc` are BIGINT. */
+  def dailyCentsSql(more: String*): String =
+    s"""SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS di,
+       |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS yc${more.map(", " + _).mkString}
+       |FROM orders GROUP BY 1""".stripMargin
+
   /** Autocorrelation of the daily revenue series at lags 1..7 — the
     * seasonality detector behind the DOW profile: a strong lag-7 peak
     * means weekly periodicity, a slow lag-1 decay means trend. Shape:
@@ -845,10 +870,7 @@ object Temporal {
 
   def qAutocorr(s: SparkSession, dir: String): DataFrame = {
     val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val days = Tables.orders(s, dir)
-      .select(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"),
-        NumFns.roundAwayLong(col("o_totalprice") * 100).as("cents"))
-      .groupBy(col("di")).agg(sum(col("cents")).as("rev"))
+    val days = dailyCents(s, dir).select(col("di"), col("yc").as("rev"))
       .localCheckpoint() // dimension-sized; feeds both join sides x 7 lags
     val lags = s.range(1, AutocorrMaxLag + 1).select(col("id").cast("int").as("lag"))
     // aligned pairs: x at day di, y at day di - lag
@@ -875,11 +897,7 @@ object Temporal {
   }
 
   val qAutocorrOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS di,
-       |    sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev
-       |  FROM orders GROUP BY di
-       |),
+    s"""WITH days AS (SELECT di, yc AS rev FROM (${dailyCentsSql()})),
        |lags AS (SELECT unnest(range(1, ${AutocorrMaxLag + 1})) AS lag),
        |al AS (
        |  SELECT l.lag, a.rev AS x, b.rev AS y
@@ -920,10 +938,7 @@ object Temporal {
     */
   private def decomposed(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val days = Tables.orders(s, dir)
-      .select(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"),
-        NumFns.roundAwayLong(col("o_totalprice") * 100).as("cents"))
-      .groupBy(col("di")).agg(sum(col("cents")).as("rev"))
+    val days = dailyCents(s, dir).select(col("di"), col("yc").as("rev"))
       .localCheckpoint() // dimension-sized; feeds trend AND seasonal joins
     val w = Window.orderBy(col("di")).rowsBetween(-3, 3)
     val trended = days
@@ -946,11 +961,7 @@ object Temporal {
     * both consumers' oracles.
     */
   private val decomposeCteSql: String =
-    s"""days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS di,
-       |    sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev
-       |  FROM orders GROUP BY di
-       |),
+    s"""days AS (SELECT di, yc AS rev FROM (${dailyCentsSql()})),
        |tr AS (
        |  SELECT di, rev,
        |    count(*) OVER w AS n7, sum(rev) OVER w AS s7,
@@ -1120,10 +1131,7 @@ object Temporal {
     * sign-change counting (another) → a 1-row closed form.
     */
   def qRunsTest(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
-        .cast("long").as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("rev"))
+    val days = dailyCents(s, dir).select(col("di").cast("long").as("di"), col("yc").as("rev"))
     val w = Window.orderBy(col("di"))
     val moves = days
       .withColumn("prev", lag(col("rev"), 1).over(w))
@@ -1153,12 +1161,7 @@ object Temporal {
     val muR = s"(2.0 * $n1 * $n2 / ($n1 + $n2) + 1.0)"
     val varR = s"(($muR - 1.0) * ($muR - 2.0) / ($n1 + $n2 - 1.0))"
     val z = s"((r - $muR) / sqrt($varR))"
-    s"""WITH days AS (
-       |  SELECT CAST(o_orderdate::DATE - DATE '1992-01-01' AS BIGINT) AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS rev
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (SELECT di, yc AS rev FROM (${dailyCentsSql()})),
        |mv AS (
        |  SELECT di, sign(rev - prev) AS s FROM (
        |    SELECT di, rev, lag(rev) OVER (ORDER BY di) AS prev FROM days
@@ -1195,10 +1198,7 @@ object Temporal {
     * window over the day frame, a 1-row argmax.
     */
   def qPettitt(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
-        .cast("long").as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("rev"))
+    val days = dailyCents(s, dir).select(col("di").cast("long").as("di"), col("yc").as("rev"))
       .localCheckpoint() // feeds the rank cells AND the series walk
     // doubled midrank per VALUE cell: 2·r = 2·below + c + 1 (integer)
     val cells = days.groupBy(col("rev")).agg(count(lit(1)).as("c"))
@@ -1225,12 +1225,7 @@ object Temporal {
   }
 
   val qPettittOracle: String =
-    s"""WITH days AS (
-       |  SELECT CAST(o_orderdate::DATE - DATE '1992-01-01' AS BIGINT) AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS rev
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (SELECT di, yc AS rev FROM (${dailyCentsSql()})),
        |cells AS (SELECT rev, count(*) AS c FROM days GROUP BY rev),
        |rk AS (
        |  SELECT rev,
@@ -1351,10 +1346,7 @@ object Temporal {
     * the |days| cell frame, never raw orders.
     */
   def qDrawdown(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
-        .cast("long").as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("rev"))
+    val days = dailyCents(s, dir).select(col("di").cast("long").as("di"), col("yc").as("rev"))
     // center daily revenue so the cumulative series actually dips: net
     // = rev − overall mean (an exact integer after flooring), the
     // standard de-drifting for drawdown on a growing series
@@ -1377,12 +1369,7 @@ object Temporal {
   }
 
   val qDrawdownOracle: String =
-    s"""WITH days AS (
-       |  SELECT CAST(o_orderdate::DATE - DATE '1992-01-01' AS BIGINT) AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS rev
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (SELECT di, yc AS rev FROM (${dailyCentsSql()})),
        |tot AS (
        |  SELECT CAST(floor(CAST(sum(rev) AS DOUBLE) / count(*)) AS BIGINT)
        |    AS mu
@@ -1422,10 +1409,7 @@ object Temporal {
     */
   def qForecastEval(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val days = Tables.orders(s, dir)
-      .select(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"),
-        NumFns.roundAwayLong(col("o_totalprice") * 100).as("cents"))
-      .groupBy(col("di")).agg(sum(col("cents")).as("rev"))
+    val days = dailyCents(s, dir).select(col("di"), col("yc").as("rev"))
       .localCheckpoint()
     val models = s.range(0, 2).select(
       when(col("id") === 0, "naive_lag1").otherwise("seasonal_naive_lag7").as("model"),
@@ -1449,11 +1433,7 @@ object Temporal {
   }
 
   val qForecastEvalOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS di,
-       |    sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev
-       |  FROM orders GROUP BY di
-       |),
+    s"""WITH days AS (SELECT di, yc AS rev FROM (${dailyCentsSql()})),
        |models AS (
        |  SELECT 'naive_lag1' AS model, 1 AS lag
        |  UNION ALL SELECT 'seasonal_naive_lag7', 7
@@ -1768,6 +1748,40 @@ object Temporal {
        |GROUP BY dim.state
        |ORDER BY dim.state""".stripMargin
 
+  /** Each customer's region `(c_custkey, r_name)`: two broadcast
+    * dimension hops, customer → nation → region.
+    */
+  def custRegion(s: SparkSession, dir: String): DataFrame =
+    Tables.customer(s, dir)
+      .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
+      .select(col("c_custkey"), col("r_name"))
+
+  /** SQL twin of [[custRegion]]. */
+  val custRegionSql: String =
+    """SELECT c_custkey, r_name FROM customer
+      |  JOIN nation ON c_nationkey = n_nationkey
+      |  JOIN region ON n_regionkey = r_regionkey""".stripMargin
+
+  /** Per-(region, day) revenue cells `(r_name, day, rev_cents)`: the
+    * [[dailyCents]] sum keyed by region as well, `day` a long, shared by
+    * [[qRollingMedian]] and [[qPinballLoss]].
+    */
+  private def regionDailyCents(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .join(custRegion(s, dir), col("o_custkey") === col("c_custkey"))
+      .groupBy(col("r_name"),
+        datediff(to_date(col("o_orderdate")), lit("1992-01-01")).cast("long").as("day"))
+      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("rev_cents"))
+
+  /** SQL twin of [[regionDailyCents]]. */
+  private val regionDailyCentsSql: String =
+    s"""SELECT r_name,
+       |  CAST(o_orderdate::DATE - DATE '1992-01-01' AS BIGINT) AS day,
+       |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_cents
+       |FROM orders JOIN ($custRegionSql) ON o_custkey = c_custkey
+       |GROUP BY 1, 2""".stripMargin
+
   /** Peak concurrency via the endpoint sweep — per region, the maximum
     * number of simultaneously OPEN orders (open from order date through
     * the order's last ship date, inclusive) and the first day the peak
@@ -1785,10 +1799,6 @@ object Temporal {
     val ends = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey"))
       .agg(max(to_date(col("l_shipdate"))).as("end_date"))
-    val geo = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("r_name"))
     // `ends` is one row per ORDER — fact-cardinality, not a dimension:
     // shuffle_hash, never broadcast (r12 engine-wide PlanAuditSpec ban)
     val spans = Tables.orders(s, dir)
@@ -1799,7 +1809,7 @@ object Temporal {
       // the broadcast path on BOTH sides: left free, Catalyst would
       // build the (small at test scale) fact-side per-order aggregate
       // and ship it over the wire — the PlanAuditSpec-banned shape.
-      .join(geo.hint("shuffle_hash"), col("o_custkey") === col("c_custkey"))
+      .join(custRegion(s, dir).hint("shuffle_hash"), col("o_custkey") === col("c_custkey"))
       .select(col("r_name"),
         datediff(to_date(col("o_orderdate")), lit("1992-01-01")).cast("long").as("start_day"),
         (datediff(col("end_date"), lit("1992-01-01")) + 1).cast("long").as("stop_day"))
@@ -1818,7 +1828,7 @@ object Temporal {
   }
 
   val qMaxConcurrentOracle: String =
-    """WITH ends AS (
+    s"""WITH ends AS (
       |  SELECT l_orderkey, max(l_shipdate::DATE) AS end_date
       |  FROM lineitem GROUP BY l_orderkey
       |), spans AS (
@@ -1827,9 +1837,7 @@ object Temporal {
       |    CAST(end_date - DATE '1992-01-01' + 1 AS BIGINT) AS stop_day
       |  FROM orders
       |  JOIN ends ON o_orderkey = l_orderkey
-      |  JOIN customer ON o_custkey = c_custkey
-      |  JOIN nation ON c_nationkey = n_nationkey
-      |  JOIN region ON n_regionkey = r_regionkey
+      |  JOIN ($custRegionSql) ON o_custkey = c_custkey
       |), cells AS (
       |  SELECT r_name, day, CAST(sum(delta) AS BIGINT) AS net FROM (
       |    SELECT r_name, start_day AS day, 1 AS delta FROM spans
@@ -1863,18 +1871,9 @@ object Temporal {
     * calendar gaps without zero-densification.
     */
   def qRollingMedian(s: SparkSession, dir: String): DataFrame = {
-    val geo = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("r_name"))
-    val cells = Tables.orders(s, dir)
-      .join(geo, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("r_name"),
-        datediff(to_date(col("o_orderdate")), lit("1992-01-01")).cast("long").as("day"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("rev_cents"))
     val wMed = Window.partitionBy(col("r_name")).orderBy(col("day"))
       .rangeBetween(-14, 0)
-    cells
+    regionDailyCents(s, dir)
       .withColumn("med_cents", percentile(col("rev_cents"), lit(0.5)).over(wMed))
       .select(col("r_name"), col("day"), col("rev_cents"),
         NumFns.roundPortable(col("med_cents") / 100.0, 4).as("med_rev"))
@@ -1882,17 +1881,7 @@ object Temporal {
   }
 
   val qRollingMedianOracle: String =
-    s"""WITH cells AS (
-       |  SELECT r_name,
-       |    CAST(o_orderdate::DATE - DATE '1992-01-01' AS BIGINT) AS day,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS rev_cents
-       |  FROM orders
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN nation ON c_nationkey = n_nationkey
-       |  JOIN region ON n_regionkey = r_regionkey
-       |  GROUP BY 1, 2
-       |), m AS (
+    s"""WITH cells AS ($regionDailyCentsSql), m AS (
        |  SELECT r_name, day, rev_cents,
        |    quantile_cont(rev_cents, 0.5) OVER (PARTITION BY r_name
        |      ORDER BY day RANGE BETWEEN 14 PRECEDING AND CURRENT ROW)
@@ -2002,15 +1991,7 @@ object Temporal {
     * per-(region, τ) means are DECIMAL-stable sums.
     */
   def qPinballLoss(s: SparkSession, dir: String): DataFrame = {
-    val geo = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("r_name"))
-    val cells = Tables.orders(s, dir)
-      .join(geo, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("r_name"),
-        datediff(to_date(col("o_orderdate")), lit("1992-01-01")).cast("long").as("day"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("rev_cents"))
+    val cells = regionDailyCents(s, dir)
     val cut = datediff(to_date(lit(PinballCutoff)), to_date(lit("1992-01-01")))
     val train = cells.filter(col("day") < cut)
     val test = cells.filter(col("day") >= cut)
@@ -2053,17 +2034,7 @@ object Temporal {
     }.mkString("\n|  UNION ALL\n|  ")
     val qCols = PinballTaus.map { case (name, p) =>
       s"round(quantile_cont(rev_cents, $p), 4) AS $name" }.mkString(", ")
-    s"""WITH cells AS (
-       |  SELECT r_name,
-       |    CAST(o_orderdate::DATE - DATE '1992-01-01' AS BIGINT) AS day,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS rev_cents
-       |  FROM orders
-       |  JOIN customer ON o_custkey = c_custkey
-       |  JOIN nation ON c_nationkey = n_nationkey
-       |  JOIN region ON n_regionkey = r_regionkey
-       |  GROUP BY 1, 2
-       |),
+    s"""WITH cells AS ($regionDailyCentsSql),
        |tr AS (SELECT * FROM cells
        |  WHERE day < DATE '$PinballCutoff' - DATE '1992-01-01'),
        |te AS (SELECT * FROM cells
@@ -2173,10 +2144,7 @@ object Temporal {
     */
   def qHurst(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val daily = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
-        .cast("long").as("day"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("x"))
+    val daily = dailyCents(s, dir).select(col("di").cast("long").as("day"), col("yc").as("x"))
       .withColumn("rn", row_number().over(Window.orderBy(col("day"))).cast("long"))
     val fanned = daily.select(col("rn"), col("x"),
         explode(array(HurstNs.map(n => lit(n.toLong)): _*)).as("n"))
@@ -2227,11 +2195,7 @@ object Temporal {
   }
 
   val qHurstOracle: String =
-    s"""WITH daily AS (
-       |  SELECT CAST(o_orderdate::DATE - DATE '1992-01-01' AS BIGINT) AS day,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS x
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH daily AS (SELECT di AS day, yc AS x FROM (${dailyCentsSql()})),
        |idx AS (
        |  SELECT x, CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn
        |  FROM daily
@@ -2306,9 +2270,7 @@ object Temporal {
     */
   def qDickeyFuller(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 0)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("y"))
+    val days = dailyCents(s, dir).select(col("di"), col("yc").as("y"))
     val w = Window.orderBy(col("di"))
     val pairs = days
       .withColumn("yp", lag(col("y"), 1).over(w))
@@ -2337,13 +2299,7 @@ object Temporal {
   }
 
   val qDickeyFullerOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS y
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (SELECT di, yc AS y FROM (${dailyCentsSql()})),
        |p AS (
        |  SELECT y - lag(y, 1) OVER (ORDER BY di) AS dy,
        |    lag(y, 1) OVER (ORDER BY di) AS yp
@@ -2472,10 +2428,7 @@ object Temporal {
     */
   def qDurbinWatson(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg((sum(NumFns.roundAwayLong(col("o_totalprice") * 100)) / 100.0)
-        .as("y"))
+    val days = dailyCents(s, dir).select(col("di"), (col("yc") / 100.0).as("y"))
     val m = days.agg(count(lit(1)).as("n"),
       sum(col("di").cast(D)).as("sx"), sum(col("y").cast(D)).as("sy"),
       sum((col("di") * col("di")).cast(D)).as("sxx"),
@@ -2513,13 +2466,7 @@ object Temporal {
   }
 
   val qDurbinWatsonOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      / 100.0 AS y
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (SELECT di, yc / 100.0 AS y FROM (${dailyCentsSql()})),
        |m AS (
        |  SELECT CAST(count(*) AS DOUBLE) AS n,
        |    CAST(sum(CAST(di AS DECIMAL(38,12))) AS DOUBLE) AS sx,
@@ -2580,9 +2527,7 @@ object Temporal {
     */
   def qChowTest(s: SparkSession, dir: String): DataFrame = {
     val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val m = days.groupBy((col("di") >= ChowBreakDi).as("late"))
       .agg(count(lit(1)).cast(D0).as("n"),
         sum(col("di").cast(D0)).as("sx"), sum(col("yc").cast(D0)).as("sy"),
@@ -2641,13 +2586,7 @@ object Temporal {
       val (a, b, c) = abcSql(p)
       s"(($a) * ($c) - ($b) * ($b)) / (CAST(n$p AS DOUBLE) * ($c)) / 1e4"
     }
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |m AS (
        |  SELECT di >= $ChowBreakDi AS late, CAST(count(*) AS HUGEINT) AS n,
        |    sum(CAST(di AS HUGEINT)) AS sx, sum(CAST(yc AS HUGEINT)) AS sy,
@@ -2717,9 +2656,7 @@ object Temporal {
     * argmax is a max_by over that frame, no row-scale work anywhere.
     */
   def qPageHinkley(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val wSeq = Window.orderBy(col("di"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dev = days
@@ -2743,13 +2680,7 @@ object Temporal {
   }
 
   val qPageHinkleyOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |dev AS (
        |  SELECT di,
        |    (yc - CAST(sum(yc) OVER w AS DOUBLE)
@@ -2796,10 +2727,7 @@ object Temporal {
     */
   def qGranger(s: SparkSession, dir: String): DataFrame = {
     val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"),
-        count(lit(1)).as("xc"))
+    val days = dailyCents(s, dir, count(lit(1)).as("xc"))
     val w = Window.orderBy(col("di"))
     val lagged = days
       .withColumn("z1", lag(col("yc"), 1).over(w))
@@ -2841,14 +2769,7 @@ object Temporal {
   }
 
   val qGrangerOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc,
-       |    count(*) AS xc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql("count(*) AS xc")}),
        |lg AS (
        |  SELECT yc, lag(yc, 1) OVER (ORDER BY di) AS z1,
        |    lag(xc, 1) OVER (ORDER BY di) AS z2
@@ -3096,9 +3017,7 @@ object Temporal {
     * the final z/p run in IEEE.
     */
   def qMannKendall(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val a = days.select(col("di").as("d1"), col("yc").as("y1"))
     val b = days.select(col("di").as("d2"), col("yc").as("y2"))
     val sStat = a.join(broadcast(b), col("d1") < col("d2"))
@@ -3126,13 +3045,7 @@ object Temporal {
   }
 
   val qMannKendallOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |sp AS (
        |  SELECT CAST(sum(CASE WHEN b.yc > a.yc THEN 1
        |    WHEN b.yc < a.yc THEN -1 ELSE 0 END) AS BIGINT) AS s
@@ -3179,9 +3092,7 @@ object Temporal {
     */
   def qLjungBox(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
     val dev = days.crossJoin(broadcast(m))
       .select(col("di"), col("n"),
@@ -3217,13 +3128,7 @@ object Temporal {
       s"(CAST(num$k AS DOUBLE) / CAST(den AS DOUBLE))" +
         s" * (CAST(num$k AS DOUBLE) / CAST(den AS DOUBLE))" +
         s" / (CAST(n AS DOUBLE) - $k)").mkString(" + ")
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |m AS (SELECT count(*) AS n, CAST(sum(yc) AS BIGINT) AS sy FROM days),
        |dev AS (
        |  SELECT di, n, yc - CAST(sy AS DOUBLE) / n AS d
@@ -3263,9 +3168,7 @@ object Temporal {
     * integer comparisons on exact cents, so the count is exact.
     */
   def qTurningPoints(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val w = Window.orderBy(col("di"))
     val marked = days
       .withColumn("yp", lag(col("yc"), 1).over(w))
@@ -3286,13 +3189,7 @@ object Temporal {
   }
 
   val qTurningPointsOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |mk AS (
        |  SELECT CASE WHEN yp IS NULL OR yn IS NULL THEN 0
        |    WHEN (yc > yp AND yc > yn) OR (yc < yp AND yc < yn) THEN 1
@@ -3332,9 +3229,7 @@ object Temporal {
     * identical doubles on both engines.
     */
   def qSpcChart(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val w = Window.orderBy(col("di"))
     val mr = days
       .withColumn("yp", lag(col("yc"), 1).over(w))
@@ -3362,13 +3257,7 @@ object Temporal {
   }
 
   val qSpcChartOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |mr AS (
        |  SELECT di, yc, abs(yc - lag(yc, 1) OVER (ORDER BY di)) AS mr
        |  FROM days
@@ -3420,9 +3309,7 @@ object Temporal {
   def qPeriodogram(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val TwoPi = 6.283185307179586
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
     val w = Window.orderBy(col("di"))
     val dev = days
@@ -3457,13 +3344,7 @@ object Temporal {
   }
 
   val qPeriodogramOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |m AS (SELECT count(*) AS n, CAST(sum(yc) AS BIGINT) AS sy FROM days),
        |dev AS (
        |  SELECT CAST(row_number() OVER (ORDER BY di) AS BIGINT) - 1 AS t,
@@ -3638,10 +3519,7 @@ object Temporal {
     */
   def qCooksDistance(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg((sum(NumFns.roundAwayLong(col("o_totalprice") * 100)) / 100.0)
-        .as("y"))
+    val days = dailyCents(s, dir).select(col("di"), (col("yc") / 100.0).as("y"))
     val m = days.agg(count(lit(1)).as("nL"),
       sum(col("di").cast(D)).cast("double").as("sx"),
       sum(col("y").cast(D)).cast("double").as("sy"),
@@ -3678,13 +3556,7 @@ object Temporal {
   }
 
   val qCooksDistanceOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      / 100.0 AS y
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (SELECT di, yc / 100.0 AS y FROM (${dailyCentsSql()})),
        |m AS (
        |  SELECT count(*) AS nL,
        |    CAST(sum(CAST(di AS DECIMAL(38,12))) AS DOUBLE) AS sx,
@@ -3741,9 +3613,7 @@ object Temporal {
     */
   def qPotGpd(s: SparkSession, dir: String): DataFrame = {
     val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
       .localCheckpoint() // day frame; feeds the threshold AND exceedances
     val cells = days.groupBy(col("yc")).agg(count(lit(1)).as("c"))
     val tot = cells.agg(sum(col("c")).as("n"))
@@ -3780,13 +3650,7 @@ object Temporal {
   }
 
   val qPotGpdOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |cells AS (SELECT yc, count(*) AS c FROM days GROUP BY yc),
        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cells),
        |uu AS (
@@ -3845,14 +3709,7 @@ object Temporal {
     */
   def qEntropyRate(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    val cells = Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"))
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("event_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
+    val cells = transitions(s, dir)
       .localCheckpoint() // ≤|types|² rows; feeds marginals AND both folds
     val marg = cells.groupBy(col("from_type")).agg(sum(col("n")).as("ni"))
     val tot = cells.agg(sum(col("n")).as("nn"),
@@ -3878,19 +3735,7 @@ object Temporal {
   }
 
   val qEntropyRateOracle: String =
-    s"""WITH o AS (
-       |  SELECT user_id, event_id, epoch_us(ts) AS us, event_type FROM events
-       |),
-       |g AS (
-       |  SELECT event_type AS to_type,
-       |    lag(event_type, 1) OVER (PARTITION BY user_id
-       |      ORDER BY us, event_id) AS from_type
-       |  FROM o
-       |),
-       |c AS (
-       |  SELECT from_type, to_type, count(*) AS n
-       |  FROM g WHERE from_type IS NOT NULL GROUP BY 1, 2
-       |),
+    s"""WITH c AS ($transitionsSql),
        |mg AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS ni FROM c
        |  GROUP BY 1),
        |tt AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
@@ -3923,14 +3768,7 @@ object Temporal {
     */
   def qBowkerTest(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    val cells = Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"))
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("event_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
+    val cells = transitions(s, dir)
       .localCheckpoint()
     val pairs = cells.filter(col("from_type") < col("to_type"))
       .select(col("from_type").as("a"), col("to_type").as("b"),
@@ -3956,19 +3794,7 @@ object Temporal {
   }
 
   val qBowkerTestOracle: String =
-    s"""WITH o AS (
-       |  SELECT user_id, event_id, epoch_us(ts) AS us, event_type FROM events
-       |),
-       |g AS (
-       |  SELECT event_type AS to_type,
-       |    lag(event_type, 1) OVER (PARTITION BY user_id
-       |      ORDER BY us, event_id) AS from_type
-       |  FROM o
-       |),
-       |c AS (
-       |  SELECT from_type, to_type, count(*) AS n
-       |  FROM g WHERE from_type IS NOT NULL GROUP BY 1, 2
-       |),
+    s"""WITH c AS ($transitionsSql),
        |pr AS (
        |  SELECT coalesce(x.a, y.a) AS a, coalesce(x.b, y.b) AS b,
        |    coalesce(x.nab, 0) AS nab, coalesce(y.nba, 0) AS nba
@@ -4101,9 +3927,7 @@ object Temporal {
     */
   def qPacf(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
     val w = Window.orderBy(col("di"))
     val dev = days.crossJoin(broadcast(m))
@@ -4139,13 +3963,7 @@ object Temporal {
   }
 
   val qPacfOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |m AS (SELECT count(*) AS n, CAST(sum(yc) AS BIGINT) AS sy FROM days),
        |dev AS (
        |  SELECT di, n, yc - CAST(sy AS DOUBLE) / n AS d
@@ -4211,9 +4029,7 @@ object Temporal {
     */
   def qCusumSquares(s: SparkSession, dir: String): DataFrame = {
     val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val sq = days.select(col("di"), (col("yc").cast(D0) * col("yc")).as("y2"))
     val tot = sq.agg(sum(col("y2")).as("ss"), count(lit(1)).as("n"))
     val wSeq = Window.orderBy(col("di"))
@@ -4236,13 +4052,7 @@ object Temporal {
   }
 
   val qCusumSquaresOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |sq AS (SELECT di, CAST(yc AS HUGEINT) * yc AS y2 FROM days),
        |tot AS (SELECT sum(y2) AS ss, count(*) AS n FROM sq),
        |c AS (
@@ -4274,9 +4084,7 @@ object Temporal {
     */
   def qArOrderAic(s: SparkSession, dir: String): DataFrame = {
     val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val days = Tables.orders(s, dir)
-      .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = dailyCents(s, dir)
     val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
     val w = Window.orderBy(col("di"))
     val dev = days.crossJoin(broadcast(m))
@@ -4318,13 +4126,7 @@ object Temporal {
   }
 
   val qArOrderAicOracle: String =
-    s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${dailyCentsSql()}),
        |m AS (SELECT count(*) AS n, CAST(sum(yc) AS BIGINT) AS sy FROM days),
        |dev AS (
        |  SELECT di, n, (yc - CAST(sy AS DOUBLE) / n) / 100.0 AS d

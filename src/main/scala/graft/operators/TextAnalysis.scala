@@ -2173,8 +2173,7 @@ object TextAnalysis {
       .select(
         when(TextFns.stopCount(col("toks")) > 0, 1L)
           .otherwise(0L).as("c1"),
-        when(aggregate(col("toks"), lit(0L),
-          (acc, t) => acc + length(t)) * 10 <= lit(55L) * size(col("toks")), 1L)
+        when(TextFns.wordChars(col("toks")) * 10 <= lit(55L) * size(col("toks")), 1L)
           .otherwise(0L).as("c2"),
         when(array_contains(col("toks"), "the"), 1L).otherwise(0L).as("c3"))
       .withColumn("l", col("c1") + col("c2") + col("c3"))
@@ -2205,7 +2204,7 @@ object TextAnalysis {
        |  SELECT
        |    CASE WHEN ${TextFns.stopCountSql()} > 0
        |      THEN 1 ELSE 0 END AS c1,
-       |    CASE WHEN list_sum(list_transform(toks, x -> len(x))) * 10
+       |    CASE WHEN ${TextFns.wordCharsSql} * 10
        |        <= len(toks) * 55
        |      THEN 1 ELSE 0 END AS c2,
        |    CASE WHEN list_contains(toks, 'the') THEN 1 ELSE 0 END AS c3

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchSpec extends AnyFunSuite {
   private val results = Seq(
-    Bench.Timing("q_a", 1.25, 2.0), Bench.Timing("q_b", -1.0, -1.0), Bench.Timing("q_c", 2.5, 0.5))
+    Bench.Timing("q_a", 1.25, 2.0, 0.25, 0.125), Bench.Timing("q_b", -1.0, -1.0, -1.0, -1.0),
+    Bench.Timing("q_c", 2.5, 0.5, 0.0, 0.5))
   private val iso = Seq(Bench.Isolated("q_c", 2.5, 1.0, 0.5))
   private val load = List[JValue](JDouble(0.5), JDouble(0.25), JDouble(0.1), JString("1/99"))
   private val (full, compact) = Bench.records(results, iso, Map("q_z" -> 9.0, "q_a" -> 1.0),
@@ -32,7 +33,7 @@ class BenchSpec extends AnyFunSuite {
   test("both records keep their published key sets") {
     def keys(j: JValue) = j match { case JObject(fs) => fs.map(_._1); case _ => Nil }
     assert(keys(reparse(full)) === List("metric", "value", "unit", "queries", "cpu",
-      "isolated", "loadavg_start", "loadavg_end", "drift_median", "drift_exceeded", "sf"))
+      "gc", "jit", "isolated", "loadavg_start", "loadavg_end", "drift_median", "drift_exceeded", "sf"))
     assert(keys(reparse(compact)) === List("metric", "value", "unit", "cpu_total",
       "n_queries", "n_failed", "median", "p95", "max", "queries_file", "isolated",
       "drift_median", "drift_exceeded", "queries", "sf"))
@@ -50,7 +51,7 @@ class BenchSpec extends AnyFunSuite {
     // worst case: every query slow, 8 isolated movers, and a prior record
     // whose 8 slowest differ from this sweep's, so the union holds 16
     val names = SparkEntry.queries.keys.toSeq.sorted
-    val worst = names.map(Bench.Timing(_, 99999.999, 99999.999))
+    val worst = names.map(Bench.Timing(_, 99999.999, 99999.999, 99999.999, 99999.999))
     val prior = names.takeRight(8).map(_ -> 199999.999).toMap
     val movers = names.take(8).map(Bench.Isolated(_, 99999.999, 99999.999, 999.999))
     val line = JsonMethods.compact(Bench.records(worst, movers, prior, 99.999,

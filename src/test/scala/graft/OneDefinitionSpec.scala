@@ -3,10 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The document-quality features behind the curation and evaluation
-  * families are each written once per engine (`TextFns`, `Curation`);
-  * operators and oracles call or splice them. A copy spelled out at a
-  * call site is how an oracle drifts from its engine twin, so this scans
-  * `src/main` for the spellings each definition replaced.
+  * families, and the derived inputs the analytic families share (the
+  * daily revenue series, the co-trade edges, the two-arm moments), are
+  * each written once per engine; operators and oracles call or splice
+  * them. A copy spelled out at a call site is how an oracle drifts from
+  * its engine twin, so this scans `src/main` for the spellings each
+  * definition replaced.
   */
 class OneDefinitionSpec extends AnyFunSuite {
 
@@ -45,7 +47,33 @@ class OneDefinitionSpec extends AnyFunSuite {
       """abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789 """",
       Seq("SymbolCount.scala")),
     ("the perplexity bucket thresholds are only TextAnalysis.bucketOf and its oracle",
-      """\* 3 < [\w.()"]+ \* 2""", Seq("TextAnalysis.scala", "TextAnalysis.scala")))
+      """\* 3 < [\w.()"]+ \* 2""", Seq("TextAnalysis.scala", "TextAnalysis.scala")),
+    ("the token character total is only TextFns.wordChars and its SQL twin",
+      """\+ length\(|transform\(col\("toks"\), t => length|list_transform\(toks, x -> len""",
+      Seq("TextFns.scala", "TextFns.scala")),
+    // Temporal.dailyCents and its twin; the other keyed or filtered day
+    // series stay where they are, each engine spelling beside its oracle:
+    // regionDailyCents, qMaxConcurrent's spans, qTheilSen's one year,
+    // qPermutationTest's two years, qTrending's (day, part) cells and the
+    // date-keyed revenue of qGrubbsOutlier, qPageTrend and qSeasonalMk
+    ("the order-day series is spelled only at dailyCents and the named day series",
+      """datediff\(to_date\(col\("o_orderdate"\)\), lit\("1992-01-01"\)\)""" +
+        """|o_orderdate::DATE - DATE '1992-01-01'""" +
+        """|DATE '1992-01-01',\s*\|?\s*(?:CAST\(o_orderdate AS DATE\)|o_orderdate::DATE)""" +
+        """|groupBy\(to_date\(col\("o_orderdate"\)\)\.as\("d"\)\)\s*\.agg\(sum""" +
+        """|CAST\(o_orderdate AS DATE\) AS d,\s*\|\s*CAST\(sum""",
+      Seq.fill(12)("Temporal.scala") ++ Seq.fill(4)("Profiling.scala")
+        ++ Seq.fill(2)("Behavioral.scala")),
+    ("the nation co-trade edge is only Graph.coTrade and its SQL twin",
+      """least\(col\("nc"\)|least\(c_nationkey""", Seq("Graph.scala", "Graph.scala")),
+    ("the two-arm pivot and variances are only Profiling.armMoments and its SQL twin",
+      """def armCol|arm = 0 THEN n END|\(m0 \* m0\)|\(sx0 / n0\) \* \(sx0 / n0\)""",
+      Seq.fill(4)("Profiling.scala")),
+    ("the event-type transition lag is only Temporal.transitions and its SQL twin",
+      """"from_type", lag|\) AS from_type\b""", Seq("Temporal.scala", "Temporal.scala")),
+    ("the customer-to-region hop is only Temporal.custRegion and its SQL twin",
+      """select\(col\("c_custkey"\), col\("r_name"\)\)|SELECT c_custkey, r_name\b""",
+      Seq("Temporal.scala", "Temporal.scala")))
 
   for ((name, pattern, expected) <- definitions)
     test(name) {
