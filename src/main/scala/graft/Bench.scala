@@ -103,7 +103,7 @@ object Bench {
     * bench_full.json never clobbers the sweep's) and its result is read
     * from that file.
     */
-  private def isolatedRun(name: String, sfDir: String): Option[Double] = {
+  private def isolatedRun(name: String, sfDir: String, childTimeoutSec: Long): Option[Double] = {
     import scala.jdk.CollectionConverters._
     val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -129,15 +129,6 @@ object Bench {
     pb.redirectErrorStream(true)
     pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
     val proc = pb.start()
-    // 120s per child by default: every suite query's isolated
-    // steady-state is <20s at sf0.1 (the only scale the driver isolates
-    // at); a child that needs longer is itself the finding. The old
-    // 300s cap let a handful of children eat the driver's whole bench
-    // budget — the r10 rc=124 timeout. SPARK_GRAFT_ISO_CHILD_TIMEOUT
-    // raises it for builder-run sf1 records, where one warm + two timed
-    // runs of a 40s query plus JVM start legitimately exceed 120s.
-    val childTimeoutSec = sys.env.get("SPARK_GRAFT_ISO_CHILD_TIMEOUT")
-      .flatMap(_.toLongOption).getOrElse(120L)
     val finished = proc.waitFor(
       childTimeoutSec, java.util.concurrent.TimeUnit.SECONDS)
     if (!finished) {
@@ -264,13 +255,24 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = loadavg()
-    val spark = GraftSession.local()
+    // 120s per isolation child by default: every suite query's isolated
+    // steady-state is <20s at sf0.1 (the scale full sweeps isolate at);
+    // a child that needs longer is itself the finding. The old 300s cap
+    // let a handful of children eat a sweep's whole time budget — the
+    // r10 rc=124 timeout. SPARK_GRAFT_ISO_CHILD_TIMEOUT
+    // raises it for builder-run sf1 records, where one warm + two timed
+    // runs of a 40s query plus JVM start legitimately exceed 120s. Both
+    // isolation knobs are read here, so a bad value fails before the sweep.
+    val childTimeoutSec = GraftSession.positiveKnob(
+      sys.env, "SPARK_GRAFT_ISO_CHILD_TIMEOUT", 120L)(_.toLongOption)
+    val isoBudgetSec = GraftSession.positiveKnob(
+      sys.env, "SPARK_GRAFT_ISO_BUDGET", 300.0)(_.toDoubleOption)
     // optional args: restrict to the named queries (micro-bench
     // iteration; also how the isolation child is invoked — args disable
     // the isolation pass below)
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val suite = if (args.nonEmpty) all.filter(q => args.contains(q._1)) else all
+    val suite = SparkEntry.select(args.toSeq).sortBy(_.name).map(q => q.name -> q.engine)
+    val loadStart = loadavg()
+    val spark = GraftSession.local()
     suite.foreach { case (name, fn) => // warm sweep: codegen + JIT + listing
       try exec(fn(spark, sfDir))
       catch { case e: Throwable => System.err.println(s"[bench] warm $name failed: ${e.getMessage}") }
@@ -315,9 +317,6 @@ object Bench {
     // lesson: 16 children × up to 300s each blew it): ≤8 children, 120s
     // per child, and a global wall budget (SPARK_GRAFT_ISO_BUDGET,
     // default 300s) checked before each launch. Every skip is logged.
-    val isoBudgetSec =
-      sys.env.get("SPARK_GRAFT_ISO_BUDGET").flatMap(_.toDoubleOption)
-        .getOrElse(300.0)
     val isolated: Seq[Isolated] =
       if (args.nonEmpty) Seq.empty
       else {
@@ -344,7 +343,7 @@ object Bench {
             val load1 = loadavg1()
             System.err.println(
               f"[bench] isolating $q (sweep $sweepT%.3fs, loadavg $load1)")
-            isolatedRun(q, sfDir).map { iso1 =>
+            isolatedRun(q, sfDir, childTimeoutSec).map { iso1 =>
               // Second-opinion rule (r11 verdict ask #3): a loud host can
               // CONFIRM its own false regression — the r11 sweep's two
               // outliers were "isolated" at 6–17× their committed record
@@ -360,7 +359,7 @@ object Bench {
                   System.err.println(f"[bench] $q isolated $iso1%.3fs still " +
                     f">3x committed $committed%.3fs (loadavg ${loadavg1()}) " +
                     "— contention suspect; taking a second opinion")
-                  math.min(iso1, isolatedRun(q, sfDir).getOrElse(iso1))
+                  math.min(iso1, isolatedRun(q, sfDir, childTimeoutSec).getOrElse(iso1))
                 } else iso1
               Isolated(q, sweepT, isoT, load1)
             }

@@ -2,20 +2,21 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.json4s.{JObject, JString}
 import org.json4s.jackson.JsonMethods
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected SparkEntry.table row's result →
+  * parquet, plus those rows' oracles in oracle_sql.json, for the DuckDB
+  * oracle compare (dev/check.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional trailing args: restrict the dump to the named queries
-    // (local iteration); the driver always passes exactly two args
-    val only = args.drop(2).toSet
+    // optional trailing args: restrict the dump and oracle_sql.json to
+    // the named queries (local iteration); a full run passes exactly
+    // two args
+    val rows = SparkEntry.select(args.drop(2).toSeq)
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    rows.foreach { q =>
+      val name = q.name
+      try q.engine(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -28,7 +29,7 @@ object Verify {
         }
       }
     }
-    val json = JObject(SparkEntry.oracleSql.toList.map { case (k, v) => k -> JString(v) })
+    val json = JObject(rows.toList.map(q => q.name -> JString(q.oracle)))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), JsonMethods.compact(json))
     spark.stop()
   }

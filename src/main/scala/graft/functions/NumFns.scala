@@ -26,7 +26,11 @@ import org.apache.spark.sql.types.DecimalType
   */
 object NumFns {
 
-  private val D = DecimalType(38, 12)
+  /** The exact-decimal types, DECIMAL(38,12) and DECIMAL(38,0) in the
+    * oracles: `Dec12` is what a double is cast to before an
+    * order-independent sum, `Dec0` the type of an exact integer total. */
+  val Dec12: DecimalType = DecimalType(38, 12)
+  val Dec0: DecimalType = DecimalType(38, 0)
 
   /** Order-independent `round(sum(x), digits)` over a double column.
     *
@@ -40,7 +44,7 @@ object NumFns {
     * converts to the identical double.
     */
   def stableSum(x: Column, digits: Int): Column =
-    round(sum(x.cast(D)), digits).cast("double")
+    round(sum(x.cast(Dec12)), digits).cast("double")
 
   def stableSumSql(x: String, digits: Int): String =
     s"CAST(round(sum(CAST($x AS DECIMAL(38,12))), $digits) AS DOUBLE)"
@@ -68,7 +72,7 @@ object NumFns {
     * — every consumer's mean is a per-row average, far inside that.
     */
   def stableMean(x: Column, n: Column, digits: Int): Column =
-    roundPortable(sum(x.cast(D)).cast("double") / n, digits)
+    roundPortable(sum(x.cast(Dec12)).cast("double") / n, digits)
 
   def stableMeanSql(x: String, n: String, digits: Int): String =
     roundPortableSql(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NumFns, TextFns}
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Second-tier analytic operators (SURVEY.md §2): multi-level rollups,
@@ -26,11 +27,10 @@ object Analytics {
     * 'ALL' on both engines (the data itself is null-free).
     */
   def qRollupAgg(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val leaves = Tables.lineitem(s, dir)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(sum(col("l_quantity").cast(D)).as("s_qty"),
-        sum(col("l_extendedprice").cast(D)).as("s_price"),
+      .agg(sum(col("l_quantity").cast(Dec12)).as("s_qty"),
+        sum(col("l_extendedprice").cast(Dec12)).as("s_price"),
         count(lit(1)).as("n"))
     leaves
       .rollup(col("l_returnflag"), col("l_linestatus"))
@@ -260,7 +260,7 @@ object Analytics {
     // the avg feeds a comparison, so order-dependent last bits would
     // flip rows in and out of the result, not just wiggle a decimal
     val custAvg = ord.groupBy(col("o_custkey").as("ck"))
-      .agg((sum(col("o_totalprice").cast(org.apache.spark.sql.types.DecimalType(38, 12)))
+      .agg((sum(col("o_totalprice").cast(Dec12))
         .cast("double") / count(lit(1))).as("avg_price"))
     // custAvg is per-CUSTOMER (entity-domain): shuffle_hash, never
     // broadcast (r12 engine-wide PlanAuditSpec ban)
@@ -1135,14 +1135,13 @@ object Analytics {
     */
   def qTrimmedMean(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val vals = Tables.orders(s, dir)
       .select(col("o_orderpriority").as("prio"),
         NumFns.roundAwayLong(col("o_totalprice") * 100).as("v"))
     val cells = vals.groupBy(col("prio"), col("v"))
       .agg(count(lit(1)).as("cv"))
     val tot = cells.groupBy(col("prio"))
-      .agg(sum(col("cv")).as("n"), sum(col("v").cast(D0) * col("cv"))
+      .agg(sum(col("cv")).as("n"), sum(col("v").cast(Dec0) * col("cv"))
         .as("sraw"))
       .withColumn("k", floor(col("n") * TrimShare).cast("long"))
     val wCum = Window.partitionBy(col("prio")).orderBy(col("v"))
@@ -1155,7 +1154,7 @@ object Analytics {
           least(col("cum"), col("n") - col("k"))
             - greatest(col("cum") - col("cv"), col("k"))).as("keep"))
       .groupBy(col("prio"), col("n"), col("k"), col("sraw"))
-      .agg(sum(col("v").cast(D0) * col("keep")).as("strim"),
+      .agg(sum(col("v").cast(Dec0) * col("keep")).as("strim"),
         sum(col("keep")).as("nkeep"))
     trimmed.select(col("prio"), col("n").as("n_orders"),
       col("k").as("n_trimmed_per_tail"),

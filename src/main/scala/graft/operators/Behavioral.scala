@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.NumFns
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Behavioral / event-sequence analytics (SURVEY.md §2): funnel analysis,
@@ -1350,16 +1351,15 @@ object Behavioral {
       .filter(col("n_retained") > 0)
       .withColumn("r", col("n_retained").cast("double") / col("n_eligible"))
       .withColumn("lr", log(col("r")))
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val wAll = Window.partitionBy()
     curve
       .withColumn("cnt", count(lit(1)).over(wAll))
       .withColumn("sk", sum(col("k")).over(wAll))
       // log-sums as DECIMAL: an unordered whole-frame double sum is
       // accumulation-order-dependent; the decimal sum is not
-      .withColumn("sl", sum(col("lr").cast(D)).over(wAll).cast("double"))
+      .withColumn("sl", sum(col("lr").cast(Dec12)).over(wAll).cast("double"))
       .withColumn("skl",
-        sum((col("k") * col("lr")).cast(D)).over(wAll).cast("double"))
+        sum((col("k") * col("lr")).cast(Dec12)).over(wAll).cast("double"))
       .withColumn("skk", sum(col("k") * col("k")).over(wAll))
       .withColumn("b",
         (col("cnt") * col("skl") - col("sk") * col("sl"))
@@ -1424,12 +1424,11 @@ object Behavioral {
     * corpus-scale story, mirrored in HUGEINT).
     */
   def qJainsIndex(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val users = Tables.events(s, dir)
       .groupBy(col("user_id")).agg(count(lit(1)).as("x"))
     users.agg(count(lit(1)).as("n_users"),
         sum(col("x")).as("sx"),
-        sum(col("x").cast(D0) * col("x")).as("sxx"))
+        sum(col("x").cast(Dec0) * col("x")).as("sxx"))
       .select(col("n_users"), col("sx").as("n_events"),
         NumFns.roundPortable(
           col("sx").cast("double") * col("sx")
@@ -1543,13 +1542,12 @@ object Behavioral {
     * is order-independent) → 3-row roll-up, DECIMAL-folded averages.
     */
   def qEventEntropy(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.events(s, dir)
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("c"))
     val users = cells.groupBy(col("user_id"))
       .agg(sum(col("c")).as("t"), count(lit(1)).as("k"),
-        sum((col("c") * log(col("c").cast("double"))).cast(D)).as("sc"))
+        sum((col("c") * log(col("c").cast("double"))).cast(Dec12)).as("sc"))
       .select(
         when(col("t") < 10, "1_light").when(col("t") < 100, "2_mid")
           .otherwise("3_heavy").as("tier"),
@@ -1558,7 +1556,7 @@ object Behavioral {
           - col("sc").cast("double") / col("t")).as("h"))
     users.groupBy(col("tier"))
       .agg(count(lit(1)).as("n_users"),
-        sum(col("k")).as("sk"), sum(col("h").cast(D)).as("sh"))
+        sum(col("k")).as("sk"), sum(col("h").cast(Dec12)).as("sh"))
       .select(col("tier"), col("n_users"),
         NumFns.roundPortable(
           col("sk").cast("double") / col("n_users"), 4).as("avg_types"),
@@ -1668,7 +1666,6 @@ object Behavioral {
     */
   def qEventBurstiness(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("us"), col("event_id"))
     val dts = Tables.events(s, dir)
@@ -1679,8 +1676,8 @@ object Behavioral {
       .select(col("event_type"), (col("us") - col("prev")).as("dt"))
     dts.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("dt").cast(D0)).as("s1"),
-        sum(col("dt").cast(D0) * col("dt")).as("s2"))
+        sum(col("dt").cast(Dec0)).as("s1"),
+        sum(col("dt").cast(Dec0) * col("dt")).as("s2"))
       .filter(col("n") > 1)
       .select(col("event_type"), col("n").as("n_intervals"),
         NumFns.roundPortable(col("s1").cast("double") / col("n") / 1e6, 2)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NumFns, TextFns}
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.plans.Fence
 import graft.sources.Tables
 
@@ -1135,21 +1136,19 @@ object Curation {
     * portably so both engines print identical integers.
     */
   def qNeymanAllocation(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val strata = Tables.documents(s, dir)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("nh"),
-        sum(col("n_chars").cast(D0)).as("s1"),
-        sum(col("n_chars").cast(D0) * col("n_chars")).as("s2"))
+        sum(col("n_chars").cast(Dec0)).as("s1"),
+        sum(col("n_chars").cast(Dec0) * col("n_chars")).as("s2"))
       .select(col("source"), col("nh"),
         sqrt((col("nh") * col("s2") - col("s1") * col("s1")).cast("double")
           / (col("nh").cast("double") * (col("nh") - 1).cast("double")))
           .as("sigma"))
       .localCheckpoint() // dimension-sized; feeds totals AND the report
     val tot = strata.agg(sum(col("nh")).as("n"),
-      sum((col("nh") * col("sigma")).cast(D)).as("snsig"),
-      sum((col("nh") * col("sigma") * col("sigma")).cast(D)).as("snsig2"))
+      sum((col("nh") * col("sigma")).cast(Dec12)).as("snsig"),
+      sum((col("nh") * col("sigma") * col("sigma")).cast(Dec12)).as("snsig2"))
     strata.crossJoin(broadcast(tot))
       .select(col("source"), col("nh"), 
         NumFns.roundPortable(col("sigma"), 2).as("sigma"),
@@ -1207,7 +1206,6 @@ object Curation {
     */
   def qSplitAaTest(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val docs = Tables.documents(s, dir)
       .select(col("n_chars").as("v"), splitCol.as("split"))
       .filter(col("split").isin("train", "test"))
@@ -1215,10 +1213,10 @@ object Curation {
       .agg(sum(when(col("split") === "train", 1L).otherwise(0L)).as("ca"),
         sum(when(col("split") === "test", 1L).otherwise(0L)).as("cb"))
     val tot = cells.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"),
-      sum(col("v").cast(D0) * col("ca")).as("sa"),
-      sum(col("v").cast(D0) * col("cb")).as("sb"),
-      sum(col("v").cast(D0) * col("v") * col("ca")).as("qa"),
-      sum(col("v").cast(D0) * col("v") * col("cb")).as("qb"))
+      sum(col("v").cast(Dec0) * col("ca")).as("sa"),
+      sum(col("v").cast(Dec0) * col("cb")).as("sb"),
+      sum(col("v").cast(Dec0) * col("v") * col("ca")).as("qa"),
+      sum(col("v").cast(Dec0) * col("v") * col("cb")).as("qb"))
     val wCum = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ks = cells
@@ -1376,19 +1374,18 @@ object Curation {
     */
   def qOtsuThreshold(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val scored = Tables.documents(s, dir)
       .select(TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(TextFns.stopScore(col("toks"), 1000).as("sq"))
     val cells = scored.groupBy(col("sq")).agg(count(lit(1)).as("c"))
     val tot = cells.agg(sum(col("c")).as("n"),
-      sum(col("sq").cast(D0) * col("c")).as("ssum"))
+      sum(col("sq").cast(Dec0) * col("c")).as("ssum"))
     val wCum = Window.orderBy(col("sq"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pref = cells
       .withColumn("cum", sum(col("c")).over(wCum))
-      .withColumn("csum", sum((col("sq").cast(D0) * col("c"))).over(wCum))
+      .withColumn("csum", sum((col("sq").cast(Dec0) * col("c"))).over(wCum))
       .crossJoin(broadcast(tot))
       .filter(col("cum") > 0 && col("cum") < col("n"))
     val w0 = col("cum").cast("double") / col("n")

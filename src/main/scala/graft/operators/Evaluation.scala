@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.{NumFns, TextFns}
+import graft.functions.NumFns.Dec12
 import graft.sources.Tables
 
 /** Classifier / ranker evaluation metrics as first-class distributed
@@ -17,8 +18,6 @@ import graft.sources.Tables
   * not a claim.
   */
 object Evaluation {
-
-  private val D12 = DecimalType(38, 12)
 
   /** (score, pos) per non-empty document, the scored frame of the
     * stopword-share language classifier: score is
@@ -120,7 +119,7 @@ object Evaluation {
     val hits = ivf.join(exact, Seq("query_id", "neighbor_id"), "left")
       .select(col("query_id"),
         (coalesce(col("rel"), lit(0)).cast("double")
-          / log(2.0, col("rank") + 1)).cast(D12).as("g"))
+          / log(2.0, col("rank") + 1)).cast(Dec12).as("g"))
     val queries = exact.select(col("query_id")).distinct()
     queries.join(
         hits.groupBy(col("query_id"))
@@ -168,7 +167,6 @@ object Evaluation {
     * at the end.
     */
   def qCalibration(s: SparkSession, dir: String): DataFrame = {
-    val D1 = DecimalType(38, 12)
     val scored = scoredDocs(s, dir, 1000)
     val bins = scored
       .select(least(floor(col("score") / 100), lit(9L)).as(
@@ -184,7 +182,7 @@ object Evaluation {
         (col("npos") / col("n").cast("double")).as("obs"))
       .select(col("bin"), col("n"), col("pred"), col("obs"),
         ((col("n") / col("nt").cast("double"))
-          * abs(col("obs") - col("pred"))).cast(D1).as("w"))
+          * abs(col("obs") - col("pred"))).cast(Dec12).as("w"))
       .localCheckpoint()
     val ece = terms.agg(sum(col("w")).as("e"))
     terms.crossJoin(broadcast(ece))
@@ -253,7 +251,7 @@ object Evaluation {
       .crossJoin(broadcast(tot))
       .select(col("n"), col("n_seg"), col("n_prio"),
         (pow(col("o") - col("r") * col("c") / col("n").cast("double"), 2.0)
-          / (col("r") * col("c") / col("n").cast("double"))).cast(D12).as("x"))
+          / (col("r") * col("c") / col("n").cast("double"))).cast(Dec12).as("x"))
     contrib.groupBy(col("n"), col("n_seg"), col("n_prio"))
       .agg(sum(col("x")).as("chi2d"))
       .select(col("n"),
@@ -819,7 +817,7 @@ object Evaluation {
         agree.withColumn("term", wExpr)
           .groupBy(col("query_id"))
           .agg(max(when(col("depth") === RboDepth, col("a"))).as("a_d"),
-            sum(col("term").cast(DecimalType(38, 12))).as("terms")),
+            sum(col("term").cast(Dec12)).as("terms")),
         Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(col("a_d"), lit(0L)).as("overlap_at_depth"),
@@ -900,7 +898,7 @@ object Evaluation {
         sum(col("hit")).as("n_hits"),
         max(when(col("hit") === 1L, lit(1.0) / col("rank"))).as("rr_raw"),
         sum((col("hit") * col("pref") / col("rank").cast("double"))
-          .cast(D12)).as("ap_raw"))
+          .cast(Dec12)).as("ap_raw"))
     // left join from the truth query list: a query whose IVF cell held
     // no candidates still reports rr = ap = 0, not a dropped row
     truth.select(col("query_id")).distinct()
@@ -965,7 +963,7 @@ object Evaluation {
     val bins = scored
       .select(least(floor(col("score") / 100), lit(9L)).as("bin"),
         col("score"), col("pos"),
-        ((p - col("pos")) * (p - col("pos"))).cast(D12).as("sq"))
+        ((p - col("pos")) * (p - col("pos"))).cast(Dec12).as("sq"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("score")).as("ssum"),
         sum(col("pos")).as("npos"), sum(col("sq")).as("sqsum"))
@@ -981,9 +979,9 @@ object Evaluation {
         obar.as("obar"))
       .select(col("nt"), col("post"), col("bsum"), col("obar"),
         (col("n") * (col("pbar") - col("obs")) * (col("pbar") - col("obs")))
-          .cast(D12).as("rel_t"),
+          .cast(Dec12).as("rel_t"),
         (col("n") * (col("obs") - col("obar")) * (col("obs") - col("obar")))
-          .cast(D12).as("res_t"))
+          .cast(Dec12).as("res_t"))
     terms.groupBy(col("nt"), col("post"), col("bsum"), col("obar"))
       .agg(sum(col("rel_t")).cast("double").as("rel"),
         sum(col("res_t")).cast("double").as("res"))
@@ -1041,7 +1039,6 @@ object Evaluation {
     * statistic with their count reported, keeping the χ² well-defined.
     */
   def qHosmerLemeshow(s: SparkSession, dir: String): DataFrame = {
-    val D = DecimalType(38, 12)
     val scored = scoredDocs(s, dir, 1000)
     val bins = scored
       .select(least(floor(col("score") / 100), lit(9L)).as("bin"),
@@ -1058,7 +1055,7 @@ object Evaluation {
         when(col("use"),
           ((col("o") - col("e")) * (col("o") - col("e"))
             / (col("n") * col("pbar") * (lit(1.0) - col("pbar"))))
-            .cast(D)).as("hterm"))
+            .cast(Dec12)).as("hterm"))
     terms.agg(
       sum(when(col("use"), 1L).otherwise(0L)).as("g_used"),
       sum(when(!col("use"), 1L).otherwise(0L)).as("g_dropped"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.NumFns
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Graph operators beyond connected components (which lives with its
@@ -243,7 +244,6 @@ object Graph {
   val ClosenessMaxRounds = 16
 
   def qCloseness(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val e = coTrade(s, dir).distinct()
     val sym = e.select(col("a").as("src"), col("b").as("dst"))
       .union(e.select(col("b").as("src"), col("a").as("dst")))
@@ -273,7 +273,7 @@ object Graph {
       .groupBy(col("seed"))
       .agg(count(lit(1)).as("n_reached"),
         sum(col("level")).as("sum_dist"),
-        sum((lit(1.0) / col("level")).cast(D)).cast("double").as("h"))
+        sum((lit(1.0) / col("level")).cast(Dec12)).cast("double").as("h"))
       .select(col("seed").as("nation"), col("n_reached"), col("sum_dist"),
         NumFns.roundPortable(col("h"), 6).as("harmonic"),
         NumFns.roundPortable(
@@ -927,20 +927,19 @@ object Graph {
         Seq("sa"))
       .join(deg.select(col("id").as("sb"), col("d").as("kk")).hint("shuffle_hash"),
         Seq("sb"))
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     withDeg.agg(
         count(lit(1)).as("m"),
-        sum(col("j").cast(D0) * col("kk")).as("sjk"),
-        sum(col("j").cast(D0) + col("kk")).as("ssum"),
-        sum(col("j").cast(D0) * col("j") + col("kk").cast(D0) * col("kk"))
+        sum(col("j").cast(Dec0) * col("kk")).as("sjk"),
+        sum(col("j").cast(Dec0) + col("kk")).as("ssum"),
+        sum(col("j").cast(Dec0) * col("j") + col("kk").cast(Dec0) * col("kk"))
           .as("ssq"))
       .select(col("m").as("n_edges"),
-        when(lit(2) * col("m").cast(D0) * col("ssq")
+        when(lit(2) * col("m").cast(Dec0) * col("ssq")
             =!= col("ssum") * col("ssum"),
           NumFns.roundPortable(
-            (lit(4) * col("m").cast(D0) * col("sjk")
+            (lit(4) * col("m").cast(Dec0) * col("sjk")
               - col("ssum") * col("ssum")).cast("double")
-              / (lit(2) * col("m").cast(D0) * col("ssq")
+              / (lit(2) * col("m").cast(Dec0) * col("ssq")
                 - col("ssum") * col("ssum")).cast("double"), 6))
           .as("assortativity"))
   }

@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.NumFns
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Causal-inference and advanced hypothesis-testing operators (r9):
@@ -21,8 +21,6 @@ import graft.sources.Tables
   * partitions.
   */
 object Inference {
-  private val D = DecimalType(38, 12)
-  private val D0 = DecimalType(38, 0)
 
   // ----------------------------------------------------------------- IV
 
@@ -48,10 +46,10 @@ object Inference {
       .agg(
         sum(when(col("z"), 1L).otherwise(0L)).as("n1"),
         sum(when(!col("z"), 1L).otherwise(0L)).as("n0"),
-        sum(when(col("z"), col("xq")).otherwise(0L).cast(D0)).as("sx1"),
-        sum(when(!col("z"), col("xq")).otherwise(0L).cast(D0)).as("sx0"),
-        sum(when(col("z"), col("yq")).otherwise(0L).cast(D0)).as("sy1"),
-        sum(when(!col("z"), col("yq")).otherwise(0L).cast(D0)).as("sy0"))
+        sum(when(col("z"), col("xq")).otherwise(0L).cast(Dec0)).as("sx1"),
+        sum(when(!col("z"), col("xq")).otherwise(0L).cast(Dec0)).as("sx0"),
+        sum(when(col("z"), col("yq")).otherwise(0L).cast(Dec0)).as("sy1"),
+        sum(when(!col("z"), col("yq")).otherwise(0L).cast(Dec0)).as("sy0"))
       .select(col("l_returnflag"), col("n1"), col("n0"),
         NumFns.roundPortable(
           (col("sx1").cast("double") / col("n1")
@@ -119,11 +117,11 @@ object Inference {
         count(lit(1)).as("nu"))
     val m = users.groupBy(col("event_type"))
       .agg(count(lit(1)).as("u"),
-        sum(col("yq").cast(D0)).as("sy"),
-        sum(col("nu").cast(D0)).as("sn"),
-        sum((col("yq").cast("double") * col("yq")).cast(D)).as("syy"),
-        sum((col("nu") * col("nu")).cast(D0)).as("snn"),
-        sum((col("yq").cast("double") * col("nu")).cast(D)).as("syn"))
+        sum(col("yq").cast(Dec0)).as("sy"),
+        sum(col("nu").cast(Dec0)).as("sn"),
+        sum((col("yq").cast("double") * col("yq")).cast(Dec12)).as("syy"),
+        sum((col("nu") * col("nu")).cast(Dec0)).as("snn"),
+        sum((col("yq").cast("double") * col("nu")).cast(Dec12)).as("syn"))
       .select(col("event_type"), col("u").cast("double").as("u"),
         col("sy").cast("double").as("sy"), col("sn").cast("double").as("sn"),
         col("syy").cast("double").as("syy"),
@@ -235,8 +233,8 @@ object Inference {
           + (col("c2") + 1).cast("double") / 2)
       .localCheckpoint()
     val tot = ranked.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
-      sum((col("c1") * col("rg")).cast(D)).as("sr1"),
-      sum((col("c2") * col("rg")).cast(D)).as("sr2"))
+      sum((col("c1") * col("rg")).cast(Dec12)).as("sr1"),
+      sum((col("c2") * col("rg")).cast(Dec12)).as("sr2"))
     val dev = ranked.crossJoin(broadcast(tot))
       .withColumn("rb1", col("sr1").cast("double") / col("n1"))
       .withColumn("rb2", col("sr2").cast("double") / col("n2"))
@@ -245,8 +243,8 @@ object Inference {
       .withColumn("d2", col("rg") - col("r2") - col("rb2")
         + (col("n2") + 1).cast("double") / 2)
       .groupBy(col("n1"), col("n2"), col("rb1"), col("rb2"))
-      .agg(sum((col("c1") * col("d1") * col("d1")).cast(D)).as("ss1"),
-        sum((col("c2") * col("d2") * col("d2")).cast(D)).as("ss2"))
+      .agg(sum((col("c1") * col("d1") * col("d1")).cast(Dec12)).as("ss1"),
+        sum((col("c2") * col("d2") * col("d2")).cast(Dec12)).as("ss2"))
     dev.select(col("n1"), col("n2"),
         NumFns.roundPortable(col("rb1"), 6).as("rbar_a"),
         NumFns.roundPortable(col("rb2"), 6).as("rbar_b"),
@@ -320,16 +318,16 @@ object Inference {
     val g = Tables.documents(s, dir)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("nj"),
-        sum(col("n_chars").cast(D0)).as("sx"),
-        sum((col("n_chars") * col("n_chars")).cast(D0)).as("sxx"))
+        sum(col("n_chars").cast(Dec0)).as("sx"),
+        sum((col("n_chars") * col("n_chars")).cast(Dec0)).as("sxx"))
       .withColumn("s2",
         (col("sxx").cast("double")
           - col("sx").cast("double") * col("sx").cast("double") / col("nj"))
           / (col("nj") - 1))
     val m = g.agg(count(lit(1)).as("k"), sum(col("nj")).as("n"),
-      sum(((col("nj") - 1) * col("s2")).cast(D)).as("pooled_ss"),
-      sum(((col("nj") - 1) * log(col("s2"))).cast(D)).as("slog"),
-      sum((lit(1.0) / (col("nj") - 1)).cast(D)).as("sinv"))
+      sum(((col("nj") - 1) * col("s2")).cast(Dec12)).as("pooled_ss"),
+      sum(((col("nj") - 1) * log(col("s2"))).cast(Dec12)).as("slog"),
+      sum((lit(1.0) / (col("nj") - 1)).cast(Dec12)).as("sinv"))
     m.select(col("k"), col("n"),
       NumFns.roundPortable(
         ((col("n") - col("k"))
@@ -399,10 +397,10 @@ object Inference {
     val wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val lagged = (1 to KpssLag).foldLeft(
       days.withColumn("t", row_number().over(w))
-        .withColumn("cy", sum(col("y").cast(D0)).over(wc))) {
+        .withColumn("cy", sum(col("y").cast(Dec0)).over(wc))) {
       (df, j) => df.withColumn(s"y$j", lag(col("y"), j).over(w))
     }.localCheckpoint()
-    val tot = lagged.agg(count(lit(1)).as("n"), sum(col("y").cast(D0)).as("sy"))
+    val tot = lagged.agg(count(lit(1)).as("n"), sum(col("y").cast(Dec0)).as("sy"))
     val j = lagged.crossJoin(broadcast(tot))
       // exact numerator of n·S_t: n·Y_t − t·ΣY  (DECIMAL, no rounding);
       // ΣS² is then accumulated intensively as Σ roundAway(snum/n)² —
@@ -417,13 +415,13 @@ object Inference {
       // emitted 6-decimal rounding.
       .withColumn("snum", col("cy") * col("n") - col("sy") * col("t"))
       .withColumn("snl",
-        NumFns.roundAwayLong(col("snum").cast("double") / col("n")).cast(D0))
+        NumFns.roundAwayLong(col("snum").cast("double") / col("n")).cast(Dec0))
     val gammas = (0 to KpssLag).map { jj =>
       val yj = if (jj == 0) col("y") else col(s"y$jj")
       // exact numerator of n²·e_t·e_{t−j}: (n·y_t − ΣY)(n·y_{t−j} − ΣY)
       sum(when(yj.isNotNull,
         (col("y") * col("n") - col("sy")) * (yj * col("n") - col("sy")))
-        .otherwise(lit(0).cast(D0))).as(s"g$jj")
+        .otherwise(lit(0).cast(Dec0))).as(s"g$jj")
     }
     val agg = j.groupBy(col("n"))
       .agg(sum(col("snl") * col("snl")).as("ss2"), gammas: _*)
@@ -582,9 +580,9 @@ object Inference {
       .filter(col("gap") >= 1)
       .select(col("gap"), log(col("gap").cast("double")).as("l"))
     val m = gaps.agg(count(lit(1)).as("n"),
-        sum(col("gap").cast(D0)).as("sg"),
-        sum(col("l").cast(D)).as("sl"),
-        sum((col("l") * col("l")).cast(D)).as("sll"))
+        sum(col("gap").cast(Dec0)).as("sg"),
+        sum(col("l").cast(Dec12)).as("sl"),
+        sum((col("l") * col("l")).cast(Dec12)).as("sll"))
       .select(col("n").cast("double").as("n"),
         col("sg").cast("double").as("sg"),
         col("sl").cast("double").as("sl"),
@@ -652,8 +650,8 @@ object Inference {
     val blocks = days.groupBy(trunc(col("d"), "month").as("mo"))
       .agg(max(col("y")).as("bm"))
     val m = blocks.agg(count(lit(1)).as("nb"),
-        sum(col("bm").cast(D0)).as("sb"),
-        sum((col("bm").cast("double") * col("bm")).cast(D)).as("sbb"))
+        sum(col("bm").cast(Dec0)).as("sb"),
+        sum((col("bm").cast("double") * col("bm")).cast(Dec12)).as("sbb"))
       .select(col("nb").cast("double").as("nb"),
         col("sb").cast("double").as("sb"), col("sbb").cast("double").as("sbb"))
     val mean = col("sb") / col("nb")
@@ -739,7 +737,7 @@ object Inference {
           - col("gc").cast("double") / col("gn"))
     val w = Window.partitionBy(col("seg"), col("nat")).orderBy(col("band"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val t = grid.withColumn("cum", sum(col("diff").cast(D)).over(w))
+    val t = grid.withColumn("cum", sum(col("diff").cast(Dec12)).over(w))
       .groupBy(col("seg"), col("nat"), col("m"))
       .agg(sum(abs(col("cum"))).as("sabs"))
       .withColumn("t", col("sabs").cast("double") / (col("m") - 1))
@@ -747,7 +745,7 @@ object Inference {
       .agg(count(lit(1)).as("n_classes"),
         NumFns.roundPortable(max(col("t")), 6).as("max_t"),
         NumFns.roundPortable(
-          sum(col("t").cast(D)).cast("double") / count(lit(1)), 6)
+          sum(col("t").cast(Dec12)).cast("double") / count(lit(1)), 6)
           .as("avg_t"),
         sum(when(col("t") > TCloseT, 1L).otherwise(0L)).as("n_over"))
       .select(col("seg").as("segment"), col("n_classes"), col("max_t"),
@@ -822,8 +820,8 @@ object Inference {
       .select(col("n_chars").as("v"), log(col("n_chars").cast("double")).as("x"))
     val cells = docs.groupBy(col("v"), col("x"))
       .agg(count(lit(1)).as("c"),
-        sum(col("x").cast(D)).as("sx"),
-        sum((col("x") * col("x")).cast(D)).as("sxx"))
+        sum(col("x").cast(Dec12)).as("sx"),
+        sum((col("x") * col("x")).cast(Dec12)).as("sxx"))
     val tot = cells.agg(sum(col("c")).as("n"),
       sum(col("sx")).as("sxt"), sum(col("sxx")).as("sxxt"))
     val w = Window.orderBy(col("v"))
@@ -855,7 +853,7 @@ object Inference {
       ((col("c") * (lit(2) * col("n") - lit(2) * col("s0") - col("c")))
         .cast("double") * log(lit(1.0) - col("phi"))).as("t2"))
     terms.groupBy(col("n"))
-      .agg(sum(col("t1").cast(D)).as("s1"), sum(col("t2").cast(D)).as("s2"))
+      .agg(sum(col("t1").cast(Dec12)).as("s1"), sum(col("t2").cast(Dec12)).as("s2"))
       .withColumn("a2",
         -col("n").cast("double")
           - (col("s1").cast("double") + col("s2").cast("double")) / col("n"))
@@ -1171,16 +1169,16 @@ object Inference {
       .localCheckpoint()
     val withScores = cells.join(broadcast(scored), Seq("u"))
     val grp = withScores.groupBy(col("source"))
-      .agg(sum(col("c")).as("ng"), sum((col("c") * col("a")).cast(D)).as("sa"))
+      .agg(sum(col("c")).as("ng"), sum((col("c") * col("a")).cast(Dec12)).as("sa"))
     val glob = withScores.agg(max(col("n")).as("n"),
-      sum((col("c") * col("a")).cast(D)).as("sat"),
-      sum((col("c") * col("a") * col("a")).cast(D)).as("saa"))
+      sum((col("c") * col("a")).cast(Dec12)).as("sat"),
+      sum((col("c") * col("a") * col("a")).cast(Dec12)).as("saa"))
     val j = grp.crossJoin(broadcast(glob))
       .withColumn("abar", col("sat").cast("double") / col("n"))
       .withColumn("dg", col("sa").cast("double") / col("ng") - col("abar"))
     j.groupBy(col("n"), col("abar"), col("saa"))
       .agg(count(lit(1)).as("k"),
-        sum((col("ng") * col("dg") * col("dg")).cast(D)).as("num"))
+        sum((col("ng") * col("dg") * col("dg")).cast(Dec12)).as("num"))
       .select(col("k").as("n_sources"), col("n").as("n_docs"),
         NumFns.roundPortable(
           col("num").cast("double")
@@ -1284,12 +1282,12 @@ object Inference {
       .agg(
         sum(when(col("arm"), 1L).otherwise(0L)).as("nb"),
         sum(when(!col("arm"), 1L).otherwise(0L)).as("na"),
-        sum(when(col("arm"), col("vq")).otherwise(0L).cast(D0)).as("sb"),
-        sum(when(!col("arm"), col("vq")).otherwise(0L).cast(D0)).as("sa"),
+        sum(when(col("arm"), col("vq")).otherwise(0L).cast(Dec0)).as("sb"),
+        sum(when(!col("arm"), col("vq")).otherwise(0L).cast(Dec0)).as("sa"),
         sum(when(col("arm"), col("vq").cast("double") * col("vq"))
-          .otherwise(0.0).cast(D)).as("sbb"),
+          .otherwise(0.0).cast(Dec12)).as("sbb"),
         sum(when(!col("arm"), col("vq").cast("double") * col("vq"))
-          .otherwise(0.0).cast(D)).as("saa"))
+          .otherwise(0.0).cast(Dec12)).as("saa"))
       .select(col("event_type"),
         col("na").cast("double").as("na"), col("nb").cast("double").as("nb"),
         col("sa").cast("double").as("sa"), col("sb").cast("double").as("sb"),
@@ -1412,14 +1410,14 @@ object Inference {
       .withColumn("ad", abs(col("xa") - col("xb")))
       .withColumn("bd", abs(col("ya") - col("yb")))
     val glob = pairs.agg(
-      sum((col("wa") * col("wb") * col("ad") * col("bd")).cast(D0)).as("s1ab"),
-      sum((col("wa") * col("wb") * col("ad") * col("ad")).cast(D0)).as("s1aa"),
-      sum((col("wa") * col("wb") * col("bd") * col("bd")).cast(D0)).as("s1bb"),
-      sum((col("wa") * col("wb") * col("ad")).cast(D0)).as("s2a"),
-      sum((col("wa") * col("wb") * col("bd")).cast(D0)).as("s2b"))
+      sum((col("wa") * col("wb") * col("ad") * col("bd")).cast(Dec0)).as("s1ab"),
+      sum((col("wa") * col("wb") * col("ad") * col("ad")).cast(Dec0)).as("s1aa"),
+      sum((col("wa") * col("wb") * col("bd") * col("bd")).cast(Dec0)).as("s1bb"),
+      sum((col("wa") * col("wb") * col("ad")).cast(Dec0)).as("s2a"),
+      sum((col("wa") * col("wb") * col("bd")).cast(Dec0)).as("s2b"))
     val rows = pairs.groupBy(col("xa"), col("ya"), col("wa"))
-      .agg(sum((col("wb") * col("ad")).cast(D0)).as("rsa"),
-        sum((col("wb") * col("bd")).cast(D0)).as("rsb"))
+      .agg(sum((col("wb") * col("ad")).cast(Dec0)).as("rsa"),
+        sum((col("wb") * col("bd")).cast(Dec0)).as("rsb"))
       .agg(sum(col("wa")).as("n"), count(lit(1)).as("n_cells"),
         sum(col("wa") * col("rsa") * col("rsb")).as("s3ab"),
         sum(col("wa") * col("rsa") * col("rsa")).as("s3aa"),
@@ -1531,14 +1529,14 @@ object Inference {
       .localCheckpoint()
     val ws = cells.join(broadcast(scored), Seq("u"))
     val grp = ws.groupBy(col("source"))
-      .agg(sum(col("c")).as("ng"), sum((col("c") * col("a")).cast(D)).as("sa"))
+      .agg(sum(col("c")).as("ng"), sum((col("c") * col("a")).cast(Dec12)).as("sa"))
     val glob = ws.agg(max(col("n")).as("n"),
-      sum((col("c") * col("a") * col("a")).cast(D)).as("saa"))
+      sum((col("c") * col("a") * col("a")).cast(Dec12)).as("saa"))
     grp.crossJoin(broadcast(glob))
       .withColumn("abar", col("sa").cast("double") / col("ng"))
       .groupBy(col("n"), col("saa"))
       .agg(count(lit(1)).as("k"),
-        sum((col("ng") * col("abar") * col("abar")).cast(D)).as("num"))
+        sum((col("ng") * col("abar") * col("abar")).cast(Dec12)).as("num"))
       .select(col("k").as("n_sources"), col("n").as("n_docs"),
         NumFns.roundPortable(
           col("num").cast("double")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NumFns, TextFns}
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Training-pipeline utility operators (SURVEY.md §2, table 3): k-fold
@@ -891,23 +892,22 @@ object PipelineOps {
     * 100 TB the exchange carries |customers| pre/post pairs.
     */
   def qCuped(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val yr = year(col("o_orderdate"))
     val perCust = Tables.orders(s, dir)
       .filter(yr.isin(1996, 1997))
       .groupBy(col("o_custkey"))
       .agg(
-        sum(when(yr === 1996, col("o_totalprice")).otherwise(0.0).cast(D))
+        sum(when(yr === 1996, col("o_totalprice")).otherwise(0.0).cast(Dec12))
           .cast("double").as("x"),
-        sum(when(yr === 1997, col("o_totalprice")).otherwise(0.0).cast(D))
+        sum(when(yr === 1997, col("o_totalprice")).otherwise(0.0).cast(Dec12))
           .cast("double").as("y"))
       .localCheckpoint()
     val mom = perCust.agg(count(lit(1)).cast("double").as("n"),
-        sum(col("x").cast(D)).cast("double").as("sx"),
-        sum(col("y").cast(D)).cast("double").as("sy"),
-        sum((col("x") * col("x")).cast(D)).cast("double").as("sxx"),
-        sum((col("x") * col("y")).cast(D)).cast("double").as("sxy"),
-        sum((col("y") * col("y")).cast(D)).cast("double").as("syy"))
+        sum(col("x").cast(Dec12)).cast("double").as("sx"),
+        sum(col("y").cast(Dec12)).cast("double").as("sy"),
+        sum((col("x") * col("x")).cast(Dec12)).cast("double").as("sxx"),
+        sum((col("x") * col("y")).cast(Dec12)).cast("double").as("sxy"),
+        sum((col("y") * col("y")).cast(Dec12)).cast("double").as("syy"))
       .select(
         (col("sx") / col("n")).as("mx"),
         ((col("sxy") - col("sx") * col("sy") / col("n")) /
@@ -995,10 +995,9 @@ object PipelineOps {
     * partitions (= one scan of the full table), cell-sized merge.
     */
   def qIncrementalRollup(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     def cells(part: DataFrame): DataFrame = part
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value").cast(D)).as("sv"))
+      .agg(count(lit(1)).as("n"), sum(col("value").cast(Dec12)).as("sv"))
     val e = Tables.events(s, dir)
       .select(col("ts"), col("event_type"), col("value"),
         dayofmonth(col("ts")).as("dom"))
@@ -1259,7 +1258,6 @@ object PipelineOps {
     * rounded posterior with a part-key tiebreak.
     */
   def qEbShrinkage(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val parts = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n"),
@@ -1267,8 +1265,8 @@ object PipelineOps {
       .withColumn("rate", col("x").cast("double") / col("n"))
     val prior = parts.agg(
         count(lit(1)).as("p_cnt"),
-        sum(col("rate").cast(D)).as("sr"),
-        sum((col("rate") * col("rate")).cast(D)).as("sr2"))
+        sum(col("rate").cast(Dec12)).as("sr"),
+        sum((col("rate") * col("rate")).cast(Dec12)).as("sr2"))
       .select(
         (col("sr").cast("double") / col("p_cnt")).as("m"),
         ((col("sr2").cast("double")
@@ -1332,10 +1330,9 @@ object PipelineOps {
     * tiebreak.
     */
   def qUcbRank(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val arms = Tables.events(s, dir)
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value").cast(D)).as("sv"))
+      .agg(count(lit(1)).as("n"), sum(col("value").cast(Dec12)).as("sv"))
     val tot = arms.agg(sum(col("n")).as("big_n"))
     val meanC = col("sv").cast("double") / col("n")
     val ucbC = meanC +
@@ -1432,14 +1429,13 @@ object PipelineOps {
         when(usePrev, dPrev).otherwise(dNext))
       .withColumn("my", when(usePrev, col("py")).otherwise(col("xy")))
       .filter(col("mdist").isNotNull && col("mdist") <= CaliperCents)
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val nTreatedBySeg = seq.filter(col("treated"))
       .groupBy(col("seg")).agg(count(lit(1)).as("n_treated"))
     chosen.groupBy(col("seg"))
       .agg(count(lit(1)).as("n_matched"),
-        (sum(((col("y") - col("my")).cast("double") / 100.0).cast(D))
+        (sum(((col("y") - col("my")).cast("double") / 100.0).cast(Dec12))
           .cast("double") / count(lit(1))).as("att_raw"),
-        (sum((col("mdist").cast("double") / 100.0).cast(D)).cast("double")
+        (sum((col("mdist").cast("double") / 100.0).cast(Dec12)).cast("double")
           / count(lit(1))).as("gap_raw"))
       .join(broadcast(nTreatedBySeg), Seq("seg"))
       .select(col("seg"), col("n_treated"), col("n_matched"),
@@ -1525,7 +1521,6 @@ object PipelineOps {
     * DECIMAL moments over 32 cells.
     */
   def qShardBalance(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val shards = Tables.documents(s, dir)
       .select(
         (TextFns.hash28(concat(lit("sh:"), col("doc_id").cast("string")))
@@ -1535,7 +1530,7 @@ object PipelineOps {
     shards.agg(count(lit(1)).as("n_shards"),
         sum(col("t")).as("total_tokens"),
         min(col("t")).as("min_tokens"), max(col("t")).as("max_tokens"),
-        sum(col("t").cast(D) * col("t")).as("s2"))
+        sum(col("t").cast(Dec12) * col("t")).as("s2"))
       .select(col("n_shards"), col("total_tokens"), col("min_tokens"),
         col("max_tokens"),
         NumFns.roundPortable(
@@ -1706,7 +1701,6 @@ object PipelineOps {
     * positivity assumption, and their dropped mass is reported.
     */
   def qIpwAte(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.lineitem(s, dir)
       .select(least(floor(col("l_quantity") / 5.0), lit(9.0)).cast("long")
         .as("xb"),
@@ -1724,9 +1718,9 @@ object PipelineOps {
     val terms = cells.join(broadcast(keep), Seq("xb"))
       .select(col("t"), col("n"), col("ny"), col("e"),
         when(col("t"), col("ny") / col("e"))
-          .otherwise(col("ny") / (lit(1.0) - col("e"))).cast(D).as("wy"),
+          .otherwise(col("ny") / (lit(1.0) - col("e"))).cast(Dec12).as("wy"),
         when(col("t"), col("n") / col("e"))
-          .otherwise(col("n") / (lit(1.0) - col("e"))).cast(D).as("w"))
+          .otherwise(col("n") / (lit(1.0) - col("e"))).cast(Dec12).as("w"))
     val agg = terms.agg(
       sum(when(col("t"), col("wy"))).as("wy1"),
       sum(when(col("t"), col("w"))).as("w1"),
@@ -1817,8 +1811,6 @@ object PipelineOps {
     * association spelled identically.
     */
   def qMantelHaenszel(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val cells = Tables.lineitem(s, dir)
       .select(least(floor(col("l_quantity") / 5.0), lit(9.0)).cast("long")
         .as("xb"),
@@ -1834,20 +1826,20 @@ object PipelineOps {
     val nD = col("n").cast("double")
     val terms = cells.select(
       col("a"), col("b"), col("c"), col("d"),
-      ((col("a").cast(D0) * col("d")).cast("double") / nD).cast(D).as("mhn"),
-      ((col("b").cast(D0) * col("c")).cast("double") / nD).cast(D).as("mhd"),
+      ((col("a").cast(Dec0) * col("d")).cast("double") / nD).cast(Dec12).as("mhn"),
+      ((col("b").cast(Dec0) * col("c")).cast("double") / nD).cast(Dec12).as("mhd"),
       ((col("a") + col("b")).cast("double") * (col("a") + col("c")) / nD)
-        .cast(D).as("ea"),
+        .cast(Dec12).as("ea"),
       ((col("a") + col("b")).cast("double") * (col("c") + col("d"))
         * (col("a") + col("c")) * (col("b") + col("d"))
-        / (nD * nD * (nD - 1.0))).cast(D).as("va"))
+        / (nD * nD * (nD - 1.0))).cast(Dec12).as("va"))
     val agg = terms.agg(count(lit(1)).as("n_strata"),
       sum(col("a")).as("sa"), sum(col("b")).as("sb"),
       sum(col("c")).as("sc"), sum(col("d")).as("sd"),
       sum(col("mhn")).as("mhn"), sum(col("mhd")).as("mhd"),
       sum(col("ea")).as("ea"), sum(col("va")).as("va"))
-    val crude = (col("sa").cast(D0) * col("sd")).cast("double") /
-      (col("sb").cast(D0) * col("sc")).cast("double")
+    val crude = (col("sa").cast(Dec0) * col("sd")).cast("double") /
+      (col("sb").cast(Dec0) * col("sc")).cast("double")
     val mh = col("mhn").cast("double") / col("mhd").cast("double")
     val dev = col("sa").cast("double") - col("ea").cast("double")
     agg.select(col("n_strata"),
@@ -1925,7 +1917,6 @@ object PipelineOps {
     * (qChowTest discipline), one scan, scalar algebra after.
     */
   def qRdd(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val cells = Tables.lineitem(s, dir)
       .select(col("l_quantity").cast("long").as("q"),
         (col("l_returnflag") === "R").cast("long").as("y"))
@@ -1938,11 +1929,11 @@ object PipelineOps {
     // weight n — moments Σn, Σnx, Σnx², Σny, Σnxy (y per row is the
     // 0/1 flag, so cell sums are exact integers)
     val m = cells.groupBy(col("side"))
-      .agg(sum(col("n").cast(D0)).as("w"),
-        sum((col("n") * col("x")).cast(D0)).as("wx"),
-        sum((col("n") * col("x") * col("x")).cast(D0)).as("wxx"),
-        sum(col("ny").cast(D0)).as("wy"),
-        sum((col("ny") * col("x")).cast(D0)).as("wxy"))
+      .agg(sum(col("n").cast(Dec0)).as("w"),
+        sum((col("n") * col("x")).cast(Dec0)).as("wx"),
+        sum((col("n") * col("x") * col("x")).cast(Dec0)).as("wxx"),
+        sum(col("ny").cast(Dec0)).as("wy"),
+        sum((col("ny") * col("x")).cast(Dec0)).as("wxy"))
     val wD = col("w").cast("double")
     val det = (col("w") * col("wxx") - col("wx") * col("wx")).cast("double")
     val alpha = ((col("wxx") * col("wy") - col("wx") * col("wxy"))

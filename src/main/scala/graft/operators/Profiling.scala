@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NumFns, TextFns}
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Data-profiling operators (SURVEY.md §2): the audit pass a pipeline
@@ -318,7 +319,6 @@ object Profiling {
     */
   def qSpearman(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val d = Tables.documents(s, dir)
       .select(col("source"), col("n_chars").cast("double").as("va"),
         size(TextFns.tokens(col("text"))).cast("double").as("vb"))
@@ -330,10 +330,10 @@ object Profiling {
       .withColumn("rb", avgRank("vb"))
     ranked.groupBy(col("source"))
       .agg(count(lit(1)).as("n"),
-        sum(col("ra").cast(D)).as("sa"), sum(col("rb").cast(D)).as("sb"),
-        sum((col("ra") * col("ra")).cast(D)).as("saa"),
-        sum((col("rb") * col("rb")).cast(D)).as("sbb"),
-        sum((col("ra") * col("rb")).cast(D)).as("sab"))
+        sum(col("ra").cast(Dec12)).as("sa"), sum(col("rb").cast(Dec12)).as("sb"),
+        sum((col("ra") * col("ra")).cast(Dec12)).as("saa"),
+        sum((col("rb") * col("rb")).cast(Dec12)).as("sbb"),
+        sum((col("ra") * col("rb")).cast(Dec12)).as("sab"))
       .select(col("source"), col("n"),
         round(((col("n") * col("sab") - col("sa") * col("sb")) /
           (sqrt((col("n") * col("saa") - col("sa") * col("sa")).cast("double")) *
@@ -502,7 +502,6 @@ object Profiling {
     */
   def qBootstrapCi(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val e = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("value"))
     val fan = e.select(col("event_type"), col("value"),
@@ -519,7 +518,6 @@ object Profiling {
     // query's dominant cost — int64 micro-unit partials per
     // (type, b, salt) fold to exact DECIMAL(38,0) on the types×B×salts
     // frame instead (measured ~2× on the whole query)
-    val DI = org.apache.spark.sql.types.DecimalType(38, 0)
     val cells = fan
       .groupBy(col("event_type"), col("b"),
         pmod(hash(col("event_id")), lit(64)).as("_salt"))
@@ -527,7 +525,7 @@ object Profiling {
           col("w") * col("value") * 1e6)).as("pq"),
         sum(col("w")).as("pw"))
       .groupBy(col("event_type"), col("b"))
-      .agg((sum(col("pq").cast(DI)).cast("double") / 1e6 / sum(col("pw")))
+      .agg((sum(col("pq").cast(Dec0)).cast("double") / 1e6 / sum(col("pw")))
         .as("mean_b"))
     val wRank = Window.partitionBy(col("event_type"))
       .orderBy(col("mean_b"), col("b"))
@@ -661,7 +659,6 @@ object Profiling {
     * three per-source sums are decimal-cast (order-independent).
     */
   def qJsdDrift(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.documents(s, dir)
       .select(col("source"), explode(TextFns.tokens(col("text"))).as("word"))
       .groupBy(col("source"), col("word"))
@@ -677,9 +674,9 @@ object Profiling {
       .join(broadcast(srcTot), Seq("source"))
       .crossJoin(broadcast(corpusTot))
       .select(col("source"),
-        (p * log(lit(2.0) * p / (p + q))).cast(D).as("tp"),
-        (q * log(lit(2.0) * q / (p + q))).cast(D).as("tq"),
-        q.cast(D).as("cov"))
+        (p * log(lit(2.0) * p / (p + q))).cast(Dec12).as("tp"),
+        (q * log(lit(2.0) * q / (p + q))).cast(Dec12).as("tq"),
+        q.cast(Dec12).as("cov"))
     val ln2 = math.log(2.0)
     terms.groupBy(col("source"))
       .agg(count(lit(1)).as("n_words"),
@@ -725,15 +722,14 @@ object Profiling {
     * cross-engine gate needs. Returns `keys…, n0, n1, m0, m1, v0, v1`.
     */
   def armMoments(events: DataFrame, keys: String*): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     def armCol(a: Int, c: String) = max(when(col("arm") === a, col(c)))
     val m0 = col("sx0") / col("n0")
     val m1 = col("sx1") / col("n1")
     events
       .groupBy(keys.map(col) :+ (col("user_id") % 2).as("arm"): _*)
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(D)).as("sx"),
-        sum((col("value") * col("value")).cast(D)).as("sx2"))
+        sum(col("value").cast(Dec12)).as("sx"),
+        sum((col("value") * col("value")).cast(Dec12)).as("sx2"))
       .groupBy(keys.map(col): _*)
       .agg(armCol(0, "n").as("n0"), armCol(0, "sx").cast("double").as("sx0"),
         armCol(0, "sx2").cast("double").as("sq0"),
@@ -831,7 +827,6 @@ object Profiling {
     * exact rational of integers and the ln terms are DECIMAL-summed.
     */
   def qPsi(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val binned = Tables.documents(s, dir)
       .select(least(floor(col("n_chars") / 500), lit(PsiBins - 1)).as("bin"),
         (col("doc_id") % 2 === 0).as("is_ref"))
@@ -854,7 +849,7 @@ object Profiling {
         NumFns.roundPortable(col("p_ref"), 6).as("p_ref"),
         NumFns.roundPortable(col("p_cur"), 6).as("p_cur"),
         ((col("p_cur") - col("p_ref")) * log(col("p_cur") / col("p_ref")))
-          .cast(D).as("term"))
+          .cast(Dec12).as("term"))
       .localCheckpoint() // read per-bin AND by the total fold
     val total = terms.agg(sum(col("term")).as("t"))
     terms.crossJoin(broadcast(total))
@@ -1058,17 +1053,16 @@ object Profiling {
     * else moves. At 100 TB this is a pure scan-side reduction.
     */
   def qOlsFit(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val m = Tables.lineitem(s, dir)
       .select(col("l_returnflag"), col("l_quantity").as("x"),
         col("l_extendedprice").as("y"))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("x").cast(D)).cast("double").as("sx"),
-        sum(col("y").cast(D)).cast("double").as("sy"),
-        sum((col("x") * col("x")).cast(D)).cast("double").as("sxx"),
-        sum((col("x") * col("y")).cast(D)).cast("double").as("sxy"),
-        sum((col("y") * col("y")).cast(D)).cast("double").as("syy"))
+        sum(col("x").cast(Dec12)).cast("double").as("sx"),
+        sum(col("y").cast(Dec12)).cast("double").as("sy"),
+        sum((col("x") * col("x")).cast(Dec12)).cast("double").as("sxx"),
+        sum((col("x") * col("y")).cast(Dec12)).cast("double").as("sxy"),
+        sum((col("y") * col("y")).cast(Dec12)).cast("double").as("syy"))
     val covN = col("sxy") - col("sx") * col("sy") / col("n")
     val varX = col("sxx") - col("sx") * col("sx") / col("n")
     val varY = col("syy") - col("sy") * col("sy") / col("n")
@@ -1234,7 +1228,6 @@ object Profiling {
     * scale.
     */
   def qAnova(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val g = Tables.documents(s, dir)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("ng"),
@@ -1242,7 +1235,7 @@ object Profiling {
         sum(col("n_chars") * col("n_chars")).as("sxx"))
     val t = g.agg(count(lit(1)).as("k"), sum(col("ng")).as("n"),
         sum(col("sx")).as("s"), sum(col("sxx")).as("q"),
-        sum((col("sx").cast("double") * col("sx") / col("ng")).cast(D))
+        sum((col("sx").cast("double") * col("sx") / col("ng")).cast(Dec12))
           .cast("double").as("t"))
     val ssb = col("t") - col("s").cast("double") * col("s") / col("n")
     val ssw = col("q").cast("double") - col("t")
@@ -1487,7 +1480,6 @@ object Profiling {
     * 8-number moment row. Scan-side at any scale.
     */
   def qCronbachAlpha(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val toks = TextFns.tokens(col("text"))
     val base = Tables.documents(s, dir)
       .select(toks.as("toks"))
@@ -1499,15 +1491,15 @@ object Profiling {
         floor(lit(1000L) * size(filter(col("toks"), t => length(t) <= 3))
           / size(col("toks"))).as("i3"))
       .withColumn("t", col("i1") + col("i2") + col("i3"))
-    val m = base.agg(count(lit(1)).cast(D0).as("n"),
-      sum(col("i1").cast(D0)).as("s1"),
-      sum(col("i1").cast(D0) * col("i1")).as("q1"),
-      sum(col("i2").cast(D0)).as("s2"),
-      sum(col("i2").cast(D0) * col("i2")).as("q2"),
-      sum(col("i3").cast(D0)).as("s3"),
-      sum(col("i3").cast(D0) * col("i3")).as("q3"),
-      sum(col("t").cast(D0)).as("st"),
-      sum(col("t").cast(D0) * col("t")).as("qt"))
+    val m = base.agg(count(lit(1)).cast(Dec0).as("n"),
+      sum(col("i1").cast(Dec0)).as("s1"),
+      sum(col("i1").cast(Dec0) * col("i1")).as("q1"),
+      sum(col("i2").cast(Dec0)).as("s2"),
+      sum(col("i2").cast(Dec0) * col("i2")).as("q2"),
+      sum(col("i3").cast(Dec0)).as("s3"),
+      sum(col("i3").cast(Dec0) * col("i3")).as("q3"),
+      sum(col("t").cast(Dec0)).as("st"),
+      sum(col("t").cast(Dec0) * col("t")).as("qt"))
     def va(q: String, sc: String) =
       col("n") * col(q) - col(sc) * col(sc)
     val sumItems = (va("q1", "s1") + va("q2", "s2") + va("q3", "s3"))
@@ -1737,7 +1729,6 @@ object Profiling {
     * double chain.
     */
   def qLevene(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val docs = Tables.documents(s, dir).select(col("source"), col("n_chars"))
     val med = Analytics.exactPercentiles(docs, "source", "n_chars",
       Seq(0.5 -> "med"))
@@ -1745,8 +1736,8 @@ object Profiling {
       .select(col("source"), abs(col("n_chars") - col("med")).as("z"))
     val grp = z.groupBy(col("source"))
       .agg(count(lit(1)).as("nj"),
-        sum(col("z").cast(D)).as("sz"),
-        sum((col("z") * col("z")).cast(D)).as("szz"))
+        sum(col("z").cast(Dec12)).as("sz"),
+        sum((col("z") * col("z")).cast(Dec12)).as("szz"))
     // within-SS per group: Σz² − (Σz)²/n_j ; between from group means
     val tot = grp.agg(
       count(lit(1)).as("k"), sum(col("nj")).as("n"),
@@ -1756,11 +1747,11 @@ object Profiling {
       .withColumn("mg", col("szt").cast("double") / col("n"))
       .withColumn("between",
         (col("nj") * (col("mj") - col("mg")) * (col("mj") - col("mg")))
-          .cast(D))
+          .cast(Dec12))
       .withColumn("within",
         (col("szz").cast("double")
           - col("sz").cast("double") * col("sz").cast("double") / col("nj"))
-          .cast(D))
+          .cast(Dec12))
     joined.groupBy(col("k"), col("n"))
       .agg(sum(col("between")).cast("double").as("ssb"),
         sum(col("within")).cast("double").as("ssw"))
@@ -1822,7 +1813,6 @@ object Profiling {
     * split counts) — value-domain work only.
     */
   def qMoodsMedian(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val docs = Tables.documents(s, dir).select(col("source"), col("n_chars"))
     // grand LOWER median from value cells: smallest value whose running
     // count reaches ceil(N/2)
@@ -1855,7 +1845,7 @@ object Profiling {
             / col("e_below")))
     joined
       .withColumn("chi2",
-        sum(col("term").cast(D)).over(wAll).cast("double"))
+        sum(col("term").cast(Dec12)).over(wAll).cast("double"))
       .select(col("source"), col("n_docs"), col("n_above"),
         NumFns.roundPortable(
           col("n_above").cast("double") / col("n_docs"), 6).as("share_above"),
@@ -1991,15 +1981,14 @@ object Profiling {
     * exact signs of rounded values.
     */
   def qSimpson(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.lineitem(s, dir)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
-        sum(col("l_discount").cast(D)).as("sx"),
-        sum(col("l_quantity").cast(D)).as("sy"),
-        sum((col("l_discount") * col("l_quantity")).cast(D)).as("sxy"),
-        sum((col("l_discount") * col("l_discount")).cast(D)).as("sxx"),
-        sum((col("l_quantity") * col("l_quantity")).cast(D)).as("syy"))
+        sum(col("l_discount").cast(Dec12)).as("sx"),
+        sum(col("l_quantity").cast(Dec12)).as("sy"),
+        sum((col("l_discount") * col("l_quantity")).cast(Dec12)).as("sxy"),
+        sum((col("l_discount") * col("l_discount")).cast(Dec12)).as("sxx"),
+        sum((col("l_quantity") * col("l_quantity")).cast(Dec12)).as("syy"))
       // r12 (guide §1.2): cells feeds BOTH the pooled broadcast and the
       // per-stratum select; without a checkpoint the ≤3-row aggregate —
       // and the full lineitem scan under it — planned twice (2 parquet
@@ -2078,7 +2067,6 @@ object Profiling {
     * docs are excluded (x·ln x needs x > 0), mirrored in the oracle.
     */
   def qTheilIndex(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.documents(s, dir)
       .filter(col("n_chars") > 0)
       .groupBy(col("source"), col("n_chars").as("x"))
@@ -2092,7 +2080,7 @@ object Profiling {
         ((col("x") * col("ng")).cast("double") / col("sg")).as("ratio"),
         col("c"))
       .groupBy(col("source"), col("ng"), col("sg"))
-      .agg((sum((col("c") * col("ratio") * log(col("ratio"))).cast(D))
+      .agg((sum((col("c") * col("ratio") * log(col("ratio"))).cast(Dec12))
         .cast("double") / col("ng")).as("t_g"))
     tg.crossJoin(broadcast(tot))
       .select(col("source"), col("ng"), col("sg"), col("st"), col("t_g"),
@@ -2101,10 +2089,10 @@ object Profiling {
         ((col("sg").cast("double") / col("ng"))
           / (col("st").cast("double") / col("n"))).as("mu_ratio"))
       .agg(
-        sum((col("sg").cast("double") / col("st") * col("t_g")).cast(D))
+        sum((col("sg").cast("double") / col("st") * col("t_g")).cast(Dec12))
           .cast("double").as("t_within"),
         sum((col("sg").cast("double") / col("st") * log(col("mu_ratio")))
-          .cast(D)).cast("double").as("t_between"))
+          .cast(Dec12)).cast("double").as("t_between"))
       .select(
         NumFns.roundPortable(col("t_within") + col("t_between"), 6)
           .as("theil_total"),
@@ -2161,13 +2149,12 @@ object Profiling {
     * identical doubles.
     */
   def qCohensD(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val m = Tables.lineitem(s, dir)
       .select(col("l_linestatus"),
         (col("l_returnflag") === "R").as("ret"), col("l_extendedprice").as("x"))
       .groupBy(col("l_linestatus"), col("ret"))
-      .agg(count(lit(1)).as("n"), sum(col("x").cast(D)).as("sx"),
-        sum((col("x") * col("x")).cast(D)).as("sx2"))
+      .agg(count(lit(1)).as("n"), sum(col("x").cast(Dec12)).as("sx"),
+        sum((col("x") * col("x")).cast(Dec12)).as("sx2"))
     def side(r: Boolean, c: String) = max(when(col("ret") === r, col(c)))
     val wide = m.groupBy(col("l_linestatus"))
       .agg(side(true, "n").as("n1"), side(true, "sx").cast("double").as("s1"),
@@ -2253,7 +2240,6 @@ object Profiling {
     */
   def qCliffsDelta(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val cells = Tables.lineitem(s, dir)
       .select(col("l_quantity").cast("long").as("v"),
         (col("l_returnflag") === "R").as("ret"))
@@ -2268,7 +2254,7 @@ object Profiling {
       .crossJoin(broadcast(tot))
       .withColumn("y_greater", col("ny") - col("y_less") - col("cy"))
       .agg(max(col("nx")).as("nx"), max(col("ny")).as("ny"),
-        sum(col("cx").cast(D0) * (col("y_less") - col("y_greater")))
+        sum(col("cx").cast(Dec0) * (col("y_less") - col("y_greater")))
           .as("dsum"))
     dom.select(col("nx").as("n_returned"), col("ny").as("n_kept"),
         NumFns.roundPortable(
@@ -2341,9 +2327,8 @@ object Profiling {
     // Cross products in DECIMAL(38,0): cell counts at the 100 TB target
     // (~1e11) make a*d exceed 2^63, which Spark would silently wrap
     // (non-ANSI) while DuckDB raises — same discipline as qAssortativity.
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val or = (col("a").cast(D0) * col("d")).cast("double") /
-      (col("b").cast(D0) * col("c")).cast("double")
+    val or = (col("a").cast(Dec0) * col("d")).cast("double") /
+      (col("b").cast(Dec0) * col("c")).cast("double")
     val se = sqrt(lit(1.0) / col("a") + lit(1.0) / col("b")
       + lit(1.0) / col("c") + lit(1.0) / col("d"))
     c.select(col("a").as("n_exp_ret"), col("b").as("n_exp_kept"),
@@ -2395,13 +2380,12 @@ object Profiling {
     // Moments stay integer cents in DECIMAL(38,0): sum(rev^2) reaches
     // ~2e23*SF^2, which overflows the 26 integer digits of DECIMAL(38,12)
     // near SF~50 — full 38-digit headroom holds past any realistic SF.
-    val D = org.apache.spark.sql.types.DecimalType(38, 0)
     val days = Tables.orders(s, dir)
       .groupBy(to_date(col("o_orderdate")).as("d"))
       .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("rev"))
     val m = days.agg(count(lit(1)).as("n"),
-      sum(col("rev").cast(D)).as("s1"),
-      sum((col("rev").cast(D) * col("rev"))).as("s2"))
+      sum(col("rev").cast(Dec0)).as("s1"),
+      sum((col("rev").cast(Dec0) * col("rev"))).as("s2"))
       .select(col("n"), (col("s1").cast("double") / col("n")).as("mean"),
         sqrt((col("s2").cast("double")
           - col("s1").cast("double") * col("s1").cast("double") / col("n"))
@@ -2456,7 +2440,6 @@ object Profiling {
     */
   def qWilcoxonSigned(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     def yr(y: Int, n: String) = Tables.orders(s, dir)
       .filter(year(col("o_orderdate")) === y)
       .groupBy(month(col("o_orderdate")).as("m"),
@@ -2474,7 +2457,7 @@ object Profiling {
     val st = cells
       .withColumn("o", coalesce(sum(col("c")).over(wOff), lit(0L)))
       .agg(sum(col("c")).as("n"),
-        sum(((col("o") + (col("c") + 1) / lit(2.0)) * col("np")).cast(D))
+        sum(((col("o") + (col("c") + 1) / lit(2.0)) * col("np")).cast(Dec12))
           .as("wp"),
         sum(col("c") * col("c") * col("c") - col("c")).as("ties"))
       .select(col("n"), col("wp").cast("double").as("wplus"),
@@ -2545,10 +2528,9 @@ object Profiling {
     * flag is engine-identical.
     */
   def qJarqueBera(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = Temporal.dailyCents(s, dir).select(col("di"), (col("yc") / 100.0).as("y"))
     val mean = days.agg(count(lit(1)).as("n"),
-      (sum(col("y").cast(D)).cast("double") / count(lit(1))).as("mu"))
+      (sum(col("y").cast(Dec12)).cast("double") / count(lit(1))).as("mu"))
     val d = days.crossJoin(broadcast(mean))
       .select(col("n"), ((col("y") - col("mu")) / 1e4).as("d"))
     val m = d.groupBy(col("n"))
@@ -2617,8 +2599,6 @@ object Profiling {
     */
   def qKruskalWallis(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val vs = Tables.documents(s, dir)
       .groupBy(col("n_chars").as("v"), col("source"))
       .agg(count(lit(1)).as("c_vs"))
@@ -2634,12 +2614,12 @@ object Profiling {
         "v")
       .groupBy(col("source"))
       .agg(sum(col("c_vs")).as("n_j"),
-        sum((col("c_vs") * col("midrank")).cast(D)).cast("double").as("r_j"))
+        sum((col("c_vs") * col("midrank")).cast(Dec12)).cast("double").as("r_j"))
     val ties = ranked.agg(
-      sum(col("c_v").cast(D0) * col("c_v") * col("c_v") - col("c_v"))
+      sum(col("c_v").cast(Dec0) * col("c_v") * col("c_v") - col("c_v"))
         .as("t"))
     val tot = groups.agg(count(lit(1)).as("k"), sum(col("n_j")).as("nn"),
-      sum((col("r_j") * col("r_j") / col("n_j")).cast(D)).cast("double")
+      sum((col("r_j") * col("r_j") / col("n_j")).cast(Dec12)).cast("double")
         .as("rr"))
     val n = col("nn").cast("double")
     val h = lit(12.0) / (n * (n + 1.0)) * col("rr") - lit(3.0) * (n + 1.0)
@@ -2782,7 +2762,6 @@ object Profiling {
     * once per cell on identical doubles.
     */
   def qGTest(s: SparkSession, dir: String): DataFrame = {
-    val D12 = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.lineitem(s, dir)
       .groupBy(col("l_returnflag").as("flag"),
         month(to_date(col("l_shipdate"))).as("mode"))
@@ -2800,7 +2779,7 @@ object Profiling {
       .select(col("n"), col("nf"), col("nm"),
         (col("o") * log(col("o").cast("double")
           / (col("r") * col("c") / col("n").cast("double"))))
-          .cast(D12).as("t"))
+          .cast(Dec12).as("t"))
       .groupBy(col("n"), col("nf"), col("nm"))
       .agg(sum(col("t")).as("g2"))
       .select(col("n"),
@@ -2851,7 +2830,6 @@ object Profiling {
     * intermediate exceeds decimal range.
     */
   def qMcc(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val scored = Tables.documents(s, dir)
       .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) > 0)
@@ -2863,11 +2841,11 @@ object Profiling {
       sum((col("pred") && !col("truth")).cast("long")).as("fp"),
       sum((!col("pred") && col("truth")).cast("long")).as("fn"),
       sum((!col("pred") && !col("truth")).cast("long")).as("tn"))
-    val num = (col("tp").cast(D0) * col("tn")
-      - col("fp").cast(D0) * col("fn")).cast("double")
-    val d1 = sqrt(((col("tp") + col("fp")).cast(D0)
+    val num = (col("tp").cast(Dec0) * col("tn")
+      - col("fp").cast(Dec0) * col("fn")).cast("double")
+    val d1 = sqrt(((col("tp") + col("fp")).cast(Dec0)
       * (col("tp") + col("fn"))).cast("double"))
-    val d2 = sqrt(((col("tn") + col("fp")).cast(D0)
+    val d2 = sqrt(((col("tn") + col("fp")).cast(Dec0)
       * (col("tn") + col("fn"))).cast("double"))
     c.select(col("tp"), col("fp"), col("fn"), col("tn"),
       // degenerate margin (no predicted/actual positives or negatives)
@@ -2924,13 +2902,12 @@ object Profiling {
     * IEEE division.
     */
   def qPoissonDispersion(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val days = Tables.orders(s, dir)
       .groupBy(to_date(col("o_orderdate")).as("d"))
       .agg(count(lit(1)).as("c"))
-    val m = days.agg(count(lit(1)).cast(D0).as("n"),
-      sum(col("c").cast(D0)).as("s1"),
-      sum(col("c").cast(D0) * col("c")).as("s2"))
+    val m = days.agg(count(lit(1)).cast(Dec0).as("n"),
+      sum(col("c").cast(Dec0)).as("s1"),
+      sum(col("c").cast(Dec0) * col("c")).as("s2"))
     val nD = col("n").cast("double")
     val mean = col("s1").cast("double") / nD
     val vr = (col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
@@ -3079,7 +3056,6 @@ object Profiling {
     * outer √ so fp dust can't produce NaN.
     */
   def qHellinger(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.lineitem(s, dir)
       .groupBy(col("l_quantity").cast("long").as("q"))
       .agg(sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("cr"),
@@ -3089,7 +3065,7 @@ object Profiling {
     val bc = cells.crossJoin(broadcast(tot))
       .select(col("nr"), col("nk"),
         sqrt((col("cr").cast("double") / col("nr"))
-          * (col("ck").cast("double") / col("nk"))).cast(D).as("b"))
+          * (col("ck").cast("double") / col("nk"))).cast(Dec12).as("b"))
       .groupBy(col("nr"), col("nk"))
       .agg(sum(col("b")).as("bc"))
     bc.select(col("nr").as("n_returned"), col("nk").as("n_kept"),
@@ -3139,8 +3115,6 @@ object Profiling {
     */
   def qDunnPosthoc(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val vs = Tables.documents(s, dir)
       .groupBy(col("n_chars").as("v"), col("source"))
       .agg(count(lit(1)).as("c_vs"))
@@ -3156,11 +3130,11 @@ object Profiling {
         "v")
       .groupBy(col("source"))
       .agg(sum(col("c_vs")).as("n_j"),
-        (sum((col("c_vs") * col("midrank")).cast(D)).cast("double")
+        (sum((col("c_vs") * col("midrank")).cast(Dec12)).cast("double")
           / sum(col("c_vs"))).as("rbar"))
       .localCheckpoint() // ≤|sources| rows; feeds both pair sides
     val ties = ranked.agg(
-      sum(col("c_v").cast(D0) * col("c_v") * col("c_v") - col("c_v")).as("t"))
+      sum(col("c_v").cast(Dec0) * col("c_v") * col("c_v") - col("c_v")).as("t"))
     val tot = groups.agg(sum(col("n_j")).as("nn"))
     val pairs = groups.select(col("source").as("src_a"),
         col("n_j").as("na"), col("rbar").as("ra"))
@@ -3426,7 +3400,6 @@ object Profiling {
     * the same stats with cleared means — no second pass.
     */
   def qEmStep(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val xs = Tables.orders(s, dir)
       .select(log(col("o_totalprice")).as("x"))
     // r = P(component 2 | x) = logistic((mu2-mu1)*x + (mu1^2-mu2^2)/2)
@@ -3435,11 +3408,11 @@ object Profiling {
     val r = lit(1.0) / (lit(1.0) + exp(-(lit(a) * col("x") + lit(b))))
     val m = xs.select(col("x"), r.as("r"))
       .agg(count(lit(1)).as("n"),
-        sum(col("r").cast(D)).as("sr"),
-        sum((col("r") * col("x")).cast(D)).as("srx"),
-        sum((col("r") * col("x") * col("x")).cast(D)).as("srxx"),
-        sum(col("x").cast(D)).as("sx"),
-        sum((col("x") * col("x")).cast(D)).as("sxx"))
+        sum(col("r").cast(Dec12)).as("sr"),
+        sum((col("r") * col("x")).cast(Dec12)).as("srx"),
+        sum((col("r") * col("x") * col("x")).cast(Dec12)).as("srxx"),
+        sum(col("x").cast(Dec12)).as("sx"),
+        sum((col("x") * col("x")).cast(Dec12)).as("sxx"))
     val nD = col("n").cast("double")
     val sr = col("sr").cast("double")
     val srx = col("srx").cast("double")
@@ -3510,7 +3483,6 @@ object Profiling {
     * DECIMAL terms over the 10-row digit frame.
     */
   def qBenfordSecond(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val digits = Tables.orders(s, dir)
       .select(substring(
         NumFns.roundAwayLong(col("o_totalprice") * 100).cast("string"), 2, 1)
@@ -3524,7 +3496,7 @@ object Profiling {
       .withColumn("p", pExpr)
       .withColumn("x", (((col("o") - col("n") * col("p"))
         * (col("o") - col("n") * col("p")))
-        / (col("n") * col("p"))).cast(D))
+        / (col("n") * col("p"))).cast(Dec12))
     val chi2 = terms.agg(sum(col("x")).as("chi2"))
     terms.crossJoin(broadcast(chi2))
       .select(col("d2").as("digit"), col("o").as("n_obs"),
@@ -3578,12 +3550,11 @@ object Profiling {
     * engines.
     */
   def qNegbinFit(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val counts = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("c"))
     val m = counts.agg(count(lit(1)).as("n"),
-      sum(col("c").cast(D0)).as("s1"),
-      sum(col("c").cast(D0) * col("c")).as("s2"))
+      sum(col("c").cast(Dec0)).as("s1"),
+      sum(col("c").cast(Dec0) * col("c")).as("s2"))
     val nD = col("n").cast("double")
     val mean = col("s1").cast("double") / nD
     val vr = (col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
@@ -3704,20 +3675,19 @@ object Profiling {
     * (qGranger discipline); scalar algebra after.
     */
   def qPartialCorr(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val rows = Tables.lineitem(s, dir)
       .select(NumFns.roundAwayLong(col("l_extendedprice") * 100).as("x"),
         col("l_quantity").cast("long").as("y"),
         NumFns.roundAwayLong(col("l_discount") * 1000).as("z"))
-    val m = rows.agg(count(lit(1)).cast(D0).as("n"),
-      sum(col("x").cast(D0)).as("sx"), sum(col("y").cast(D0)).as("sy"),
-      sum(col("z").cast(D0)).as("sz"),
-      sum(col("x").cast(D0) * col("x")).as("sxx"),
-      sum(col("y").cast(D0) * col("y")).as("syy"),
-      sum(col("z").cast(D0) * col("z")).as("szz"),
-      sum(col("x").cast(D0) * col("y")).as("sxy"),
-      sum(col("x").cast(D0) * col("z")).as("sxz"),
-      sum(col("y").cast(D0) * col("z")).as("syz"))
+    val m = rows.agg(count(lit(1)).cast(Dec0).as("n"),
+      sum(col("x").cast(Dec0)).as("sx"), sum(col("y").cast(Dec0)).as("sy"),
+      sum(col("z").cast(Dec0)).as("sz"),
+      sum(col("x").cast(Dec0) * col("x")).as("sxx"),
+      sum(col("y").cast(Dec0) * col("y")).as("syy"),
+      sum(col("z").cast(Dec0) * col("z")).as("szz"),
+      sum(col("x").cast(Dec0) * col("y")).as("sxy"),
+      sum(col("x").cast(Dec0) * col("z")).as("sxz"),
+      sum(col("y").cast(Dec0) * col("z")).as("syz"))
     def cc(sab: String, sa: String, sb: String, saa: String, sbb: String) =
       (col("n") * col(sab) - col(sa) * col(sb)).cast("double") /
         (sqrt((col("n") * col(saa) - col(sa) * col(sa)).cast("double"))
@@ -3847,14 +3817,13 @@ object Profiling {
     * in DECIMAL(38,0)); the curve is five ratios.
     */
   def qMeanResidualLife(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val vals = Tables.orders(s, dir)
       .select(NumFns.roundAwayLong(col("o_totalprice") * 100).as("v"))
     val aggCols = count(lit(1)).as("n") +: MrlThresholds.flatMap { u =>
       val uc = u * 100
       Seq(sum(when(col("v") > uc, 1L).otherwise(0L)).as(s"k$u"),
-        sum(when(col("v") > uc, (col("v") - uc).cast(D0))
-          .otherwise(lit(0L).cast(D0))).as(s"e$u"))
+        sum(when(col("v") > uc, (col("v") - uc).cast(Dec0))
+          .otherwise(lit(0L).cast(Dec0))).as(s"e$u"))
     }
     val aggs = vals.agg(aggCols.head, aggCols.tail: _*)
     val rows = MrlThresholds.map { u =>
@@ -3907,16 +3876,15 @@ object Profiling {
     * denominators; z/p scalar after.
     */
   def qCochranArmitage(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val cells = Tables.lineitem(s, dir)
       .select(col("l_quantity").cast("long").as("q"),
         (col("l_returnflag") === "R").cast("long").as("y"))
       .groupBy(col("q")).agg(count(lit(1)).as("n"), sum(col("y")).as("a"))
     val m = cells.agg(
-      sum(col("n").cast(D0)).as("nn"), sum(col("a").cast(D0)).as("aa"),
-      sum(col("n").cast(D0) * col("q")).as("ns"),
-      sum(col("n").cast(D0) * col("q") * col("q")).as("nss"),
-      sum(col("a").cast(D0) * col("q")).as("as_"),
+      sum(col("n").cast(Dec0)).as("nn"), sum(col("a").cast(Dec0)).as("aa"),
+      sum(col("n").cast(Dec0) * col("q")).as("ns"),
+      sum(col("n").cast(Dec0) * col("q") * col("q")).as("nss"),
+      sum(col("a").cast(Dec0) * col("q")).as("as_"),
       count(lit(1)).as("k"))
     val nD = col("nn").cast("double")
     val pbar = col("aa").cast("double") / nD

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.NumFns
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Recommender primitives over the purchase graph (SURVEY.md §2,
@@ -169,7 +170,6 @@ object Recsys {
     */
   def qCfCoverage(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val recs = cfTable(s, dir).select(col("neighbor"))
     val catalog = Tables.lineitem(s, dir)
       .select(col("l_partkey")).distinct()
@@ -182,8 +182,8 @@ object Recsys {
       .withColumn("o", coalesce(sum(col("c")).over(wOff), lit(0L)))
       .agg(sum(col("c")).as("n_rec"),
         sum(col("x") * col("c")).as("n_slots"),
-        sum(col("x").cast(D0) *
-          (col("o").cast(D0) * col("c") +
+        sum(col("x").cast(Dec0) *
+          (col("o").cast(Dec0) * col("c") +
             expr("(c * (c + 1)) div 2"))).as("s1"))
     giniF.crossJoin(broadcast(catalog))
       .select(col("n_items"), col("n_rec"), col("n_slots"),
@@ -230,7 +230,6 @@ object Recsys {
     * per-term DECIMAL folds make the per-slot means order-independent.
     */
   def qRecNovelty(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val nCust = Tables.orders(s, dir)
       .select(col("o_custkey")).distinct()
       .agg(count(lit(1)).as("n_cust"))
@@ -239,8 +238,8 @@ object Recsys {
       .crossJoin(broadcast(nCust))
       .select(col("rk"),
         (-log(col("c_b").cast("double") / col("n_cust"))
-          / math.log(2.0)).cast(D).as("nov"),
-        (col("c_b").cast("double") / col("n_cust")).cast(D).as("pop"))
+          / math.log(2.0)).cast(Dec12).as("nov"),
+        (col("c_b").cast("double") / col("n_cust")).cast(Dec12).as("pop"))
       .groupBy(col("rk"))
       .agg(count(lit(1)).as("n_recs"),
         NumFns.roundPortable(
@@ -367,8 +366,6 @@ object Recsys {
     * drift (see [[graft.Bench]]).
     */
   def qSlopeOne(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val inc = Tables.orders(s, dir)
       .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .repartition(col("o_custkey"))
@@ -388,7 +385,7 @@ object Recsys {
     val dev = halfPairs
       .groupBy(col("pa"), col("pb"))
       .agg(count(lit(1)).as("n_ji"),
-        sum((col("ra") - col("rb")).cast(D0)).as("sdiff"))
+        sum((col("ra") - col("rb")).cast(Dec0)).as("sdiff"))
       .filter(col("n_ji") >= SlopeOneMinSupport)
     // each co-rated (cust, pa<pb) row contributes to BOTH directed
     // targets; the 2-element explode replaces the ordered re-enumeration
@@ -405,13 +402,13 @@ object Recsys {
         col("c.num").as("num1"), col("c.den").as("den1"))
     val preds = contrib.groupBy(col("cust"), col("pj"), col("rj"))
       .agg(sum(col("num1")).as("num"),
-        sum(col("den1").cast(D0)).as("den"))
+        sum(col("den1").cast(Dec0)).as("den"))
       .withColumn("pred", col("num").cast("double") / col("den").cast("double"))
       .withColumn("err", col("pred") - col("rj"))
     val nRatings = ki.agg(count(lit(1)).as("n_ratings"))
     preds.agg(count(lit(1)).as("n_predicted"),
-        sum(abs(col("err")).cast(D)).as("sae"),
-        sum((col("err") * col("err")).cast(D)).as("sse"))
+        sum(abs(col("err")).cast(Dec12)).as("sae"),
+        sum((col("err") * col("err")).cast(Dec12)).as("sse"))
       .crossJoin(broadcast(nRatings))
       .select(col("n_ratings"), col("n_predicted"),
         NumFns.roundPortable(

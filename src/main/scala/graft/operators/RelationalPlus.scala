@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.NumFns
+import graft.functions.NumFns.Dec12
 import graft.sources.Tables
 
 /** Deep relational coverage (SURVEY.md §2, table 2): the TPC-H query
@@ -997,7 +998,6 @@ object RelationalPlus {
     * cell on identical ratio-of-integer doubles.
     */
   def qPriceElasticity(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.lineitem(s, dir)
       .groupBy(NumFns.roundAwayLong(col("l_discount") * 100).as("dpct"))
       .agg(count(lit(1)).as("cnt"),
@@ -1006,10 +1006,10 @@ object RelationalPlus {
         log(lit(1.0) - col("dpct") / 100.0).as("x"),
         log(col("sq").cast("double") / col("cnt")).as("y"))
     val m = cells.agg(count(lit(1)).as("k"),
-      sum(col("x").cast(D)).as("sx"), sum(col("y").cast(D)).as("sy"),
-      sum((col("x") * col("x")).cast(D)).as("sxx"),
-      sum((col("x") * col("y")).cast(D)).as("sxy"),
-      sum((col("y") * col("y")).cast(D)).as("syy"))
+      sum(col("x").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
+      sum((col("x") * col("x")).cast(Dec12)).as("sxx"),
+      sum((col("x") * col("y")).cast(Dec12)).as("sxy"),
+      sum((col("y") * col("y")).cast(Dec12)).as("syy"))
       .select(col("k").cast("double").as("k"),
         col("sx").cast("double").as("sx"), col("sy").cast("double").as("sy"),
         col("sxx").cast("double").as("sxx"),
@@ -1064,7 +1064,6 @@ object RelationalPlus {
     * folds; the supplier dim broadcasts.
     */
   def qHhi(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val bySupp = Tables.lineitem(s, dir)
       .join(Tables.supplier(s, dir)
         .select(col("s_suppkey"), col("s_nationkey")),
@@ -1080,7 +1079,7 @@ object RelationalPlus {
     bySupp.join(broadcast(natTot), Seq("nation"))
       .select(col("nation"), col("n_suppliers"),
         ((col("rev").cast("double") / col("nrev"))
-          * (col("rev").cast("double") / col("nrev"))).cast(D).as("s2"))
+          * (col("rev").cast("double") / col("nrev"))).cast(Dec12).as("s2"))
       .groupBy(col("nation"), col("n_suppliers"))
       .agg(sum(col("s2")).as("hhi"))
       .select(col("nation"), col("n_suppliers"),

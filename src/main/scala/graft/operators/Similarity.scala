@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NumFns, VectorFns}
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Similarity-search operators over the embeddings table (SURVEY.md §2,
@@ -752,8 +753,6 @@ object Similarity {
     * IEEE expressions on both engines.
     */
   def qPcaPowerIter(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val DI = org.apache.spark.sql.types.DecimalType(38, 0)
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("v"))
     val ei = e.select(col("vec_id"), col("v"), posexplode(col("v")))
@@ -784,13 +783,13 @@ object Similarity {
     val sij = pairs.groupBy(col("i"), col("j"), col("salt"))
       .agg(sum(col("q")).as("pq"))
       .groupBy(col("i"), col("j"))
-      .agg(sum(col("pq").cast(DI)).as("sij"))
+      .agg(sum(col("pq").cast(Dec0)).as("sij"))
       .localCheckpoint()
     val su = ei.select(col("i"),
         graft.functions.NumFns.roundAwayLong(col("xi") * lit(1e12)).as("q"),
         (col("vec_id") % PcaSalts).as("salt"))
       .groupBy(col("i"), col("salt")).agg(sum(col("q")).as("pq"))
-      .groupBy(col("i")).agg(sum(col("pq").cast(DI)).as("su"))
+      .groupBy(col("i")).agg(sum(col("pq").cast(Dec0)).as("su"))
       .localCheckpoint()
     val cnt = e.agg(count(lit(1)).as("n")).localCheckpoint()
     val cov = sij
@@ -805,11 +804,11 @@ object Similarity {
             * (col("su_j").cast("double") / col("n") / lit(1e12))).as("cij"))
     val seed = 1.0 / math.sqrt(Dims.toDouble)
     val v1 = cov.groupBy(col("i"))
-      .agg(sum((col("cij") * lit(seed)).cast(D)).cast("double").as("v1raw"))
+      .agg(sum((col("cij") * lit(seed)).cast(Dec12)).cast("double").as("v1raw"))
       .localCheckpoint() // read by sc AND the final projection
     val sc = v1.agg(
-      sum((col("v1raw") * col("v1raw")).cast(D)).cast("double").as("nsq"),
-      sum((col("v1raw") * lit(seed)).cast(D)).cast("double").as("lambda"))
+      sum((col("v1raw") * col("v1raw")).cast(Dec12)).cast("double").as("nsq"),
+      sum((col("v1raw") * lit(seed)).cast(Dec12)).cast("double").as("lambda"))
     v1.crossJoin(broadcast(sc))
       .select((col("i") + 1).as("pos"),
         round(col("v1raw") / sqrt(col("nsq")), 6).as("comp"),
@@ -948,26 +947,25 @@ object Similarity {
     * nothing row-scale shuffles.
     */
   def qEmbedDrift(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.embeddings(s, dir)
       .select((col("vec_id") % 2 === 0).as("is_ref"),
         posexplode(VectorFns.asDouble(col("embedding"))))
       .select(col("is_ref"), col("pos").as("i"), col("col").as("x"))
       .groupBy(col("i"))
       .agg(
-        sum(when(col("is_ref"), col("x")).otherwise(lit(0.0)).cast(D)).as("sr"),
+        sum(when(col("is_ref"), col("x")).otherwise(lit(0.0)).cast(Dec12)).as("sr"),
         sum(when(col("is_ref"), 1L).otherwise(0L)).as("nr"),
-        sum(when(col("is_ref"), lit(0.0)).otherwise(col("x")).cast(D)).as("sc"),
+        sum(when(col("is_ref"), lit(0.0)).otherwise(col("x")).cast(Dec12)).as("sc"),
         sum(when(col("is_ref"), 0L).otherwise(1L)).as("nc"))
     val dims = cells
       .select(col("nr"), col("nc"),
         (col("sr").cast("double") / col("nr")).as("mr"),
         (col("sc").cast("double") / col("nc")).as("mc"))
       .select(col("nr"), col("nc"),
-        ((col("mr") - col("mc")) * (col("mr") - col("mc"))).cast(D).as("d2"),
-        (col("mr") * col("mc")).cast(D).as("rc"),
-        (col("mr") * col("mr")).cast(D).as("rr"),
-        (col("mc") * col("mc")).cast(D).as("cc"))
+        ((col("mr") - col("mc")) * (col("mr") - col("mc"))).cast(Dec12).as("d2"),
+        (col("mr") * col("mc")).cast(Dec12).as("rc"),
+        (col("mr") * col("mr")).cast(Dec12).as("rr"),
+        (col("mc") * col("mc")).cast(Dec12).as("cc"))
     dims.groupBy(col("nr"), col("nc"))
       .agg(sum(col("d2")).as("mmd"), sum(col("rc")).as("src"),
         sum(col("rr")).as("srr"), sum(col("cc")).as("scc"))
@@ -1428,7 +1426,6 @@ object Similarity {
     * doubles; the SSE sums as DECIMAL (order-free) and emits rounded.
     */
   def qElbowSse(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val e = prepared(s, dir).localCheckpoint()
     val perK = ElbowKs.map { k =>
       val cents = e.filter(col("vec_id") < k)
@@ -1440,7 +1437,7 @@ object Similarity {
         .groupBy(col("vec_id"))
         .agg((lit(1.0) - max(col("csim"))).as("dist"))
         .agg(count(lit(1)).as("n_vecs"),
-          sum(col("dist").cast(D)).as("sse_d"))
+          sum(col("dist").cast(Dec12)).as("sse_d"))
         .select(lit(k.toLong).as("k"), col("n_vecs"),
           NumFns.roundPortable(col("sse_d").cast("double"), 6).as("sse"),
           NumFns.roundPortable(
@@ -1464,16 +1461,15 @@ object Similarity {
     * corpus² — and the mean is a DECIMAL-stable sum.
     */
   def qAnisotropy(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val sample = prepared(s, dir).filter(col("vec_id") < AnisotropySample)
       .localCheckpoint()
     val pairs = sample.as("a")
       .join(broadcast(sample.as("b")), col("a.vec_id") < col("b.vec_id"))
       .select(simCol.as("cos"))
     val cosAgg = pairs.agg(count(lit(1)).as("n_pairs"),
-      sum(col("cos").cast(D)).as("sc"))
+      sum(col("cos").cast(Dec12)).as("sc"))
     val normAgg = sample.agg(count(lit(1)).as("n_vecs"),
-      sum(sqrt(col("nsq")).cast(D)).as("sn"))
+      sum(sqrt(col("nsq")).cast(Dec12)).as("sn"))
     normAgg.crossJoin(broadcast(cosAgg))
       .select(col("n_vecs"), col("n_pairs"),
         NumFns.roundPortable(
@@ -1532,20 +1528,19 @@ object Similarity {
     * exact; moments DECIMAL-fold.
     */
   def qEmbedDimVariance(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val dims = Tables.embeddings(s, dir)
       .select(posexplode(VectorFns.asDouble(col("embedding"))))
       .select((col("pos") + 1).as("dim"), col("col").as("x"))
       .groupBy(col("dim"))
-      .agg(count(lit(1)).as("n"), sum(col("x").cast(D)).as("sx"),
-        sum((col("x") * col("x")).cast(D)).as("sxx"))
+      .agg(count(lit(1)).as("n"), sum(col("x").cast(Dec12)).as("sx"),
+        sum((col("x") * col("x")).cast(Dec12)).as("sxx"))
       .select(col("dim"), col("n"),
         (col("sx").cast("double") / col("n")).as("mean"),
         ((col("sxx").cast("double")
           - col("sx").cast("double") * col("sx").cast("double") / col("n"))
           / col("n")).as("v"))
     val avgv = dims.agg(
-      (sum(col("v").cast(D)).cast("double") / count(lit(1))).as("av"))
+      (sum(col("v").cast(Dec12)).cast("double") / count(lit(1))).as("av"))
     dims.crossJoin(broadcast(avgv))
       .select(col("dim").cast("int").as("dim"), col("n").as("n_vecs"),
         NumFns.roundPortable(col("mean"), 6).as("mean"),
@@ -1594,21 +1589,20 @@ object Similarity {
     * every reduction order-independent.
     */
   def qCalinskiHarabasz(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = cellAssigned(s, dir).localCheckpoint()
     val tot = cells.agg(count(lit(1)).as("n"),
-      sum(col("nsq").cast(D)).as("t2"))
+      sum(col("nsq").cast(Dec12)).as("t2"))
     val f = cells
       .select(col("cell"), posexplode(col("v")))
       .select(col("cell"), (col("pos") + 1).as("pos"), col("col").as("x"))
       .groupBy(col("cell"), col("pos"))
-      .agg(count(lit(1)).as("nj"), sum(col("x").cast(D)).as("sj"))
+      .agg(count(lit(1)).as("nj"), sum(col("x").cast(Dec12)).as("sj"))
       .localCheckpoint() // k×dims rows; feeds B1, the global sums, and k
     val b1 = f.select(((col("sj").cast("double") * col("sj").cast("double"))
-      / col("nj")).cast(D).as("t"))
+      / col("nj")).cast(Dec12).as("t"))
       .agg(sum(col("t")).as("b1"))
     val g = f.groupBy(col("pos")).agg(sum(col("sj")).as("gs"))
-      .select((col("gs").cast("double") * col("gs").cast("double")).cast(D)
+      .select((col("gs").cast("double") * col("gs").cast("double")).cast(Dec12)
         .as("t"))
       .agg(sum(col("t")).as("gg"))
     val k = f.select(col("cell")).distinct().agg(count(lit(1)).as("k"))
@@ -1679,7 +1673,6 @@ object Similarity {
     * over that frame.
     */
   def qIvfBalance(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val sizes = cellAssigned(s, dir)
       .groupBy(col("cell")).agg(count(lit(1)).as("c"))
       .localCheckpoint() // ≤k rows; feeds totals AND the entropy fold
@@ -1687,7 +1680,7 @@ object Similarity {
       max(col("c")).as("maxc"))
     val ent = sizes.crossJoin(broadcast(tot))
       .select((-(col("c").cast("double") / col("n"))
-        * log(col("c").cast("double") / col("n"))).cast(D).as("t"))
+        * log(col("c").cast("double") / col("n"))).cast(Dec12).as("t"))
       .agg(sum(col("t")).as("h"))
     tot.crossJoin(broadcast(ent))
       .select(col("n").as("n_vecs"), col("k").as("k_cells"),
@@ -1869,15 +1862,13 @@ object Similarity {
     * folds over that bounded frame.
     */
   def qClusterAgreement(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val ct = cellAssigned(s, dir)
       .groupBy(col("cell"), col("label")).agg(count(lit(1)).as("nij"))
       .localCheckpoint() // bounded contingency; feeds all four metrics
     val ai = ct.groupBy(col("cell")).agg(sum(col("nij")).as("a"))
     val bj = ct.groupBy(col("label")).agg(sum(col("nij")).as("b"))
     def c2(x: org.apache.spark.sql.Column) =
-      (x.cast(D0) * (x - 1)) / 2
+      (x.cast(Dec0) * (x - 1)) / 2
     val sij = ct.agg(sum(c2(col("nij"))).as("sij"), sum(col("nij")).as("n"))
     val sa = ai.agg(sum(c2(col("a"))).as("sa"))
     val sb = bj.agg(sum(c2(col("b"))).as("sb"))
@@ -1885,19 +1876,19 @@ object Similarity {
       val tot = sij.select(col("n"))
       val hl = bj.crossJoin(broadcast(tot))
         .select((-(col("b").cast("double") / col("n"))
-          * log(col("b").cast("double") / col("n"))).cast(D).as("t"))
+          * log(col("b").cast("double") / col("n"))).cast(Dec12).as("t"))
         .agg(sum(col("t")).as("hlab"))
       val hc = ai.crossJoin(broadcast(tot))
         .select((-(col("a").cast("double") / col("n"))
-          * log(col("a").cast("double") / col("n"))).cast(D).as("t"))
+          * log(col("a").cast("double") / col("n"))).cast(Dec12).as("t"))
         .agg(sum(col("t")).as("hcell"))
       val hlc = ct.join(broadcast(ai), Seq("cell"))
         .select((-(col("nij").cast("double")) // summed over n below
-          * log(col("nij").cast("double") / col("a"))).cast(D).as("t"))
+          * log(col("nij").cast("double") / col("a"))).cast(Dec12).as("t"))
         .agg(sum(col("t")).as("hlc_raw"))
       val hcl = ct.join(broadcast(bj), Seq("label"))
         .select((-(col("nij").cast("double"))
-          * log(col("nij").cast("double") / col("b"))).cast(D).as("t"))
+          * log(col("nij").cast("double") / col("b"))).cast(Dec12).as("t"))
         .agg(sum(col("t")).as("hcl_raw"))
       hl.crossJoin(broadcast(hc)).crossJoin(broadcast(hlc))
         .crossJoin(broadcast(hcl))

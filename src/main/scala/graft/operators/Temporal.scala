@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.NumFns
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Time-series operators over the events table (SURVEY.md §2, table 2):
@@ -332,15 +333,14 @@ object Temporal {
   val AnomalyMinPrev = 5
 
   def qAnomalyZscore(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
       .rowsBetween(-10, -1)
     Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
         col("value"))
       .withColumn("n_prev", count(lit(1)).over(w))
-      .withColumn("s1", sum(col("value").cast(D)).over(w).cast("double"))
-      .withColumn("s2", sum((col("value") * col("value")).cast(D)).over(w).cast("double"))
+      .withColumn("s1", sum(col("value").cast(Dec12)).over(w).cast("double"))
+      .withColumn("s2", sum((col("value") * col("value")).cast(Dec12)).over(w).cast("double"))
       .filter(col("n_prev") >= AnomalyMinPrev)
       .withColumn("mean_prev", col("s1") / col("n_prev"))
       .withColumn("std_prev",
@@ -593,7 +593,6 @@ object Temporal {
   val EwmaWindow = 16
 
   def qEwma(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val pos = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
@@ -608,7 +607,7 @@ object Temporal {
           && col("b_pos") > col("pos") - EwmaWindow)
       .select(col("user_id"), col("event_id"), col("pos"), col("value"),
         (col("b_value") * pow(lit(2.0), (col("b_pos") - col("pos") - 1).cast("double")))
-          .cast(D).as("term"))
+          .cast(Dec12).as("term"))
       .groupBy(col("user_id"), col("event_id"), col("pos"), col("value"))
       .agg(count(lit(1)).as("n_terms"), sum(col("term")).as("num"))
       .select(col("user_id"), col("event_id"), col("value"),
@@ -655,7 +654,6 @@ object Temporal {
     * combined per-user aggregation — never a self-join.
     */
   def qTwap(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
@@ -666,7 +664,7 @@ object Temporal {
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_intervals"),
         sum(col("dur")).as("span_us"),
-        sum((col("value") * col("dur")).cast(D)).as("vnum"))
+        sum((col("value") * col("dur")).cast(Dec12)).as("vnum"))
       .filter(col("span_us") > 0)
       .select(col("user_id"), col("n_intervals"), col("span_us"),
         graft.functions.NumFns.roundPortable(
@@ -715,14 +713,13 @@ object Temporal {
     * CAN land on the 6th-decimal boundary).
     */
   def qDowProfile(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = Tables.events(s, dir)
       .select(col("event_type"),
         (pmod(dayofweek(col("ts")) + 5, lit(7)) + 1).as("isodow"),
         col("value"))
       .groupBy(col("event_type"), col("isodow"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(D)).as("vsum"))
+        sum(col("value").cast(Dec12)).as("vsum"))
     val overall = cells.groupBy(col("event_type"))
       .agg((sum(col("vsum")).cast("double") / sum(col("n_events"))).as("mean_all"))
     cells.join(broadcast(overall), Seq("event_type"))
@@ -771,20 +768,19 @@ object Temporal {
     * earlier day.
     */
   def qCusumChangepoint(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = Tables.events(s, dir)
       .select(col("event_type"),
         floor(unix_micros(col("ts")) / (86400L * 1000000L)).as("day_epoch"),
         col("value"))
       .groupBy(col("event_type"), col("day_epoch"))
-      .agg(count(lit(1)).as("n"), sum(col("value").cast(D)).as("vsum"))
+      .agg(count(lit(1)).as("n"), sum(col("value").cast(Dec12)).as("vsum"))
       .select(col("event_type"), col("day_epoch"),
         NumFns.roundPortable(col("vsum").cast("double") / col("n"), 6)
           .as("day_mean"))
     val mu = days.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
         NumFns.roundPortable(
-          sum(col("day_mean").cast(D)).cast("double") / count(lit(1)), 6)
+          sum(col("day_mean").cast(Dec12)).cast("double") / count(lit(1)), 6)
           .as("mu"))
     val wCum = Window.partitionBy(col("event_type")).orderBy(col("day_epoch"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -869,7 +865,6 @@ object Temporal {
   val AutocorrMaxLag = 7
 
   def qAutocorr(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val days = dailyCents(s, dir).select(col("di"), col("yc").as("rev"))
       .localCheckpoint() // dimension-sized; feeds both join sides x 7 lags
     val lags = s.range(1, AutocorrMaxLag + 1).select(col("id").cast("int").as("lag"))
@@ -881,9 +876,9 @@ object Temporal {
     aligned.groupBy(col("lag"))
       .agg(count(lit(1)).as("n"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum((col("x").cast(D0) * col("y"))).as("sxy"),
-        sum((col("x").cast(D0) * col("x"))).as("sxx"),
-        sum((col("y").cast(D0) * col("y"))).as("syy"))
+        sum((col("x").cast(Dec0) * col("y"))).as("sxy"),
+        sum((col("x").cast(Dec0) * col("x"))).as("sxx"),
+        sum((col("y").cast(Dec0) * col("y"))).as("syy"))
       .select(col("lag"), col("n"),
         NumFns.roundPortable(
           (col("n").cast("double") * col("sxy").cast("double")
@@ -937,7 +932,6 @@ object Temporal {
     * the oracle's shared CTE chain.
     */
   private def decomposed(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = dailyCents(s, dir).select(col("di"), col("yc").as("rev"))
       .localCheckpoint() // dimension-sized; feeds trend AND seasonal joins
     val w = Window.orderBy(col("di")).rowsBetween(-3, 3)
@@ -951,7 +945,7 @@ object Temporal {
       .localCheckpoint() // read by the seasonal agg AND the final join
     val seasonal = trended
       .groupBy(col("dow"))
-      .agg((sum((col("rev") - col("trend")).cast(D)).cast("double")
+      .agg((sum((col("rev") - col("trend")).cast(Dec12)).cast("double")
         / count(lit(1))).as("seasonal"))
     trended.join(broadcast(seasonal), Seq("dow"))
   }
@@ -1010,7 +1004,6 @@ object Temporal {
     * in the final ratios).
     */
   def qSeasonalStrength(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val f = decomposed(s, dir)
       .select(col("di"),
         (col("rev") - col("trend") - col("seasonal")).as("r"),
@@ -1020,9 +1013,9 @@ object Temporal {
       (sxx.cast("double") / col("n")) -
         (sx.cast("double") / col("n")) * (sx.cast("double") / col("n"))
     val m = f.agg(count(lit(1)).as("n"),
-      sum(col("r").cast(D)).as("s_r"), sum((col("r") * col("r")).cast(D)).as("q_r"),
-      sum(col("sr").cast(D)).as("s_sr"), sum((col("sr") * col("sr")).cast(D)).as("q_sr"),
-      sum(col("tr").cast(D)).as("s_tr"), sum((col("tr") * col("tr")).cast(D)).as("q_tr"))
+      sum(col("r").cast(Dec12)).as("s_r"), sum((col("r") * col("r")).cast(Dec12)).as("q_r"),
+      sum(col("sr").cast(Dec12)).as("s_sr"), sum((col("sr") * col("sr")).cast(Dec12)).as("q_sr"),
+      sum(col("tr").cast(Dec12)).as("s_tr"), sum((col("tr") * col("tr")).cast(Dec12)).as("q_tr"))
     val vR = popVar(col("s_r"), col("q_r"))
     val vSR = popVar(col("s_sr"), col("q_sr"))
     val vTR = popVar(col("s_tr"), col("q_tr"))
@@ -1076,14 +1069,13 @@ object Temporal {
     * moments); the flag compare runs on identical doubles both engines.
     */
   def qSeasonalAnomaly(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val f = decomposed(s, dir)
       .select(col("di"), col("dow"), col("rev"),
         (col("rev") - col("trend") - col("seasonal")).as("r"))
       .localCheckpoint() // feeds the 1-row moment agg AND the flag scan
     val m = f.agg(count(lit(1)).as("n"),
-      sum(col("r").cast(D)).as("s_r"),
-      sum((col("r") * col("r")).cast(D)).as("q_r"))
+      sum(col("r").cast(Dec12)).as("s_r"),
+      sum((col("r") * col("r")).cast(Dec12)).as("q_r"))
     val mu = col("s_r").cast("double") / col("n")
     val sd = sqrt(col("q_r").cast("double") / col("n") - mu * mu)
     f.crossJoin(broadcast(m))
@@ -1408,7 +1400,6 @@ object Temporal {
     * row-offset lag window); the corpus contributes one scan.
     */
   def qForecastEval(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = dailyCents(s, dir).select(col("di"), col("yc").as("rev"))
       .localCheckpoint()
     val models = s.range(0, 2).select(
@@ -1421,7 +1412,7 @@ object Temporal {
       .select(col("model"),
         abs(col("y") - col("f")).as("ae"),
         ((lit(2.0) * abs(col("y") - col("f")))
-          / (abs(col("y")) + abs(col("f")))).cast(D).as("sm"))
+          / (abs(col("y")) + abs(col("f")))).cast(Dec12).as("sm"))
     scored.groupBy(col("model"))
       .agg(count(lit(1)).as("n"),
         sum(col("ae")).as("sae"),
@@ -1592,10 +1583,9 @@ object Temporal {
       .select(col("week"),
         (col("wq").cast("double") / lit(7e6)).as("paa"))
       .localCheckpoint() // weeks frame feeds moments AND the symbols
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val mom = weeks.agg(count(lit(1)).cast("double").as("n"),
-        sum(col("paa").cast(D)).cast("double").as("sx"),
-        sum((col("paa") * col("paa")).cast(D)).cast("double").as("sxx"))
+        sum(col("paa").cast(Dec12)).cast("double").as("sx"),
+        sum((col("paa") * col("paa")).cast(Dec12)).cast("double").as("sxx"))
       .select((col("sx") / col("n")).as("mu"),
         sqrt((col("sxx") - col("sx") * col("sx") / col("n")) /
           (col("n") - 1.0)).as("sd"))
@@ -2020,7 +2010,7 @@ object Temporal {
         NumFns.roundPortable(max(col("q4")).cast("double") / 1e6, 4)
           .as("q_forecast"),
         NumFns.roundPortable(
-          sum(col("loss_s").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+          sum(col("loss_s").cast(Dec0))
             .cast("double") / 1e7 / count(lit(1)), 6).as("pinball"))
       .orderBy(col("r_name"), col("tau"))
   }
@@ -2143,7 +2133,6 @@ object Temporal {
     * are DECIMAL-stable.
     */
   def qHurst(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val daily = dailyCents(s, dir).select(col("di").cast("long").as("day"), col("yc").as("x"))
       .withColumn("rn", row_number().over(Window.orderBy(col("day"))).cast("long"))
     val fanned = daily.select(col("rn"), col("x"),
@@ -2154,12 +2143,11 @@ object Temporal {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // second moment as DECIMAL end to end: daily cents² exceeds int64
     // already at sf0.1 (x ≈ 1e9 → x² ≈ 1e18, a 64-term sum overflows)
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val stats = fanned
       .withColumn("cnt", count(lit(1)).over(wChunk))
       .filter(col("cnt") === col("n")) // full chunks only
       .withColumn("sx", sum(col("x")).over(wChunk))
-      .withColumn("sxx", sum(col("x").cast(D0) * col("x")).over(wChunk))
+      .withColumn("sxx", sum(col("x").cast(Dec0) * col("x")).over(wChunk))
       // cumulative deviation z_t = Σ x_i − t·μ, kept integer-exact as
       // n·z_t = n·Σx_i − t·sx (avoids accumulating a double)
       .withColumn("cums", sum(col("x")).over(wCum))
@@ -2175,7 +2163,7 @@ object Temporal {
       .select(col("n"), (col("r") / sqrt(col("s2"))).as("rs"))
     val perN = rs.groupBy(col("n"))
       .agg(count(lit(1)).as("n_chunks"),
-        (sum(col("rs").cast(D)).cast("double") / count(lit(1))).as("mean_rs"))
+        (sum(col("rs").cast(Dec12)).cast("double") / count(lit(1))).as("mean_rs"))
       .withColumn("lx", log(col("n").cast("double")))
       .withColumn("ly", log(col("mean_rs")))
     val wAll = Window.partitionBy()
@@ -2269,7 +2257,6 @@ object Temporal {
     * DECIMAL(38,12) form overflowed its 26 integer digits near SF~2000.
     */
   def qDickeyFuller(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 0)
     val days = dailyCents(s, dir).select(col("di"), col("yc").as("y"))
     val w = Window.orderBy(col("di"))
     val pairs = days
@@ -2277,11 +2264,11 @@ object Temporal {
       .filter(col("yp").isNotNull)
       .select((col("y") - col("yp")).as("dy"), col("yp"))
     val m = pairs.agg(count(lit(1)).as("n"),
-      sum(col("yp").cast(D)).as("sy"),
-      sum(col("yp").cast(D) * col("yp")).as("syy"),
-      sum(col("dy").cast(D)).as("sd"),
-      sum(col("dy").cast(D) * col("dy")).as("sdd"),
-      sum(col("yp").cast(D) * col("dy")).as("syd"))
+      sum(col("yp").cast(Dec0)).as("sy"),
+      sum(col("yp").cast(Dec0) * col("yp")).as("syy"),
+      sum(col("dy").cast(Dec0)).as("sd"),
+      sum(col("dy").cast(Dec0) * col("dy")).as("sdd"),
+      sum(col("yp").cast(Dec0) * col("dy")).as("syd"))
       .select(col("n").cast("double").as("n"),
         col("sy").cast("double").as("sy"), col("syy").cast("double").as("syy"),
         col("sd").cast("double").as("sd"), col("sdd").cast("double").as("sdd"),
@@ -2344,7 +2331,6 @@ object Temporal {
     * average over that bounded frame, matching quantile_cont(0.5).
     */
   def qTheilSen(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = Tables.orders(s, dir)
       .filter(year(col("o_orderdate")) === TheilSenYear)
       .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
@@ -2362,9 +2348,9 @@ object Temporal {
         col("rn") === expr("(np + 2) div 2"))
       .agg((sum(col("slope")) / count(lit(1))).as("sen"), max(col("np")).as("np"))
     val ols = days.agg(count(lit(1)).as("nd"),
-      sum(col("di").cast(D)).as("sx"), sum(col("y").cast(D)).as("sy"),
-      sum((col("di") * col("di")).cast(D)).as("sxx"),
-      sum((col("di") * col("y")).cast(D)).as("sxy"))
+      sum(col("di").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
+      sum((col("di") * col("di")).cast(Dec12)).as("sxx"),
+      sum((col("di") * col("y")).cast(Dec12)).as("sxy"))
       .select(col("nd"),
         ((col("nd").cast("double") * col("sxy").cast("double")
           - col("sx").cast("double") * col("sy").cast("double"))
@@ -2427,12 +2413,11 @@ object Temporal {
     * both engines — no libm anywhere.
     */
   def qDurbinWatson(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = dailyCents(s, dir).select(col("di"), (col("yc") / 100.0).as("y"))
     val m = days.agg(count(lit(1)).as("n"),
-      sum(col("di").cast(D)).as("sx"), sum(col("y").cast(D)).as("sy"),
-      sum((col("di") * col("di")).cast(D)).as("sxx"),
-      sum((col("di") * col("y")).cast(D)).as("sxy"))
+      sum(col("di").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
+      sum((col("di") * col("di")).cast(Dec12)).as("sxx"),
+      sum((col("di") * col("y")).cast(Dec12)).as("sxy"))
       .select(col("n").cast("double").as("n"),
         col("sx").cast("double").as("sx"), col("sy").cast("double").as("sy"),
         col("sxx").cast("double").as("sxx"),
@@ -2443,8 +2428,8 @@ object Temporal {
       .select(col("n"), col("b"))
     val coef = days.crossJoin(broadcast(
         m.join(days.agg(
-            sum(col("di").cast(D)).cast("double").as("sx"),
-            sum(col("y").cast(D)).cast("double").as("sy")))
+            sum(col("di").cast(Dec12)).cast("double").as("sx"),
+            sum(col("y").cast(Dec12)).cast("double").as("sy")))
           .select(col("n"), col("b"),
             ((col("sy") - col("b") * col("sx")) / col("n")).as("a"))))
       .select(col("di"), (col("y") - col("a") - col("b") * col("di")).as("e"),
@@ -2526,14 +2511,13 @@ object Temporal {
     * F > 3.0 (≈ F(2,∞) at 5 %) flags the break on the rounded stat.
     */
   def qChowTest(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val days = dailyCents(s, dir)
     val m = days.groupBy((col("di") >= ChowBreakDi).as("late"))
-      .agg(count(lit(1)).cast(D0).as("n"),
-        sum(col("di").cast(D0)).as("sx"), sum(col("yc").cast(D0)).as("sy"),
-        sum(col("di").cast(D0) * col("di")).as("sxx"),
-        sum(col("di").cast(D0) * col("yc")).as("sxy"),
-        sum(col("yc").cast(D0) * col("yc")).as("syy"))
+      .agg(count(lit(1)).cast(Dec0).as("n"),
+        sum(col("di").cast(Dec0)).as("sx"), sum(col("yc").cast(Dec0)).as("sy"),
+        sum(col("di").cast(Dec0) * col("di")).as("sxx"),
+        sum(col("di").cast(Dec0) * col("yc")).as("sxy"),
+        sum(col("yc").cast(Dec0) * col("yc")).as("syy"))
     def abc(n: Column, sx: Column, sy: Column, sxx: Column, sxy: Column,
         syy: Column): (Column, Column, Column) =
       ((n * syy - sy * sy).cast("double"),
@@ -2726,7 +2710,6 @@ object Temporal {
     * the centering subtraction never happens in floating point.
     */
   def qGranger(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val days = dailyCents(s, dir, count(lit(1)).as("xc"))
     val w = Window.orderBy(col("di"))
     val lagged = days
@@ -2734,15 +2717,15 @@ object Temporal {
       .withColumn("z2", lag(col("xc"), 1).over(w))
       .filter(col("z1").isNotNull)
     val m = lagged.agg(
-      count(lit(1)).cast(D0).as("n"),
-      sum(col("z1").cast(D0)).as("s1"), sum(col("z2").cast(D0)).as("s2"),
-      sum(col("yc").cast(D0)).as("sy"),
-      sum(col("z1").cast(D0) * col("z1")).as("s11"),
-      sum(col("z1").cast(D0) * col("z2")).as("s12"),
-      sum(col("z2").cast(D0) * col("z2")).as("s22"),
-      sum(col("z1").cast(D0) * col("yc")).as("s1y"),
-      sum(col("z2").cast(D0) * col("yc")).as("s2y"),
-      sum(col("yc").cast(D0) * col("yc")).as("syy"))
+      count(lit(1)).cast(Dec0).as("n"),
+      sum(col("z1").cast(Dec0)).as("s1"), sum(col("z2").cast(Dec0)).as("s2"),
+      sum(col("yc").cast(Dec0)).as("sy"),
+      sum(col("z1").cast(Dec0) * col("z1")).as("s11"),
+      sum(col("z1").cast(Dec0) * col("z2")).as("s12"),
+      sum(col("z2").cast(Dec0) * col("z2")).as("s22"),
+      sum(col("z1").cast(Dec0) * col("yc")).as("s1y"),
+      sum(col("z2").cast(Dec0) * col("yc")).as("s2y"),
+      sum(col("yc").cast(Dec0) * col("yc")).as("syy"))
     val cleared = m.select(col("n"),
       (col("n") * col("s11") - col("s1") * col("s1")).cast("double").as("a11"),
       (col("n") * col("s12") - col("s1") * col("s2")).cast("double").as("a12"),
@@ -3091,7 +3074,6 @@ object Temporal {
     * deterministic double on both engines.
     */
   def qLjungBox(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = dailyCents(s, dir)
     val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
     val dev = days.crossJoin(broadcast(m))
@@ -3103,9 +3085,9 @@ object Temporal {
     }
     val sums = lagged.agg(
       max(col("n")).as("n"),
-      sum((col("d") * col("d")).cast(D)).as("den") +:
+      sum((col("d") * col("d")).cast(Dec12)).as("den") +:
         (1 to LjungBoxLags).map(k =>
-          sum((col("d") * col(s"l$k")).cast(D)).as(s"num$k")): _*)
+          sum((col("d") * col(s"l$k")).cast(Dec12)).as(s"num$k")): _*)
     val nD = col("n").cast("double")
     val q = (1 to LjungBoxLags).map { k =>
       val rho = col(s"num$k").cast("double") / col("den").cast("double")
@@ -3307,7 +3289,6 @@ object Temporal {
     * cross-engine ordering rests on a float.
     */
   def qPeriodogram(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val TwoPi = 6.283185307179586
     val days = dailyCents(s, dir)
     val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
@@ -3317,15 +3298,15 @@ object Temporal {
       .crossJoin(broadcast(m))
       .select(col("t"), col("n"),
         ((col("yc") - col("sy").cast("double") / col("n")) / 100.0).as("d"))
-    val vtot = dev.agg(sum((col("d") * col("d")).cast(D)).as("ss"))
+    val vtot = dev.agg(sum((col("d") * col("d")).cast(Dec12)).as("ss"))
     val terms = dev
       .select(col("t"), col("n"), col("d"),
         explode(sequence(lit(1), lit(PeriodogramKs))).as("k"))
       .select(col("k"), col("n"),
         (col("d") * cos(lit(TwoPi) * col("k") * col("t") / col("n")))
-          .cast(D).as("ca"),
+          .cast(Dec12).as("ca"),
         (col("d") * sin(lit(TwoPi) * col("k") * col("t") / col("n")))
-          .cast(D).as("cb"))
+          .cast(Dec12).as("cb"))
     val p2 = col("a").cast("double") * col("a").cast("double") +
       col("b").cast("double") * col("b").cast("double")
     terms.groupBy(col("k"))
@@ -3393,7 +3374,6 @@ object Temporal {
     * exact integers; E/V are deterministic ratios.
     */
   def qLogrank(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = Tables.events(s, dir)
       .select(col("user_id"),
         floor(unix_micros(col("ts")) / (86400L * 1000000L)).as("day"),
@@ -3423,11 +3403,11 @@ object Temporal {
       .withColumn("dd", col("d1") + col("d0"))
       .filter(col("dd") > 0 && col("rr") > 1)
     val terms = risk.select(col("nn1"), col("nn0"), col("d1"),
-      (col("dd") * (col("r1").cast("double") / col("rr"))).cast(D).as("e1"),
+      (col("dd") * (col("r1").cast("double") / col("rr"))).cast(Dec12).as("e1"),
       (col("dd") * (col("r1").cast("double") / col("rr"))
         * (col("r0").cast("double") / col("rr"))
         * ((col("rr") - col("dd")).cast("double") / (col("rr") - 1)))
-        .cast(D).as("v"))
+        .cast(Dec12).as("v"))
     terms.groupBy(col("nn1"), col("nn0"))
       .agg(sum(col("d1")).as("o1"), sum(col("e1")).as("e1"),
         sum(col("v")).as("v"))
@@ -3518,13 +3498,12 @@ object Temporal {
     * is pure +−×÷ of identical doubles — no libm in the sort.
     */
   def qCooksDistance(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = dailyCents(s, dir).select(col("di"), (col("yc") / 100.0).as("y"))
     val m = days.agg(count(lit(1)).as("nL"),
-      sum(col("di").cast(D)).cast("double").as("sx"),
-      sum(col("y").cast(D)).cast("double").as("sy"),
-      sum((col("di") * col("di")).cast(D)).cast("double").as("sxx"),
-      sum((col("di") * col("y")).cast(D)).cast("double").as("sxy"))
+      sum(col("di").cast(Dec12)).cast("double").as("sx"),
+      sum(col("y").cast(Dec12)).cast("double").as("sy"),
+      sum((col("di") * col("di")).cast(Dec12)).cast("double").as("sxx"),
+      sum((col("di") * col("y")).cast(Dec12)).cast("double").as("sxy"))
       .select(col("nL"), col("sx"), col("sy"), col("sxx"), col("sxy"),
         ((col("nL") * col("sxy") - col("sx") * col("sy"))
           / (col("nL") * col("sxx") - col("sx") * col("sx"))).as("b"))
@@ -3612,7 +3591,6 @@ object Temporal {
     * one libm pow lands 9 orders under its rounding step.
     */
   def qPotGpd(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val days = dailyCents(s, dir)
       .localCheckpoint() // day frame; feeds the threshold AND exceedances
     val cells = days.groupBy(col("yc")).agg(count(lit(1)).as("c"))
@@ -3629,8 +3607,8 @@ object Temporal {
       .select(col("n"), col("u"), (col("yc") - col("u")).as("z"))
     val m = exc.groupBy(col("n"), col("u"))
       .agg(count(lit(1)).as("k"),
-        sum(col("z").cast(D0)).as("s1"),
-        sum(col("z").cast(D0) * col("z")).as("s2"))
+        sum(col("z").cast(Dec0)).as("s1"),
+        sum(col("z").cast(Dec0) * col("z")).as("s2"))
     val kD = col("k").cast("double")
     val mean = col("s1").cast("double") / kD
     val vr = (col("k") * col("s2") - col("s1") * col("s1")).cast("double") /
@@ -3708,7 +3686,6 @@ object Temporal {
     * exact; ln on identical ratio-of-integer doubles.
     */
   def qEntropyRate(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = transitions(s, dir)
       .localCheckpoint() // ≤|types|² rows; feeds marginals AND both folds
     val marg = cells.groupBy(col("from_type")).agg(sum(col("n")).as("ni"))
@@ -3718,11 +3695,11 @@ object Temporal {
       .crossJoin(broadcast(tot))
     val hRate = joined
       .select((-(col("n").cast("double") / col("nn"))
-        * log(col("n").cast("double") / col("ni"))).cast(D).as("t"))
+        * log(col("n").cast("double") / col("ni"))).cast(Dec12).as("t"))
       .agg(sum(col("t")).as("hr"))
     val hMarg = marg.crossJoin(broadcast(tot))
       .select((-(col("ni").cast("double") / col("nn"))
-        * log(col("ni").cast("double") / col("nn"))).cast(D).as("t"))
+        * log(col("ni").cast("double") / col("nn"))).cast(Dec12).as("t"))
       .agg(sum(col("t")).as("hm"))
     tot.crossJoin(broadcast(hRate)).crossJoin(broadcast(hMarg))
       .select(col("nn").as("n_transitions"), col("k").as("n_states"),
@@ -3767,7 +3744,6 @@ object Temporal {
     * Wilson–Hilferty normalizes χ² against its dof for the verdict.
     */
   def qBowkerTest(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cells = transitions(s, dir)
       .localCheckpoint()
     val pairs = cells.filter(col("from_type") < col("to_type"))
@@ -3781,7 +3757,7 @@ object Temporal {
       .filter(col("a") < col("b") && (col("nab") + col("nba")) > 0)
     val agg = pairs
       .select((((col("nab") - col("nba")) * (col("nab") - col("nba")))
-        .cast("double") / (col("nab") + col("nba"))).cast(D).as("t"))
+        .cast("double") / (col("nab") + col("nba"))).cast(Dec12).as("t"))
       .agg(count(lit(1)).as("dof"), sum(col("t")).as("chi2"))
     val k = col("dof").cast("double")
     val c2 = col("chi2").cast("double")
@@ -3926,7 +3902,6 @@ object Temporal {
     * arithmetic spelled identically on both engines.
     */
   def qPacf(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = dailyCents(s, dir)
     val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
     val w = Window.orderBy(col("di"))
@@ -3937,10 +3912,10 @@ object Temporal {
       .withColumn("l2", lag(col("d"), 2).over(w))
       .withColumn("l3", lag(col("d"), 3).over(w))
     val sums = dev.agg(max(col("n")).as("n"),
-      sum((col("d") * col("d")).cast(D)).as("den"),
-      sum((col("d") * col("l1")).cast(D)).as("n1"),
-      sum((col("d") * col("l2")).cast(D)).as("n2"),
-      sum((col("d") * col("l3")).cast(D)).as("n3"))
+      sum((col("d") * col("d")).cast(Dec12)).as("den"),
+      sum((col("d") * col("l1")).cast(Dec12)).as("n1"),
+      sum((col("d") * col("l2")).cast(Dec12)).as("n2"),
+      sum((col("d") * col("l3")).cast(Dec12)).as("n3"))
     val r1 = col("n1").cast("double") / col("den").cast("double")
     val r2 = col("n2").cast("double") / col("den").cast("double")
     val r3 = col("n3").cast("double") / col("den").cast("double")
@@ -4028,9 +4003,8 @@ object Temporal {
     * is reported for a scale-free read.
     */
   def qCusumSquares(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val days = dailyCents(s, dir)
-    val sq = days.select(col("di"), (col("yc").cast(D0) * col("yc")).as("y2"))
+    val sq = days.select(col("di"), (col("yc").cast(Dec0) * col("yc")).as("y2"))
     val tot = sq.agg(sum(col("y2")).as("ss"), count(lit(1)).as("n"))
     val wSeq = Window.orderBy(col("di"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -4083,7 +4057,6 @@ object Temporal {
     * makes the selection auditable, not just the winner.
     */
   def qArOrderAic(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val days = dailyCents(s, dir)
     val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
     val w = Window.orderBy(col("di"))
@@ -4094,10 +4067,10 @@ object Temporal {
       .withColumn("l2", lag(col("d"), 2).over(w))
       .withColumn("l3", lag(col("d"), 3).over(w))
     val sums = dev.agg(max(col("n")).as("n"),
-      sum((col("d") * col("d")).cast(D)).as("den"),
-      sum((col("d") * col("l1")).cast(D)).as("n1"),
-      sum((col("d") * col("l2")).cast(D)).as("n2"),
-      sum((col("d") * col("l3")).cast(D)).as("n3"))
+      sum((col("d") * col("d")).cast(Dec12)).as("den"),
+      sum((col("d") * col("l1")).cast(Dec12)).as("n1"),
+      sum((col("d") * col("l2")).cast(Dec12)).as("n2"),
+      sum((col("d") * col("l3")).cast(Dec12)).as("n3"))
     val nD = col("n").cast("double")
     val r1 = col("n1").cast("double") / col("den").cast("double")
     val r2 = col("n2").cast("double") / col("den").cast("double")

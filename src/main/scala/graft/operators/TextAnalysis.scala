@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.functions.{NumFns, TextFns}
+import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Text-analysis operators over the documents corpus (SURVEY.md §2,
@@ -555,7 +556,6 @@ object TextAnalysis {
     * round-at-4 gap.
     */
   def qZipfFit(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val counts = Tables.documents(s, dir)
       .select(explode(TextFns.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
@@ -576,10 +576,10 @@ object TextAnalysis {
         log(col("n").cast("double")).as("y"))
     val m = ranked.agg(
       count(lit(1)).as("k"),
-      sum(col("x").cast(D)).as("sx"), sum(col("y").cast(D)).as("sy"),
-      sum((col("x") * col("x")).cast(D)).as("sxx"),
-      sum((col("y") * col("y")).cast(D)).as("syy"),
-      sum((col("x") * col("y")).cast(D)).as("sxy"))
+      sum(col("x").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
+      sum((col("x") * col("x")).cast(Dec12)).as("sxx"),
+      sum((col("y") * col("y")).cast(Dec12)).as("syy"),
+      sum((col("x") * col("y")).cast(Dec12)).as("sxy"))
     m.select(
         col("k").as("n_types"),
         round(((col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
@@ -691,7 +691,6 @@ object TextAnalysis {
     * confusion → closed form.
     */
   def qCohensKappa(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cm = qTextLangid(s, dir)
       .groupBy(col("lang"), col("predicted"))
       .agg(count(lit(1)).as("n"))
@@ -703,7 +702,7 @@ object TextAnalysis {
         col("lang") === col("predicted"))
       .crossJoin(broadcast(nTot))
       .agg(sum(((col("n_true").cast("double") / col("nt"))
-        * (col("n_pred").cast("double") / col("nt"))).cast(D))
+        * (col("n_pred").cast("double") / col("nt"))).cast(Dec12))
         .cast("double").as("pe"))
     val diag = cm.filter(col("lang") === col("predicted"))
       .agg(sum(col("n")).as("n_agree"))
@@ -822,7 +821,6 @@ object TextAnalysis {
     * as a DECIMAL sum. One scan → k²-cell frame → closed form.
     */
   def qCramersV(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val cm = qTextLangid(s, dir)
       .groupBy(col("lang"), col("predicted"))
       .agg(count(lit(1)).as("n"))
@@ -838,7 +836,7 @@ object TextAnalysis {
       .join(broadcast(tm), Seq("lang"))
       .join(broadcast(pm), Seq("predicted"))
       .crossJoin(broadcast(nt))
-      .withColumn("term", ((col("n") - e) * (col("n") - e) / e).cast(D))
+      .withColumn("term", ((col("n") - e) * (col("n") - e) / e).cast(Dec12))
     cells.groupBy(col("nt"), col("kr"), col("kc"))
       .agg(sum(col("term")).cast("double").as("chi2"))
       .select(col("nt").as("n_docs"),
@@ -1052,7 +1050,6 @@ object TextAnalysis {
     * No prefix scan ever touches raw rows.
     */
   def qHeapsFit(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val toks = Tables.documents(s, dir)
       .select(expr(s"doc_id div $HeapsBlock").as("block"),
         explode(TextFns.tokens(col("text"))).as("w"))
@@ -1070,9 +1067,9 @@ object TextAnalysis {
         log(col("v_cum").cast("double")).as("y"))
     val m = points.agg(
       count(lit(1)).as("k"),
-      sum(col("x").cast(D)).as("sx"), sum(col("y").cast(D)).as("sy"),
-      sum((col("x") * col("x")).cast(D)).as("sxx"),
-      sum((col("x") * col("y")).cast(D)).as("sxy"))
+      sum(col("x").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
+      sum((col("x") * col("x")).cast(Dec12)).as("sxx"),
+      sum((col("x") * col("y")).cast(Dec12)).as("sxy"))
     m.select(
       col("k").as("n_points"),
       round(((col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
@@ -1138,7 +1135,6 @@ object TextAnalysis {
     * aggregates with its sampled twin over one shared bigram frame).
     */
   private def condEntropyCore(docs: DataFrame): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val bg = docs
       .select(TextFns.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
@@ -1151,10 +1147,10 @@ object TextAnalysis {
     val sPair = pair.join(uni.hint("shuffle_hash"), Seq("w1"))
       .agg(sum(col("c2")).as("t_pairs"),
         count(lit(1)).as("n_bigram_types"),
-        sum((col("c2") * log(col("c2") / col("c1").cast("double"))).cast(D))
+        sum((col("c2") * log(col("c2") / col("c1").cast("double"))).cast(Dec12))
           .as("s_cond"))
     val sUni = uni.agg(count(lit(1)).as("n_types"),
-      sum((col("c1") * log(col("c1").cast("double"))).cast(D)).as("s_nlnn"),
+      sum((col("c1") * log(col("c1").cast("double"))).cast(Dec12)).as("s_nlnn"),
       sum(col("c1")).as("t_uni"))
     sPair.crossJoin(broadcast(sUni))
       .select(col("t_pairs"), col("n_types"), col("n_bigram_types"),
@@ -1234,7 +1230,6 @@ object TextAnalysis {
     // per-term doubles are the identical IEEE expressions, and the
     // DECIMAL sums are order-independent, so the emission is bit-equal
     // to the two-pass form at half the scan and shuffle cost.
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val bg = Tables.documents(s, dir)
       .select(
         (TextFns.hash28(concat(lit("ce:"), col("doc_id").cast("string")))
@@ -1251,17 +1246,17 @@ object TextAnalysis {
     val sPair = pair.join(uni.hint("shuffle_hash"), Seq("w1"))
       .agg(sum(col("c2")).as("t_pairs"),
         count(lit(1)).as("n_bigram_types"),
-        sum((col("c2") * log(col("c2") / col("c1").cast("double"))).cast(D))
+        sum((col("c2") * log(col("c2") / col("c1").cast("double"))).cast(Dec12))
           .as("s_cond"),
         sum(col("c2s")).as("t_pairs_s"),
         sum(when(col("c2s") > 0,
-          (col("c2s") * log(col("c2s") / col("c1s").cast("double"))).cast(D)))
+          (col("c2s") * log(col("c2s") / col("c1s").cast("double"))).cast(Dec12)))
           .as("s_cond_s"))
     val sUni = uni.agg(count(lit(1)).as("n_types"),
-      sum((col("c1") * log(col("c1").cast("double"))).cast(D)).as("s_nlnn"),
+      sum((col("c1") * log(col("c1").cast("double"))).cast(Dec12)).as("s_nlnn"),
       sum(col("c1")).as("t_uni"),
       sum(when(col("c1s") > 0,
-        (col("c1s") * log(col("c1s").cast("double"))).cast(D))).as("s_nlnn_s"),
+        (col("c1s") * log(col("c1s").cast("double"))).cast(Dec12))).as("s_nlnn_s"),
       sum(col("c1s")).as("t_uni_s"))
     sPair.crossJoin(broadcast(sUni))
       .select(col("t_pairs"), col("n_types"), col("n_bigram_types"),
@@ -2088,7 +2083,6 @@ object TextAnalysis {
     * excluded (entropy undefined), counted separately.
     */
   def qLangMix(s: SparkSession, dir: String): DataFrame = {
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val hits = Tables.documents(s, dir)
       .select(col("source"), TextFns.tokens(col("text")).as("toks"))
       .select(col("source"),
@@ -2109,7 +2103,7 @@ object TextAnalysis {
     scored.groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum((col("n_langs") >= 2).cast("long")).as("n_multi"),
-        sum(col("h").cast(D)).as("sh"))
+        sum(col("h").cast(Dec12)).as("sh"))
       .select(col("source"), col("n_docs"), col("n_multi"),
         NumFns.roundPortable(
           col("n_multi").cast("double") / col("n_docs"), 6).as("multi_share"),
@@ -2165,7 +2159,6 @@ object TextAnalysis {
     * → per-doc bits → one 5-number moment row. Scan-side at any scale.
     */
   def qCochranQ(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val toks = TextFns.tokens(col("text"))
     val base = Tables.documents(s, dir)
       .select(toks.as("toks"))
@@ -2177,10 +2170,10 @@ object TextAnalysis {
           .otherwise(0L).as("c2"),
         when(array_contains(col("toks"), "the"), 1L).otherwise(0L).as("c3"))
       .withColumn("l", col("c1") + col("c2") + col("c3"))
-    val m = base.agg(count(lit(1)).cast(D0).as("n"),
-      sum(col("c1")).cast(D0).as("g1"), sum(col("c2")).cast(D0).as("g2"),
-      sum(col("c3")).cast(D0).as("g3"),
-      sum(col("l").cast(D0) * col("l")).as("l2"))
+    val m = base.agg(count(lit(1)).cast(Dec0).as("n"),
+      sum(col("c1")).cast(Dec0).as("g1"), sum(col("c2")).cast(Dec0).as("g2"),
+      sum(col("c3")).cast(Dec0).as("g3"),
+      sum(col("l").cast(Dec0) * col("l")).as("l2"))
     val t = col("g1") + col("g2") + col("g3")
     val num = lit(2) * (lit(3) * (col("g1") * col("g1")
       + col("g2") * col("g2") + col("g3") * col("g3")) - t * t)
@@ -2316,15 +2309,14 @@ object TextAnalysis {
     * where a long product wraps). No vocab-rank window anywhere.
     */
   def qYuleK(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val cc = Tables.documents(s, dir)
       .select(explode(TextFns.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("m"))
       .groupBy(col("m")).agg(count(lit(1)).as("vm"))
     cc.agg(
-      sum(col("m").cast(D0) * col("vm")).as("n_tok"),
+      sum(col("m").cast(Dec0) * col("vm")).as("n_tok"),
       sum(col("vm")).as("n_types"),
-      sum(col("m").cast(D0) * col("m") * col("vm")).as("s2"))
+      sum(col("m").cast(Dec0) * col("m") * col("vm")).as("s2"))
       .select(col("n_tok").cast("long").as("n_tokens"), col("n_types"),
         NumFns.roundPortable(
           (col("s2") - col("n_tok")).cast("double") * 1e4
@@ -2417,13 +2409,12 @@ object TextAnalysis {
     * ratios.
     */
   def qSpeciesRichness(s: SparkSession, dir: String): DataFrame = {
-    val D0 = org.apache.spark.sql.types.DecimalType(38, 0)
     val cc = Tables.documents(s, dir)
       .select(explode(TextFns.tokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("m"))
       .groupBy(col("m")).agg(count(lit(1)).as("vm"))
     cc.agg(
-      sum(col("m").cast(D0) * col("vm")).cast("long").as("n_tokens"),
+      sum(col("m").cast(Dec0) * col("vm")).cast("long").as("n_tokens"),
       sum(col("vm")).as("v"),
       sum(when(col("m") === 1, col("vm")).otherwise(0L)).as("v1"),
       sum(when(col("m") === 2, col("vm")).otherwise(0L)).as("v2"))

@@ -2,9 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.NumFns
+import graft.functions.NumFns.Dec0
 
 /** Quantized two-phase stable aggregation — the fast form of the
   * DECIMAL(38,12) float discipline for FACT-SCALE sums (generalizing
@@ -35,7 +35,6 @@ import graft.functions.NumFns
   */
 object QuantAgg {
 
-  private val DI = DecimalType(38, 0)
   val Scale = 1e6
 
   /** A stable sum/mean output column: quantized-exact Σx (or Σx/n),
@@ -59,7 +58,7 @@ object QuantAgg {
     val stage1 = df
       .groupBy((grp.map(col) :+ pmod(hash(saltKey), lit(salts)).as("_salt")): _*)
       .agg(qCols.head, (qCols.tail :+ count(lit(1)).as("_n")): _*)
-    val s2Cols = specs.indices.map(i => sum(col(s"_q$i").cast(DI)).as(s"_s$i")) :+
+    val s2Cols = specs.indices.map(i => sum(col(s"_q$i").cast(Dec0)).as(s"_s$i")) :+
       sum(col("_n")).as("_nn")
     val stage2 = stage1.groupBy(grp.map(col): _*)
       .agg(s2Cols.head, s2Cols.tail: _*)

@@ -4,7 +4,9 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
+
+import graft.functions.NumFns.Dec12
 
 /** Optimizer rule enforcing the engine's float discipline on GROUPED
   * aggregates: `round(avg(x), k)` and `round(sum(x), k)` over a double
@@ -32,8 +34,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
   */
 object StableAggRule extends Rule[LogicalPlan] {
 
-  private val D = DecimalType(38, 12)
-
   private def stamped(ae: AggregateExpression, f: AggregateFunction): AggregateExpression =
     ae.copy(aggregateFunction = f, resultId = NamedExpression.newExprId)
 
@@ -44,12 +44,12 @@ object StableAggRule extends Rule[LogicalPlan] {
           (r.child, r.scale) match {
             case (ae @ AggregateExpression(a: Average, _, false, _, _), Literal(_, IntegerType))
                 if a.child.dataType == DoubleType =>
-              val sumDec = stamped(ae, Sum(Cast(a.child, D)))
+              val sumDec = stamped(ae, Sum(Cast(a.child, Dec12)))
               val cnt = stamped(ae, Count(Seq(a.child)))
               r.copy(child = Divide(Cast(sumDec, DoubleType), Cast(cnt, DoubleType)))
             case (ae @ AggregateExpression(s: Sum, _, false, _, _), Literal(_, IntegerType))
                 if s.child.dataType == DoubleType =>
-              r.copy(child = Cast(stamped(ae, Sum(Cast(s.child, D))), DoubleType))
+              r.copy(child = Cast(stamped(ae, Sum(Cast(s.child, Dec12))), DoubleType))
             case _ => r
           }
       }

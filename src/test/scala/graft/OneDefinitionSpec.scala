@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The document-quality features behind the curation and evaluation
   * families, and the derived inputs the analytic families share (the
-  * daily revenue series, the co-trade edges, the two-arm moments), are
-  * each written once per engine; operators and oracles call or splice
+  * daily revenue series, the co-trade edges, the two-arm moments) and
+  * the exact-decimal types are each written once per engine; operators and oracles call or splice
   * them. A copy spelled out at a call site is how an oracle drifts from
   * its engine twin, so this scans `src/main` for the spellings each
   * definition replaced.
@@ -73,7 +73,9 @@ class OneDefinitionSpec extends AnyFunSuite {
       """"from_type", lag|\) AS from_type\b""", Seq("Temporal.scala", "Temporal.scala")),
     ("the customer-to-region hop is only Temporal.custRegion and its SQL twin",
       """select\(col\("c_custkey"\), col\("r_name"\)\)|SELECT c_custkey, r_name\b""",
-      Seq("Temporal.scala", "Temporal.scala")))
+      Seq("Temporal.scala", "Temporal.scala")),
+    ("the exact-decimal types are only NumFns.Dec12 and NumFns.Dec0",
+      """DecimalType\(38,\s*(12|0)\)""", Seq("NumFns.scala", "NumFns.scala")))
 
   for ((name, pattern, expected) <- definitions)
     test(name) {

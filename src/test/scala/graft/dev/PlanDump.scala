@@ -12,14 +12,14 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r12")
     val suffix = if (args.length > 1) args(1) else "before"
-    val names = if (args.length > 2) args.drop(2).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+    val rows = SparkEntry.select(args.drop(2).toSeq).sortBy(_.name)
     val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
+    rows.foreach { q =>
+      val name = q.name
+      val df = q.engine(spark, dir)
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val report = graft.plans.PlanReport.of(df).summary

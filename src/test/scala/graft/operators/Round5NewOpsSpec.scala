@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.functions.NumFns.Dec12
 
 /** Invariant + plan-shape coverage for the round-5 operator batch
   * (TPC-H Q7/Q11/Q16 gap fills, Mann–Whitney, CUPED, HITS). Value
@@ -333,7 +334,6 @@ class Round5NewOpsSpec extends SparkSpec {
 
   test("incremental rollup merge equals the single-pass full recompute") {
     import org.apache.spark.sql.functions._
-    val D = org.apache.spark.sql.types.DecimalType(38, 12)
     val merged = PipelineOps.qIncrementalRollup(spark, sf001).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3))))
       .toMap
@@ -341,7 +341,7 @@ class Round5NewOpsSpec extends SparkSpec {
       .groupBy(date_format(to_date(col("ts")), "yyyy-MM-dd").as("day"),
         col("event_type"))
       .agg(count(lit(1)).as("n"),
-        round(sum(col("value").cast(D)), 4).cast("double").as("sv"))
+        round(sum(col("value").cast(Dec12)), 4).cast("double").as("sv"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3))))
       .toMap
