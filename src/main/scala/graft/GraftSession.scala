@@ -50,7 +50,7 @@ object GraftSession {
     "spark.sql.codegen.cache.maxEntries" -> "200",
     "spark.ui.enabled" -> "false")
 
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")

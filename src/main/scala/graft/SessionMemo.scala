@@ -43,25 +43,19 @@ object SessionMemo {
 
   private val evictors = TrieMap.empty[String, SparkSession => Int]
 
-  /** Register (or replace) the evictor for one memo site. The evictor
-    * returns HOW MANY entries it actually dropped (r10 advice: an
-    * eviction log that names memos that held nothing overstates what
-    * was freed).
-    */
-  def register(name: String)(f: SparkSession => Int): Unit =
-    evictors.put(name, f)
-
-  /** A memo map keyed by session, with its evictor registered under
-    * `name`: the evictor drops the given session's entries and every
-    * stopped session's, and returns how many it dropped.
+  /** A memo map keyed by session, with its evictor registered (or
+    * replaced) under `name`: the evictor drops the given session's
+    * entries and every stopped session's, and returns HOW MANY it
+    * dropped (r10 advice: an eviction log that names memos that held
+    * nothing overstates what was freed).
     */
   def keyed[K, V](name: String): TrieMap[(SparkSession, K), V] = {
     val memo = TrieMap.empty[(SparkSession, K), V]
-    register(name) { s =>
+    evictors.put(name, { s =>
       val before = memo.size
       memo.filterInPlace((k, _) => (k._1 ne s) && !k._1.sparkContext.isStopped)
       before - memo.size
-    }
+    })
     memo
   }
 

@@ -198,20 +198,64 @@ object Catalog {
       concat(lit(s"s3://$bucket/"), fullKey).as("path"))
   }
 
-  /** Catalog build over a synthesized listing: one projection — fully
-    * codegen'd string ops, no shuffle except the final distinct + sort.
+  /** The reference's parse validity rule: `parse_key` touches path
+    * segments [0], [1], [-1] and dot-parts [0], [3], [4], so a relative
+    * key with fewer than 2 (non-empty) path segments or fewer than 5
+    * filename dot-parts raised IndexError and was skipped
+    * (`except ... continue`, loca2.py:223).
     */
-  def qCatalogParse(s: SparkSession, dir: String): DataFrame = {
-    val key = concat(docModel, lit("/"), docScheme, lit("/"), docStem,
-      pick(col("doc_id") % 2, ".monthly.cent.zarr", ".cent.monthly.zarr"))
-    Tables.documents(s, dir)
-      .select(key.as("key"))
-      .distinct()
-      .select(parseKey(col("key"), "test-bucket", concat(lit(ZarrPrefix), col("key"))).as("p"))
+  def parsable(relative: Column): Column = {
+    val pathParts = filter(split(relative, "/"), p => p =!= "")
+    size(pathParts) >= 2 && size(split(element_at(pathParts, -1), "\\.")) >= 5
+  }
+
+  /** SQL twin of [[parsable]] over the key column `relative`. */
+  private def parsableSql(relative: String): String = {
+    val pathParts = s"list_filter(str_split($relative, '/'), p -> p <> '')"
+    s"len($pathParts) >= 2 AND len(str_split($pathParts[-1], '.')) >= 5"
+  }
+
+  /** The 6-column intake-ESM catalog of `keys`, one [[parseKey]] row per
+    * key, ordered by path — the catalog projection of [[qCatalogParse]],
+    * [[qCatalogSkipMalformed]] and [[esmCatalog]]. Callers whose keys
+    * may be malformed filter on [[parsable]] first.
+    */
+  def catalogRows(keys: DataFrame, relative: Column, bucket: String,
+      fullKey: Column): DataFrame =
+    keys.select(parseKey(relative, bucket, fullKey).as("p"))
       .select(col("p.variable").as("variable"), col("p.model").as("model"),
         col("p.scheme").as("scheme"), col("p.experiment_id").as("experiment_id"),
         col("p.time_range").as("time_range"), col("p.path").as("path"))
       .orderBy(col("path"))
+
+  /** SQL twin of [[catalogRows]] over the relation `keys(key)`, under the
+    * test bucket and the zarr prefix.
+    */
+  private def catalogRowsSql(keys: String): String =
+    s"""SELECT file_parts[1] AS variable,
+       |  path_parts[1] AS model,
+       |  path_parts[2] AS scheme,
+       |  file_parts[4] AS experiment_id,
+       |  file_parts[5] AS time_range,
+       |  's3://test-bucket/$ZarrPrefix' || key AS path
+       |FROM (
+       |  SELECT key, path_parts, str_split(path_parts[-1], '.') AS file_parts
+       |  FROM (
+       |    SELECT key, list_filter(str_split(key, '/'), p -> p <> '') AS path_parts
+       |    FROM $keys
+       |  )
+       |)
+       |ORDER BY path""".stripMargin
+
+  /** Catalog build over a synthesized listing: [[catalogRows]] — fully
+    * codegen'd string ops, no shuffle except the final distinct + sort.
+    * Every synthesized key is well-formed, so no [[parsable]] filter.
+    */
+  def qCatalogParse(s: SparkSession, dir: String): DataFrame = {
+    val key = concat(docModel, lit("/"), docScheme, lit("/"), docStem,
+      pick(col("doc_id") % 2, ".monthly.cent.zarr", ".cent.monthly.zarr"))
+    catalogRows(Tables.documents(s, dir).select(key.as("key")).distinct(),
+      col("key"), "test-bucket", concat(lit(ZarrPrefix), col("key")))
   }
 
   val qCatalogParseOracle: String =
@@ -219,20 +263,8 @@ object Catalog {
        |  SELECT DISTINCT $docModelSchemeSql || '/' || $docStemSql ||
        |    (['.monthly.cent.zarr','.cent.monthly.zarr'])[CAST(doc_id % 2 AS INT) + 1] AS key
        |  FROM documents
-       |), parts AS (
-       |  SELECT key,
-       |    str_split(str_split(key, '/')[-1], '.') AS file_parts,
-       |    str_split(key, '/') AS path_parts
-       |  FROM keys
        |)
-       |SELECT file_parts[1] AS variable,
-       |  path_parts[1] AS model,
-       |  path_parts[2] AS scheme,
-       |  file_parts[4] AS experiment_id,
-       |  file_parts[5] AS time_range,
-       |  's3://test-bucket/zarr/LOCA2/monthly/' || key AS path
-       |FROM parts
-       |ORDER BY path""".stripMargin
+       |${catalogRowsSql("keys")}""".stripMargin
 
   /** Incremental cursor (`model_for_cursor`, loca2_sensor.py:81-102):
     * sorted distinct model/scheme keys; the next chunk is the smallest key
@@ -393,11 +425,13 @@ object Catalog {
   /** Malformed-key skipping (`except ... continue`, loca2.py:223): the
     * reference drops keys whose shape can't be parsed rather than
     * failing the catalog build. Synthesized listing where 1-in-5 keys
-    * is a stray root file and 1-in-7 (of the rest) is missing its
-    * scheme directory; structural validity (3 path segments, ≥6
-    * filename dot-parts) is a codegen'd predicate evaluated before any
-    * parse projection — malformed rows never reach the parser, exactly
-    * one scan at any scale.
+    * is a stray root file (1 path segment) and 1-in-7 (of the rest) is
+    * missing its scheme directory (2 segments, 2 dot-parts). The
+    * reference validity rule, [[parsable]] (at least 2 path segments
+    * and at least 5 filename dot-parts), is a codegen'd predicate
+    * evaluated before the [[catalogRows]] projection — malformed rows
+    * never reach the parser, exactly one scan at any scale. Well-formed
+    * keys have 3 segments and 9 dot-parts.
     */
   def qCatalogSkipMalformed(s: SparkSession, dir: String): DataFrame = {
     val wellFormed = concat(docModel, lit("/"), docScheme, lit("/"), docStem,
@@ -408,15 +442,8 @@ object Catalog {
         concat(docModel, lit("/truncated.file")))
       .otherwise(wellFormed)
     val listing = Tables.documents(s, dir).select(key.as("key")).distinct()
-    val pathParts = filter(split(col("key"), "/"), p => p =!= "")
-    val fileParts = split(element_at(pathParts, -1), "\\.")
-    listing
-      .filter(size(pathParts) === 3 && size(fileParts) >= 6)
-      .select(parseKey(col("key"), "test-bucket", concat(lit(ZarrPrefix), col("key"))).as("p"))
-      .select(col("p.variable").as("variable"), col("p.model").as("model"),
-        col("p.scheme").as("scheme"), col("p.experiment_id").as("experiment_id"),
-        col("p.time_range").as("time_range"), col("p.path").as("path"))
-      .orderBy(col("path"))
+    catalogRows(listing.filter(parsable(col("key"))),
+      col("key"), "test-bucket", concat(lit(ZarrPrefix), col("key")))
   }
 
   val qCatalogSkipMalformedOracle: String =
@@ -428,22 +455,8 @@ object Catalog {
        |           (['.monthly.cent.zarr','.cent.monthly.zarr'])[CAST(doc_id % 2 AS INT) + 1]
        |    END AS key
        |  FROM documents
-       |), ok AS (
-       |  SELECT key,
-       |    str_split(key, '/') AS path_parts,
-       |    str_split(str_split(key, '/')[-1], '.') AS file_parts
-       |  FROM keys
-       |  WHERE len(str_split(key, '/')) = 3
-       |    AND len(str_split(str_split(key, '/')[-1], '.')) >= 6
-       |)
-       |SELECT file_parts[1] AS variable,
-       |  path_parts[1] AS model,
-       |  path_parts[2] AS scheme,
-       |  file_parts[4] AS experiment_id,
-       |  file_parts[5] AS time_range,
-       |  's3://test-bucket/zarr/LOCA2/monthly/' || key AS path
-       |FROM ok
-       |ORDER BY path""".stripMargin
+       |), ok AS (SELECT key FROM keys WHERE ${parsableSql("key")})
+       |${catalogRowsSql("ok")}""".stripMargin
 
   /** Mirrors the reference's `ESMCatalogConfig` (assets/loca2.py:95-112):
     * `dataFormat` selects zarr vs netcdf handling and the assets format
@@ -459,10 +472,10 @@ object Catalog {
     * as one declarative plan over an object-listing DataFrame: zarr keys
     * collapse to their store base path, keys dedupe (the reference's
     * `set`), the configured prefix is stripped to form the relative
-    * path, structurally unparseable keys are skipped (its
+    * path, structurally unparseable keys are skipped ([[parsable]], its
     * except-IndexError-continue), and survivors parse into the
-    * 6-column intake-ESM catalog. One scan + one distinct shuffle of
-    * base paths at any listing size.
+    * 6-column intake-ESM catalog ([[catalogRows]]). One scan + one
+    * distinct shuffle of base paths at any listing size.
     */
   def esmCatalog(listing: DataFrame, keyCol: String, prefix: String,
       config: EsmCatalogConfig): DataFrame = {
@@ -472,18 +485,8 @@ object Catalog {
       col("full_key").substr(lit(prefix.length + 1), length(col("full_key"))))
       .otherwise(col("full_key"))
     val withRel = bases.select(col("full_key"), relative.as("rel"))
-    // parse_key touches path segments [0], [1], [-1] and dot-parts
-    // [0], [3], [4] — anything narrower raised IndexError in the
-    // reference and was skipped
-    val pathParts = filter(split(col("rel"), "/"), p => p =!= "")
-    val fileParts = split(element_at(pathParts, -1), "\\.")
-    withRel
-      .filter(size(pathParts) >= 2 && size(fileParts) >= 5)
-      .select(parseKey(col("rel"), config.bucket, col("full_key")).as("p"))
-      .select(col("p.variable").as("variable"), col("p.model").as("model"),
-        col("p.scheme").as("scheme"), col("p.experiment_id").as("experiment_id"),
-        col("p.time_range").as("time_range"), col("p.path").as("path"))
-      .orderBy(col("path"))
+    catalogRows(withRel.filter(parsable(col("rel"))),
+      col("rel"), config.bucket, col("full_key"))
   }
 
   private def escJson(s: String): String =

@@ -118,27 +118,101 @@ object Graph {
       |JOIN supplier ON l_suppkey = s_suppkey
       |WHERE c_nationkey != s_nationkey""".stripMargin
 
+  /** Triangles of an edge frame `(a, b)`, a < b, as `(x, y, z)` with
+    * x < y < z: the ordered 2-path e(x,y)⋈e(y,z) closed by e(x,z), so
+    * each triangle appears exactly once and the join fan-out is capped
+    * at the out-degree of the middle node.
+    */
+  def triangles(e: DataFrame): DataFrame =
+    e.as("ab")
+      .join(e.as("bc"), col("ab.b") === col("bc.a"))
+      .join(e.as("ac"),
+        col("ac.a") === col("ab.a") && col("ac.b") === col("bc.b"))
+      .select(col("ab.a").as("x"), col("ab.b").as("y"), col("bc.b").as("z"))
+
+  /** SQL twin of [[triangles]] over the relation `e`. */
+  def trianglesSql(e: String): String =
+    s"""SELECT ab.a AS x, ab.b AS y, bc.b AS z
+       |FROM $e ab JOIN $e bc ON ab.b = bc.a
+       |JOIN $e ac ON ac.a = ab.a AND ac.b = bc.b""".stripMargin
+
+  /** The [[coTrade]] graph as symmetric long edges `(src, dst)`, both
+    * directions of each undirected edge, materialized once for the
+    * frontier loops of [[bfs]].
+    */
+  private def coTradeSym(s: SparkSession, dir: String): DataFrame = {
+    val e = coTrade(s, dir).distinct()
+    e.select(col("a").as("src"), col("b").as("dst"))
+      .union(e.select(col("b").as("src"), col("a").as("dst")))
+      .distinct()
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .localCheckpoint()
+  }
+
+  /** Multi-source BFS over symmetric edges `(src, dst)`: rows are
+    * `(seed, id, level)`, so each round is ONE frontier⋈edges join for
+    * every seed at once (rounds = diameter, not diameter×seeds) plus
+    * one anti-join against the visited set, both frames
+    * `localCheckpoint`ed so round k never replays rounds 1..k−1. Stops
+    * at the fixpoint or after `maxRounds`; the only driver scalar is
+    * the per-round emptiness test (the documented convergence-scalar
+    * exception). Nodes no seed reaches are absent. A single-source BFS
+    * is this loop with one seed.
+    */
+  def bfs(sym: DataFrame, seeds: DataFrame, maxRounds: Int): DataFrame = {
+    var frontier = seeds.select(col("seed"), col("seed").as("id"), lit(0L).as("level"))
+      .localCheckpoint()
+    var visited = frontier
+    var round = 0
+    var done = false
+    while (!done && round < maxRounds) {
+      val nxt = frontier.join(sym, col("id") === col("src"))
+        .select(col("seed"), col("dst").as("id")).distinct()
+        .join(visited, Seq("seed", "id"), "left_anti")
+        .select(col("seed"), col("id"), lit(round + 1L).as("level"))
+        .localCheckpoint()
+      if (nxt.isEmpty) done = true
+      else {
+        visited = visited.union(nxt).localCheckpoint()
+        frontier = nxt
+        round += 1
+      }
+    }
+    visited
+  }
+
+  /** SQL twin of [[bfs]] over the [[coTrade]] graph: CTEs ending in the
+    * recursive `walk(seed, id, lvl)`, for a `WITH RECURSIVE` oracle;
+    * `seeds` selects `src` from the symmetric edges `sym`.
+    */
+  private def bfsSql(seeds: String, maxRounds: Int): String =
+    s"""e AS (
+       |  SELECT DISTINCT a AS src, b AS dst FROM ($coTradeSql)
+       |), sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
+       |walk(seed, id, lvl) AS (
+       |  SELECT CAST(src AS BIGINT), CAST(src AS BIGINT), CAST(0 AS BIGINT)
+       |  FROM ($seeds)
+       |  UNION
+       |  SELECT w.seed, CAST(sym.dst AS BIGINT), w.lvl + 1
+       |  FROM walk w JOIN sym ON sym.src = w.id
+       |  WHERE w.lvl < $maxRounds
+       |)""".stripMargin
+
   /** Triangle count over the nation co-trade graph (an undirected edge
     * links two nations when any order ships a supplier's part of one to
     * a customer of the other). The classic clustering-coefficient
     * numerator, computed the scalable way: the [[coTrade]] edge list is
     * MATERIALIZED once (the fact⋈fact derivation must not run
-    * three times), then triangles enumerate as the ordered 2-path join
-    * e(a,b)⋈e(b,c) closed by e(a,c) — the a<b<c ordering counts each
-    * triangle exactly once and caps the join fan-out at the out-degree
-    * of the middle node. At 100 TB the edge frame is the persisted
-    * artifact; the joins shuffle bare (node, node) pairs.
+    * three times), then [[triangles]] enumerates each triangle once.
+    * At 100 TB the edge frame is the persisted artifact; the joins
+    * shuffle bare (node, node) pairs.
     */
   def qTriangleCount(s: SparkSession, dir: String): DataFrame = {
     val e = coTrade(s, dir).distinct().localCheckpoint()
     val nodes = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
       .distinct().agg(count(lit(1)).as("n_nodes"))
     val edges = e.agg(count(lit(1)).as("n_edges"))
-    val tri = e.as("ab")
-      .join(e.as("bc"), col("ab.b") === col("bc.a"))
-      .join(e.as("ac"),
-        col("ac.a") === col("ab.a") && col("ac.b") === col("bc.b"))
-      .agg(count(lit(1)).as("n_triangles"))
+    val tri = triangles(e).agg(count(lit(1)).as("n_triangles"))
     nodes.crossJoin(edges).crossJoin(tri)
   }
 
@@ -151,9 +225,7 @@ object Graph {
       |    (SELECT DISTINCT id FROM
       |      (SELECT a AS id FROM e UNION ALL SELECT b FROM e) u) v) AS n_nodes,
       |  (SELECT count(*) FROM e) AS n_edges,
-      |  (SELECT count(*) FROM e ab
-      |     JOIN e bc ON ab.b = bc.a
-      |     JOIN e ac ON ac.a = ab.a AND ac.b = bc.b) AS n_triangles""".stripMargin
+      |  (SELECT count(*) FROM (${trianglesSql("e")})) AS n_triangles""".stripMargin
 
   val qPagerankIterOracle: String =
     s"""WITH e AS (
@@ -168,61 +240,25 @@ object Graph {
        |ORDER BY s_suppkey""".stripMargin
 
   /** BFS shortest-hop levels from nation 0 over the undirected nation
-    * co-trade graph (the [[coTrade]] edge list):
-    * frontier expansion to a fixpoint — level k+1 = neighbors of the
-    * level-k frontier not yet visited. The iterate-until-empty QUERY
+    * co-trade graph (the [[coTrade]] edge list): frontier expansion to
+    * a fixpoint — level k+1 = neighbors of the level-k frontier not yet
+    * visited — as [[bfs]] with one seed, the iterate-until-empty QUERY
     * form of the loop discipline ([[Dedup.connectedComponents]] /
-    * [[pagerank]]): symmetric edges materialized once, each round one
-    * frontier⋈edges join + one anti-join against the visited set, both
-    * frames `localCheckpoint`ed so round k never replays rounds 1..k−1;
-    * the only driver scalar is the per-round emptiness test (the
-    * documented convergence-scalar exception). Unreachable nodes are
-    * absent from the output (consistent with the recursive-CTE oracle).
-    * At 100 TB frontier/visited are bare (id, level) longs; rounds =
-    * graph diameter, each one hash join on id.
+    * [[pagerank]]). Unreachable nodes are absent from the output
+    * (consistent with the recursive-CTE oracle). At 100 TB
+    * frontier/visited are bare (seed, id, level) longs; rounds = graph
+    * diameter, each one hash join on id.
     */
   val BfsSource = 0L
   val BfsMaxRounds = 64
 
-  def qBfsLevels(s: SparkSession, dir: String): DataFrame = {
-    val e = coTrade(s, dir).distinct()
-    val sym = e.select(col("a").as("src"), col("b").as("dst"))
-      .union(e.select(col("b").as("src"), col("a").as("dst")))
-      .distinct()
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .localCheckpoint()
-    var frontier = sym.sparkSession.range(1)
-      .select(lit(BfsSource).as("id"), lit(0L).as("level"))
-      .localCheckpoint()
-    var visited = frontier
-    var round = 0
-    var done = false
-    while (!done && round < BfsMaxRounds) {
-      val nxt = frontier.join(sym, col("id") === col("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .select(col("id"), lit(round + 1L).as("level"))
-        .localCheckpoint()
-      if (nxt.isEmpty) done = true
-      else {
-        visited = visited.union(nxt).localCheckpoint()
-        frontier = nxt
-        round += 1
-      }
-    }
-    visited.orderBy(col("id"))
-  }
+  def qBfsLevels(s: SparkSession, dir: String): DataFrame =
+    bfs(coTradeSym(s, dir), s.range(1).select(lit(BfsSource).as("seed")), BfsMaxRounds)
+      .select(col("id"), col("level"))
+      .orderBy(col("id"))
 
   val qBfsLevelsOracle: String =
-    s"""WITH RECURSIVE e AS (
-       |  SELECT DISTINCT a AS src, b AS dst FROM ($coTradeSql)
-       |), sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-       |walk(id, lvl) AS (
-       |  SELECT CAST($BfsSource AS BIGINT) AS id, CAST(0 AS BIGINT) AS lvl
-       |  UNION
-       |  SELECT CAST(sym.dst AS BIGINT), w.lvl + 1
-       |  FROM walk w JOIN sym ON sym.src = w.id WHERE w.lvl < $BfsMaxRounds
-       |)
+    s"""WITH RECURSIVE ${bfsSql(s"SELECT $BfsSource AS src", BfsMaxRounds)}
        |SELECT id, min(lvl) AS level FROM walk GROUP BY id ORDER BY id""".stripMargin
 
   /** Harmonic + classic closeness centrality of every nation in the
@@ -231,45 +267,18 @@ object Graph {
     * (q_pagerank_iter/q_hits) and local density (q_clustering_coeff):
     * closeness ranks nodes by how few hops reach everyone else;
     * harmonic C_H(s) = Σ_{v≠s} 1/d(s,v) stays defined on disconnected
-    * graphs. ONE frontier loop carries all sources at once — rows are
-    * (seed, id, level), so the work per round is a single
-    * frontier⋈edges join for every seed simultaneously (rounds =
-    * diameter, NOT diameter×seeds; the loop discipline of
-    * [[qBfsLevels]], localCheckpoint'd per round). On the 25-node
-    * nation graph the frame is tiny; at 100 TB the same loop runs on
-    * the supplier graph with a bounded seed set — rows stay bare
-    * (seed, id, level) longs either way. 1/d terms DECIMAL-fold so
-    * the harmonic sum is accumulation-order-free.
+    * graphs. ONE [[bfs]] frontier loop carries every nation as a seed.
+    * On the 25-node nation graph the frame is tiny; at 100 TB the same
+    * loop runs on the supplier graph with a bounded seed set — rows
+    * stay bare (seed, id, level) longs either way. 1/d terms
+    * DECIMAL-fold so the harmonic sum is accumulation-order-free.
     */
   val ClosenessMaxRounds = 16
 
   def qCloseness(s: SparkSession, dir: String): DataFrame = {
-    val e = coTrade(s, dir).distinct()
-    val sym = e.select(col("a").as("src"), col("b").as("dst"))
-      .union(e.select(col("b").as("src"), col("a").as("dst")))
-      .distinct()
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .localCheckpoint()
-    var frontier = sym.select(col("src").as("seed")).distinct()
-      .select(col("seed"), col("seed").as("id"), lit(0L).as("level"))
-      .localCheckpoint()
-    var visited = frontier
-    var round = 0
-    var done = false
-    while (!done && round < ClosenessMaxRounds) {
-      val nxt = frontier.join(sym, col("id") === col("src"))
-        .select(col("seed"), col("dst").as("id")).distinct()
-        .join(visited, Seq("seed", "id"), "left_anti")
-        .select(col("seed"), col("id"), lit(round + 1L).as("level"))
-        .localCheckpoint()
-      if (nxt.isEmpty) done = true
-      else {
-        visited = visited.union(nxt).localCheckpoint()
-        frontier = nxt
-        round += 1
-      }
-    }
-    visited.filter(col("level") > 0)
+    val sym = coTradeSym(s, dir)
+    bfs(sym, sym.select(col("src").as("seed")).distinct(), ClosenessMaxRounds)
+      .filter(col("level") > 0)
       .groupBy(col("seed"))
       .agg(count(lit(1)).as("n_reached"),
         sum(col("level")).as("sum_dist"),
@@ -283,17 +292,7 @@ object Graph {
   }
 
   val qClosenessOracle: String =
-    s"""WITH RECURSIVE e AS (
-       |  SELECT DISTINCT a AS src, b AS dst FROM ($coTradeSql)
-       |), sym AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-       |walk(seed, id, lvl) AS (
-       |  SELECT CAST(src AS BIGINT), CAST(src AS BIGINT), CAST(0 AS BIGINT)
-       |  FROM (SELECT DISTINCT src FROM sym)
-       |  UNION
-       |  SELECT w.seed, CAST(sym.dst AS BIGINT), w.lvl + 1
-       |  FROM walk w JOIN sym ON sym.src = w.id
-       |  WHERE w.lvl < $ClosenessMaxRounds
-       |),
+    s"""WITH RECURSIVE ${bfsSql("SELECT DISTINCT src FROM sym", ClosenessMaxRounds)},
        |sp AS (
        |  SELECT seed, id, min(lvl) AS d FROM walk GROUP BY seed, id
        |)
@@ -451,8 +450,8 @@ object Graph {
     * 3·triangles / wedges, the "how cliquish is the trade network"
     * number beside the raw q_triangle_count: wedges = Σᵥ C(deg v, 2)
     * from the [[coTrade]] edge list (materialized once, feeds
-    * the degree aggregate and the triangle join), triangles from the
-    * ordered 2-path closure. Every input is an integer — the ratio is
+    * the degree aggregate and the triangle join), triangles from
+    * [[triangles]]. Every input is an integer — the ratio is
     * the only double, computed once. Dimension-sized throughout (≤25
     * nation nodes) but the shape is the scalable one: degree counting
     * and wedge summing are one grouped pass at ANY node count.
@@ -462,11 +461,7 @@ object Graph {
     val deg = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
     val wedges = deg.agg(sum(col("d") * (col("d") - 1) / 2).as("wedges"))
-    val tri = e.as("ab")
-      .join(e.as("bc"), col("ab.b") === col("bc.a"))
-      .join(e.as("ac"),
-        col("ac.a") === col("ab.a") && col("ac.b") === col("bc.b"))
-      .agg(count(lit(1)).as("n_triangles"))
+    val tri = triangles(e).agg(count(lit(1)).as("n_triangles"))
     tri.crossJoin(broadcast(wedges))
       .select(col("n_triangles"), col("wedges").cast("long").as("wedges"),
         NumFns.roundPortable(
@@ -484,11 +479,7 @@ object Graph {
        |  GROUP BY id
        |),
        |w AS (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) AS wedges FROM deg),
-       |t AS (
-       |  SELECT count(*) AS n_triangles FROM e ab
-       |  JOIN e bc ON ab.b = bc.a
-       |  JOIN e ac ON ac.a = ab.a AND ac.b = bc.b
-       |)
+       |t AS (SELECT count(*) AS n_triangles FROM (${trianglesSql("e")}))
        |SELECT n_triangles, wedges,
        |  ${NumFns.roundPortableSql("3.0 * n_triangles / wedges", 6)}
        |    AS clustering_coeff
@@ -785,6 +776,25 @@ object Graph {
           struct(x.as("sa"), y.as("sb")))))).as("e"))
       .select(col("e.sa").as("sa"), col("e.sb").as("sb")).distinct()
 
+  /** SQL twin of [[pairEdgesFrame]]: CTEs `li` and `fan`, then `name`
+    * holding the capped pair edges `(sa, sb)`. `li` and `name` are
+    * `AS MATERIALIZED` because DuckDB inlines plain CTEs, and each is
+    * read more than once.
+    */
+  private def pairEdgesSql(keyCol: String, itemCol: String, name: String): String =
+    s"""li AS MATERIALIZED (
+       |  SELECT DISTINCT $keyCol AS p, $itemCol AS su FROM lineitem
+       |  WHERE $keyCol IS NOT NULL AND $itemCol IS NOT NULL
+       |),
+       |fan AS (
+       |  SELECT p FROM li GROUP BY p HAVING count(*) <= $CoreMaxFanout
+       |),
+       |$name AS MATERIALIZED (
+       |  SELECT DISTINCT a.su AS sa, b.su AS sb
+       |  FROM li a JOIN li b ON a.p = b.p AND a.su < b.su
+       |  JOIN fan ON fan.p = a.p
+       |)""".stripMargin
+
   private[graft] def cappedPairEdges(s: SparkSession, dir: String,
       keyCol: String, itemCol: String): DataFrame =
     edgeMemo.getOrElseUpdate((s, (dir, keyCol, itemCol)),
@@ -871,18 +881,7 @@ object Graph {
          |    AND sb IN (SELECT id FROM d$r WHERE d >= $CoreK)
          |)""".stripMargin
     }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS su FROM lineitem
-       |  WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL
-       |),
-       |fan AS (
-       |  SELECT p FROM li GROUP BY p HAVING count(*) <= $CoreMaxFanout
-       |),
-       |e0 AS MATERIALIZED (
-       |  SELECT DISTINCT a.su AS sa, b.su AS sb
-       |  FROM li a JOIN li b ON a.p = b.p AND a.su < b.su
-       |  JOIN fan ON fan.p = a.p
-       |),
+    s"""WITH ${pairEdgesSql("l_partkey", "l_suppkey", "e0")},
        |$peels,
        |df AS (
        |  SELECT id, count(*) AS d FROM (
@@ -945,18 +944,7 @@ object Graph {
   }
 
   val qAssortativityOracle: String =
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS p, l_partkey AS su FROM lineitem
-       |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
-       |),
-       |fan AS (
-       |  SELECT p FROM li GROUP BY p HAVING count(*) <= $CoreMaxFanout
-       |),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT a.su AS sa, b.su AS sb
-       |  FROM li a JOIN li b ON a.p = b.p AND a.su < b.su
-       |  JOIN fan ON fan.p = a.p
-       |),
+    s"""WITH ${pairEdgesSql("l_orderkey", "l_partkey", "e")},
        |deg AS (
        |  SELECT id, count(*) AS d FROM (
        |    SELECT sa AS id FROM e UNION ALL SELECT sb FROM e
@@ -1024,18 +1012,7 @@ object Graph {
   }
 
   val qRichClubOracle: String =
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_orderkey AS p, l_partkey AS su FROM lineitem
-       |  WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
-       |),
-       |fan AS (
-       |  SELECT p FROM li GROUP BY p HAVING count(*) <= $CoreMaxFanout
-       |),
-       |e AS MATERIALIZED (
-       |  SELECT DISTINCT a.su AS sa, b.su AS sb
-       |  FROM li a JOIN li b ON a.p = b.p AND a.su < b.su
-       |  JOIN fan ON fan.p = a.p
-       |),
+    s"""WITH ${pairEdgesSql("l_orderkey", "l_partkey", "e")},
        |deg AS (
        |  SELECT id, count(*) AS d FROM (
        |    SELECT sa AS id FROM e UNION ALL SELECT sb FROM e
@@ -1141,18 +1118,7 @@ object Graph {
          |  FROM hop$r h LEFT JOIN hop$r h2 ON h.lab = h2.id
          |)""".stripMargin
     }.mkString(",\n")
-    s"""WITH li AS MATERIALIZED (
-       |  SELECT DISTINCT l_partkey AS p, l_suppkey AS su FROM lineitem
-       |  WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL
-       |),
-       |fan AS (
-       |  SELECT p FROM li GROUP BY p HAVING count(*) <= $CoreMaxFanout
-       |),
-       |pr AS MATERIALIZED (
-       |  SELECT DISTINCT a.su AS sa, b.su AS sb
-       |  FROM li a JOIN li b ON a.p = b.p AND a.su < b.su
-       |  WHERE a.p IN (SELECT p FROM fan)
-       |),
+    s"""WITH ${pairEdgesSql("l_partkey", "l_suppkey", "pr")},
        |ed AS MATERIALIZED (
        |  SELECT sa, sb FROM pr UNION ALL SELECT sb, sa FROM pr
        |),
@@ -1195,8 +1161,8 @@ object Graph {
     * standard community-core / spam-ring primitive, Cohen 2008). Shape:
     * ONE fact scan builds the ≤C(|nations|,2) support cells (map-side
     * combined); the peel loop then runs entirely on the bounded
-    * nation-pair frame — each round one oriented triangle enumeration
-    * (x<y<z via two joins) + a 3-projection support count + a semi-join,
+    * nation-pair frame — each round one [[triangles]] enumeration
+    * + a 3-projection support count + a semi-join,
     * localCheckpoint'd so round r never replays rounds 1..r−1. Early
     * exit at the fixpoint produces the SAME result as the oracle's
     * unconditional [[TrussRounds]] unroll; the `converged` column
@@ -1213,11 +1179,7 @@ object Graph {
       .select(col("a"), col("b"))
       .localCheckpoint()
     def support(e: DataFrame): DataFrame = {
-      val tri = e.as("ab")
-        .join(e.as("bc"), col("ab.b") === col("bc.a"))
-        .join(e.as("ac"),
-          col("ac.a") === col("ab.a") && col("ac.b") === col("bc.b"))
-        .select(col("ab.a").as("x"), col("ab.b").as("y"), col("bc.b").as("z"))
+      val tri = triangles(e)
       tri.select(col("x").as("a"), col("y").as("b"))
         .union(tri.select(col("y").as("a"), col("z").as("b")))
         .union(tri.select(col("x").as("a"), col("z").as("b")))
@@ -1260,9 +1222,7 @@ object Graph {
   val qKtrussOracle: String = {
     val peels = (0 until TrussRounds).map { r =>
       s"""t$r AS MATERIALIZED (
-         |  SELECT ab.a AS x, ab.b AS y, bc.b AS z
-         |  FROM e$r ab JOIN e$r bc ON ab.b = bc.a
-         |  JOIN e$r ac ON ac.a = ab.a AND ac.b = bc.b
+         |  ${trianglesSql(s"e$r")}
          |),
          |s$r AS MATERIALIZED (
          |  SELECT a, b, count(*) AS tsup FROM (
@@ -1286,11 +1246,7 @@ object Graph {
        |  SELECT a, b FROM f, tot WHERE sup * np >= ss
        |),
        |$peels,
-       |tf AS (
-       |  SELECT ab.a AS x, ab.b AS y, bc.b AS z
-       |  FROM e$R ab JOIN e$R bc ON ab.b = bc.a
-       |  JOIN e$R ac ON ac.a = ab.a AND ac.b = bc.b
-       |),
+       |tf AS (${trianglesSql(s"e$R")}),
        |sf AS (
        |  SELECT a, b, count(*) AS tsup FROM (
        |    SELECT x AS a, y AS b FROM tf

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1124,6 +1124,66 @@ object Inference {
     */
   val FkCrit19 = 30.14352720564616
 
+  /** Normal scores over the pooled midranks of value cells `(source, u,
+    * c)`, shared by [[qFlignerKilleen]] and [[qVanDerWaerden]], which
+    * differ only in the score's probability `p` (a function of the
+    * midrank `r` and the pooled count `n`). Ties share one midrank, so
+    * each value cell gets ONE score: a value-domain window gives the
+    * midranks, and Φ⁻¹(p) is the A&S start + [[FkNewtonSteps]] Newton
+    * steps against the engine-shared CDF literal, as STEPWISE named
+    * columns (z0..z5 — nesting the CDF would expand the literal
+    * exponentially). Returns `(u, a, n)`, checkpointed: callers feed it
+    * to both a per-group and a global aggregate, which would otherwise
+    * plan and run the Newton pipeline twice.
+    */
+  def normalScores(cells: DataFrame, p: Column): DataFrame = {
+    val uc = cells.groupBy(col("u")).agg(sum(col("c")).as("cu"))
+      .withColumn("cum", sum(col("cu")).over(Window.orderBy(col("u"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("r", (col("cum") - col("cu")).cast("double")
+        + (col("cu") + 1).cast("double") / 2)
+    val tot = uc.agg(sum(col("cu")).as("n"))
+    val scored0 = uc.crossJoin(broadcast(tot))
+      .withColumn("p", p)
+      .withColumn("z0", NumFns.normQuantileStart(col("p")))
+    (1 to FkNewtonSteps).foldLeft(scored0) { (df, i) =>
+      df.withColumn(s"z$i",
+        NumFns.normQuantileStep(col(s"z${i - 1}"), col("p")))
+    }.withColumn("a", col(s"z$FkNewtonSteps"))
+      .select(col("u"), col("a"), col("n"))
+      .localCheckpoint()
+  }
+
+  /** SQL twin of [[normalScores]]: CTEs over `cells(source, u, c)`
+    * ending in `sc(u, a, n)`; `p` is spelled over `r` and `n`.
+    */
+  def normalScoresSql(p: String): String = {
+    val newton = (1 to FkNewtonSteps).map { i =>
+      s"""nz$i AS (
+         |  SELECT u, p, n, ${NumFns.normQuantileStepSql(s"z${i - 1}", "p")}
+         |    AS z$i
+         |  FROM nz${i - 1}
+         |)""".stripMargin
+    }.mkString(",\n")
+    s"""uc AS (
+       |  SELECT u, CAST(sum(c) AS BIGINT) AS cu FROM cells GROUP BY u
+       |),
+       |rk AS (
+       |  SELECT u, cu,
+       |    CAST(sum(cu) OVER (ORDER BY u) - cu AS DOUBLE)
+       |      + (cu + 1) / 2.0 AS r
+       |  FROM uc
+       |),
+       |tot AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
+       |nz0 AS (
+       |  SELECT u, $p AS p, n,
+       |    ${NumFns.normQuantileStartSql(s"($p)")} AS z0
+       |  FROM rk, tot
+       |),
+       |$newton,
+       |sc AS (SELECT u, z$FkNewtonSteps AS a, n FROM nz$FkNewtonSteps)""".stripMargin
+  }
+
   /** Fligner–Killeen scale test across sources on document length —
     * the RANK-based member completing the variance-test trio
     * (q_bartlett: parametric, sharp under normality;
@@ -1134,10 +1194,7 @@ object Inference {
     * |x − med_g|; X² = Σ n_g(ā_g − ā)²/V, df = k−1. Engine: |x−med_g|
     * has ≤4 decimals (integer lengths, 4-decimal group medians), so
     * the pooled sample collapses to ≤|groups|·|values| cells sharing
-    * one midrank and ONE score each; Φ⁻¹ is the A&S start + 
-    * [[FkNewtonSteps]] Newton steps against the engine-shared CDF
-    * literal, as STEPWISE named columns (z0..z5 — nesting the CDF
-    * would expand the literal exponentially); moments are
+    * one midrank and ONE score each ([[normalScores]]); moments are
     * DECIMAL-folded cell sums. No row is ever ranked, no partitionless
     * window exceeds the value-cell domain.
     */
@@ -1149,24 +1206,7 @@ object Inference {
       .groupBy(col("source"), abs(col("n_chars") - col("med")).as("u"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    // pooled midrank per value cell: value-domain window over u
-    val uc = cells.groupBy(col("u")).agg(sum(col("c")).as("cu"))
-      .withColumn("cum", sum(col("cu")).over(Window.orderBy(col("u"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("r", (col("cum") - col("cu")).cast("double")
-        + (col("cu") + 1).cast("double") / 2)
-    val tot = uc.agg(sum(col("cu")).as("n"))
-    val scored0 = uc.crossJoin(broadcast(tot))
-      .withColumn("p", (lit(1.0) + col("r") / (col("n") + 1)) / 2)
-      .withColumn("z0", NumFns.normQuantileStart(col("p")))
-    val scored = (1 to FkNewtonSteps).foldLeft(scored0) { (df, i) =>
-      df.withColumn(s"z$i",
-        NumFns.normQuantileStep(col(s"z${i - 1}"), col("p")))
-    }.withColumn("a", col(s"z$FkNewtonSteps"))
-      .select(col("u"), col("a"), col("n"))
-      // r12 (guide §1.2): withScores feeds BOTH grp and glob — without
-      // this the Newton-scores pipeline planned and ran twice
-      .localCheckpoint()
+    val scored = normalScores(cells, (lit(1.0) + col("r") / (col("n") + 1)) / 2)
     val withScores = cells.join(broadcast(scored), Seq("u"))
     val grp = withScores.groupBy(col("source"))
       .agg(sum(col("c")).as("ng"), sum((col("c") * col("a")).cast(Dec12)).as("sa"))
@@ -1187,14 +1227,7 @@ object Inference {
       .withColumn("reject_equal_scale", col("fk_stat") > FkCrit19)
   }
 
-  val qFlignerKilleenOracle: String = {
-    val newton = (1 to FkNewtonSteps).map { i =>
-      s"""nz$i AS (
-         |  SELECT u, cu, p, n,
-         |    ${NumFns.normQuantileStepSql(s"z${i - 1}", "p")} AS z$i
-         |  FROM nz${i - 1}
-         |)""".stripMargin
-    }.mkString(",\n")
+  val qFlignerKilleenOracle: String =
     s"""WITH med AS (
        |  SELECT source, round(quantile_cont(n_chars, 0.5), 4) AS med
        |  FROM documents GROUP BY source
@@ -1204,23 +1237,7 @@ object Inference {
        |  FROM documents d JOIN med m ON d.source = m.source
        |  GROUP BY 1, 2
        |),
-       |uc AS (
-       |  SELECT u, CAST(sum(c) AS BIGINT) AS cu FROM cells GROUP BY u
-       |),
-       |rk AS (
-       |  SELECT u, cu,
-       |    CAST(sum(cu) OVER (ORDER BY u) - cu AS DOUBLE)
-       |      + (cu + 1) / 2.0 AS r
-       |  FROM uc
-       |),
-       |tot AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
-       |nz0 AS (
-       |  SELECT u, cu, (1.0 + r / (n + 1)) / 2 AS p, n,
-       |    ${NumFns.normQuantileStartSql("((1.0 + r / (n + 1)) / 2)")} AS z0
-       |  FROM rk, tot
-       |),
-       |$newton,
-       |sc AS (SELECT u, z$FkNewtonSteps AS a, n FROM nz$FkNewtonSteps),
+       |${normalScoresSql("(1.0 + r / (n + 1)) / 2")},
        |ws AS (
        |  SELECT cells.source, cells.c, sc.a, sc.n
        |  FROM cells JOIN sc ON cells.u = sc.u
@@ -1254,7 +1271,6 @@ object Inference {
             "num / ((saa - n * abar * abar) / (n - 1))", 6)} > $FkCrit19
        |    AS reject_equal_scale
        |FROM ag""".stripMargin
-  }
 
   // ------------------------------------------------------------ TOST
 
@@ -1501,32 +1517,15 @@ object Inference {
     * Kruskal–Wallis's rank robustness (scores are Φ⁻¹(r/(N+1)) of the
     * pooled midranks of x itself, not of |x−med|). X² = Σ n_g ā_g²/s²
     * with s² = Σa²/(N−1), df = k−1, gated on the same χ²₁₉ literal.
-    * Engine: identical machinery to Fligner–Killeen — bounded value
-    * cells, one midrank window, A&S start + [[FkNewtonSteps]] stepwise
-    * Newton columns, DECIMAL-folded moments.
+    * Engine: value cells of x scored by [[normalScores]], then
+    * DECIMAL-folded moments.
     */
   def qVanDerWaerden(s: SparkSession, dir: String): DataFrame = {
     val cells = Tables.documents(s, dir)
       .groupBy(col("source"), col("n_chars").as("u"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    val uc = cells.groupBy(col("u")).agg(sum(col("c")).as("cu"))
-      .withColumn("cum", sum(col("cu")).over(Window.orderBy(col("u"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("r", (col("cum") - col("cu")).cast("double")
-        + (col("cu") + 1).cast("double") / 2)
-    val tot = uc.agg(sum(col("cu")).as("n"))
-    val scored0 = uc.crossJoin(broadcast(tot))
-      .withColumn("p", col("r") / (col("n") + 1))
-      .withColumn("z0", NumFns.normQuantileStart(col("p")))
-    val scored = (1 to FkNewtonSteps).foldLeft(scored0) { (df, i) =>
-      df.withColumn(s"z$i",
-        NumFns.normQuantileStep(col(s"z${i - 1}"), col("p")))
-    }.withColumn("a", col(s"z$FkNewtonSteps"))
-      .select(col("u"), col("a"), col("n"))
-      // r12 (guide §1.2): ws feeds BOTH grp and glob — without this the
-      // Newton-scores pipeline (window + broadcast) planned and ran twice
-      .localCheckpoint()
+    val scored = normalScores(cells, col("r") / (col("n") + 1))
     val ws = cells.join(broadcast(scored), Seq("u"))
     val grp = ws.groupBy(col("source"))
       .agg(sum(col("c")).as("ng"), sum((col("c") * col("a")).cast(Dec12)).as("sa"))
@@ -1544,35 +1543,12 @@ object Inference {
       .withColumn("reject_equal_location", col("vdw_stat") > FkCrit19)
   }
 
-  val qVanDerWaerdenOracle: String = {
-    val newton = (1 to FkNewtonSteps).map { i =>
-      s"""nz$i AS (
-         |  SELECT u, p, n, ${NumFns.normQuantileStepSql(s"z${i - 1}", "p")}
-         |    AS z$i
-         |  FROM nz${i - 1}
-         |)""".stripMargin
-    }.mkString(",\n")
+  val qVanDerWaerdenOracle: String =
     s"""WITH cells AS MATERIALIZED (
        |  SELECT source, n_chars AS u, count(*) AS c
        |  FROM documents GROUP BY 1, 2
        |),
-       |uc AS (
-       |  SELECT u, CAST(sum(c) AS BIGINT) AS cu FROM cells GROUP BY u
-       |),
-       |rk AS (
-       |  SELECT u, cu,
-       |    CAST(sum(cu) OVER (ORDER BY u) - cu AS DOUBLE)
-       |      + (cu + 1) / 2.0 AS r
-       |  FROM uc
-       |),
-       |tot AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
-       |nz0 AS (
-       |  SELECT u, r / (n + 1) AS p, n,
-       |    ${NumFns.normQuantileStartSql("(r / (n + 1))")} AS z0
-       |  FROM rk, tot
-       |),
-       |$newton,
-       |sc AS (SELECT u, z$FkNewtonSteps AS a, n FROM nz$FkNewtonSteps),
+       |${normalScoresSql("r / (n + 1)")},
        |ws AS (
        |  SELECT cells.source, cells.c, sc.a, sc.n
        |  FROM cells JOIN sc ON cells.u = sc.u
@@ -1598,5 +1574,4 @@ object Inference {
        |  ${NumFns.roundPortableSql("num / (saa / (n - 1))", 6)} > $FkCrit19
        |    AS reject_equal_location
        |FROM ag""".stripMargin
-  }
 }

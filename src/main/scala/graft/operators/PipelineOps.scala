@@ -385,42 +385,55 @@ object PipelineOps {
        |FROM g
        |ORDER BY part""".stripMargin
 
-  /** Per-source compressibility proxy: the unique-3-gram ratio
-    * (distinct shingles ÷ total shingles WITH multiplicity). Highly
-    * templated/boilerplate sources score low, natural prose scores high
-    * — a one-pass corpus-quality signal that approximates what a gzip
-    * probe would say without decompressing anything. The explode
-    * shuffles bare (source, hash28) longs; distinct counting is the
-    * standard two-phase rewrite (approx_count_distinct is the no-Expand
-    * 100 TB swap-in).
+  /** Per-source word-trigram hashes `(source, g)`, one row per shingle
+    * occurrence of every document with at least three tokens (hash28 of
+    * the space-joined trigram), shared by [[qCompressRatio]] and
+    * [[qCompressRatioApprox]].
     */
-  def qCompressRatio(s: SparkSession, dir: String): DataFrame = {
-    val t = TextFns.tokens(col("text"))
+  def trigramHashes(docs: DataFrame): DataFrame = {
     val grams = transform(
       sequence(lit(0), size(col("t")) - 3),
       i => TextFns.hash28(concat_ws(" ",
         element_at(col("t"), i + 1), element_at(col("t"), i + 2),
         element_at(col("t"), i + 3))))
-    Tables.documents(s, dir)
-      .select(col("source"), t.as("t"))
+    docs.select(col("source"), TextFns.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("source"), explode(grams).as("g"))
+  }
+
+  /** SQL twin of [[trigramHashes]]: CTEs `t` and `g(source, g)` over
+    * `documents`.
+    */
+  private val trigramHashesSql: String =
+    s"""t AS (SELECT source, ${TextFns.toksSql} AS t FROM documents),
+       |g AS (
+       |  SELECT source,
+       |    unnest(list_transform(range(1, len(t) - 1),
+       |      i -> ${TextFns.hash28Sql("t[i] || ' ' || t[i+1] || ' ' || t[i+2]")})) AS g
+       |  FROM t WHERE len(t) >= 3
+       |)""".stripMargin
+
+  /** Per-source compressibility proxy: the unique-3-gram ratio
+    * (distinct shingles ÷ total shingles WITH multiplicity). Highly
+    * templated/boilerplate sources score low, natural prose scores high
+    * — a one-pass corpus-quality signal that approximates what a gzip
+    * probe would say without decompressing anything. The
+    * [[trigramHashes]] explode
+    * shuffles bare (source, hash28) longs; distinct counting is the
+    * standard two-phase rewrite (approx_count_distinct is the no-Expand
+    * 100 TB swap-in).
+    */
+  def qCompressRatio(s: SparkSession, dir: String): DataFrame =
+    trigramHashes(Tables.documents(s, dir))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_grams"), countDistinct(col("g")).as("n_unique"))
       .select(col("source"), col("n_grams"), col("n_unique"),
         NumFns.roundPortable(
           col("n_unique").cast("double") / col("n_grams"), 6).as("unique_ratio"))
       .orderBy(col("source"))
-  }
 
   val qCompressRatioOracle: String =
-    s"""WITH t AS (SELECT source, ${TextFns.toksSql} AS t FROM documents),
-       |g AS (
-       |  SELECT source,
-       |    unnest(list_transform(range(1, len(t) - 1),
-       |      i -> ${TextFns.hash28Sql("t[i] || ' ' || t[i+1] || ' ' || t[i+2]")})) AS g
-       |  FROM t WHERE len(t) >= 3
-       |),
+    s"""WITH $trigramHashesSql,
        |a AS (
        |  SELECT source, count(*) AS n_grams, count(DISTINCT g) AS n_unique
        |  FROM g GROUP BY 1
@@ -433,25 +446,16 @@ object PipelineOps {
   /** The certified-approx form of [[qCompressRatio]] — the shape you
     * actually run at 100 TB, where the exact per-source distinct count
     * shuffles every (source, shingle) pair: `approx_count_distinct`
-    * (HLL++, rsd 2 %) rides the SAME single-pass aggregate as the
-    * multiplicity count — one scan, fixed sketch state per source, no
-    * dedup shuffle. Gated by the [[Sketches]] self-certification
+    * (HLL++, rsd 2 %) rides the SAME single-pass aggregate over the
+    * [[trigramHashes]] as the multiplicity count — one scan, fixed
+    * sketch state per source, no dedup shuffle. Gated by the [[Sketches]] self-certification
     * contract: the output carries the exact twin (which the oracle
     * recomputes independently) plus `within_bound` asserting the sketch
     * landed within [[Sketches.DistinctBound]] (5 % ≈ 2.5σ) of it — a
     * drifting sketch flips the boolean and reds the row.
     */
   def qCompressRatioApprox(s: SparkSession, dir: String): DataFrame = {
-    val t = TextFns.tokens(col("text"))
-    val grams = transform(
-      sequence(lit(0), size(col("t")) - 3),
-      i => TextFns.hash28(concat_ws(" ",
-        element_at(col("t"), i + 1), element_at(col("t"), i + 2),
-        element_at(col("t"), i + 3))))
-    val gr = Tables.documents(s, dir)
-      .select(col("source"), t.as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("source"), explode(grams).as("g"))
+    val gr = trigramHashes(Tables.documents(s, dir))
       .localCheckpoint() // the one-pass approx agg AND the exact twin
     val approx = gr.groupBy(col("source"))
       .agg(count(lit(1)).as("n_grams"),
@@ -469,13 +473,7 @@ object PipelineOps {
   }
 
   val qCompressRatioApproxOracle: String =
-    s"""WITH t AS (SELECT source, ${TextFns.toksSql} AS t FROM documents),
-       |g AS (
-       |  SELECT source,
-       |    unnest(list_transform(range(1, len(t) - 1),
-       |      i -> ${TextFns.hash28Sql("t[i] || ' ' || t[i+1] || ' ' || t[i+2]")})) AS g
-       |  FROM t WHERE len(t) >= 3
-       |),
+    s"""WITH $trigramHashesSql,
        |a AS (
        |  SELECT source, count(*) AS n_grams, count(DISTINCT g) AS n_unique
        |  FROM g GROUP BY 1

@@ -2584,22 +2584,20 @@ object Profiling {
        |  jb_stat <= 5.9915 AS normal_at_5pct
        |FROM r""".stripMargin
 
-  /** Kruskal–Wallis rank test of document length across sources — the
-    * k-group generalization of q_mann_whitney (and the nonparametric
-    * companion to q_anova's F): "do the sources draw lengths from the
-    * same distribution?" robust to the heavy tail that invalidates the
-    * parametric read. Ranks are NEVER materialized per row: lengths
-    * collapse to (value, source) cells, global midranks come from an
-    * exclusive prefix over the value-cell aggregate (bounded by the
-    * length domain — a few thousand distinct values at ANY corpus
-    * size), and each group's rank sum R_j is Σ c_vs·midrank_v over the
-    * broadcast-joined cell frames. Midranks are exact half-integers in
-    * doubles; rank sums DECIMAL-fold; the tie correction's cube sums
-    * ride DECIMAL(38,0)/HUGEINT (n³ at corpus scale).
+  /** Rank sums of document length per source, the frame behind
+    * [[qKruskalWallis]] and [[qDunnPosthoc]]. Ranks are NEVER
+    * materialized per row: lengths collapse to (value, source) cells,
+    * global midranks come from an exclusive prefix over the value-cell
+    * aggregate (bounded by the length domain — a few thousand distinct
+    * values at ANY corpus size), and each group's rank sum R_j is
+    * Σ c_vs·midrank_v over the broadcast-joined cell frames. Midranks
+    * are exact half-integers in doubles; rank sums DECIMAL-fold; the
+    * tie term Σ(c³ − c) rides DECIMAL(38,0)/HUGEINT (n³ at corpus
+    * scale). Returns `(source, n_j, r_j)` and the one-row `t`.
     */
-  def qKruskalWallis(s: SparkSession, dir: String): DataFrame = {
+  def rankSums(docs: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val vs = Tables.documents(s, dir)
+    val vs = docs
       .groupBy(col("n_chars").as("v"), col("source"))
       .agg(count(lit(1)).as("c_vs"))
     val cells = vs.groupBy(col("v")).agg(sum(col("c_vs")).as("c_v"))
@@ -2618,6 +2616,45 @@ object Profiling {
     val ties = ranked.agg(
       sum(col("c_v").cast(Dec0) * col("c_v") * col("c_v") - col("c_v"))
         .as("t"))
+    (groups, ties)
+  }
+
+  /** SQL twin of [[rankSums]]: CTEs ending in `groups(source, n_j, r_j)`
+    * and `ties(t)`.
+    */
+  val rankSumsSql: String =
+    """vs AS (
+      |  SELECT n_chars AS v, source, count(*) AS c_vs
+      |  FROM documents GROUP BY 1, 2
+      |),
+      |cells AS (
+      |  SELECT v, CAST(sum(c_vs) AS BIGINT) AS c_v FROM vs GROUP BY 1
+      |),
+      |ranked AS (
+      |  SELECT v,
+      |    CAST(coalesce(sum(c_v) OVER (ORDER BY v
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS DOUBLE)
+      |      + (c_v + 1) / 2.0 AS midrank,
+      |    c_v
+      |  FROM cells
+      |),
+      |groups AS (
+      |  SELECT source, CAST(sum(c_vs) AS BIGINT) AS n_j,
+      |    CAST(sum(CAST(c_vs * midrank AS DECIMAL(38,12))) AS DOUBLE) AS r_j
+      |  FROM vs JOIN ranked USING (v) GROUP BY 1
+      |),
+      |ties AS (
+      |  SELECT sum(CAST(c_v AS HUGEINT) * c_v * c_v - c_v) AS t FROM ranked
+      |)""".stripMargin
+
+  /** Kruskal–Wallis rank test of document length across sources — the
+    * k-group generalization of q_mann_whitney (and the nonparametric
+    * companion to q_anova's F): "do the sources draw lengths from the
+    * same distribution?" robust to the heavy tail that invalidates the
+    * parametric read. The rank sums and tie term are [[rankSums]].
+    */
+  def qKruskalWallis(s: SparkSession, dir: String): DataFrame = {
+    val (groups, ties) = rankSums(Tables.documents(s, dir))
     val tot = groups.agg(count(lit(1)).as("k"), sum(col("n_j")).as("nn"),
       sum((col("r_j") * col("r_j") / col("n_j")).cast(Dec12)).cast("double")
         .as("rr"))
@@ -2632,29 +2669,7 @@ object Profiling {
   }
 
   val qKruskalWallisOracle: String =
-    s"""WITH vs AS (
-       |  SELECT n_chars AS v, source, count(*) AS c_vs
-       |  FROM documents GROUP BY 1, 2
-       |),
-       |cells AS (
-       |  SELECT v, CAST(sum(c_vs) AS BIGINT) AS c_v FROM vs GROUP BY 1
-       |),
-       |ranked AS (
-       |  SELECT v,
-       |    CAST(coalesce(sum(c_v) OVER (ORDER BY v
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS DOUBLE)
-       |      + (c_v + 1) / 2.0 AS midrank,
-       |    c_v
-       |  FROM cells
-       |),
-       |groups AS (
-       |  SELECT source, CAST(sum(c_vs) AS BIGINT) AS n_j,
-       |    CAST(sum(CAST(c_vs * midrank AS DECIMAL(38,12))) AS DOUBLE) AS r_j
-       |  FROM vs JOIN ranked USING (v) GROUP BY 1
-       |),
-       |ties AS (
-       |  SELECT sum(CAST(c_v AS HUGEINT) * c_v * c_v - c_v) AS t FROM ranked
-       |),
+    s"""WITH $rankSumsSql,
        |tot AS (
        |  SELECT count(*) AS k, CAST(sum(n_j) AS BIGINT) AS nn,
        |    CAST(sum(CAST(r_j * r_j / n_j AS DECIMAL(38,12))) AS DOUBLE) AS rr
@@ -3106,35 +3121,17 @@ object Profiling {
     * says "SOME source differs" in document length; Dunn says WHICH
     * pairs, with the tie-corrected rank-variance and BH-FDR control
     * across the ≤C(k,2) comparisons — the drill-down that turns an
-    * omnibus alarm into a work list. Shape: the midrank machinery is
-    * the KW cell frame verbatim (value cells + exclusive prefix —
-    * never a row-scale rank); per-source mean ranks are a dimension
-    * aggregate, the pair frame is k²-bounded, and BH ranks by |z|
-    * (bit-identical) with p only compared against thresholds — the
-    * q_bh_fdr discipline.
+    * omnibus alarm into a work list. Shape: the per-source rank sums
+    * are [[rankSums]]; mean ranks are a dimension aggregate, the pair
+    * frame is k²-bounded, and BH ranks by |z| (bit-identical) with p
+    * only compared against thresholds — the q_bh_fdr discipline.
     */
   def qDunnPosthoc(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vs = Tables.documents(s, dir)
-      .groupBy(col("n_chars").as("v"), col("source"))
-      .agg(count(lit(1)).as("c_vs"))
-    val cells = vs.groupBy(col("v")).agg(sum(col("c_vs")).as("c_v"))
-    val wv = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = cells
-      .withColumn("before", coalesce(sum(col("c_v")).over(wv), lit(0L)))
-      .select(col("v"),
-        (col("before").cast("double") + (col("c_v") + 1) / 2.0).as("midrank"),
-        col("c_v"))
-    val groups = vs.join(broadcast(ranked.select(col("v"), col("midrank"))),
-        "v")
-      .groupBy(col("source"))
-      .agg(sum(col("c_vs")).as("n_j"),
-        (sum((col("c_vs") * col("midrank")).cast(Dec12)).cast("double")
-          / sum(col("c_vs"))).as("rbar"))
+    val (sums, ties) = rankSums(Tables.documents(s, dir))
+    val groups = sums
+      .select(col("source"), col("n_j"), (col("r_j") / col("n_j")).as("rbar"))
       .localCheckpoint() // ≤|sources| rows; feeds both pair sides
-    val ties = ranked.agg(
-      sum(col("c_v").cast(Dec0) * col("c_v") * col("c_v") - col("c_v")).as("t"))
     val tot = groups.agg(sum(col("n_j")).as("nn"))
     val pairs = groups.select(col("source").as("src_a"),
         col("n_j").as("na"), col("rbar").as("ra"))
@@ -3165,41 +3162,16 @@ object Profiling {
   }
 
   val qDunnPosthocOracle: String =
-    s"""WITH vs AS (
-       |  SELECT n_chars AS v, source, count(*) AS c_vs
-       |  FROM documents GROUP BY 1, 2
-       |),
-       |cells AS (
-       |  SELECT v, CAST(sum(c_vs) AS BIGINT) AS c_v FROM vs GROUP BY 1
-       |),
-       |ranked AS (
-       |  SELECT v,
-       |    CAST(coalesce(sum(c_v) OVER (ORDER BY v
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS DOUBLE)
-       |      + (c_v + 1) / 2.0 AS midrank,
-       |    c_v
-       |  FROM cells
-       |),
-       |groups AS (
-       |  SELECT source, CAST(sum(c_vs) AS BIGINT) AS n_j,
-       |    CAST(sum(CAST(c_vs * midrank AS DECIMAL(38,12))) AS DOUBLE)
-       |      / sum(c_vs) AS rbar
-       |  FROM vs JOIN ranked USING (v) GROUP BY 1
-       |),
-       |tiesq AS (
-       |  SELECT CAST(sum(CAST(c_v AS HUGEINT) * c_v * c_v - c_v) AS DOUBLE)
-       |    AS t
-       |  FROM ranked
-       |),
+    s"""WITH $rankSumsSql,
        |tt AS (SELECT CAST(sum(n_j) AS BIGINT) AS nn FROM groups),
        |pr AS (
        |  SELECT a.source AS src_a, b.source AS src_b,
-       |    (a.rbar - b.rbar) / sqrt(
+       |    (a.r_j / a.n_j - b.r_j / b.n_j) / sqrt(
        |      (CAST(nn AS DOUBLE) * (nn + 1.0) / 12.0
-       |        - t / (12.0 * (nn - 1.0)))
+       |        - CAST(t AS DOUBLE) / (12.0 * (nn - 1.0)))
        |      * (1.0 / a.n_j + 1.0 / b.n_j)) AS z
        |  FROM groups a JOIN groups b ON a.source < b.source
-       |  CROSS JOIN tt CROSS JOIN tiesq
+       |  CROSS JOIN tt CROSS JOIN ties
        |),
        |r AS (
        |  SELECT src_a, src_b, z,
@@ -3873,7 +3845,8 @@ object Profiling {
     * dose-response direction a pricing team actually asks about.
     * Shape: ≤50 (quantity → [returns, total]) cells from one scan;
     * every sum is exact DECIMAL(38,0)/HUGEINT integers with cleared
-    * denominators; z/p scalar after.
+    * denominators; z/p scalar after, with the
+    * [[Temporal.trendVerdict]] the Mann–Kendall tests share.
     */
   def qCochranArmitage(s: SparkSession, dir: String): DataFrame = {
     val cells = Tables.lineitem(s, dir)
@@ -3893,12 +3866,8 @@ object Profiling {
     val varS = (col("nn") * col("nss") - col("ns") * col("ns")).cast("double")
     val z = tN / nD /
       sqrt(pbar * (lit(1.0) - pbar) * (varS / nD))
-    m.select(col("k").as("n_levels"), col("nn").cast("long").as("n_rows"),
-      NumFns.roundPortable(pbar, 6).as("overall_rate"),
-      NumFns.roundPortable(z, 4).as("z"),
-      NumFns.roundPortable(NumFns.normTwoSidedP(z), 6).as("p_value"),
-      when(z > 1.96, "increasing").when(z < -1.96, "decreasing")
-        .otherwise("none").as("trend"))
+    m.select(Seq(col("k").as("n_levels"), col("nn").cast("long").as("n_rows"),
+      NumFns.roundPortable(pbar, 6).as("overall_rate")) ++ Temporal.trendVerdict(z): _*)
   }
 
   val qCochranArmitageOracle: String =
@@ -3931,10 +3900,6 @@ object Profiling {
        |)
        |SELECT k AS n_levels, CAST(nn AS BIGINT) AS n_rows,
        |  ${NumFns.roundPortableSql("pbar", 6)} AS overall_rate,
-       |  ${NumFns.roundPortableSql("z", 4)} AS z,
-       |  ${NumFns.roundPortableSql(NumFns.normTwoSidedPSql("z"), 6)}
-       |    AS p_value,
-       |  CASE WHEN z > 1.96 THEN 'increasing'
-       |    WHEN z < -1.96 THEN 'decreasing' ELSE 'none' END AS trend
+       |  ${Temporal.trendVerdictSql("z")}
        |FROM zz""".stripMargin
 }

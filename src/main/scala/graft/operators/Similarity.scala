@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -187,63 +187,70 @@ object Similarity {
        |WHERE round(${dotSql("a.v", "b.v")} / (sqrt(a.nsq) * sqrt(b.nsq)), 4) >= $NearDupThreshold
        |ORDER BY vec_id_a, vec_id_b""".stripMargin
 
-  /** Brute-force cosine top-5: the exact baseline. The query set is tiny
-    * and broadcast; the corpus streams past it in one scan — no shuffle
-    * of the corpus, only of the per-query candidate heaps.
+  /** Exact cosine top-`k` over a blocked candidate set — the one
+    * operator behind [[qAnnTopk]], [[qAnnLsh]] and [[qAnnIvf]], which
+    * differ only in the candidate blocker and `k`. The query set (the
+    * first ten vectors) is tiny and broadcast; each query scores the
+    * corpus rows that pass `block` (spelled over aliases `a`, the
+    * query, and `b`, the candidate) other than itself, and keeps its
+    * `k` best by (sim desc, neighbor_id): a tie at the cutoff keeps the
+    * smaller neighbor id, and ranks run 1..k with no gap. `corpus`
+    * carries vec_id, v and nsq.
     */
-  def qAnnTopk(s: SparkSession, dir: String): DataFrame = {
-    val e = prepared(s, dir)
-    val q = e.filter(col("vec_id") < 10)
+  def annTopk(corpus: DataFrame, block: Column, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q).as("a").join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
+    broadcast(corpus.filter(col("vec_id") < 10)).as("a").join(corpus.as("b"),
+        block && col("a.vec_id") =!= col("b.vec_id"))
       .select(
         col("a.vec_id").as("query_id"),
         col("b.vec_id").as("neighbor_id"),
         simCol.as("sim"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+      .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
       .orderBy(col("query_id"), col("rank"))
   }
 
-  val qAnnTopkOracle: String =
-    s"""WITH $preparedSql,
-       |q AS (SELECT * FROM n WHERE vec_id < 10),
+  /** SQL twin of [[annTopk]]: CTEs `q` and `p` over the CTE `corpus`,
+    * then the ranked select; `block` is spelled over `q` and `b`.
+    */
+  private def annTopkSql(corpus: String, block: String, k: Int): String =
+    s"""q AS (SELECT * FROM $corpus WHERE vec_id < 10),
        |p AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    round(${dotSql("q.v", "c.v")} / (sqrt(q.nsq) * sqrt(c.nsq)), 4) AS sim
-       |  FROM q JOIN n c ON c.vec_id != q.vec_id
+       |  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
+       |    round(${dotSql("q.v", "b.v")} / (sqrt(q.nsq) * sqrt(b.nsq)), 4) AS sim
+       |  FROM q JOIN $corpus b ON $block AND b.vec_id != q.vec_id
        |)
        |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, sim FROM (
        |  SELECT query_id, neighbor_id, sim,
        |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
        |  FROM p) t
-       |WHERE rank <= 5
+       |WHERE rank <= $k
        |ORDER BY query_id, rank""".stripMargin
+
+  /** Brute-force cosine top-5: the exact baseline — [[annTopk]] with no
+    * blocker. The corpus streams past the broadcast query set in one
+    * scan — no shuffle of the corpus, only of the per-query candidate
+    * heaps.
+    */
+  def qAnnTopk(s: SparkSession, dir: String): DataFrame =
+    annTopk(prepared(s, dir), lit(true), 5)
+
+  val qAnnTopkOracle: String =
+    s"""WITH $preparedSql,
+       |${annTopkSql("n", "true", 5)}""".stripMargin
 
   /** LSH-bucketed ANN: 8 deterministic integer hyperplanes → 256 buckets;
     * each query only scores its own bucket (~1/256 of the corpus), then
     * takes top-3. This is the plan shape that survives 100 TB: bucket
     * assignment is scan-side, the join is bucket-equality (shuffle on an
     * 8-bit key with AQE skew handling), and per-bucket brute force is
-    * bounded.
+    * bounded: [[annTopk]] blocked on the bucket.
     */
-  def qAnnLsh(s: SparkSession, dir: String): DataFrame = {
-    val e = prepared(s, dir)
-      .withColumn("bucket", VectorFns.lshBucket(col("v"), Planes, Dims))
-    val q = e.filter(col("vec_id") < 10)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q).as("a").join(e.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(
-        col("a.vec_id").as("query_id"),
-        col("b.vec_id").as("neighbor_id"),
-        simCol.as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def qAnnLsh(s: SparkSession, dir: String): DataFrame =
+    annTopk(prepared(s, dir)
+        .withColumn("bucket", VectorFns.lshBucket(col("v"), Planes, Dims)),
+      col("a.bucket") === col("b.bucket"), 3)
 
   /** IVF-style ANN: the corpus is partitioned into cells around seed
     * centroids (deterministically the first `NumCentroids` vectors);
@@ -294,37 +301,16 @@ object Similarity {
        |),
        |cells AS (SELECT vec_id, v, nsq, cent_id AS cell FROM a WHERE rk = 1)""".stripMargin
 
-  def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val cells = cellAssigned(s, dir)
-    val q = cells.filter(col("vec_id") < 10)
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q).as("a").join(cells.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(
-        col("a.vec_id").as("query_id"),
-        col("b.vec_id").as("neighbor_id"),
-        simCol.as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+  /** IVF probe: [[annTopk]] over the [[cellAssigned]] corpus, blocked on
+    * the cell.
+    */
+  def qAnnIvf(s: SparkSession, dir: String): DataFrame =
+    annTopk(cellAssigned(s, dir), col("a.cell") === col("b.cell"), 3)
 
   val qAnnIvfOracle: String =
     s"""WITH $preparedSql,
        |$cellsSql,
-       |q AS (SELECT * FROM cells WHERE vec_id < 10),
-       |p AS (
-       |  SELECT q.vec_id AS query_id, c2.vec_id AS neighbor_id,
-       |    round(${dotSql("q.v", "c2.v")} / (sqrt(q.nsq) * sqrt(c2.nsq)), 4) AS sim
-       |  FROM q JOIN cells c2 ON c2.cell = q.cell AND c2.vec_id != q.vec_id
-       |)
-       |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, sim FROM (
-       |  SELECT query_id, neighbor_id, sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-       |  FROM p) t
-       |WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin
+       |${annTopkSql("cells", "b.cell = q.cell", 3)}""".stripMargin
 
   private def lshBucketSql: String =
     (0 until Planes).map { j =>
@@ -333,23 +319,10 @@ object Similarity {
       s"CASE WHEN $proj > 0 THEN ${1L << j} ELSE 0 END"
     }.mkString(" + ")
 
-  val qAnnLshOracle: String = {
-    val bucket = lshBucketSql
+  val qAnnLshOracle: String =
     s"""WITH $preparedSql,
-       |bk AS (SELECT vec_id, v, nsq, $bucket AS bucket FROM n),
-       |q AS (SELECT * FROM bk WHERE vec_id < 10),
-       |p AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    round(${dotSql("q.v", "c.v")} / (sqrt(q.nsq) * sqrt(c.nsq)), 4) AS sim
-       |  FROM q JOIN bk c ON c.bucket = q.bucket AND c.vec_id != q.vec_id
-       |)
-       |SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, sim FROM (
-       |  SELECT query_id, neighbor_id, sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-       |  FROM p) t
-       |WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin
-  }
+       |bk AS (SELECT vec_id, v, nsq, $lshBucketSql AS bucket FROM n),
+       |${annTopkSql("bk", "b.bucket = q.bucket", 3)}""".stripMargin
 
   /** RRF smoothing constant — the standard k=60 from the original
     * reciprocal-rank-fusion formulation.
@@ -433,36 +406,11 @@ object Similarity {
       .orderBy(col("query_id"))
   }
 
-  val qAnnRecallOracle: String = {
-    val bucket = lshBucketSql
-    s"""WITH $preparedSql,
-       |q AS (SELECT * FROM n WHERE vec_id < 10),
-       |bp AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    round(${dotSql("q.v", "c.v")} / (sqrt(q.nsq) * sqrt(c.nsq)), 4) AS sim
-       |  FROM q JOIN n c ON c.vec_id != q.vec_id
+  val qAnnRecallOracle: String =
+    s"""WITH bt AS (
+       |  SELECT query_id, neighbor_id FROM ($qAnnTopkOracle) WHERE rank <= 3
        |),
-       |bt AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-       |    FROM bp) t
-       |  WHERE rank <= 3
-       |),
-       |bk AS (SELECT vec_id, v, nsq, $bucket AS bucket FROM n),
-       |qb AS (SELECT * FROM bk WHERE vec_id < 10),
-       |lp AS (
-       |  SELECT qb.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    round(${dotSql("qb.v", "c.v")} / (sqrt(qb.nsq) * sqrt(c.nsq)), 4) AS sim
-       |  FROM qb JOIN bk c ON c.bucket = qb.bucket AND c.vec_id != qb.vec_id
-       |),
-       |lt AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-       |    FROM lp) t
-       |  WHERE rank <= 3
-       |)
+       |lt AS (SELECT query_id, neighbor_id FROM ($qAnnLshOracle))
        |SELECT bt.query_id, count(*) AS n_true,
        |  CAST(sum(CASE WHEN lt.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
        |  round(CAST(sum(CASE WHEN lt.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -471,7 +419,6 @@ object Similarity {
        |LEFT JOIN lt ON lt.query_id = bt.query_id AND lt.neighbor_id = bt.neighbor_id
        |GROUP BY bt.query_id
        |ORDER BY bt.query_id""".stripMargin
-  }
 
   /** Per-label centroid, emitted FLAT as (label, pos, n_vecs, cx) rows —
     * 1-based dimension index. The scalable shape for averaging vectors:
@@ -1199,9 +1146,9 @@ object Similarity {
     * against the full-dimension ground truth: would serving the first 32
     * of 64 dims (half the memory, half the FLOPs per probe) still return
     * the right neighbors? The question every embedding-serving stack
-    * asks before adopting MRL-style truncation. Both sides are the
-    * bounded-query brute-force shape of q_ann_topk (queries broadcast,
-    * corpus scanned once per index); the truncated side recomputes norms
+    * asks before adopting MRL-style truncation. Both sides are
+    * [[annTopk]] with no blocker (queries broadcast, corpus scanned
+    * once per index); the truncated side recomputes norms
     * over the prefix — a truncated vector is NOT unit even when the full
     * one is. At 100 TB the truncated probe is the cheap first pass of a
     * two-stage cascade (prefix scan → full rerank of survivors), and
@@ -1210,24 +1157,11 @@ object Similarity {
   def qPrefixRecall(s: SparkSession, dir: String): DataFrame = {
     val full = prepared(s, dir)
     val half = full
-      .withColumn("pv", slice(col("v"), 1, PrefixDims))
-      .withColumn("pnsq", VectorFns.normSq(col("pv"), PrefixDims))
-      .select(col("vec_id"), col("pv"), col("pnsq"))
-    def top3(e: DataFrame, vc: String, nc: String): DataFrame = {
-      val q = e.filter(col("vec_id") < 10)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("neighbor_id"))
-      broadcast(q).as("a").join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
-          round(VectorFns.cosineWithNorms(
-            VectorFns.dot(col(s"a.$vc"), col(s"b.$vc")),
-            col(s"a.$nc"), col(s"b.$nc")), 4).as("sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-    }
-    val truth = top3(full, "v", "nsq")
-    val pref = top3(half, "pv", "pnsq").withColumn("hit", lit(1L))
+      .select(col("vec_id"), slice(col("v"), 1, PrefixDims).as("v"))
+      .withColumn("nsq", VectorFns.normSq(col("v"), PrefixDims))
+    val truth = annTopk(full, lit(true), 3).select(col("query_id"), col("neighbor_id"))
+    val pref = annTopk(half, lit(true), 3).select(col("query_id"), col("neighbor_id"))
+      .withColumn("hit", lit(1L))
     truth.join(pref, Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_true"),
@@ -1239,28 +1173,10 @@ object Similarity {
 
   val qPrefixRecallOracle: String =
     s"""WITH $preparedSql,
-       |h AS (SELECT vec_id, v[1:$PrefixDims] AS pv,
-       |  ${dotSql("v[1:" + PrefixDims + "]", "v[1:" + PrefixDims + "]")} AS pnsq FROM n),
-       |ft AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |        round(${dotSql("q.v", "c.v")} / (sqrt(q.nsq) * sqrt(c.nsq)), 4)
-       |          DESC, c.vec_id) AS rank
-       |    FROM (SELECT * FROM n WHERE vec_id < 10) q
-       |    JOIN n c ON c.vec_id != q.vec_id) t
-       |  WHERE rank <= 3
-       |),
-       |pt AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |        round(${dotSql("q.pv", "c.pv")} / (sqrt(q.pnsq) * sqrt(c.pnsq)), 4)
-       |          DESC, c.vec_id) AS rank
-       |    FROM (SELECT * FROM h WHERE vec_id < 10) q
-       |    JOIN h c ON c.vec_id != q.vec_id) t
-       |  WHERE rank <= 3
-       |)
+       |h AS (SELECT vec_id, v[1:$PrefixDims] AS v,
+       |  ${dotSql("v[1:" + PrefixDims + "]", "v[1:" + PrefixDims + "]")} AS nsq FROM n),
+       |ft AS (SELECT query_id, neighbor_id FROM (WITH ${annTopkSql("n", "true", 3)})),
+       |pt AS (SELECT query_id, neighbor_id FROM (WITH ${annTopkSql("h", "true", 3)}))
        |SELECT ft.query_id, count(*) AS n_true,
        |  CAST(sum(CASE WHEN pt.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
        |    AS BIGINT) AS n_hit,

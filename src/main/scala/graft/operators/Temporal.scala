@@ -498,51 +498,41 @@ object Temporal {
     */
   val ChurnHorizonDays = 7L
 
-  /** Kaplan-Meier survival curve over user lifetimes — THE
-    * retention/churn estimator: lifetime = days between a user's first
-    * and last event, churn vs right-censoring decided by
-    * [[ChurnHorizonDays]] against the corpus's last observed day, and
-    * S(t) = Π_{u ≤ t} (1 − d_u/n_u) over event times with the textbook
-    * risk-set accounting (censored lifetimes leave the risk set but
-    * never count as deaths — exactly why naive "fraction retained"
-    * overestimates churn under censoring). Shape: one user-level
-    * aggregate (first/last day), the corpus-end scalar broadcast back,
-    * then everything runs on the duration CELL frame (≤ observed-span
-    * rows): risk sets from an exclusive cumulative window over the
-    * aggregate (plan-audit safe), survival via exp(Σ ln) with each term
-    * an identical rational on both engines and the cumulative window
-    * sequential in frame order — deterministic without stabilization.
+  /** The user-lifetime risk-set frame behind [[qSurvival]] and
+    * [[qNelsonAalen]]: lifetime = days between a user's first and last
+    * event, churn vs right-censoring decided by [[ChurnHorizonDays]]
+    * against the corpus's last observed day. One user-level aggregate
+    * (first/last day), the corpus-end scalar broadcast back, then the
+    * duration CELL frame (≤ observed-span rows) `(t, n_t, d_t,
+    * n_risk)`: `d_t` churned of the `n_t` lifetimes of length t, and
+    * the risk set `n_risk` from an exclusive cumulative window over
+    * the aggregate (plan-audit safe). Censored lifetimes leave the risk
+    * set but never count as deaths.
     */
-  def qSurvival(s: SparkSession, dir: String): DataFrame = {
+  def lifetimes(s: SparkSession, dir: String): DataFrame = {
     val days = Tables.events(s, dir)
       .select(col("user_id"),
         floor(unix_micros(col("ts")) / (86400L * 1000000L)).as("day"))
     val users = days.groupBy(col("user_id"))
       .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day"))
     val corpusEnd = days.agg(max(col("day")).as("end_day"))
-    val lifetimes = users.crossJoin(broadcast(corpusEnd))
+    val spans = users.crossJoin(broadcast(corpusEnd))
       .select((col("last_day") - col("first_day")).as("t"),
         (col("last_day") <= col("end_day") - ChurnHorizonDays).as("churned"))
-    val cells = lifetimes.groupBy(col("t"))
+    val cells = spans.groupBy(col("t"))
       .agg(count(lit(1)).as("n_t"),
         sum(when(col("churned"), 1L).otherwise(0L)).as("d_t"))
     val total = cells.agg(sum(col("n_t")).as("n_users"))
     val wBefore = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, 0)
     cells.crossJoin(broadcast(total))
       .withColumn("n_risk",
         col("n_users") - coalesce(sum(col("n_t")).over(wBefore), lit(0L)))
-      .withColumn("lnterm",
-        log(lit(1.0) - col("d_t") / col("n_risk").cast("double")))
-      .withColumn("survival", round(exp(sum(col("lnterm")).over(wCum)), 6))
-      .select(col("t"), col("n_risk"), col("d_t"), col("n_t"), col("survival"))
-      .orderBy(col("t"))
   }
 
-  val qSurvivalOracle: String =
-    s"""WITH days AS (
+  /** SQL twin of [[lifetimes]]: CTEs ending in `r(t, n_t, d_t, n_risk)`. */
+  val lifetimesSql: String =
+    s"""days AS (
        |  SELECT user_id,
        |    CAST(floor(epoch_us(ts) / 86400000000::BIGINT) AS BIGINT) AS day
        |  FROM events
@@ -569,7 +559,29 @@ object Temporal {
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
        |      AS n_risk
        |  FROM c CROSS JOIN tot
-       |)
+       |)""".stripMargin
+
+  /** Kaplan-Meier survival curve over user lifetimes — THE
+    * retention/churn estimator: S(t) = Π_{u ≤ t} (1 − d_u/n_u) over
+    * event times of the [[lifetimes]] risk sets (censoring is exactly
+    * why naive "fraction retained" overestimates churn). Survival runs
+    * via exp(Σ ln) with each term an identical rational on both
+    * engines and the cumulative window sequential in frame order —
+    * deterministic without stabilization.
+    */
+  def qSurvival(s: SparkSession, dir: String): DataFrame = {
+    val wCum = Window.orderBy(col("t"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    lifetimes(s, dir)
+      .withColumn("lnterm",
+        log(lit(1.0) - col("d_t") / col("n_risk").cast("double")))
+      .withColumn("survival", round(exp(sum(col("lnterm")).over(wCum)), 6))
+      .select(col("t"), col("n_risk"), col("d_t"), col("n_t"), col("survival"))
+      .orderBy(col("t"))
+  }
+
+  val qSurvivalOracle: String =
+    s"""WITH $lifetimesSql
        |SELECT t, n_risk, d_t, n_t,
        |  round(exp(sum(ln(1.0 - d_t / CAST(n_risk AS DOUBLE))) OVER (ORDER BY t
        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6) AS survival
@@ -2906,38 +2918,19 @@ object Temporal {
        |GROUP BY nation
        |ORDER BY nation""".stripMargin
 
-  /** Nelson–Aalen cumulative-hazard estimator over the user-lifetime
+  /** Nelson–Aalen cumulative-hazard estimator over the [[lifetimes]]
     * frame — the hazard-side twin of [[qSurvival]]'s Kaplan–Meier
     * (H(t) = Σ_{s≤t} d_s/n_s vs KM's product form; exp(−H) ≥ KM
     * pointwise, and the gap is the discreteness diagnostic): same
     * cells, different estimator, the way q_seasonal_strength shares
-    * q_seasonal_decompose's frame. Shape: identical to qSurvival —
-    * events collapse to per-user lifetimes, lifetimes to the bounded
-    * event-time cell frame; the cumulative sums are frame-ordered
-    * windows over that aggregate (sequential on both engines), exact
-    * ratios of integers per term.
+    * q_seasonal_decompose's frame. The cumulative sum is a
+    * frame-ordered window over that aggregate (sequential on both
+    * engines), exact ratios of integers per term.
     */
   def qNelsonAalen(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.events(s, dir)
-      .select(col("user_id"),
-        floor(unix_micros(col("ts")) / (86400L * 1000000L)).as("day"))
-    val users = days.groupBy(col("user_id"))
-      .agg(min(col("day")).as("first_day"), max(col("day")).as("last_day"))
-    val corpusEnd = days.agg(max(col("day")).as("end_day"))
-    val lifetimes = users.crossJoin(broadcast(corpusEnd))
-      .select((col("last_day") - col("first_day")).as("t"),
-        (col("last_day") <= col("end_day") - ChurnHorizonDays).as("churned"))
-    val cells = lifetimes.groupBy(col("t"))
-      .agg(count(lit(1)).as("n_t"),
-        sum(when(col("churned"), 1L).otherwise(0L)).as("d_t"))
-    val total = cells.agg(sum(col("n_t")).as("n_users"))
-    val wBefore = Window.orderBy(col("t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, 0)
-    cells.crossJoin(broadcast(total))
-      .withColumn("n_risk",
-        col("n_users") - coalesce(sum(col("n_t")).over(wBefore), lit(0L)))
+    lifetimes(s, dir)
       .withColumn("h_term", col("d_t") / col("n_risk").cast("double"))
       .withColumn("cum_hazard", sum(col("h_term")).over(wCum))
       .select(col("t"), col("n_risk"), col("d_t"),
@@ -2947,34 +2940,7 @@ object Temporal {
   }
 
   val qNelsonAalenOracle: String =
-    s"""WITH days AS (
-       |  SELECT user_id,
-       |    CAST(floor(epoch_us(ts) / 86400000000::BIGINT) AS BIGINT) AS day
-       |  FROM events
-       |),
-       |u AS (
-       |  SELECT user_id, min(day) AS first_day, max(day) AS last_day
-       |  FROM days GROUP BY user_id
-       |),
-       |m AS (SELECT max(day) AS end_day FROM days),
-       |lt AS (
-       |  SELECT last_day - first_day AS t,
-       |    last_day <= end_day - $ChurnHorizonDays AS churned
-       |  FROM u CROSS JOIN m
-       |),
-       |c AS (
-       |  SELECT t, count(*) AS n_t,
-       |    CAST(sum(CASE WHEN churned THEN 1 ELSE 0 END) AS BIGINT) AS d_t
-       |  FROM lt GROUP BY t
-       |),
-       |tot AS (SELECT CAST(sum(n_t) AS BIGINT) AS n_users FROM c),
-       |r AS (
-       |  SELECT t, n_t, d_t,
-       |    n_users - CAST(COALESCE(sum(n_t) OVER (ORDER BY t
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-       |      AS n_risk
-       |  FROM c CROSS JOIN tot
-       |),
+    s"""WITH $lifetimesSql,
        |h AS (
        |  SELECT t, n_risk, d_t,
        |    sum(d_t / CAST(n_risk AS DOUBLE)) OVER (ORDER BY t
@@ -2987,8 +2953,51 @@ object Temporal {
        |FROM h
        |ORDER BY t""".stripMargin
 
+  /** Variance of the Mann–Kendall S over `n` values whose tie groups
+    * give `tieTerm` = Σ c(c−1)(2c+5): (n(n−1)(2n+5) − tieTerm)/18.
+    */
+  def mkVar(n: Column, tieTerm: Column): Column =
+    (n * (n - 1) * (n * 2 + 5) - tieTerm).cast("double") / 18.0
+
+  /** SQL twin of [[mkVar]]. */
+  def mkVarSql(n: String, tieTerm: String): String =
+    s"CAST($n * ($n - 1) * (2 * $n + 5) - $tieTerm AS DOUBLE) / 18.0"
+
+  /** The continuity-corrected Mann–Kendall z of S with variance `v`:
+    * (S ∓ 1)/√v toward zero, and 0 at S = 0.
+    */
+  def mkZ(s: Column, v: Column): Column =
+    when(s > 0, (s - 1).cast("double") / sqrt(v))
+      .when(s < 0, (s + 1).cast("double") / sqrt(v))
+      .otherwise(lit(0.0))
+
+  /** SQL twin of [[mkZ]]. */
+  def mkZSql(s: String, v: String): String =
+    s"""CASE WHEN $s > 0 THEN CAST($s - 1 AS DOUBLE) / sqrt($v)
+       |      WHEN $s < 0 THEN CAST($s + 1 AS DOUBLE) / sqrt($v)
+       |      ELSE 0.0 END""".stripMargin
+
+  /** The `(z, p_value, trend)` verdict of a two-sided trend z at the 5 %
+    * level, shared by the Mann–Kendall tests and
+    * [[Profiling.qCochranArmitage]].
+    */
+  def trendVerdict(z: Column): Seq[Column] = Seq(
+    NumFns.roundPortable(z, 4).as("z"),
+    NumFns.roundPortable(NumFns.normTwoSidedP(z), 6).as("p_value"),
+    when(z > 1.96, "increasing").when(z < -1.96, "decreasing")
+      .otherwise("none").as("trend"))
+
+  /** SQL twin of [[trendVerdict]]. */
+  def trendVerdictSql(z: String): String =
+    s"""${NumFns.roundPortableSql(z, 4)} AS z,
+       |  ${NumFns.roundPortableSql(NumFns.normTwoSidedPSql(z), 6)}
+       |    AS p_value,
+       |  CASE WHEN $z > 1.96 THEN 'increasing'
+       |    WHEN $z < -1.96 THEN 'decreasing' ELSE 'none' END AS trend""".stripMargin
+
   /** Mann–Kendall trend test on daily revenue: S = Σ_{i<j} sign(y_j −
-    * y_i) with the tie-corrected normal variance — the NONPARAMETRIC
+    * y_i) with the tie-corrected normal variance ([[mkVar]], [[mkZ]]) —
+    * the NONPARAMETRIC
     * monotone-trend gate beside the parametric q_dickey_fuller /
     * q_theil_sen pair (no linearity or distribution assumption; a
     * monotone-but-curved drift that OLS under-weights still scores).
@@ -3011,20 +3020,9 @@ object Temporal {
         lit(0L)).as("tie_term"))
     val n = days.agg(count(lit(1)).as("n"))
     val z0 = sStat.crossJoin(broadcast(ties)).crossJoin(broadcast(n))
-      .withColumn("var_s",
-        (col("n") * (col("n") - 1) * (col("n") * 2 + 5) - col("tie_term"))
-          .cast("double") / 18.0)
-      .withColumn("z",
-        when(col("s") > 0, (col("s") - 1).cast("double") / sqrt(col("var_s")))
-          .when(col("s") < 0,
-            (col("s") + 1).cast("double") / sqrt(col("var_s")))
-          .otherwise(lit(0.0)))
-    z0.select(col("n").as("n_days"), col("s").as("s_stat"),
-      NumFns.roundPortable(col("z"), 4).as("z"),
-      NumFns.roundPortable(NumFns.normTwoSidedP(col("z")), 6).as("p_value"),
-      when(col("z") > 1.96, "increasing")
-        .when(col("z") < -1.96, "decreasing")
-        .otherwise("none").as("trend"))
+      .withColumn("var_s", mkVar(col("n"), col("tie_term")))
+      .withColumn("z", mkZ(col("s"), col("var_s")))
+    z0.select(col("n").as("n_days") +: col("s").as("s_stat") +: trendVerdict(col("z")): _*)
   }
 
   val qMannKendallOracle: String =
@@ -3041,22 +3039,11 @@ object Temporal {
        |),
        |nn AS (SELECT count(*) AS n FROM days),
        |zz AS (
-       |  SELECT n, s,
-       |    CASE WHEN s > 0 THEN CAST(s - 1 AS DOUBLE)
-       |        / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term AS DOUBLE)
-       |          / 18.0)
-       |      WHEN s < 0 THEN CAST(s + 1 AS DOUBLE)
-       |        / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term AS DOUBLE)
-       |          / 18.0)
-       |      ELSE 0.0 END AS z
+       |  SELECT n, s, ${mkZSql("s", mkVarSql("n", "tie_term"))} AS z
        |  FROM sp, tt, nn
        |)
        |SELECT n AS n_days, s AS s_stat,
-       |  ${NumFns.roundPortableSql("z", 4)} AS z,
-       |  ${NumFns.roundPortableSql(NumFns.normTwoSidedPSql("z"), 6)}
-       |    AS p_value,
-       |  CASE WHEN z > 1.96 THEN 'increasing'
-       |    WHEN z < -1.96 THEN 'decreasing' ELSE 'none' END AS trend
+       |  ${trendVerdictSql("z")}
        |FROM zz""".stripMargin
 
   /** Lags pooled by [[qLjungBox]]'s portmanteau statistic. */
@@ -3891,23 +3878,21 @@ object Temporal {
        |  z > 1.645 AS increasing_trend
        |FROM zz""".stripMargin
 
-  /** Partial autocorrelation of daily revenue at lags 1..3 via the
-    * closed-form Durbin–Levinson recursion, with the AR-order hint the
-    * raw ACF can't give (an AR(1) series has geometric ACF at ALL lags
-    * but PACF zero past lag 1 — the PACF cutoff IS the model order):
-    * the identification step between q_autocorr (raw ρ) and
-    * q_dickey_fuller (unit root). Shape: one frame-ordered window pass
-    * materializes three lags over the calendar-bounded day aggregate;
-    * each ρ̂ is a DECIMAL-folded product sum; the recursion is scalar
-    * arithmetic spelled identically on both engines.
+  /** The 3-lag design of daily revenue shared by [[qPacf]] and
+    * [[qArOrderAic]]: deviations d = (y − ȳ)/`unit` (ȳ a ratio of exact
+    * integers), one frame-ordered window pass materializing three lags
+    * over the calendar-bounded [[dailyCents]] frame, DECIMAL-folded
+    * product sums, and the closed-form Durbin–Levinson recursion to
+    * lag 3. Returns one row `(n, den, r1, r2, r3, p22, p33)`: den = Σd²,
+    * r_k the autocorrelations, p22/p33 the partial ones.
     */
-  def qPacf(s: SparkSession, dir: String): DataFrame = {
+  def lagDesign(s: SparkSession, dir: String, unit: Double): DataFrame = {
     val days = dailyCents(s, dir)
     val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
     val w = Window.orderBy(col("di"))
     val dev = days.crossJoin(broadcast(m))
       .select(col("di"), col("n"),
-        (col("yc") - col("sy").cast("double") / col("n")).as("d"))
+        ((col("yc") - col("sy").cast("double") / col("n")) / unit).as("d"))
       .withColumn("l1", lag(col("d"), 1).over(w))
       .withColumn("l2", lag(col("d"), 2).over(w))
       .withColumn("l3", lag(col("d"), 3).over(w))
@@ -3923,25 +3908,18 @@ object Temporal {
     val p21 = r1 * (lit(1.0) - r2) / (lit(1.0) - r1 * r1)
     val p33 = (r3 - p21 * r2 - p22 * r1) /
       (lit(1.0) - p21 * r1 - p22 * r2)
-    val thr = lit(1.96) / sqrt(col("n").cast("double"))
-    sums.select(col("n").as("n_days"),
-      NumFns.roundPortable(r1, 6).as("rho1"),
-      NumFns.roundPortable(r2, 6).as("rho2"),
-      NumFns.roundPortable(r3, 6).as("rho3"),
-      NumFns.roundPortable(r1, 6).as("pacf1"),
-      NumFns.roundPortable(p22, 6).as("pacf2"),
-      NumFns.roundPortable(p33, 6).as("pacf3"),
-      when(abs(p22) < thr && abs(p33) < thr && abs(r1) >= thr, "AR(1)")
-        .when(abs(p33) < thr && abs(p22) >= thr, "AR(2)")
-        .when(abs(p33) >= thr, "AR(3)+")
-        .otherwise("white").as("ar_hint"))
+    sums.select(col("n"), col("den"), r1.as("r1"), r2.as("r2"), r3.as("r3"),
+      p22.as("p22"), p33.as("p33"))
   }
 
-  val qPacfOracle: String =
-    s"""WITH days AS (${dailyCentsSql()}),
+  /** SQL twin of [[lagDesign]]: CTEs ending in `dl(n, den, r1, r2, r3,
+    * p22, p33)`.
+    */
+  def lagDesignSql(unit: Double): String =
+    s"""days AS (${dailyCentsSql()}),
        |m AS (SELECT count(*) AS n, CAST(sum(yc) AS BIGINT) AS sy FROM days),
        |dev AS (
-       |  SELECT di, n, yc - CAST(sy AS DOUBLE) / n AS d
+       |  SELECT di, n, (yc - CAST(sy AS DOUBLE) / n) / $unit AS d
        |  FROM days CROSS JOIN m
        |),
        |lg AS (
@@ -3959,24 +3937,51 @@ object Temporal {
        |  FROM lg
        |),
        |r AS (
-       |  SELECT n,
+       |  SELECT n, den,
        |    CAST(n1 AS DOUBLE) / CAST(den AS DOUBLE) AS r1,
        |    CAST(n2 AS DOUBLE) / CAST(den AS DOUBLE) AS r2,
        |    CAST(n3 AS DOUBLE) / CAST(den AS DOUBLE) AS r3
        |  FROM ss
        |),
-       |dl AS (
-       |  SELECT n, r1, r2, r3,
+       |pr AS (
+       |  SELECT n, den, r1, r2, r3,
        |    (r2 - r1 * r1) / (1.0 - r1 * r1) AS p22,
        |    r1 * (1.0 - r2) / (1.0 - r1 * r1) AS p21
        |  FROM r
        |),
-       |f AS (
-       |  SELECT n, r1, r2, r3, p22,
-       |    (r3 - p21 * r2 - p22 * r1) / (1.0 - p21 * r1 - p22 * r2) AS p33,
-       |    1.96 / sqrt(CAST(n AS DOUBLE)) AS thr
-       |  FROM dl
-       |)
+       |dl AS (
+       |  SELECT n, den, r1, r2, r3, p22,
+       |    (r3 - p21 * r2 - p22 * r1) / (1.0 - p21 * r1 - p22 * r2) AS p33
+       |  FROM pr
+       |)""".stripMargin
+
+  /** Partial autocorrelation of daily revenue at lags 1..3 via the
+    * closed-form Durbin–Levinson recursion, with the AR-order hint the
+    * raw ACF can't give (an AR(1) series has geometric ACF at ALL lags
+    * but PACF zero past lag 1 — the PACF cutoff IS the model order):
+    * the identification step between q_autocorr (raw ρ) and
+    * q_dickey_fuller (unit root). Shape: the [[lagDesign]] of revenue
+    * in cents; no row-scale work anywhere.
+    */
+  def qPacf(s: SparkSession, dir: String): DataFrame = {
+    val thr = lit(1.96) / sqrt(col("n").cast("double"))
+    val (r1, p22, p33) = (col("r1"), col("p22"), col("p33"))
+    lagDesign(s, dir, 1.0).select(col("n").as("n_days"),
+      NumFns.roundPortable(r1, 6).as("rho1"),
+      NumFns.roundPortable(col("r2"), 6).as("rho2"),
+      NumFns.roundPortable(col("r3"), 6).as("rho3"),
+      NumFns.roundPortable(r1, 6).as("pacf1"),
+      NumFns.roundPortable(p22, 6).as("pacf2"),
+      NumFns.roundPortable(p33, 6).as("pacf3"),
+      when(abs(p22) < thr && abs(p33) < thr && abs(r1) >= thr, "AR(1)")
+        .when(abs(p33) < thr && abs(p22) >= thr, "AR(2)")
+        .when(abs(p33) >= thr, "AR(3)+")
+        .otherwise("white").as("ar_hint"))
+  }
+
+  val qPacfOracle: String =
+    s"""WITH ${lagDesignSql(1.0)},
+       |f AS (SELECT *, 1.96 / sqrt(CAST(n AS DOUBLE)) AS thr FROM dl)
        |SELECT n AS n_days,
        |  ${NumFns.roundPortableSql("r1", 6)} AS rho1,
        |  ${NumFns.roundPortableSql("r2", 6)} AS rho2,
@@ -4049,37 +4054,17 @@ object Temporal {
        |LIMIT 1""".stripMargin
 
   /** AR-order selection by AIC over p ∈ {0..3}: Durbin–Levinson
-    * innovation variances σ²_p = σ²_{p−1}(1−φ_pp²) from the SAME lag
-    * moments as [[qPacf]], scored as AIC_p = n·ln(σ²_p) + 2(p+1) —
-    * the automated version of q_pacf's eyeballed cutoff (the order a
-    * forecasting consumer would actually plug in). One 3-lag window
-    * pass, DECIMAL ρ̂ folds, scalar recursion; the per-order table
-    * makes the selection auditable, not just the winner.
+    * innovation variances σ²_p = σ²_{p−1}(1−φ_pp²) from the SAME
+    * [[lagDesign]] as [[qPacf]] (revenue in currency units), scored as
+    * AIC_p = n·ln(σ²_p) + 2(p+1) — the automated version of q_pacf's
+    * eyeballed cutoff (the order a forecasting consumer would actually
+    * plug in). The per-order table makes the selection auditable, not
+    * just the winner.
     */
   def qArOrderAic(s: SparkSession, dir: String): DataFrame = {
-    val days = dailyCents(s, dir)
-    val m = days.agg(count(lit(1)).as("n"), sum(col("yc")).as("sy"))
-    val w = Window.orderBy(col("di"))
-    val dev = days.crossJoin(broadcast(m))
-      .select(col("di"), col("n"),
-        ((col("yc") - col("sy").cast("double") / col("n")) / 100.0).as("d"))
-      .withColumn("l1", lag(col("d"), 1).over(w))
-      .withColumn("l2", lag(col("d"), 2).over(w))
-      .withColumn("l3", lag(col("d"), 3).over(w))
-    val sums = dev.agg(max(col("n")).as("n"),
-      sum((col("d") * col("d")).cast(Dec12)).as("den"),
-      sum((col("d") * col("l1")).cast(Dec12)).as("n1"),
-      sum((col("d") * col("l2")).cast(Dec12)).as("n2"),
-      sum((col("d") * col("l3")).cast(Dec12)).as("n3"))
+    val sums = lagDesign(s, dir, 100.0)
     val nD = col("n").cast("double")
-    val r1 = col("n1").cast("double") / col("den").cast("double")
-    val r2 = col("n2").cast("double") / col("den").cast("double")
-    val r3 = col("n3").cast("double") / col("den").cast("double")
-    val p11 = r1
-    val p22 = (r2 - r1 * r1) / (lit(1.0) - r1 * r1)
-    val p21 = r1 * (lit(1.0) - r2) / (lit(1.0) - r1 * r1)
-    val p33 = (r3 - p21 * r2 - p22 * r1) /
-      (lit(1.0) - p21 * r1 - p22 * r2)
+    val (p11, p22, p33) = (col("r1"), col("p22"), col("p33"))
     val s0 = col("den").cast("double") / nD
     val s1v = s0 * (lit(1.0) - p11 * p11)
     val s2v = s1v * (lit(1.0) - p22 * p22)
@@ -4099,45 +4084,8 @@ object Temporal {
   }
 
   val qArOrderAicOracle: String =
-    s"""WITH days AS (${dailyCentsSql()}),
-       |m AS (SELECT count(*) AS n, CAST(sum(yc) AS BIGINT) AS sy FROM days),
-       |dev AS (
-       |  SELECT di, n, (yc - CAST(sy AS DOUBLE) / n) / 100.0 AS d
-       |  FROM days CROSS JOIN m
-       |),
-       |lg AS (
-       |  SELECT n, d,
-       |    lag(d, 1) OVER w AS l1, lag(d, 2) OVER w AS l2,
-       |    lag(d, 3) OVER w AS l3
-       |  FROM dev WINDOW w AS (ORDER BY di)
-       |),
-       |ss AS (
-       |  SELECT max(n) AS n,
-       |    sum(CAST(d * d AS DECIMAL(38,12))) AS den,
-       |    sum(CAST(d * l1 AS DECIMAL(38,12))) AS n1,
-       |    sum(CAST(d * l2 AS DECIMAL(38,12))) AS n2,
-       |    sum(CAST(d * l3 AS DECIMAL(38,12))) AS n3
-       |  FROM lg
-       |),
-       |r AS (
-       |  SELECT n,
-       |    CAST(n1 AS DOUBLE) / CAST(den AS DOUBLE) AS r1,
-       |    CAST(n2 AS DOUBLE) / CAST(den AS DOUBLE) AS r2,
-       |    CAST(n3 AS DOUBLE) / CAST(den AS DOUBLE) AS r3,
-       |    CAST(den AS DOUBLE) / CAST(n AS DOUBLE) AS s0
-       |  FROM ss
-       |),
-       |dl AS (
-       |  SELECT n, s0, r1, r2, r3,
-       |    (r2 - r1 * r1) / (1.0 - r1 * r1) AS p22,
-       |    r1 * (1.0 - r2) / (1.0 - r1 * r1) AS p21
-       |  FROM r
-       |),
-       |f AS (
-       |  SELECT n, s0, r1, p22,
-       |    (r3 - p21 * r2 - p22 * r1) / (1.0 - p21 * r1 - p22 * r2) AS p33
-       |  FROM dl
-       |),
+    s"""WITH ${lagDesignSql(100.0)},
+       |f AS (SELECT *, CAST(den AS DOUBLE) / CAST(n AS DOUBLE) AS s0 FROM dl),
        |sg AS (
        |  SELECT n, s0,
        |    s0 * (1.0 - r1 * r1) AS s1v,
@@ -4168,7 +4116,8 @@ object Temporal {
     * construction). Shape: the pair join is weekday-PARTITIONED
     * (seven ~(n/7)²-bounded tasks instead of one n² — calendar-
     * bounded at any corpus scale), tie terms read per-(weekday,value)
-    * cells, and the pooled z/p are scalar.
+    * cells, and the pooled z ([[mkVar]], [[mkZ]]) and verdict are
+    * scalar.
     */
   def qSeasonalMk(s: SparkSession, dir: String): DataFrame = {
     val days = Tables.orders(s, dir)
@@ -4190,21 +4139,11 @@ object Temporal {
         lit(0L)).as("tw"))
     val nW = days.groupBy(col("dw")).agg(count(lit(1)).as("nw"))
     val pooled = sByW.join(tiesW, Seq("dw")).join(nW, Seq("dw"))
-      .select(col("sw"),
-        ((col("nw") * (col("nw") - 1) * (col("nw") * 2 + 5) - col("tw"))
-          .cast("double") / 18.0).as("vw"),
-        col("nw"))
+      .select(col("sw"), mkVar(col("nw"), col("tw")).as("vw"), col("nw"))
       .agg(sum(col("sw")).as("s"), sum(col("vw")).as("v"),
         sum(col("nw")).as("n"), count(lit(1)).as("n_seasons"))
-    val z = when(col("s") > 0, (col("s") - 1).cast("double") / sqrt(col("v")))
-      .when(col("s") < 0, (col("s") + 1).cast("double") / sqrt(col("v")))
-      .otherwise(lit(0.0))
-    pooled.select(col("n").as("n_days"), col("n_seasons"),
-      col("s").as("s_stat"),
-      NumFns.roundPortable(z, 4).as("z"),
-      NumFns.roundPortable(NumFns.normTwoSidedP(z), 6).as("p_value"),
-      when(z > 1.96, "increasing").when(z < -1.96, "decreasing")
-        .otherwise("none").as("trend"))
+    pooled.select(Seq(col("n").as("n_days"), col("n_seasons"), col("s").as("s_stat"))
+      ++ trendVerdict(mkZ(col("s"), col("v"))): _*)
   }
 
   val qSeasonalMkOracle: String =
@@ -4231,23 +4170,12 @@ object Temporal {
        |nw AS (SELECT dw, count(*) AS nw FROM k GROUP BY dw),
        |pl AS (
        |  SELECT CAST(sum(sw) AS BIGINT) AS s,
-       |    sum(CAST(nw * (nw - 1) * (2 * nw + 5) - tw AS DOUBLE) / 18.0)
-       |      AS v,
+       |    sum(${mkVarSql("nw", "tw")}) AS v,
        |    CAST(sum(nw) AS BIGINT) AS n, count(*) AS n_seasons
        |  FROM sw JOIN tw USING (dw) JOIN nw USING (dw)
        |),
-       |zz AS (
-       |  SELECT n, n_seasons, s,
-       |    CASE WHEN s > 0 THEN CAST(s - 1 AS DOUBLE) / sqrt(v)
-       |      WHEN s < 0 THEN CAST(s + 1 AS DOUBLE) / sqrt(v)
-       |      ELSE 0.0 END AS z
-       |  FROM pl
-       |)
+       |zz AS (SELECT n, n_seasons, s, ${mkZSql("s", "v")} AS z FROM pl)
        |SELECT n AS n_days, n_seasons, s AS s_stat,
-       |  ${NumFns.roundPortableSql("z", 4)} AS z,
-       |  ${NumFns.roundPortableSql(NumFns.normTwoSidedPSql("z"), 6)}
-       |    AS p_value,
-       |  CASE WHEN z > 1.96 THEN 'increasing'
-       |    WHEN z < -1.96 THEN 'decreasing' ELSE 'none' END AS trend
+       |  ${trendVerdictSql("z")}
        |FROM zz""".stripMargin
 }

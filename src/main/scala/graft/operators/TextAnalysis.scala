@@ -527,6 +527,58 @@ object TextAnalysis {
        |JOIN sz sb ON sb.source = i.source_b
        |ORDER BY source_a, source_b""".stripMargin
 
+  /** Least-squares line y = intercept + slope·x over `points (x, y)`,
+    * the log-log fit of [[qZipfFit]] and [[qHeapsFit]]: five moment
+    * sums in one pass, each term cast to DECIMAL(38,12) (exact,
+    * order-independent), and the closed form evaluated once on the
+    * one-row result. Returns `(k, slope, intercept, r2)`, rounded to 4.
+    */
+  def olsFit(points: DataFrame): DataFrame = {
+    val m = points.agg(
+      count(lit(1)).as("k"),
+      sum(col("x").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
+      sum((col("x") * col("x")).cast(Dec12)).as("sxx"),
+      sum((col("y") * col("y")).cast(Dec12)).as("syy"),
+      sum((col("x") * col("y")).cast(Dec12)).as("sxy"))
+    m.select(
+        col("k"),
+        round(((col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
+          (col("k") * col("sxx") - col("sx") * col("sx")).cast("double")), 4)
+          .as("slope"),
+        round(((col("sy").cast("double") -
+          ((col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
+            (col("k") * col("sxx") - col("sx") * col("sx")).cast("double"))
+            * col("sx").cast("double")) / col("k")), 4).as("intercept"),
+        round((
+          (col("k") * col("sxy") - col("sx") * col("sy")).cast("double") *
+          (col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
+          ((col("k") * col("sxx") - col("sx") * col("sx")).cast("double") *
+           (col("k") * col("syy") - col("sy") * col("sy")).cast("double"))), 4)
+          .as("r2"))
+  }
+
+  /** SQL twin of [[olsFit]] over the relation `points`. */
+  def olsFitSql(points: String): String =
+    s"""SELECT k,
+       |  round(CAST(k * sxy - sx * sy AS DOUBLE)
+       |    / CAST(k * sxx - sx * sx AS DOUBLE), 4) AS slope,
+       |  round((CAST(sy AS DOUBLE)
+       |    - CAST(k * sxy - sx * sy AS DOUBLE)
+       |      / CAST(k * sxx - sx * sx AS DOUBLE) * CAST(sx AS DOUBLE)) / k, 4)
+       |    AS intercept,
+       |  round(CAST(k * sxy - sx * sy AS DOUBLE) * CAST(k * sxy - sx * sy AS DOUBLE)
+       |    / (CAST(k * sxx - sx * sx AS DOUBLE) * CAST(k * syy - sy * sy AS DOUBLE)), 4)
+       |    AS r2
+       |FROM (
+       |  SELECT count(*) AS k,
+       |    sum(CAST(x AS DECIMAL(38,12))) AS sx,
+       |    sum(CAST(y AS DECIMAL(38,12))) AS sy,
+       |    sum(CAST(x * x AS DECIMAL(38,12))) AS sxx,
+       |    sum(CAST(y * y AS DECIMAL(38,12))) AS syy,
+       |    sum(CAST(x * y AS DECIMAL(38,12))) AS sxy
+       |  FROM $points
+       |)""".stripMargin
+
   /** Rank-enumeration chunk size for [[qZipfFit]]: one tied-frequency
     * block's rank range is split into runs of this many consecutive
     * integer ranks, each generated and partially aggregated in its own
@@ -547,11 +599,10 @@ object TextAnalysis {
     * integers in 64 Ki chunks (chunk frame repartitioned, so a 10⁸-word
     * hapax block at 100 TB becomes ~1.5k independent tasks, not one).
     * WHICH word holds which rank inside a tied block never matters:
-    * y = ln(freq) is constant there. Five moment sums in one pass, each
-    * term cast to DECIMAL(38,12) per-rank (exact, order-independent —
-    * identical to the oracle's per-word sums because decimal addition
-    * is associative and each rank appears exactly once); the closed
-    * form is evaluated once on the 1-row result. Cross-engine ln
+    * y = ln(freq) is constant there. The fit is [[olsFit]], each term
+    * cast to DECIMAL(38,12) per-rank (identical to the oracle's
+    * per-word sums because decimal addition is associative and each
+    * rank appears exactly once). Cross-engine ln
     * differs by ≤1 ulp → moment sums agree to ~1e-13, far inside the
     * round-at-4 gap.
     */
@@ -574,27 +625,8 @@ object TextAnalysis {
         .as("rank"))
       .select(log(col("rank").cast("double")).as("x"),
         log(col("n").cast("double")).as("y"))
-    val m = ranked.agg(
-      count(lit(1)).as("k"),
-      sum(col("x").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
-      sum((col("x") * col("x")).cast(Dec12)).as("sxx"),
-      sum((col("y") * col("y")).cast(Dec12)).as("syy"),
-      sum((col("x") * col("y")).cast(Dec12)).as("sxy"))
-    m.select(
-        col("k").as("n_types"),
-        round(((col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          (col("k") * col("sxx") - col("sx") * col("sx")).cast("double")), 4)
-          .as("slope"),
-        round(((col("sy").cast("double") -
-          ((col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
-            (col("k") * col("sxx") - col("sx") * col("sx")).cast("double"))
-            * col("sx").cast("double")) / col("k")), 4).as("intercept"),
-        round((
-          (col("k") * col("sxy") - col("sx") * col("sy")).cast("double") *
-          (col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          ((col("k") * col("sxx") - col("sx") * col("sx")).cast("double") *
-           (col("k") * col("syy") - col("sy") * col("sy")).cast("double"))), 4)
-          .as("r2"))
+    olsFit(ranked)
+      .select(col("k").as("n_types"), col("slope"), col("intercept"), col("r2"))
   }
 
   val qZipfFitOracle: String =
@@ -606,27 +638,31 @@ object TextAnalysis {
        |  SELECT ln(CAST(row_number() OVER (ORDER BY n DESC, word) AS DOUBLE)) AS x,
        |    ln(CAST(n AS DOUBLE)) AS y
        |  FROM c
-       |),
-       |m AS (
-       |  SELECT count(*) AS k,
-       |    sum(CAST(x AS DECIMAL(38,12))) AS sx,
-       |    sum(CAST(y AS DECIMAL(38,12))) AS sy,
-       |    sum(CAST(x * x AS DECIMAL(38,12))) AS sxx,
-       |    sum(CAST(y * y AS DECIMAL(38,12))) AS syy,
-       |    sum(CAST(x * y AS DECIMAL(38,12))) AS sxy
-       |  FROM r
        |)
-       |SELECT k AS n_types,
-       |  round(CAST(k * sxy - sx * sy AS DOUBLE)
-       |    / CAST(k * sxx - sx * sx AS DOUBLE), 4) AS slope,
-       |  round((CAST(sy AS DOUBLE)
-       |    - CAST(k * sxy - sx * sy AS DOUBLE)
-       |      / CAST(k * sxx - sx * sx AS DOUBLE) * CAST(sx AS DOUBLE)) / k, 4)
-       |    AS intercept,
-       |  round(CAST(k * sxy - sx * sy AS DOUBLE) * CAST(k * sxy - sx * sy AS DOUBLE)
-       |    / (CAST(k * sxx - sx * sx AS DOUBLE) * CAST(k * syy - sy * sy AS DOUBLE)), 4)
-       |    AS r2
-       |FROM m""".stripMargin
+       |SELECT k AS n_types, slope, intercept, r2 FROM (${olsFitSql("r")})""".stripMargin
+
+  /** Confusion cells `(lang, predicted, n)` of a langid prediction
+    * frame with both margins on every cell: `n_true` (documents of that
+    * true language) and `n_pred` (documents predicted as that
+    * language), windows over the ≤ langs² cell frame. Shared by
+    * [[qLangidEval]], [[qCohensKappa]] and [[qCramersV]].
+    */
+  def confusion(pred: DataFrame): DataFrame =
+    pred.groupBy(col("lang"), col("predicted"))
+      .agg(count(lit(1)).as("n"))
+      .withColumn("n_true", sum(col("n")).over(Window.partitionBy(col("lang"))))
+      .withColumn("n_pred", sum(col("n")).over(Window.partitionBy(col("predicted"))))
+
+  /** SQL twin of [[confusion]]: CTE `cm` over the predictions `pred`. */
+  private val confusionSql: String =
+    s"""pred AS ($qTextLangidOracle),
+       |cm AS (
+       |  SELECT lang, predicted, n,
+       |    CAST(sum(n) OVER (PARTITION BY lang) AS BIGINT) AS n_true,
+       |    CAST(sum(n) OVER (PARTITION BY predicted) AS BIGINT) AS n_pred
+       |  FROM (SELECT lang, predicted, count(*) AS n
+       |    FROM pred GROUP BY lang, predicted)
+       |)""".stripMargin
 
   /** Language-ID confusion matrix against the corpus's ground-truth
     * `lang` column — classifier evaluation as a first-class operator:
@@ -636,20 +672,13 @@ object TextAnalysis {
     * en/es/de/fr, so the zh row shows exactly where its mass leaks —
     * the table a curation team reads before trusting a lang filter.
     * Shape: the per-doc prediction pass is [[qTextLangid]]'s scan; the
-    * matrix is one map-side-combined (true, predicted) count, and both
-    * marginals are windows over that ≤ langs² cell frame. Counts are
+    * matrix and its marginals are [[confusion]]. Counts are
     * exact; the two ratios are single divisions of exact longs rounded
     * via [[NumFns.roundPortable]] (a small-denominator rational CAN land
     * exactly on a 7th-decimal boundary, e.g. n_true = 512).
     */
-  def qLangidEval(s: SparkSession, dir: String): DataFrame = {
-    val wTrue = Window.partitionBy(col("lang"))
-    val wPred = Window.partitionBy(col("predicted"))
-    qTextLangid(s, dir)
-      .groupBy(col("lang"), col("predicted"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("n_true", sum(col("n")).over(wTrue))
-      .withColumn("n_pred", sum(col("n")).over(wPred))
+  def qLangidEval(s: SparkSession, dir: String): DataFrame =
+    confusion(qTextLangid(s, dir))
       .select(col("lang"), col("predicted"), col("n"),
         col("n_true"), col("n_pred"),
         (col("lang") === col("predicted")).as("correct"),
@@ -658,23 +687,14 @@ object TextAnalysis {
         NumFns.roundPortable(col("n") / col("n_pred").cast("double"), 6)
           .as("precision_share"))
       .orderBy(col("lang"), col("predicted"))
-  }
 
   val qLangidEvalOracle: String =
-    s"""WITH pred AS ($qTextLangidOracle),
-       |cm AS (
-       |  SELECT lang, predicted, count(*) AS n
-       |  FROM pred GROUP BY lang, predicted
-       |)
-       |SELECT lang, predicted, n,
-       |  CAST(sum(n) OVER (PARTITION BY lang) AS BIGINT) AS n_true,
-       |  CAST(sum(n) OVER (PARTITION BY predicted) AS BIGINT) AS n_pred,
+    s"""WITH $confusionSql
+       |SELECT lang, predicted, n, n_true, n_pred,
        |  lang = predicted AS correct,
-       |  ${NumFns.roundPortableSql(
-             "n / CAST(sum(n) OVER (PARTITION BY lang) AS DOUBLE)", 6)}
+       |  ${NumFns.roundPortableSql("n / CAST(n_true AS DOUBLE)", 6)}
        |    AS recall_share,
-       |  ${NumFns.roundPortableSql(
-             "n / CAST(sum(n) OVER (PARTITION BY predicted) AS DOUBLE)", 6)}
+       |  ${NumFns.roundPortableSql("n / CAST(n_pred AS DOUBLE)", 6)}
        |    AS precision_share
        |FROM cm
        |ORDER BY lang, predicted""".stripMargin
@@ -683,7 +703,7 @@ object TextAnalysis {
     * the chance-corrected agreement q_langid_eval's raw confusion shares
     * cannot give: with one dominant language, plain accuracy is high by
     * default, while κ = (p_o − p_e)/(1 − p_e) discounts exactly that
-    * base-rate agreement. Multi-class over the same confusion frame.
+    * base-rate agreement. Multi-class over the same [[confusion]] frame.
     * Scale discipline: p_e's per-class marginal product is computed as
     * (n_true/N)·(n_pred/N) in doubles (the integer cross-product
     * n_true·n_pred overflows int64 at corpus scale) and the ≤k² terms
@@ -691,14 +711,11 @@ object TextAnalysis {
     * confusion → closed form.
     */
   def qCohensKappa(s: SparkSession, dir: String): DataFrame = {
-    val cm = qTextLangid(s, dir)
-      .groupBy(col("lang"), col("predicted"))
-      .agg(count(lit(1)).as("n"))
+    val cm = confusion(qTextLangid(s, dir))
       .localCheckpoint() // feeds marginals AND the diagonal sum
     val nTot = cm.agg(sum(col("n")).as("nt"))
-    val marg = cm.groupBy(col("lang")).agg(sum(col("n")).as("n_true"))
-      .join(
-        cm.groupBy(col("predicted")).agg(sum(col("n")).as("n_pred")),
+    val marg = cm.select(col("lang"), col("n_true")).distinct()
+      .join(cm.select(col("predicted"), col("n_pred")).distinct(),
         col("lang") === col("predicted"))
       .crossJoin(broadcast(nTot))
       .agg(sum(((col("n_true").cast("double") / col("nt"))
@@ -717,15 +734,10 @@ object TextAnalysis {
   }
 
   val qCohensKappaOracle: String =
-    s"""WITH pred AS ($qTextLangidOracle),
-       |cm AS (
-       |  SELECT lang, predicted, count(*) AS n
-       |  FROM pred GROUP BY lang, predicted
-       |),
+    s"""WITH $confusionSql,
        |nt AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM cm),
-       |tm AS (SELECT lang, CAST(sum(n) AS BIGINT) AS n_true FROM cm GROUP BY lang),
-       |pm AS (SELECT predicted, CAST(sum(n) AS BIGINT) AS n_pred
-       |  FROM cm GROUP BY predicted),
+       |tm AS (SELECT DISTINCT lang, n_true FROM cm),
+       |pm AS (SELECT DISTINCT predicted, n_pred FROM cm),
        |pe AS (
        |  SELECT CAST(sum(CAST((CAST(n_true AS DOUBLE) / nt)
        |    * (CAST(n_pred AS DOUBLE) / nt) AS DECIMAL(38,12))) AS DOUBLE)
@@ -816,26 +828,19 @@ object TextAnalysis {
     * significant, and V = √(χ²/(N·(k−1))) ∈ [0,1] is the
     * sample-size-free strength of the label↔prediction association a
     * reviewer can actually compare across corpora. χ² accumulates over
-    * the k² confusion cells against the independence expectation
+    * the k² [[confusion]] cells against the independence expectation
     * (marginal products as double ratios — int64-safe at corpus scale),
     * as a DECIMAL sum. One scan → k²-cell frame → closed form.
     */
   def qCramersV(s: SparkSession, dir: String): DataFrame = {
-    val cm = qTextLangid(s, dir)
-      .groupBy(col("lang"), col("predicted"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint() // feeds both marginals and the cell sweep
-    val tm = cm.groupBy(col("lang")).agg(sum(col("n")).as("n_true"))
-    val pm = cm.groupBy(col("predicted")).agg(sum(col("n")).as("n_pred"))
+    val cm = confusion(qTextLangid(s, dir))
+      .localCheckpoint() // feeds the totals and the cell sweep
     val nt = cm.agg(sum(col("n")).as("nt"),
       countDistinct(col("lang")).as("kr"),
       countDistinct(col("predicted")).as("kc"))
     val e = col("n_true").cast("double") *
       (col("n_pred").cast("double") / col("nt"))
-    val cells = cm
-      .join(broadcast(tm), Seq("lang"))
-      .join(broadcast(pm), Seq("predicted"))
-      .crossJoin(broadcast(nt))
+    val cells = cm.crossJoin(broadcast(nt))
       .withColumn("term", ((col("n") - e) * (col("n") - e) / e).cast(Dec12))
     cells.groupBy(col("nt"), col("kr"), col("kc"))
       .agg(sum(col("term")).cast("double").as("chi2"))
@@ -851,15 +856,7 @@ object TextAnalysis {
   }
 
   val qCramersVOracle: String =
-    s"""WITH pred AS ($qTextLangidOracle),
-       |cm AS (
-       |  SELECT lang, predicted, count(*) AS n
-       |  FROM pred GROUP BY lang, predicted
-       |),
-       |tm AS (SELECT lang, CAST(sum(n) AS BIGINT) AS n_true
-       |  FROM cm GROUP BY lang),
-       |pm AS (SELECT predicted, CAST(sum(n) AS BIGINT) AS n_pred
-       |  FROM cm GROUP BY predicted),
+    s"""WITH $confusionSql,
        |nt AS (
        |  SELECT CAST(sum(n) AS BIGINT) AS nt,
        |    count(DISTINCT lang) AS kr, count(DISTINCT predicted) AS kc
@@ -872,7 +869,7 @@ object TextAnalysis {
        |      * (n - CAST(n_true AS DOUBLE) * (CAST(n_pred AS DOUBLE) / nt))
        |      / (CAST(n_true AS DOUBLE) * (CAST(n_pred AS DOUBLE) / nt))
        |      AS DECIMAL(38,12)) AS term
-       |  FROM cm JOIN tm USING (lang) JOIN pm USING (predicted), nt
+       |  FROM cm, nt
        |)
        |SELECT nt AS n_docs,
        |  ${NumFns.roundPortableSql("CAST(sum(term) AS DOUBLE)", 6)} AS chi2,
@@ -1046,7 +1043,7 @@ object TextAnalysis {
     * word's FIRST block (min over a map-side-combined (word, block)
     * aggregate) and each block's token count; cumulative windows then
     * run over the BLOCK frame (corpus/64 rows — an aggregate, audit-
-    * safe), and the five moment sums reuse the zipf DECIMAL discipline.
+    * safe), and the fit is [[olsFit]], as in [[qZipfFit]].
     * No prefix scan ever touches raw rows.
     */
   def qHeapsFit(s: SparkSession, dir: String): DataFrame = {
@@ -1065,20 +1062,8 @@ object TextAnalysis {
       .withColumn("v_cum", sum(coalesce(col("new_words"), lit(0L))).over(wCum))
       .select(log(col("n_cum").cast("double")).as("x"),
         log(col("v_cum").cast("double")).as("y"))
-    val m = points.agg(
-      count(lit(1)).as("k"),
-      sum(col("x").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
-      sum((col("x") * col("x")).cast(Dec12)).as("sxx"),
-      sum((col("x") * col("y")).cast(Dec12)).as("sxy"))
-    m.select(
-      col("k").as("n_points"),
-      round(((col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
-        (col("k") * col("sxx") - col("sx") * col("sx")).cast("double")), 4)
-        .as("beta"),
-      round(((col("sy").cast("double") -
-        ((col("k") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          (col("k") * col("sxx") - col("sx") * col("sx")).cast("double"))
-          * col("sx").cast("double")) / col("k")), 4).as("ln_k"))
+    olsFit(points)
+      .select(col("k").as("n_points"), col("slope").as("beta"), col("intercept").as("ln_k"))
   }
 
   val qHeapsFitOracle: String =
@@ -1099,23 +1084,9 @@ object TextAnalysis {
        |    ln(CAST(sum(COALESCE(fs.new_words, 0)) OVER (ORDER BY bt.block
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)) AS y
        |  FROM bt LEFT JOIN fs ON fs.fb = bt.block
-       |),
-       |m AS (
-       |  SELECT count(*) AS k,
-       |    sum(CAST(x AS DECIMAL(38,12))) AS sx,
-       |    sum(CAST(y AS DECIMAL(38,12))) AS sy,
-       |    sum(CAST(x * x AS DECIMAL(38,12))) AS sxx,
-       |    sum(CAST(x * y AS DECIMAL(38,12))) AS sxy
-       |  FROM pts
        |)
-       |SELECT k AS n_points,
-       |  round(CAST(k * sxy - sx * sy AS DOUBLE)
-       |    / CAST(k * sxx - sx * sx AS DOUBLE), 4) AS beta,
-       |  round((CAST(sy AS DOUBLE)
-       |    - CAST(k * sxy - sx * sy AS DOUBLE)
-       |      / CAST(k * sxx - sx * sx AS DOUBLE) * CAST(sx AS DOUBLE)) / k, 4)
-       |    AS ln_k
-       |FROM m""".stripMargin
+       |SELECT k AS n_points, slope AS beta, intercept AS ln_k
+       |FROM (${olsFitSql("pts")})""".stripMargin
 
   /** Corpus predictability profile: unigram entropy H(W), conditional
     * bigram entropy H(W₂|W₁), and their difference (the mutual

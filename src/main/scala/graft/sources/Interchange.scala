@@ -15,15 +15,10 @@ object Interchange {
     * shard size the consumer wants BEFORE calling this; gzip is
     * splittable-hostile, so shards should be O(100 MB), not O(10 GB).
     */
-  def writeJsonl(
-      df: DataFrame,
-      outPath: String,
-      partitionCols: Seq[String] = Nil,
-      compression: String = "gzip",
-      mode: SaveMode = SaveMode.Overwrite): Unit =
+  def writeJsonl(df: DataFrame, outPath: String, partitionCols: Seq[String] = Nil): Unit =
     df.write
-      .mode(mode)
-      .option("compression", compression)
+      .mode(SaveMode.Overwrite)
+      .option("compression", "gzip")
       .partitionBy(partitionCols: _*)
       .json(outPath)
 
@@ -42,19 +37,15 @@ object Interchange {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 
-  /** Export as compressed CSV shards (header on) — the boundary to
+  /** Export as gzipped CSV shards (header on) — the boundary to
     * spreadsheet/BI consumers. Same sharding contract as
     * [[writeJsonl]]: repartition upstream to the shard size wanted.
     */
-  def writeCsv(
-      df: DataFrame,
-      outPath: String,
-      compression: String = "gzip",
-      mode: SaveMode = SaveMode.Overwrite): Unit =
+  def writeCsv(df: DataFrame, outPath: String): Unit =
     df.write
-      .mode(mode)
+      .mode(SaveMode.Overwrite)
       .option("header", "true")
-      .option("compression", compression)
+      .option("compression", "gzip")
       .csv(outPath)
 
   /** Read CSV with an EXPLICIT schema and quarantine semantics: rows

@@ -152,7 +152,6 @@ object EventPipeline {
             batch.toDF().withColumn("ingest_batch", lit(batchId)),
             outPath,
             partitionCols = Seq("ingest_batch", "event_date"), sortCols = Seq("ts"),
-            maxRecordsPerFile = 1000000L,
             mode = org.apache.spark.sql.SaveMode.Overwrite,
             extraOptions = Map("partitionOverwriteMode" -> "dynamic"))
       }

@@ -3,12 +3,18 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The document-quality features behind the curation and evaluation
-  * families, and the derived inputs the analytic families share (the
-  * daily revenue series, the co-trade edges, the two-arm moments) and
-  * the exact-decimal types are each written once per engine; operators and oracles call or splice
-  * them. A copy spelled out at a call site is how an oracle drifts from
-  * its engine twin, so this scans `src/main` for the spellings each
-  * definition replaced.
+  * families, the derived inputs the analytic families share (the daily
+  * revenue series, the co-trade edges, the two-arm moments, the
+  * rank-sum cells, the pooled-midrank normal scores, the ANN top-k, the
+  * capped pair edges, the triangle join, the BFS frontier loop, the
+  * langid confusion cells, the Mann–Kendall z and trend verdict, the
+  * user-lifetime frame, the lag design, the OLS moment fit, the trigram
+  * hashes and the catalog row with its validity rule) and the
+  * exact-decimal types are each written once per engine; operators and
+  * oracles call or splice them. A copy spelled out at a call site is
+  * how an oracle drifts from its engine twin, so this scans `src/main`
+  * for the spellings each definition replaced. A genuine variant stays
+  * at its call site and is named, with its reason, beside its row.
   */
 class OneDefinitionSpec extends AnyFunSuite {
 
@@ -75,7 +81,62 @@ class OneDefinitionSpec extends AnyFunSuite {
       """select\(col\("c_custkey"\), col\("r_name"\)\)|SELECT c_custkey, r_name\b""",
       Seq("Temporal.scala", "Temporal.scala")),
     ("the exact-decimal types are only NumFns.Dec12 and NumFns.Dec0",
-      """DecimalType\(38,\s*(12|0)\)""", Seq("NumFns.scala", "NumFns.scala")))
+      """DecimalType\(38,\s*(12|0)\)""", Seq("NumFns.scala", "NumFns.scala")),
+    // midrank prefix and tie term, engine and SQL, once each
+    ("the rank-sum cells are only Profiling.rankSums and its SQL twin",
+      """sum\(col\("c_v"\)\)\.over\(|sum\(c_v\) OVER \(ORDER BY v\b""" +
+        """|col\("c_v"\)\.cast\(Dec0\) \* col\("c_v"\)|CAST\(c_v AS HUGEINT\) \* c_v""",
+      Seq.fill(4)("Profiling.scala")),
+    // NumFns defines the start; qFlignerKilleen and qVanDerWaerden differ only in p
+    ("the normal-score Newton chain starts only in Inference.normalScores and its SQL twin",
+      """normQuantileStart\(|normQuantileStartSql\(""",
+      Seq("Inference.scala", "Inference.scala", "NumFns.scala", "NumFns.scala")),
+    // variants at their call sites: qKnnClassify ranks label-carrying
+    // neighbours of its own query set, and qAnnProbeCurve (engine and
+    // oracle) re-ranks each probe depth's candidate frame
+    ("the ANN top-k rank is only Similarity.annTopk, its SQL twin and the named variants",
+      """orderBy\(col\("sim"\)\.desc, col\("neighbor_id"\)\)|ORDER BY sim DESC, neighbor_id\)""",
+      Seq.fill(5)("Similarity.scala")),
+    ("the capped pair-edge CTE is only Graph.pairEdgesSql",
+      """HAVING count\(\*\) <= \$CoreMaxFanout""", Seq("Graph.scala")),
+    ("the triangle join is only Graph.triangles and its SQL twin",
+      """col\("ac\.a"\) === col\("ab\.a"\)|ON ac\.a = ab\.a""",
+      Seq("Graph.scala", "Graph.scala")),
+    // Graph.bfs's anti-join, coTradeSym's reverse edges and bfsSql's walk
+    ("the BFS frontier loop is only Graph.bfs and its SQL twin",
+      """\.join\(visited, Seq\(|FROM walk w JOIN sym|e\.select\(col\("b"\)\.as\("src"\)""",
+      Seq.fill(3)("Graph.scala")),
+    ("the langid confusion cells are only TextAnalysis.confusion and its SQL twin",
+      """groupBy\(col\("lang"\), col\("predicted"\)\)|GROUP BY lang, predicted""",
+      Seq("TextAnalysis.scala", "TextAnalysis.scala")),
+    ("the continuity-corrected Mann-Kendall z is only Temporal.mkZ and its SQL twin",
+      """\((?:col\("s"\)|s) - 1\)\.cast\("double"\)|CAST\(\$?s - 1 AS DOUBLE\)""",
+      Seq("Temporal.scala", "Temporal.scala")),
+    ("the trend verdict is only Temporal.trendVerdict and its SQL twin",
+      """"increasing"|'increasing'""", Seq("Temporal.scala", "Temporal.scala")),
+    ("the user-lifetime frame is only Temporal.lifetimes and its SQL twin",
+      """end_day - \$ChurnHorizonDays|col\("end_day"\) - ChurnHorizonDays""",
+      Seq("Temporal.scala", "Temporal.scala")),
+    ("the 3-lag design is only Temporal.lagDesign and its SQL twin",
+      """lag\(col\("d"\), 3\)|lag\(d, 3\)""", Seq("Temporal.scala", "Temporal.scala")),
+    // three per engine in TextAnalysis.olsFit; qPriceElasticity's fit
+    // folds its moments to doubles first and rounds portably, a variant
+    ("the OLS moment fit is only TextAnalysis.olsFit, its SQL twin and qPriceElasticity",
+      """col\("k"\) \* col\("sxx"\)|k \* sxx - sx \* sx""",
+      Seq.fill(6)("TextAnalysis.scala") ++ Seq.fill(3)("RelationalPlus.scala")),
+    // the Curation repetition count and the Dedup shingle set keep
+    // their own distinct-trigram spellings
+    ("the trigram hashes are only PipelineOps.trigramHashes, its SQL twin and the named variants",
+      """t\[i\+2\]|element_at\(col\("t"\), i \+ 3\)""",
+      Seq("PipelineOps.scala", "PipelineOps.scala", "Curation.scala", "Curation.scala",
+        "Dedup.scala")),
+    ("the catalog row is only Catalog.catalogRows and its SQL twin",
+      """col\("p\.variable"\)\.as|file_parts\[1\] AS variable""",
+      Seq("Catalog.scala", "Catalog.scala")),
+    // qCatalogParse has no filter: every key it synthesizes is well-formed
+    ("the catalog validity rule is only Catalog.parsable and its SQL twin",
+      """size\((?:pathParts|fileParts)\)|len\(str_split\(""",
+      Seq("Catalog.scala", "Catalog.scala")))
 
   for ((name, pattern, expected) <- definitions)
     test(name) {

@@ -17,6 +17,20 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("a tie at the top-k cutoff keeps the smaller neighbor id and ranks have no gap") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    def vec(x: Double, y: Double) = Seq(x, y) ++ Seq.fill(Similarity.Dims - 2)(0.0)
+    // query 0; 31 and 40 tie at ranks 1-2, 21 and 12 tie at the cutoff k = 3
+    val corpus = Seq(0L -> vec(1, 0), 40L -> vec(2, 0), 21L -> vec(1, 1),
+        31L -> vec(1, 0), 13L -> vec(0, 1), 12L -> vec(3, 3))
+      .toDF("vec_id", "v")
+      .withColumn("nsq", graft.functions.VectorFns.normSq(col("v")))
+    val got = Similarity.annTopk(corpus, lit(true), 3).collect().toSeq
+    assert(got === Seq(Row(0L, 31L, 1, 1.0), Row(0L, 40L, 2, 1.0), Row(0L, 12L, 3, 0.7071)))
+  }
+
   test("LSH ANN never returns a cross-bucket pair and sims match brute force") {
     val lsh = Similarity.qAnnLsh(spark, sf001).collect()
     assert(lsh.nonEmpty)
