@@ -5,8 +5,14 @@ The shared-JVM sweep drifts ±15% round-over-round from contention alone,
 so a real 1.5x plan regression would be invisible in the totals. This
 script compares two bench_full.json per-query maps and flags every query
 that moved more than THRESH x in either direction — the short list to
-rerun in isolation (`sbt "runMain graft.Bench <name> ..."`) before
-believing (or dismissing) the movement.
+rerun one per fresh JVM (`dev/bench_points.py`) before believing (or
+dismissing) the movement.
+
+It also prints the drift median: the upper median of new/old wall time
+over the common queries that ran in both records with old >= 0.3 s. Code
+changes move individual queries, not the whole suite, so a median outside
+[DRIFT_LO, DRIFT_HI] marks the new sweep as host-contention suspect (a
++55% sweep of byte-identical code once was exactly this).
 
 When both records carry the per-query `cpu` map (process CPU seconds),
 movers are also flagged by CPU ratio and printed with both readings: a
@@ -17,13 +23,14 @@ Inputs are file paths or git revs of bench_full.json:
     python3 dev/bench_compare.py a1205da:bench_full.json bench_full.json
 
 Exit code 0 always (it is a report, not a gate) — the gate is the
-isolation rerun it tells you to do.
+fresh-JVM rerun it tells you to do.
 """
 import json
 import subprocess
 import sys
 
 THRESH = 1.5
+DRIFT_LO, DRIFT_HI = 0.6, 1.25
 
 
 def load(spec: str) -> dict:
@@ -38,9 +45,8 @@ def load(spec: str) -> dict:
 def main(old_spec: str, new_spec: str) -> int:
     old_doc, new_doc = load(old_spec), load(new_spec)
     old, new = old_doc["queries"], new_doc["queries"]
-    # Bench itself now reruns round-over-round movers in a fresh JVM and
-    # records {sweep, isolated} pairs — surface them so nobody re-does
-    # the rerun by hand.
+    # a dev/bench_points.py record carries fresh-JVM {sweep, isolated}
+    # pairs — surface them so nobody re-does the rerun by hand
     iso = new_doc.get("isolated") or {}
     common = sorted(set(old) & set(new))
     added = sorted(set(new) - set(old))
@@ -51,6 +57,13 @@ def main(old_spec: str, new_spec: str) -> int:
           f"(+{len(added)} new, -{len(removed)} removed)")
     print(f"common-query total: {t_old:.1f}s -> {t_new:.1f}s  "
           f"({t_new / t_old - 1:+.1%} vs old)" if t_old else "no common queries")
+    ratios = sorted(new[q] / old[q] for q in common if new[q] > 0 and old[q] >= 0.3)
+    drift = ratios[len(ratios) // 2] if ratios else 1.0
+    inside = DRIFT_LO <= drift <= DRIFT_HI
+    print(f"drift median (new/old, {len(ratios)} queries with old >= 0.3s): "
+          f"{drift:.3f}  "
+          + (f"inside [{DRIFT_LO}, {DRIFT_HI}]" if inside else
+             f"OUTSIDE [{DRIFT_LO}, {DRIFT_HI}] — host-contention suspect"))
     movers = []
     for q in common:
         a, b = old[q], new[q]
@@ -72,9 +85,10 @@ def main(old_spec: str, new_spec: str) -> int:
         unresolved = [q for _, q, _, _ in movers if q not in iso]
         if unresolved:
             names = " ".join(unresolved)
-            print(f'\n  movers without a recorded isolation number — rerun:\n'
-                  f'  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 '
-                  f'sbt -batch "runMain graft.Bench {names}"')
+            print(f'\n  movers without a recorded isolation number — rerun one '
+                  f'per fresh JVM (after `sbt compile`):\n'
+                  f'  python3 dev/bench_points.py {new_doc.get("sf", "<sf_dir>")} '
+                  f'points.json {names}')
     else:
         print(f"\nno query moved >{THRESH}x — round-over-round movement is "
               f"within sweep noise")

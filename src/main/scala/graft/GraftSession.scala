@@ -57,25 +57,21 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config(confs)
 
-  /** A numeric env knob: `default` when `env` does not set it, else its
-    * value, which must parse and be finite and > 0. Anything else
+  /** A positive integer env knob: `default` when `env` does not set it,
+    * else its value, which must parse as an Int > 0. Anything else
     * throws, naming the knob, so a typo fails the run at start instead
     * of falling back to the default or to a value that breaks the run.
     */
-  def positiveKnob[T](env: Map[String, String], knob: String, default: T)(
-      parse: String => Option[T])(implicit num: Numeric[T]): T =
+  def positiveKnob(env: Map[String, String], knob: String, default: Int): Int =
     env.get(knob).fold(default) { raw =>
-      parse(raw.trim).filter { v =>
-        val d = num.toDouble(v)
-        d > 0 && d < Double.PositiveInfinity // false for NaN
-      }.getOrElse(throw new IllegalArgumentException(
-        s"$knob='$raw' is not a positive finite number"))
+      raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$knob='$raw' is not a positive integer"))
     }
 
   /** The session every harness main runs on: local[n] with n shuffle
     * partitions, n = SPARK_GRAFT_CPUS (default 4), WARN logging. */
   def local(): SparkSession = {
-    val cpus = positiveKnob(sys.env, "SPARK_GRAFT_CPUS", 4)(_.toIntOption)
+    val cpus = positiveKnob(sys.env, "SPARK_GRAFT_CPUS", 4)
     val spark = builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

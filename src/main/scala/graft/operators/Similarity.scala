@@ -1751,15 +1751,7 @@ object Similarity {
        |  WHERE pr.crank <= ${ProbeDepths.max}
        |),
        |truth AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${dotSql("q.v", "c.v")}
-       |          / (sqrt(q.nsq) * sqrt(c.nsq)), 4)
-       |          DESC, c.vec_id) AS rank
-       |    FROM (SELECT * FROM n WHERE vec_id < 10) q
-       |    JOIN n c ON c.vec_id != q.vec_id
-       |  ) WHERE rank <= 3
+       |  SELECT query_id, neighbor_id FROM ($qAnnTopkOracle) WHERE rank <= 3
        |)
        |SELECT * FROM (
        |$depths

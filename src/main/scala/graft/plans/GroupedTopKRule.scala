@@ -31,8 +31,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   * expression (rank/dense_rank ties would need keep-all-tied-at-k heap
   * semantics), a `<= / < / =`-literal conjunct on the rank attribute,
   * and k ≤ [[MaxK]] (the per-key heap memory contract). Other filter
-  * conjuncts are left in place untouched. Kill switch:
-  * `spark.graft.groupedTopK=false`.
+  * conjuncts are left in place untouched. Like any optimizer rule it
+  * can be switched off through Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.GroupedTopKRule`.
   */
 object GroupedTopKRule extends Rule[LogicalPlan] {
 
@@ -63,11 +64,7 @@ object GroupedTopKRule extends Rule[LogicalPlan] {
     }
   }
 
-  private def enabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.groupedTopK", "true") == "true"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = if (!enabled) plan else plan.transformDown {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     // r13: when the projection directly above the filter DROPS the rank
     // column, the post-shuffle re-rank is a no-op — the final-phase
     // TopKPerKey already emits exactly the ≤k order-smallest rows per

@@ -23,17 +23,11 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("a numeric env knob is its default when unset and must be a positive finite number") {
     def cpus(env: (String, String)*) =
-      GraftSession.positiveKnob(env.toMap, "SPARK_GRAFT_CPUS", 4)(_.toIntOption)
-    def budget(env: (String, String)*) =
-      GraftSession.positiveKnob(env.toMap, "SPARK_GRAFT_ISO_BUDGET", 300.0)(_.toDoubleOption)
+      GraftSession.positiveKnob(env.toMap, "SPARK_GRAFT_CPUS", 4)
     assert(cpus() === 4)
     assert(cpus("SPARK_GRAFT_CPUS" -> " 8 ") === 8)
-    assert(budget("SPARK_GRAFT_ISO_BUDGET" -> "0.5") === 0.5)
     for (bad <- Seq("abc", "", "0", "-5", "2.5"))
       assert(intercept[IllegalArgumentException](cpus("SPARK_GRAFT_CPUS" -> bad))
         .getMessage.contains("SPARK_GRAFT_CPUS"), bad)
-    for (bad <- Seq("abc", "NaN", "Infinity", "0", "-5"))
-      assert(intercept[IllegalArgumentException](budget("SPARK_GRAFT_ISO_BUDGET" -> bad))
-        .getMessage.contains("SPARK_GRAFT_ISO_BUDGET"), bad)
   }
 }

@@ -146,10 +146,10 @@ class GroupedTopKSpec extends SparkSpec {
   }
 
   test("the kill switch restores the stock plan") {
-    spark.conf.set("spark.graft.groupedTopK", "false")
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.GroupedTopKRule")
     try {
       assert(!topkDf(3).queryExecution.executedPlan.toString.contains("TopKPerKey "))
-    } finally spark.conf.unset("spark.graft.groupedTopK")
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
     assert(topkDf(3).queryExecution.executedPlan.toString.contains("TopKPerKey "))
   }
 }
