@@ -11,7 +11,9 @@ start loadavg is recorded in the "isolated" triple so a contaminated
 reading is visible in the data (the r11 second-opinion lesson).
 
 Usage: dev/bench_points.py <sf_dir> <out.json> <q1> [q2 ...]
-Env:   SPARK_GRAFT_CPUS (default 32), SPARK_DRIVER_MEM (default 8g)
+Env:   passed to each child unchanged, so SPARK_GRAFT_CPUS sets local[n]
+       and the shuffle partitions as it does for a sweep (graft.Bench's
+       default 4 when unset); SPARK_DRIVER_MEM is the child -Xmx (default 8g)
 """
 import json, os, subprocess, sys, tempfile
 
@@ -45,9 +47,7 @@ def main():
             "-Dspark.ui.enabled=false",
             "-Dspark.sql.session.timeZone=UTC",
             "-cp", cp, "graft.Bench"]
-    env = dict(os.environ,
-               SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     results, iso = {}, {}
     for q in queries:
         with tempfile.TemporaryDirectory(prefix=f"bp_{q}_") as cwd:

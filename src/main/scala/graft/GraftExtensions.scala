@@ -20,11 +20,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // every round(avg|sum(double)) GROUP aggregate — including ones
     // users write — lowers to the order-independent decimal form
     ext.injectOptimizerRule(_ => graft.plans.StableAggRule)
-    // grouped top-k: Filter(row_number <= k, Window) lowers to the
-    // map-side-heap TopKPerKey operator under the window — the exchange
-    // then carries k rows per key instead of every row
-    ext.injectOptimizerRule(_ => graft.plans.GroupedTopKRule)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     // the native functions: (SQL name, expression class, builder)
     Seq[(String, Class[_], Seq[Expression] => Expression)](
       ("rolling_hash", classOf[RollingHash], c => RollingHash(c.head)),

@@ -29,6 +29,9 @@ object GraftSession {
     // default; read as Long and normalize in Tables.events.
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.parquet.aggregatePushdown" -> "true",
+    // Spark plans a map-side WindowGroupLimit only for a row_number bound
+    // up to this; the engine's largest is the Postings caps in Dedup
+    "spark.sql.optimizer.windowGroupLimitThreshold" -> "1024",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.extensions" -> "graft.GraftExtensions",
     // resident-driver hygiene: a resident driver never GCs between

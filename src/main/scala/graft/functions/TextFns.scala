@@ -124,6 +124,10 @@ object TextFns {
     array_min(transform(h28s, h => (lit(a) * h + lit(b)) % MinHashPrime))
   }
 
+  /** [[minhash]] j over the DuckDB list column `hs`. */
+  def minhashSql(j: Int): String =
+    s"list_min(list_transform(hs, hh -> (${2L * j + 3L} * hh + ${101L * j + 7L}) % $MinHashPrime))"
+
   /** Jaccard similarity of two distinct-element arrays. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))

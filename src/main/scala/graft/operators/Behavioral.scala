@@ -806,7 +806,8 @@ object Behavioral {
     * trailing-7-day order volume (the "trending now" surface): daily
     * (day, part) cells from one fact pass, the trailing sum as a 7-row
     * RANGE window over each part's DAY series (cell frame, not rows),
-    * and the per-day top-k through the GroupedTopK-lowered rank window.
+    * and the per-day top-k through a rank window that Spark prunes with
+    * a map-side WindowGroupLimit.
     * The gap subtlety: a part with no orders on a day still has a
     * trailing total — the cell frame is densified against the day spine
     * per part ONLY where needed by windowing over day INDEX with a

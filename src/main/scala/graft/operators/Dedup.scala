@@ -25,8 +25,6 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  private val P = TextFns.MinHashPrime
-
   /** Opening tokens hashed for [[qDedupPrefix]] (and the
     * q_bloom_decontaminate contamination key). Declared FIRST in this
     * object: `Dedup.scala:694` touches `Curation` during init, and
@@ -202,34 +200,37 @@ object Dedup {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
   }
 
-  def qDedupMinhash(s: SparkSession, dir: String): DataFrame = {
-    val base = shingled(s, dir)
+  /** The band self-join's distinct `(doc_a, doc_b)` candidates of a
+    * shingle-set frame `(doc_id, hs)`, each with both shingle sets
+    * (`hs_a`, `hs_b`) re-joined by id for verification. Oracle twin:
+    * the `cand` CTE of [[minhashCandCteSql]].
+    */
+  private def bandCandidates(base: DataFrame): DataFrame = {
     val bands = bandFrame(base)
-    val cand = bands.as("a")
+    bands.as("a")
       .join(bands.as("b").hint("shuffle_hash"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
           && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    val verified = cand
       .join(base.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")).hint("shuffle_hash"), "doc_a")
       .join(base.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")).hint("shuffle_hash"), "doc_b")
+  }
+
+  def qDedupMinhash(s: SparkSession, dir: String): DataFrame = {
+    val verified = bandCandidates(shingled(s, dir))
       .select(col("doc_a"), col("doc_b"), jaccardOut.as("jaccard"))
     graft.plans.Fence.filterNoPushdown(verified, col("jaccard") >= JaccardThreshold)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** Oracle CTE chain `m, bands, cand` over an existing `s(doc_id, hs)`
-    * — the SQL twin of [[bandFrame]] + the band self-join, shared by the
-    * minhash dedup oracle and the recall-eval oracle (splice, never
-    * copy).
+  /** Oracle CTE chain `m, bands` over an existing `s(doc_id, hs)` —
+    * the SQL twin of [[bandFrame]], shared by the minhash dedup, the
+    * recall-eval and the incremental-probe oracles (splice, never copy).
     */
-  private val minhashCandCteSql: String = {
-    val ms = (0 until NumPerms).map { j =>
-      val a = 2L * j + 3L
-      val b = 101L * j + 7L
-      s"list_min(list_transform(hs, hh -> ($a * hh + $b) % $P)) AS m$j"
-    }.mkString(",\n    ")
+  private val minhashBandsCteSql: String = {
+    val ms = (0 until NumPerms).map(j => s"${TextFns.minhashSql(j)} AS m$j")
+      .mkString(",\n    ")
     val bandSelects = (0 until NumBands).map { bnd =>
       val key = (0 until RowsPerBand)
         .map(r => s"CAST(m${RowsPerBand * bnd + r} AS VARCHAR)")
@@ -243,13 +244,19 @@ object Dedup {
        |),
        |bands AS (
        |  $bandSelects
-       |),
+       |)""".stripMargin
+  }
+
+  /** [[minhashBandsCteSql]] plus `cand`, the band self-join — the SQL
+    * twin of [[bandCandidates]] before its shingle-set re-join.
+    */
+  private val minhashCandCteSql: String =
+    s"""$minhashBandsCteSql,
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
        |)""".stripMargin
-  }
 
   val qDedupMinhashOracle: String =
     s"""WITH $shingledSql,
@@ -277,18 +284,7 @@ object Dedup {
     // r12: one shingle run feeds bands, verification AND the truth set
     // (was two — see [[jaccardPairsOf]]); shingled() already checkpoints
     val base = shingled(s, dir)
-    val bands = bandFrame(base)
-    val cand = bands.as("a")
-      .join(bands.as("b").hint("shuffle_hash"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    val verified = cand
-      .join(base.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
-        .hint("shuffle_hash"), "doc_a")
-      .join(base.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"))
-        .hint("shuffle_hash"), "doc_b")
+    val verified = bandCandidates(base)
       .select(col("doc_a"), col("doc_b"),
         (jaccardOut >= JaccardThreshold).as("is_true"))
     val truth = jaccardPairsOf(base)
@@ -556,11 +552,7 @@ object Dedup {
   }
 
   val qMinhashEstOracle: String = {
-    val ms = (0 until NumPerms).map { j =>
-      val a = 2L * j + 3L
-      val b = 101L * j + 7L
-      s"list_min(list_transform(hs, hh -> ($a * hh + $b) % $P))"
-    }.mkString("[", ",\n    ", "]")
+    val ms = (0 until NumPerms).map(TextFns.minhashSql).mkString("[", ",\n    ", "]")
     s"""WITH $jaccardPairsCte,
        |sig AS (SELECT doc_id, $ms AS sigs FROM s),
        |est AS (
@@ -803,27 +795,9 @@ object Dedup {
       .orderBy(col("doc_id"), col("dup_of"))
   }
 
-  val qIncrementalMinhashOracle: String = {
-    val ms = (0 until NumPerms).map { j =>
-      val a = 2L * j + 3L
-      val b = 101L * j + 7L
-      s"list_min(list_transform(hs, hh -> ($a * hh + $b) % $P)) AS m$j"
-    }.mkString(",\n    ")
-    val bandSelects = (0 until NumBands).map { bnd =>
-      val key = (0 until RowsPerBand)
-        .map(r => s"CAST(m${RowsPerBand * bnd + r} AS VARCHAR)")
-        .mkString(" || '-' || ")
-      s"SELECT doc_id, $bnd AS band, md5($key) AS bkey FROM m"
-    }.mkString("\n  UNION ALL\n  ")
+  val qIncrementalMinhashOracle: String =
     s"""WITH $shingledSql,
-       |m AS (
-       |  SELECT doc_id,
-       |    $ms
-       |  FROM s
-       |),
-       |bands AS (
-       |  $bandSelects
-       |),
+       |$minhashBandsCteSql,
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS dup_of
        |  FROM bands a JOIN bands b
@@ -836,7 +810,6 @@ object Dedup {
        |JOIN s y ON y.doc_id = dup_of
        |WHERE $jaccardOutSql >= $JaccardThreshold
        |ORDER BY cand.doc_id, dup_of""".stripMargin
-  }
 
   /** Shared recursive-CTE prefix labeling every document with its
     * min-reachable cluster representative (`cl(doc_id, cluster)`).

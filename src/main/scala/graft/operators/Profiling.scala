@@ -1279,10 +1279,10 @@ object Profiling {
     * unbounded variance: expect extreme outliers forever; α > 3 means
     * a few caps suffice) — the principled version of q_length_outliers'
     * MAD cut. Shape: the top-k per source comes from a row_number window
-    * that the GroupedTopK rule lowers to the map-side-heap TopKPerKey
-    * operator — the exchange carries ≤ k rows per source, never the
-    * corpus; x₍ₖ₎ is a per-source aggregate of that k-row frame joined
-    * back by broadcast (sources-sized). Determinism: lengths are
+    * that Spark prunes with a map-side WindowGroupLimit — the exchange
+    * carries ≤ k rows per source per task, never the corpus; x₍ₖ₎ is a
+    * per-source aggregate of that k-row frame joined back by broadcast
+    * (sources-sized). Determinism: lengths are
     * integers with a total (length, doc_id) tie order, so the top-k SET
     * is identical on both engines; ln of an integer ratio follows the
     * round-gap discipline (4 decimals) like every other transcendental

@@ -392,33 +392,41 @@ object Similarity {
     * path serves the corpus, and the measured recall is a first-class,
     * oracle-checked result rather than a claim.
     */
-  def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    val brute = qAnnTopk(s, dir).filter(col("rank") <= 3)
-      .select(col("query_id"), col("neighbor_id"))
-    val lsh = qAnnLsh(s, dir)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    brute.join(lsh, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_true"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .select(col("query_id"), col("n_true"), col("n_hit"),
-        round(col("n_hit") / col("n_true"), 4).as("recall"))
-      .orderBy(col("query_id"))
-  }
+  def qAnnRecall(s: SparkSession, dir: String): DataFrame =
+    recall(qAnnTopk(s, dir).filter(col("rank") <= 3), qAnnLsh(s, dir))
 
   val qAnnRecallOracle: String =
     s"""WITH bt AS (
        |  SELECT query_id, neighbor_id FROM ($qAnnTopkOracle) WHERE rank <= 3
        |),
        |lt AS (SELECT query_id, neighbor_id FROM ($qAnnLshOracle))
-       |SELECT bt.query_id, count(*) AS n_true,
-       |  CAST(sum(CASE WHEN lt.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-       |  round(CAST(sum(CASE WHEN lt.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+       |${recallSql("bt", "lt")}""".stripMargin
+
+  /** Per-query recall of the `found` neighbours against the `truth`
+    * ones, both keyed by (query_id, neighbor_id): `n_true`, `n_hit` and
+    * their ratio, one row per truth query. Oracle twin: [[recallSql]].
+    */
+  private def recall(truth: DataFrame, found: DataFrame): DataFrame =
+    truth.select(col("query_id"), col("neighbor_id"))
+      .join(found.select(col("query_id"), col("neighbor_id"), lit(1L).as("hit")),
+        Seq("query_id", "neighbor_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(lit(1)).as("n_true"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
+      .select(col("query_id"), col("n_true"), col("n_hit"),
+        round(col("n_hit") / col("n_true"), 4).as("recall"))
+      .orderBy(col("query_id"))
+
+  /** [[recall]] over the CTEs named `truth` and `found`. */
+  private def recallSql(truth: String, found: String): String =
+    s"""SELECT $truth.query_id, count(*) AS n_true,
+       |  CAST(sum(CASE WHEN $found.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
+       |  round(CAST(sum(CASE WHEN $found.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
        |    / CAST(count(*) AS DOUBLE), 4) AS recall
-       |FROM bt
-       |LEFT JOIN lt ON lt.query_id = bt.query_id AND lt.neighbor_id = bt.neighbor_id
-       |GROUP BY bt.query_id
-       |ORDER BY bt.query_id""".stripMargin
+       |FROM $truth
+       |LEFT JOIN $found ON $found.query_id = $truth.query_id AND $found.neighbor_id = $truth.neighbor_id
+       |GROUP BY $truth.query_id
+       |ORDER BY $truth.query_id""".stripMargin
 
   /** Per-label centroid, emitted FLAT as (label, pos, n_vecs, cx) rows —
     * 1-based dimension index. The scalable shape for averaging vectors:
@@ -1159,16 +1167,7 @@ object Similarity {
     val half = full
       .select(col("vec_id"), slice(col("v"), 1, PrefixDims).as("v"))
       .withColumn("nsq", VectorFns.normSq(col("v"), PrefixDims))
-    val truth = annTopk(full, lit(true), 3).select(col("query_id"), col("neighbor_id"))
-    val pref = annTopk(half, lit(true), 3).select(col("query_id"), col("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    truth.join(pref, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_true"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .select(col("query_id"), col("n_true"), col("n_hit"),
-        round(col("n_hit") / col("n_true"), 4).as("recall"))
-      .orderBy(col("query_id"))
+    recall(annTopk(full, lit(true), 3), annTopk(half, lit(true), 3))
   }
 
   val qPrefixRecallOracle: String =
@@ -1177,16 +1176,7 @@ object Similarity {
        |  ${dotSql("v[1:" + PrefixDims + "]", "v[1:" + PrefixDims + "]")} AS nsq FROM n),
        |ft AS (SELECT query_id, neighbor_id FROM (WITH ${annTopkSql("n", "true", 3)})),
        |pt AS (SELECT query_id, neighbor_id FROM (WITH ${annTopkSql("h", "true", 3)}))
-       |SELECT ft.query_id, count(*) AS n_true,
-       |  CAST(sum(CASE WHEN pt.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       |    AS BIGINT) AS n_hit,
-       |  round(CAST(sum(CASE WHEN pt.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       |    AS BIGINT) / CAST(count(*) AS DOUBLE), 4) AS recall
-       |FROM ft
-       |LEFT JOIN pt ON pt.query_id = ft.query_id
-       |  AND pt.neighbor_id = ft.neighbor_id
-       |GROUP BY ft.query_id
-       |ORDER BY ft.query_id""".stripMargin
+       |${recallSql("ft", "pt")}""".stripMargin
 
   /** Query population size for [[qKnnClassify]]. */
   val KnnQueries = 50L

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
@@ -20,6 +20,38 @@ object TextAnalysis {
   private val EsStop = Seq("el", "la", "de", "y", "en")
   private val DeStop = Seq("der", "die", "das", "und", "zu")
   private val FrStop = Seq("le", "un", "une", "et", "dans")
+
+  /** Stopword-profile scores `s_en, s_es, s_de, s_fr` of the token
+    * column `toks`. Oracle twin: [[langScoresSql]].
+    */
+  private def langScores: Seq[Column] = Seq(
+    TextFns.stopCount(col("toks")).as("s_en"),
+    TextFns.stopCount(col("toks"), EsStop).as("s_es"),
+    TextFns.stopCount(col("toks"), DeStop).as("s_de"),
+    TextFns.stopCount(col("toks"), FrStop).as("s_fr"))
+
+  private val langScoresSql: String =
+    s"""${TextFns.stopCountSql()} AS s_en,
+       |    ${TextFns.stopCountSql(EsStop)} AS s_es,
+       |    ${TextFns.stopCountSql(DeStop)} AS s_de,
+       |    ${TextFns.stopCountSql(FrStop)} AS s_fr""".stripMargin
+
+  /** The predicted language: argmax of [[langScores]], ties broken in
+    * the fixed order en > es > de > fr. Oracle twin: [[predictedLangSql]].
+    */
+  private def predictedLang: Column =
+    when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de") && col("s_en") >= col("s_fr"), "en")
+      .when(col("s_es") >= col("s_de") && col("s_es") >= col("s_fr"), "es")
+      .when(col("s_de") >= col("s_fr"), "de")
+      .otherwise("fr")
+
+  private val predictedLangSql: String =
+    """CASE
+      |    WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
+      |    WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
+      |    WHEN s_de >= s_fr THEN 'de'
+      |    ELSE 'fr'
+      |  END""".stripMargin
 
   private val toksSql = TextFns.toksSql
 
@@ -94,17 +126,8 @@ object TextAnalysis {
   def qTextLangid(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .select(
-        col("doc_id"), col("lang"),
-        TextFns.stopCount(col("toks")).as("s_en"),
-        TextFns.stopCount(col("toks"), EsStop).as("s_es"),
-        TextFns.stopCount(col("toks"), DeStop).as("s_de"),
-        TextFns.stopCount(col("toks"), FrStop).as("s_fr"))
-      .withColumn("predicted",
-        when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de") && col("s_en") >= col("s_fr"), "en")
-          .when(col("s_es") >= col("s_de") && col("s_es") >= col("s_fr"), "es")
-          .when(col("s_de") >= col("s_fr"), "de")
-          .otherwise("fr"))
+      .select(Seq(col("doc_id"), col("lang")) ++ langScores: _*)
+      .withColumn("predicted", predictedLang)
       .select(col("doc_id"), col("lang"), col("predicted"),
         col("s_en"), col("s_es"), col("s_de"), col("s_fr"))
       .orderBy(col("doc_id"))
@@ -113,19 +136,11 @@ object TextAnalysis {
     s"""WITH t AS (SELECT doc_id, lang, $toksSql AS toks FROM documents),
        |sc AS (
        |  SELECT doc_id, lang,
-       |    ${TextFns.stopCountSql()} AS s_en,
-       |    ${TextFns.stopCountSql(EsStop)} AS s_es,
-       |    ${TextFns.stopCountSql(DeStop)} AS s_de,
-       |    ${TextFns.stopCountSql(FrStop)} AS s_fr
+       |    $langScoresSql
        |  FROM t
        |)
        |SELECT doc_id, lang,
-       |  CASE
-       |    WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-       |    WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-       |    WHEN s_de >= s_fr THEN 'de'
-       |    ELSE 'fr'
-       |  END AS predicted,
+       |  $predictedLangSql AS predicted,
        |  CAST(s_en AS INTEGER) AS s_en, CAST(s_es AS INTEGER) AS s_es,
        |  CAST(s_de AS INTEGER) AS s_de, CAST(s_fr AS INTEGER) AS s_fr
        |FROM sc
@@ -145,18 +160,9 @@ object TextAnalysis {
     val docs = Tables.documents(s, dir)
     val scored = docs
       .select(col("doc_id"), col("text"), TextFns.tokens(col("text")).as("toks"))
-      .select(
-        col("doc_id"), col("text"),
-        size(col("toks")).as("n_tokens"),
-        TextFns.stopCount(col("toks")).as("s_en"),
-        TextFns.stopCount(col("toks"), EsStop).as("s_es"),
-        TextFns.stopCount(col("toks"), DeStop).as("s_de"),
-        TextFns.stopCount(col("toks"), FrStop).as("s_fr"))
-      .withColumn("predicted",
-        when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de") && col("s_en") >= col("s_fr"), "en")
-          .when(col("s_es") >= col("s_de") && col("s_es") >= col("s_fr"), "es")
-          .when(col("s_de") >= col("s_fr"), "de")
-          .otherwise("fr"))
+      .select(Seq(col("doc_id"), col("text"), size(col("toks")).as("n_tokens"))
+        ++ langScores: _*)
+      .withColumn("predicted", predictedLang)
       .withColumn("quality_score",
         round(least(lit(1.0), col("n_tokens") / 100.0) *
           (lit(1.0) - col("s_en") / col("n_tokens")), 6))
@@ -175,20 +181,12 @@ object TextAnalysis {
     s"""WITH t AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
        |sc AS (
        |  SELECT doc_id, len(toks) AS n_tokens,
-       |    ${TextFns.stopCountSql()} AS s_en,
-       |    ${TextFns.stopCountSql(EsStop)} AS s_es,
-       |    ${TextFns.stopCountSql(DeStop)} AS s_de,
-       |    ${TextFns.stopCountSql(FrStop)} AS s_fr
+       |    $langScoresSql
        |  FROM t
        |),
        |lq AS (
        |  SELECT doc_id, n_tokens,
-       |    CASE
-       |      WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-       |      WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-       |      WHEN s_de >= s_fr THEN 'de'
-       |      ELSE 'fr'
-       |    END AS predicted,
+       |    $predictedLangSql AS predicted,
        |    round(least(1.0, n_tokens / 100.0) * (1.0 - s_en / n_tokens), 6) AS quality_score
        |  FROM sc
        |),
@@ -1762,8 +1760,8 @@ object TextAnalysis {
     * designer reads this table, not 500k doc vectors. Shape: one
     * (source, word) grouped count (map-side combined), a word-keyed df
     * aggregate joined back shuffle-on-word, and the per-source top-k
-    * window lowers to the map-side-heap TopKPerKey operator — the final
-    * exchange carries k rows per source. Determinism: tf and df are
+    * window, which Spark prunes with a map-side WindowGroupLimit — the
+    * final exchange carries k rows per source per task. Determinism: tf and df are
     * integers, idf is one ln of a rational, the score product is one
     * IEEE multiply per row, ties fall to the word.
     */

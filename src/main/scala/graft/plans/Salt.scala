@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for shuffle joins: salt the skewed (fact) side into
@@ -24,11 +24,4 @@ object Salt {
       explode(array((0 until salts).map(lit): _*)))
     saltedFact.join(saltedDim, Seq(key, "_salt")).drop("_salt")
   }
-
-  /** Salt column for manual use in aggregations: two-phase aggregate
-    * (groupBy(key, salt) partial → groupBy(key) final) bounds any one
-    * reducer's share of a hot key to 1/salts.
-    */
-  def saltCol(salts: Int): Column =
-    pmod(hash(monotonically_increasing_id()), lit(salts))
 }

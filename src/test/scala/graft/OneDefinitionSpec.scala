@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * capped pair edges, the triangle join, the BFS frontier loop, the
   * langid confusion cells, the Mann–Kendall z and trend verdict, the
   * user-lifetime frame, the lag design, the OLS moment fit, the trigram
-  * hashes and the catalog row with its validity rule) and the
+  * hashes, the catalog row with its validity rule, the MinHash
+  * permutation term and band candidates, the langid argmax and the ANN
+  * recall fold) and the
   * exact-decimal types are each written once per engine; operators and
   * oracles call or splice them. A copy spelled out at a call site is
   * how an oracle drifts from its engine twin, so this scans `src/main`
@@ -136,7 +138,20 @@ class OneDefinitionSpec extends AnyFunSuite {
     // qCatalogParse has no filter: every key it synthesizes is well-formed
     ("the catalog validity rule is only Catalog.parsable and its SQL twin",
       """size\((?:pathParts|fileParts)\)|len\(str_split\(""",
-      Seq("Catalog.scala", "Catalog.scala")))
+      Seq("Catalog.scala", "Catalog.scala")),
+    // the native signature bank keeps its own copy of the constants
+    ("the MinHash permutation term is only TextFns.minhash, its SQL twin and MinHashSigs",
+      """101L \* j""", Seq("TextFns.scala", "TextFns.scala", "MinHashSigs.scala")),
+    // qIncrementalMinhash (engine and oracle) probes the persisted corpus
+    // index with the arriving batch's bands, a variant
+    ("the band self-join is only Dedup.bandCandidates, its SQL twin and qIncrementalMinhash",
+      """col\("a\.bkey"\) === col\("b\.bkey"\)|a\.bkey = b\.bkey""",
+      Seq.fill(4)("Dedup.scala")),
+    ("the langid argmax is only TextAnalysis.predictedLang and its SQL twin",
+      """col\("s_es"\) >= col\("s_de"\)|s_es >= s_de""",
+      Seq("TextAnalysis.scala", "TextAnalysis.scala")),
+    ("the ANN recall fold is only Similarity.recall and its SQL twin",
+      """\.as\("n_hit"\)|\) AS n_hit\b""", Seq("Similarity.scala", "Similarity.scala")))
 
   for ((name, pattern, expected) <- definitions)
     test(name) {

@@ -104,6 +104,42 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("every literal row_number bound over a partitioned window prunes through WindowGroupLimit") {
+    // Spark infers the map-side limit only for bounds up to
+    // spark.sql.optimizer.windowGroupLimitThreshold (GraftSession.confs);
+    // a rank cap raised above it would lose the pruning without this
+    import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo,
+      Expression, LessThan, LessThanOrEqual, Literal, RowNumber, WindowExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, WindowGroupLimit,
+      Window => LWindow}
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    var bounded = 0
+    SparkEntry.queries.foreach { case (name, fn) =>
+      fn(spark, sf001).queryExecution.optimizedPlan.foreach {
+        case Filter(cond, w: LWindow) if w.partitionSpec.nonEmpty =>
+          val rns = w.windowExpressions.collect {
+            case a @ Alias(WindowExpression(_: RowNumber, _), _) => a.toAttribute
+          }
+          val isBound = conjuncts(cond).exists {
+            case LessThanOrEqual(a, _: Literal) => rns.exists(_.semanticEquals(a))
+            case LessThan(a, _: Literal) => rns.exists(_.semanticEquals(a))
+            case EqualTo(a, _: Literal) => rns.exists(_.semanticEquals(a))
+            case _ => false
+          }
+          if (isBound) {
+            bounded += 1
+            assert(w.child.isInstanceOf[WindowGroupLimit],
+              s"$name bounds a row_number without a WindowGroupLimit:\n$w")
+          }
+        case _ =>
+      }
+    }
+    assert(bounded > 0, "the walk found no row_number bound")
+  }
+
   test("partitionless windows never rank an entity-domain frame") {
     // The r5 escape class: "window over an Aggregate" is necessary but
     // not sufficient — an aggregate GROUPED BY an entity key (customer,
