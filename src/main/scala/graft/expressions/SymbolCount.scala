@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, StringTranslate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd count of Gopher's symbol characters:
@@ -22,12 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class SymbolCount(child: Expression) extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case st: StringType if st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"symbol_count requires a UTF8_BINARY string, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    Utf8Binary.check(child.dataType, prettyName)
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "symbol_count"

@@ -32,12 +32,8 @@ case class WsTokens(child: Expression) extends UnaryExpression {
 
   private lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case st: StringType if st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ws_tokens requires a UTF8_BINARY string, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    Utf8Binary.check(child.dataType, prettyName)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "ws_tokens"

@@ -344,13 +344,21 @@ object BinaryPipeline {
     * payloads (same degrade-don't-fail contract as [[decodeImage]]).
     */
   def decodeAudio(payload: Array[Byte]): Option[AudioInfo] =
+    withAudio(payload) { in =>
+      val f = in.getFormat
+      Some(AudioInfo(f.getSampleRate.toInt, f.getChannels, in.getFrameLength))
+    }
+
+  /** `f` over the payload opened as an audio stream, closed after; None
+    * for bytes no registered provider understands and for
+    * recognized-but-corrupt payloads, never a throw.
+    */
+  private def withAudio[A](payload: Array[Byte])(
+      f: javax.sound.sampled.AudioInputStream => Option[A]): Option[A] =
     try {
       val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
         new java.io.ByteArrayInputStream(payload))
-      try {
-        val f = in.getFormat
-        Some(AudioInfo(f.getSampleRate.toInt, f.getChannels, in.getFrameLength))
-      } finally in.close()
+      try f(in) finally in.close()
     } catch {
       case _: javax.sound.sampled.UnsupportedAudioFileException => None
       case _: java.io.IOException | _: RuntimeException => None
@@ -365,39 +373,32 @@ object BinaryPipeline {
     * unparseable or empty payloads, never a throw.
     */
   def decodePcmMono(payload: Array[Byte]): Option[Array[Double]] =
-    try {
-      val raw = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      try {
-        val ch = raw.getFormat.getChannels
-        val target = new javax.sound.sampled.AudioFormat(
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-          raw.getFormat.getSampleRate, 16, ch, ch * 2,
-          raw.getFormat.getSampleRate, false)
-        val pcm = javax.sound.sampled.AudioSystem.getAudioInputStream(target, raw)
-        val bytes = pcm.readAllBytes()
-        val n = bytes.length / 2 / ch
-        if (n == 0) None
-        else {
-          val out = new Array[Double](n)
-          var i = 0
-          while (i < n) {
-            var sum = 0.0
-            var c = 0
-            while (c < ch) {
-              val off = (i * ch + c) * 2
-              sum += ((bytes(off + 1) << 8) | (bytes(off) & 0xff)).toShort / 32768.0
-              c += 1
-            }
-            out(i) = sum / ch
-            i += 1
+    withAudio(payload) { raw =>
+      val ch = raw.getFormat.getChannels
+      val target = new javax.sound.sampled.AudioFormat(
+        javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
+        raw.getFormat.getSampleRate, 16, ch, ch * 2,
+        raw.getFormat.getSampleRate, false)
+      val pcm = javax.sound.sampled.AudioSystem.getAudioInputStream(target, raw)
+      val bytes = pcm.readAllBytes()
+      val n = bytes.length / 2 / ch
+      if (n == 0) None
+      else {
+        val out = new Array[Double](n)
+        var i = 0
+        while (i < n) {
+          var sum = 0.0
+          var c = 0
+          while (c < ch) {
+            val off = (i * ch + c) * 2
+            sum += ((bytes(off + 1) << 8) | (bytes(off) & 0xff)).toShort / 32768.0
+            c += 1
           }
-          Some(out)
+          out(i) = sum / ch
+          i += 1
         }
-      } finally raw.close()
-    } catch {
-      case _: javax.sound.sampled.UnsupportedAudioFileException => None
-      case _: java.io.IOException | _: RuntimeException => None
+        Some(out)
+      }
     }
 
   /** 64-bit audio energy-envelope hash over real decoded PCM — the audio

@@ -464,6 +464,21 @@ object Curation {
        |GROUP BY source
        |ORDER BY source""".stripMargin
 
+  /** Per-source corpus size `(source, n_docs, n_tokens)`. */
+  private def sourceTokens(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .select(col("source"), size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
+
+  /** SQL twin of [[sourceTokens]]: CTEs `t` and `a`. */
+  private val sourceTokensSql: String =
+    s"""t AS (SELECT source, CAST(len($toksSql) AS BIGINT) AS n_tok FROM documents),
+       |a AS (
+       |  SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
+       |  FROM t GROUP BY source
+       |)""".stripMargin
+
   /** Corpus composition report: per-source document/token counts, token
     * share of the corpus, and the cumulative share in descending-share
     * order (the "top-k domains hold x% of tokens" concentration curve).
@@ -473,10 +488,7 @@ object Curation {
     * never the corpus.
     */
   def qDomainMix(s: SparkSession, dir: String): DataFrame = {
-    val perSource = Tables.documents(s, dir)
-      .select(col("source"), size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
+    val perSource = sourceTokens(s, dir)
     val total = perSource.agg(sum(col("n_tokens")).as("tot"))
     val w = Window.orderBy(col("n_tokens").desc, col("source"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -488,11 +500,7 @@ object Curation {
   }
 
   val qDomainMixOracle: String =
-    s"""WITH t AS (SELECT source, CAST(len($toksSql) AS BIGINT) AS n_tok FROM documents),
-       |a AS (
-       |  SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-       |  FROM t GROUP BY source
-       |),
+    s"""WITH $sourceTokensSql,
        |b AS (
        |  SELECT source, n_docs, n_tokens,
        |    round(n_tokens / (SELECT CAST(sum(n_tokens) AS BIGINT) FROM a), 6) AS tok_share
@@ -762,42 +770,43 @@ object Curation {
     * is one corpus scan + two dimension-sized aggregates (sources ≪
     * rows); the boost ratio is a division of exact int64 products.
     */
-  def qDomainTemperature(s: SparkSession, dir: String): DataFrame = {
-    val a = Tables.documents(s, dir)
-      .select(col("source"), size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-    val tot = a.agg(sum(col("n_tokens")).as("tot"))
-    val b = a.crossJoin(broadcast(tot))
-      .withColumn("wq", round(sqrt(col("n_tokens") / col("tot")) * 1e9, 0).cast("long"))
-    val wtot = b.agg(sum(col("wq")).as("wtot"))
-    b.crossJoin(broadcast(wtot))
+  def qDomainTemperature(s: SparkSession, dir: String): DataFrame =
+    temperatureWeights(s, dir)
       .select(col("source"), col("n_docs"), col("n_tokens"),
         round(col("n_tokens") / col("tot"), 6).as("nat_share"),
         round(col("wq") / col("wtot"), 6).as("temp_share"),
         round((col("wq") * col("tot")) / (col("wtot") * col("n_tokens")).cast("double"), 4)
           .as("boost"))
       .orderBy(col("n_tokens").desc, col("source"))
+
+  /** [[sourceTokens]] with the corpus total `tot`, each source's √share
+    * weight `wq` in integer nano-units and their sum `wtot`.
+    */
+  private def temperatureWeights(s: SparkSession, dir: String): DataFrame = {
+    val a = sourceTokens(s, dir)
+    val b = a.crossJoin(broadcast(a.agg(sum(col("n_tokens")).as("tot"))))
+      .withColumn("wq", round(sqrt(col("n_tokens") / col("tot")) * 1e9, 0).cast("long"))
+    b.crossJoin(broadcast(b.agg(sum(col("wq")).as("wtot"))))
   }
 
-  val qDomainTemperatureOracle: String =
-    s"""WITH t AS (SELECT source, CAST(len($toksSql) AS BIGINT) AS n_tok FROM documents),
-       |a AS (
-       |  SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-       |  FROM t GROUP BY source
-       |),
+  /** SQL twin of [[temperatureWeights]]: CTE `tw` and the CTEs it reads. */
+  private val temperatureWeightsSql: String =
+    s"""$sourceTokensSql,
        |tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot FROM a),
        |b AS (
        |  SELECT a.*, tot.tot,
        |    CAST(round(sqrt(a.n_tokens / tot.tot) * 1e9) AS BIGINT) AS wq
        |  FROM a CROSS JOIN tot
        |),
-       |wt AS (SELECT CAST(sum(wq) AS BIGINT) AS wtot FROM b)
+       |tw AS (SELECT * FROM b CROSS JOIN (SELECT CAST(sum(wq) AS BIGINT) AS wtot FROM b))""".stripMargin
+
+  val qDomainTemperatureOracle: String =
+    s"""WITH $temperatureWeightsSql
        |SELECT source, n_docs, n_tokens,
        |  round(n_tokens / tot, 6) AS nat_share,
        |  round(wq / wtot, 6) AS temp_share,
        |  round((wq * tot) / CAST(wtot * n_tokens AS DOUBLE), 4) AS boost
-       |FROM b CROSS JOIN wt
+       |FROM tw
        |ORDER BY n_tokens DESC, source""".stripMargin
 
   /** Cross-source quantile normalization: replace each document's length
@@ -863,15 +872,7 @@ object Curation {
     * construction. Dimension-sized end to end after the one corpus scan.
     */
   def qMixAllocate(s: SparkSession, dir: String): DataFrame = {
-    val a = Tables.documents(s, dir)
-      .select(col("source"), size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
-      .groupBy(col("source"))
-      .agg(sum(col("n_tok")).as("n_tokens"))
-    val tot = a.agg(sum(col("n_tokens")).as("tot"))
-    val b = a.crossJoin(broadcast(tot))
-      .withColumn("wq", round(sqrt(col("n_tokens") / col("tot")) * 1e9, 0).cast("long"))
-    val wtot = b.agg(sum(col("wq")).as("wtot"))
-    val c = b.crossJoin(broadcast(wtot))
+    val c = temperatureWeights(s, dir)
       .withColumn("num", lit(MixBudgetTokens) * col("wq"))
       .withColumn("base", expr("num DIV wtot"))
       .withColumn("rem", col("num") - col("base") * col("wtot"))
@@ -888,21 +889,13 @@ object Curation {
   }
 
   val qMixAllocateOracle: String =
-    s"""WITH t AS (SELECT source, CAST(len($toksSql) AS BIGINT) AS n_tok FROM documents),
-       |a AS (SELECT source, CAST(sum(n_tok) AS BIGINT) AS n_tokens FROM t GROUP BY source),
-       |tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot FROM a),
-       |b AS (
-       |  SELECT a.*, tot.tot,
-       |    CAST(round(sqrt(a.n_tokens / tot.tot) * 1e9) AS BIGINT) AS wq
-       |  FROM a CROSS JOIN tot
-       |),
-       |wt AS (SELECT CAST(sum(wq) AS BIGINT) AS wtot FROM b),
+    s"""WITH $temperatureWeightsSql,
        |c AS (
-       |  SELECT b.*, wt.wtot,
-       |    $MixBudgetTokens * b.wq AS num,
-       |    ($MixBudgetTokens * b.wq) // wt.wtot AS base,
-       |    $MixBudgetTokens * b.wq - (($MixBudgetTokens * b.wq) // wt.wtot) * wt.wtot AS rem
-       |  FROM b CROSS JOIN wt
+       |  SELECT *,
+       |    $MixBudgetTokens * wq AS num,
+       |    ($MixBudgetTokens * wq) // wtot AS base,
+       |    $MixBudgetTokens * wq - (($MixBudgetTokens * wq) // wtot) * wtot AS rem
+       |  FROM tw
        |),
        |bt AS (SELECT CAST(sum(base) AS BIGINT) AS base_tot FROM c)
        |SELECT source, n_tokens,
@@ -1374,9 +1367,7 @@ object Curation {
     */
   def qOtsuThreshold(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = Tables.documents(s, dir)
-      .select(TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val scored = TextAnalysis.tokenDocs(s, dir)
       .select(TextFns.stopScore(col("toks"), 1000).as("sq"))
     val cells = scored.groupBy(col("sq")).agg(count(lit(1)).as("c"))
     val tot = cells.agg(sum(col("c")).as("n"),

@@ -1204,6 +1204,18 @@ object Dedup {
     */
   val SegmentTokens = 10
 
+  /** Each document of `docs (doc_id, text)` cut into consecutive
+    * [[SegmentTokens]]-token segments: `(doc_id, seg_no, seg)`, seg_no
+    * from 0.
+    */
+  private def segments(docs: DataFrame): DataFrame =
+    docs
+      .select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
+      .select(col("doc_id"), posexplode(transform(
+        sequence(lit(0), floor((size(col("t")) - 1) / SegmentTokens).cast("int")),
+        i => concat_ws(" ", slice(col("t"), i * SegmentTokens + 1, lit(SegmentTokens))))))
+      .select(col("doc_id"), col("pos").as("seg_no"), col("col").as("seg"))
+
   /** Corpus-wide line-level dedup (the CCNet/RefinedWeb paragraph-dedup
     * shape): split every document into [[SegmentTokens]]-token segments,
     * keep only the FIRST occurrence of each segment across the whole
@@ -1220,13 +1232,8 @@ object Dedup {
     * q_incremental_dedup).
     */
   def qLineDedup(s: SparkSession, dir: String): DataFrame = {
-    val segs = Tables.documents(s, dir)
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
-      .select(col("doc_id"), posexplode(transform(
-        sequence(lit(0), floor((size(col("t")) - 1) / SegmentTokens).cast("int")),
-        i => concat_ws(" ", slice(col("t"), i * SegmentTokens + 1, lit(SegmentTokens))))))
-      .select(col("doc_id"), col("pos").as("seg_no"),
-        TextFns.hash60(col("col")).as("h"))
+    val segs = segments(Tables.documents(s, dir))
+      .select(col("doc_id"), col("seg_no"), TextFns.hash60(col("seg")).as("h"))
       .withColumn("pos_key", col("doc_id") * 100000L + col("seg_no"))
       .localCheckpoint()
     val keepers = segs.groupBy(col("h")).agg(min(col("pos_key")).as("keeper_key"))
@@ -1268,12 +1275,7 @@ object Dedup {
     * to the empty string (count it, then drop it — that is the dedup).
     */
   def dedupSegments(docs: DataFrame): DataFrame = {
-    val segs = docs
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
-      .select(col("doc_id"), posexplode(transform(
-        sequence(lit(0), floor((size(col("t")) - 1) / SegmentTokens).cast("int")),
-        i => concat_ws(" ", slice(col("t"), i * SegmentTokens + 1, lit(SegmentTokens))))))
-      .select(col("doc_id"), col("pos").as("seg_no"), col("col").as("seg"))
+    val segs = segments(docs)
       .withColumn("h", TextFns.hash60(col("seg")))
       .withColumn("pos_key", col("doc_id") * 100000L + col("seg_no"))
       .localCheckpoint()

@@ -25,9 +25,7 @@ object Evaluation {
     * documents have no score (0/0) and are dropped.
     */
   private def scoredDocs(s: SparkSession, dir: String, scale: Long): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
+    TextAnalysis.tokenDocs(s, dir, "lang")
       .select(TextFns.stopScore(col("toks"), scale).as("score"),
         when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
 
@@ -298,9 +296,7 @@ object Evaluation {
     * one threshold.
     */
   def qPrCurve(s: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val scored = TextAnalysis.tokenDocs(s, dir, "lang")
       .select((col("lang") === "en").as("label"),
         (TextFns.stopCount(col("toks")) / size(col("toks")).cast("double")).as("score"))
     val th = spark_range_df(s)
@@ -508,6 +504,21 @@ object Evaluation {
             "sqrt(CAST(nn - fp + p - tp AS DOUBLE)))", 6)} AS mcc
        |FROM best""".stripMargin
 
+  /** [[scoredDocs]] in 20 score buckets: `(bucket, n, np)`, np the
+    * English documents among the bucket's n.
+    */
+  private def bucketCells(s: SparkSession, dir: String): DataFrame =
+    scoredDocs(s, dir, 20)
+      .groupBy(least(col("score"), lit(19L)).as("bucket"))
+      .agg(count(lit(1)).as("n"), sum(col("pos")).as("np"))
+
+  /** SQL twin of [[bucketCells]]: CTE `cells`. */
+  private val bucketCellsSql: String =
+    s"""cells AS (
+       |  SELECT least(score, 19) AS bucket, count(*) AS n, CAST(sum(pos) AS BIGINT) AS np
+       |  FROM (${scoredDocsSql(20)}) s GROUP BY 1
+       |)""".stripMargin
+
   /** Isotonic (PAV) calibration of the stopword-ratio score against the
     * English label — the monotone-regression companion to
     * [[qCalibration]]'s fixed-bin reliability diagram: the raw
@@ -526,14 +537,11 @@ object Evaluation {
     * outputs round portably.
     */
   def qIsotonicCalibration(s: SparkSession, dir: String): DataFrame = {
-    val scored = scoredDocs(s, dir, 20)
-      .select(least(col("score"), lit(19L)).as("bucket"), col("pos"))
     val w = Window.orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // contiguous index rn over the nonempty buckets + inclusive prefix
     // sums: rate(i..j) = (q_j − q_i + np_i) / (c_j − c_i + n_i)
-    val cells = scored.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"), sum(col("pos")).as("np"))
+    val cells = bucketCells(s, dir)
       .withColumn("rn", row_number().over(Window.orderBy(col("bucket"))).cast("long"))
       .withColumn("c", sum(col("n")).over(w))
       .withColumn("q", sum(col("np")).over(w))
@@ -561,13 +569,7 @@ object Evaluation {
   }
 
   val qIsotonicCalibrationOracle: String =
-    s"""WITH sc AS (
-       |  SELECT least(score, 19) AS bucket, pos FROM (${scoredDocsSql(20)}) s
-       |),
-       |cells AS (
-       |  SELECT bucket, count(*) AS n, CAST(sum(pos) AS BIGINT) AS np
-       |  FROM sc GROUP BY bucket
-       |),
+    s"""WITH $bucketCellsSql,
        |idx AS (
        |  SELECT bucket, n, np,
        |    CAST(row_number() OVER (ORDER BY bucket) AS BIGINT) AS rn,
@@ -728,10 +730,7 @@ object Evaluation {
     * All counts are exact integers; ratios are final-step doubles.
     */
   def qLiftDeciles(s: SparkSession, dir: String): DataFrame = {
-    val scored = scoredDocs(s, dir, 20)
-      .select(least(col("score"), lit(19L)).as("bucket"), col("pos"))
-    val cells = scored.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"), sum(col("pos")).as("np"))
+    val cells = bucketCells(s, dir)
     val tot = cells.agg(sum(col("n")).as("nt"), sum(col("np")).as("pt"))
     val wDesc = Window.orderBy(col("bucket").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -749,13 +748,7 @@ object Evaluation {
   }
 
   val qLiftDecilesOracle: String =
-    s"""WITH sc AS (
-       |  SELECT least(score, 19) AS bucket, pos FROM (${scoredDocsSql(20)}) s
-       |),
-       |cells AS (
-       |  SELECT bucket, count(*) AS n, CAST(sum(pos) AS BIGINT) AS np
-       |  FROM sc GROUP BY bucket
-       |),
+    s"""WITH $bucketCellsSql,
        |tot AS (
        |  SELECT CAST(sum(n) AS BIGINT) AS nt, CAST(sum(np) AS BIGINT) AS pt
        |  FROM cells

@@ -33,10 +33,7 @@ object Graph {
     * instead of convergence-approximate.
     */
   def qPagerankIter(s: SparkSession, dir: String): DataFrame = {
-    val edges = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("su"))
-      .distinct()
+    val edges = custSuppEdges(s, dir)
     val outdeg = edges.groupBy(col("c")).agg(count(lit(1)).as("outdeg"))
     edges.join(outdeg, Seq("c"))
       .groupBy(col("su").as("s_suppkey"))
@@ -45,6 +42,15 @@ object Graph {
           .as("rank"))
       .orderBy(col("s_suppkey"))
   }
+
+  /** The customer→supplier purchase edges `(c, su)`: distinct
+    * (o_custkey, l_suppkey) pairs of orders⋈lineitem.
+    */
+  private def custSuppEdges(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("c"), col("l_suppkey").as("su"))
+      .distinct()
 
   /** Full PageRank: `iters` power-iterations over an (src, dst) edge
     * list, returning (id, rank) for every endpoint. Per-node damping
@@ -648,10 +654,7 @@ object Graph {
     // no localCheckpoint: both consumers (degrees, capped join) carry the
     // IDENTICAL distinct subtree, so ReuseExchange runs it once — the
     // block-manager round-trip the checkpoint paid was pure overhead
-    val edges = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("su"))
-      .distinct()
+    val edges = custSuppEdges(s, dir)
     val deg = edges.groupBy(col("c")).agg(count(lit(1)).as("d"))
       .filter(col("d") >= 2 && col("d") <= LinkMaxDeg)
       .select(col("c"),
@@ -808,6 +811,21 @@ object Graph {
   private def basketEdges(s: SparkSession, dir: String): DataFrame =
     cappedPairEdges(s, dir, "l_orderkey", "l_partkey")
 
+  /** Node degrees `(id, d)` of an undirected `(sa, sb)` edge list. */
+  private def degrees(edges: DataFrame): DataFrame =
+    edges.select(col("sa").as("id"))
+      .union(edges.select(col("sb").as("id")))
+      .groupBy(col("id")).agg(count(lit(1)).as("d"))
+
+  /** SQL twin of [[degrees]] over [[basketEdges]]: CTEs `e` and `deg`. */
+  private val basketDegreesSql: String =
+    s"""${pairEdgesSql("l_orderkey", "l_partkey", "e")},
+       |deg AS (
+       |  SELECT id, count(*) AS d FROM (
+       |    SELECT sa AS id FROM e UNION ALL SELECT sb FROM e
+       |  ) GROUP BY id
+       |)""".stripMargin
+
   /** k-core extraction over the supplier co-supply graph (suppliers
     * linked when they ship the same part): iteratively peel nodes of
     * degree < k until fixpoint — the standard dense-subgraph primitive
@@ -918,9 +936,7 @@ object Graph {
     */
   def qAssortativity(s: SparkSession, dir: String): DataFrame = {
     val edges = basketEdges(s, dir)
-    val deg = edges.select(col("sa").as("id"))
-      .union(edges.select(col("sb").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
+    val deg = degrees(edges)
     val withDeg = edges
       .join(deg.select(col("id").as("sa"), col("d").as("j")).hint("shuffle_hash"),
         Seq("sa"))
@@ -944,12 +960,7 @@ object Graph {
   }
 
   val qAssortativityOracle: String =
-    s"""WITH ${pairEdgesSql("l_orderkey", "l_partkey", "e")},
-       |deg AS (
-       |  SELECT id, count(*) AS d FROM (
-       |    SELECT sa AS id FROM e UNION ALL SELECT sb FROM e
-       |  ) GROUP BY id
-       |),
+    s"""WITH $basketDegreesSql,
        |w AS (
        |  SELECT da.d AS j, db.d AS kk FROM e
        |  JOIN deg da ON da.id = e.sa
@@ -986,9 +997,7 @@ object Graph {
     */
   def qRichClub(s: SparkSession, dir: String): DataFrame = {
     val edges = basketEdges(s, dir)
-    val deg = edges.select(col("sa").as("id"))
-      .union(edges.select(col("sb").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))
+    val deg = degrees(edges)
     val club = deg.orderBy(col("d").desc, col("id")).limit(RichClubK)
       .select(col("id"))
     val tot = deg.agg(count(lit(1)).as("n_nodes"))
@@ -1012,12 +1021,7 @@ object Graph {
   }
 
   val qRichClubOracle: String =
-    s"""WITH ${pairEdgesSql("l_orderkey", "l_partkey", "e")},
-       |deg AS (
-       |  SELECT id, count(*) AS d FROM (
-       |    SELECT sa AS id FROM e UNION ALL SELECT sb FROM e
-       |  ) GROUP BY id
-       |),
+    s"""WITH $basketDegreesSql,
        |club AS (SELECT id FROM deg ORDER BY d DESC, id LIMIT $RichClubK),
        |tot AS (
        |  SELECT (SELECT count(*) FROM deg) AS n_nodes,

@@ -192,6 +192,21 @@ object Inference {
   val BmSourceA = "src0"
   val BmSourceB = "src1"
 
+  /** Document lengths `v` of the two sources, `isB` true for
+    * [[BmSourceB]].
+    */
+  private def twoSourceLengths(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .filter(col("source").isin(BmSourceA, BmSourceB))
+      .select(col("n_chars").as("v"), (col("source") === BmSourceB).as("isB"))
+
+  /** SQL twin of [[twoSourceLengths]]: CTE `d`. */
+  private val twoSourceLengthsSql: String =
+    s"""d AS (
+       |  SELECT n_chars AS v, (source = '$BmSourceB') AS isB
+       |  FROM documents WHERE source IN ('$BmSourceA', '$BmSourceB')
+       |)""".stripMargin
+
   /** Brunner–Munzel rank test on document length between two sources —
     * the Mann–Whitney replacement when the two distributions may differ
     * in SHAPE as well as location (MW's equal-variance-of-ranks
@@ -208,11 +223,7 @@ object Inference {
     * DECIMAL.
     */
   def qBrunnerMunzel(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-      .filter(col("source").isin(BmSourceA, BmSourceB))
-      .select(col("n_chars").as("v"),
-        (col("source") === BmSourceB).as("isB"))
-    val cells = docs.groupBy(col("v"))
+    val cells = twoSourceLengths(s, dir).groupBy(col("v"))
       .agg(sum(when(col("isB"), 0L).otherwise(1L)).as("c1"),
         sum(when(col("isB"), 1L).otherwise(0L)).as("c2"))
     val w = Window.orderBy(col("v"))
@@ -257,10 +268,7 @@ object Inference {
   }
 
   val qBrunnerMunzelOracle: String =
-    s"""WITH d AS (
-       |  SELECT n_chars AS v, (source = '$BmSourceB') AS isB
-       |  FROM documents WHERE source IN ('$BmSourceA', '$BmSourceB')
-       |),
+    s"""WITH $twoSourceLengthsSql,
        |cells AS (
        |  SELECT v,
        |    CAST(sum(CASE WHEN isB THEN 0 ELSE 1 END) AS BIGINT) AS c1,
@@ -375,6 +383,19 @@ object Inference {
     */
   val KpssLag = 8
 
+  /** Lineitem revenue per ship day in integer cents, `(day, y)`, the
+    * day spelled by `day`.
+    */
+  private def shipCents(s: SparkSession, dir: String, day: Column): DataFrame =
+    Tables.lineitem(s, dir).groupBy(day)
+      .agg(sum(NumFns.roundAwayLong(col("l_extendedprice") * 100)).as("y"))
+
+  /** SQL twin of [[shipCents]]: the body of a CTE. */
+  private def shipCentsSql(day: String): String =
+    s"""SELECT $day,
+       |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS y
+       |  FROM lineitem GROUP BY 1""".stripMargin
+
   /** KPSS level-stationarity test on daily revenue — the
     * REVERSED-null complement of [[Temporal.qDickeyFuller]]: DF's null
     * is a unit root, KPSS's null is stationarity, and the textbook
@@ -390,9 +411,8 @@ object Inference {
     * ≤|days| calendar frame.
     */
   def qKpss(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.lineitem(s, dir)
-      .groupBy(datediff(to_date(col("l_shipdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("l_extendedprice") * 100)).as("y"))
+    val days = shipCents(s, dir,
+      datediff(to_date(col("l_shipdate")), lit("1992-01-01")).as("di"))
     val w = Window.orderBy(col("di"))
     val wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val lagged = (1 to KpssLag).foldLeft(
@@ -451,11 +471,7 @@ object Inference {
       s"$acc + ${2.0 * (1.0 - j.toDouble / (KpssLag + 1))} * CAST(g$j AS DOUBLE)"
     }
     s"""WITH days AS (
-       |  SELECT date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE))
-       |      AS di,
-       |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS y
-       |  FROM lineitem GROUP BY 1
+       |  ${shipCentsSql("date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE)) AS di")}
        |),
        |lagged AS (
        |  SELECT di, y, row_number() OVER (ORDER BY di) AS t,
@@ -498,9 +514,7 @@ object Inference {
     * cross-engine ordering never touches the p-value.
     */
   def qCoxStuart(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("d"))
-      .agg(count(lit(1)).as("c"))
+    val days = Temporal.orderDates(s, dir, count(lit(1)).as("c"))
     val w = Window.orderBy(col("d"))
     val rn = days.withColumn("t", row_number().over(w)).localCheckpoint()
     val tot = rn.agg(count(lit(1)).as("n"))
@@ -529,10 +543,7 @@ object Inference {
 
   val qCoxStuartOracle: String = {
     val z = "(n_pos - nt / 2.0) / sqrt(nt / 4.0)"
-    s"""WITH days AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS d, count(*) AS c
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${Temporal.orderDatesSql("count(*) AS c")}),
        |rn AS (
        |  SELECT d, c, row_number() OVER (ORDER BY d) AS t FROM days
        |),
@@ -644,9 +655,7 @@ object Inference {
     * both engines.
     */
   def qGumbelFit(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.lineitem(s, dir)
-      .groupBy(to_date(col("l_shipdate")).as("d"))
-      .agg(sum(NumFns.roundAwayLong(col("l_extendedprice") * 100)).as("y"))
+    val days = shipCents(s, dir, to_date(col("l_shipdate")).as("d"))
     val blocks = days.groupBy(trunc(col("d"), "month").as("mo"))
       .agg(max(col("y")).as("bm"))
     val m = blocks.agg(count(lit(1)).as("nb"),
@@ -667,12 +676,7 @@ object Inference {
   }
 
   val qGumbelFitOracle: String =
-    s"""WITH days AS (
-       |  SELECT CAST(l_shipdate AS DATE) AS d,
-       |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS y
-       |  FROM lineitem GROUP BY 1
-       |),
+    s"""WITH days AS (${shipCentsSql("CAST(l_shipdate AS DATE) AS d")}),
        |blocks AS (
        |  SELECT date_trunc('month', d) AS mo, max(y) AS bm FROM days
        |  GROUP BY 1
@@ -938,10 +942,7 @@ object Inference {
     * rows, so the convolution is sf-invariant.
     */
   def qHodgesLehmann(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-      .filter(col("source").isin(BmSourceA, BmSourceB))
-      .select(col("n_chars").as("v"),
-        (col("source") === BmSourceB).as("isB"))
+    val docs = twoSourceLengths(s, dir)
     val ca = docs.filter(!col("isB")).groupBy(col("v").as("va"))
       .agg(count(lit(1)).as("ca"))
     val cb = docs.filter(col("isB")).groupBy(col("v").as("vb"))
@@ -959,10 +960,7 @@ object Inference {
   }
 
   val qHodgesLehmannOracle: String =
-    s"""WITH d AS (
-       |  SELECT n_chars AS v, (source = '$BmSourceB') AS isB
-       |  FROM documents WHERE source IN ('$BmSourceA', '$BmSourceB')
-       |),
+    s"""WITH $twoSourceLengthsSql,
        |ca AS (
        |  SELECT v AS va, count(*) AS ca FROM d WHERE NOT isB GROUP BY v
        |),
@@ -1199,11 +1197,8 @@ object Inference {
     * window exceeds the value-cell domain.
     */
   def qFlignerKilleen(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("source"), col("n_chars"))
-    val med = Analytics.exactPercentiles(docs, "source", "n_chars",
-      Seq(0.5 -> "med"))
-    val cells = docs.join(broadcast(med), Seq("source"))
-      .groupBy(col("source"), abs(col("n_chars") - col("med")).as("u"))
+    val cells = Profiling.medianDeviations(s, dir)
+      .groupBy(col("source"), col("adev").as("u"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()
     val scored = normalScores(cells, (lit(1.0) + col("r") / (col("n") + 1)) / 2)
@@ -1228,14 +1223,9 @@ object Inference {
   }
 
   val qFlignerKilleenOracle: String =
-    s"""WITH med AS (
-       |  SELECT source, round(quantile_cont(n_chars, 0.5), 4) AS med
-       |  FROM documents GROUP BY source
-       |),
+    s"""WITH ${Profiling.medianDeviationsSql},
        |cells AS MATERIALIZED (
-       |  SELECT d.source, abs(d.n_chars - m.med) AS u, count(*) AS c
-       |  FROM documents d JOIN med m ON d.source = m.source
-       |  GROUP BY 1, 2
+       |  SELECT source, adev AS u, count(*) AS c FROM dev GROUP BY 1, 2
        |),
        |${normalScoresSql("(1.0 + r / (n + 1)) / 2")},
        |ws AS (

@@ -60,30 +60,21 @@ object Layout {
     s"least(${(1L << ZBits) - 1}, (($v - $origin) * ${1L << ZBits}) $divSpark $span)"
   private val divSpark = "div"
 
-  /** Z-order layout audit: every part mapped to its Morton cell, then
-    * per-cell counts and per-dimension bounds — the report that shows
-    * each contiguous Morton range covers a tight 2-D box (the property
-    * file-level pruning relies on). One scan-side projection + one
-    * map-side-combined aggregate over ≤256 cells.
+  /** Every part `(p_partkey, p_size, cents, x, y)` in its grid cell:
+    * price in cents on x, size on y.
     */
-  def qZorderLayout(s: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.part(s, dir)
+  private def partGrid(s: SparkSession, dir: String): DataFrame =
+    Tables.part(s, dir)
       .select(col("p_partkey"), col("p_size"),
         round(col("p_retailprice") * 100).cast("long").as("cents"))
       .withColumn("x", expr(grid("cents", XOriginCents, XSpanCents)))
       .withColumn("y", expr(grid("p_size", YOriginSize, YSpanSize)))
-      .withColumn("z", morton("x", "y"))
-    cells.groupBy(col("z"))
-      .agg(count(lit(1)).as("n_parts"),
-        min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"),
-        min(col("p_size")).as("min_size"), max(col("p_size")).as("max_size"))
-      .orderBy(col("z"))
-  }
 
-  val qZorderLayoutOracle: String = {
+  /** SQL twin of [[partGrid]]: CTEs `p` and `g`. */
+  private val partGridSql: String = {
     def gridSql(v: String, origin: Long, span: Long): String =
       s"least(${(1L << ZBits) - 1}, (($v - $origin) * ${1L << ZBits}) // $span)"
-    s"""WITH p AS (
+    s"""p AS (
        |  SELECT p_partkey, p_size, CAST(round(p_retailprice * 100) AS BIGINT) AS cents
        |  FROM part
        |), g AS (
@@ -91,15 +82,40 @@ object Layout {
        |    ${gridSql("cents", XOriginCents, XSpanCents)} AS x,
        |    ${gridSql("CAST(p_size AS BIGINT)", YOriginSize, YSpanSize)} AS y
        |  FROM p
-       |)
-       |SELECT ${mortonSql("x", "y", ZBits, "//")} AS z,
+       |)""".stripMargin
+  }
+
+  /** The layout audit of a keyed part frame: per `key` cell, the part
+    * count and the bounds of both dimensions, in key order.
+    */
+  private def cellBounds(parts: DataFrame, key: String): DataFrame =
+    parts.groupBy(col(key))
+      .agg(count(lit(1)).as("n_parts"),
+        min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"),
+        min(col("p_size")).as("min_size"), max(col("p_size")).as("max_size"))
+      .orderBy(col(key))
+
+  /** SQL twin of [[cellBounds]]: the cell key is `keyExpr` over `src`. */
+  private def cellBoundsSql(src: String, keyExpr: String, key: String): String =
+    s"""SELECT $keyExpr AS $key,
        |  count(*) AS n_parts,
        |  min(cents) AS min_cents, max(cents) AS max_cents,
        |  min(p_size) AS min_size, max(p_size) AS max_size
-       |FROM g
-       |GROUP BY z
-       |ORDER BY z""".stripMargin
-  }
+       |FROM $src
+       |GROUP BY $key
+       |ORDER BY $key""".stripMargin
+
+  /** Z-order layout audit: every part mapped to its Morton cell, then
+    * per-cell counts and per-dimension bounds — the report that shows
+    * each contiguous Morton range covers a tight 2-D box (the property
+    * file-level pruning relies on). One scan-side projection + one
+    * map-side-combined aggregate over ≤256 cells.
+    */
+  def qZorderLayout(s: SparkSession, dir: String): DataFrame =
+    cellBounds(partGrid(s, dir).withColumn("z", morton("x", "y")), "z")
+
+  val qZorderLayoutOracle: String =
+    s"WITH $partGridSql\n${cellBoundsSql("g", mortonSql("x", "y", ZBits, "//"), "z")}"
 
   /** One peel of the Hilbert xy→d state machine at scale `s` (the
     * standard rx/ry quadrant + rotate step), emitted as (name, SQL
@@ -143,19 +159,8 @@ object Layout {
     * codegen'd), and the audit is the same ≤256-cell aggregate as the
     * Morton one.
     */
-  def qHilbertLayout(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.part(s, dir)
-      .select(col("p_partkey"), col("p_size"),
-        round(col("p_retailprice") * 100).cast("long").as("cents"))
-      .withColumn("x", expr(grid("cents", XOriginCents, XSpanCents)))
-      .withColumn("y", expr(grid("p_size", YOriginSize, YSpanSize)))
-    val keyed = hilbert(base, "x", "y")
-    keyed.groupBy(col("h"))
-      .agg(count(lit(1)).as("n_parts"),
-        min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"),
-        min(col("p_size")).as("min_size"), max(col("p_size")).as("max_size"))
-      .orderBy(col("h"))
-  }
+  def qHilbertLayout(s: SparkSession, dir: String): DataFrame =
+    cellBounds(hilbert(partGrid(s, dir), "x", "y"), "h")
 
   /** Append Hilbert index column `h` computed from grid columns already
     * in [0, 2^[[ZBits]]): the [[hilbertStep]] chain applied as level
@@ -175,31 +180,17 @@ object Layout {
   }
 
   val qHilbertLayoutOracle: String = {
-    def gridSql(v: String, origin: Long, span: Long): String =
-      s"least(${(1L << ZBits) - 1}, (($v - $origin) * ${1L << ZBits}) // $span)"
     val levels = (0 until ZBits).map { lev =>
       val cols = hilbertStep(lev, 1L << (ZBits - 1 - lev), "//")
         .map { case (name, e) => s"$e AS $name" }.mkString(",\n|    ")
       s"h${lev + 1} AS (SELECT *, $cols FROM h$lev)"
     }.mkString(",\n|")
-    s"""WITH p AS (
-       |  SELECT p_partkey, p_size, CAST(round(p_retailprice * 100) AS BIGINT) AS cents
-       |  FROM part
-       |), h0 AS (
-       |  SELECT p_partkey, p_size, cents,
-       |    ${gridSql("cents", XOriginCents, XSpanCents)} AS hx0,
-       |    ${gridSql("CAST(p_size AS BIGINT)", YOriginSize, YSpanSize)} AS hy0,
-       |    CAST(0 AS BIGINT) AS hd0
-       |  FROM p
+    s"""WITH $partGridSql, h0 AS (
+       |  SELECT p_partkey, p_size, cents, x AS hx0, y AS hy0, CAST(0 AS BIGINT) AS hd0
+       |  FROM g
        |),
        |$levels
-       |SELECT hd$ZBits AS h,
-       |  count(*) AS n_parts,
-       |  min(cents) AS min_cents, max(cents) AS max_cents,
-       |  min(p_size) AS min_size, max(p_size) AS max_size
-       |FROM h$ZBits
-       |GROUP BY h
-       |ORDER BY h""".stripMargin
+       |${cellBoundsSql(s"h$ZBits", s"hd$ZBits", "h")}""".stripMargin
   }
 
   /** Z-order clustered write: append the Morton key over the two given

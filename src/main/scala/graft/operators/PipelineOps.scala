@@ -432,16 +432,19 @@ object PipelineOps {
           col("n_unique").cast("double") / col("n_grams"), 6).as("unique_ratio"))
       .orderBy(col("source"))
 
-  val qCompressRatioOracle: String =
+  /** The oracle of [[qCompressRatio]]; `more` adds output columns. */
+  private def compressRatioSql(more: String*): String =
     s"""WITH $trigramHashesSql,
        |a AS (
        |  SELECT source, count(*) AS n_grams, count(DISTINCT g) AS n_unique
        |  FROM g GROUP BY 1
        |)
        |SELECT source, n_grams, n_unique,
-       |  ${NumFns.roundPortableSql("CAST(n_unique AS DOUBLE) / n_grams", 6)} AS unique_ratio
+       |  ${NumFns.roundPortableSql("CAST(n_unique AS DOUBLE) / n_grams", 6)} AS unique_ratio${more.map(",\n  " + _).mkString}
        |FROM a
        |ORDER BY source""".stripMargin
+
+  val qCompressRatioOracle: String = compressRatioSql()
 
   /** The certified-approx form of [[qCompressRatio]] — the shape you
     * actually run at 100 TB, where the exact per-source distinct count
@@ -472,17 +475,7 @@ object PipelineOps {
       .orderBy(col("source"))
   }
 
-  val qCompressRatioApproxOracle: String =
-    s"""WITH $trigramHashesSql,
-       |a AS (
-       |  SELECT source, count(*) AS n_grams, count(DISTINCT g) AS n_unique
-       |  FROM g GROUP BY 1
-       |)
-       |SELECT source, n_grams, n_unique,
-       |  ${NumFns.roundPortableSql("CAST(n_unique AS DOUBLE) / n_grams", 6)} AS unique_ratio,
-       |  TRUE AS within_bound
-       |FROM a
-       |ORDER BY source""".stripMargin
+  val qCompressRatioApproxOracle: String = compressRatioSql("TRUE AS within_bound")
 
   /** Session-scoped conversion funnel: the [[Relational.qSessionize]]
     * 30-minute-gap sessionization composed with the chained-min funnel
@@ -494,16 +487,7 @@ object PipelineOps {
     * all shuffles ride the same user hash.
     */
   def qSessionFunnel(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    val sess = Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"))
-      .withColumn("prev_us", lag(col("us"), 1).over(byUser))
-      .withColumn("new_s",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > 1800L * 1000000L, 1L)
-          .otherwise(0L))
-      .withColumn("sess", sum(col("new_s")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sess = Relational.sessions(s, dir, "event_type")
     val key = Seq("user_id", "sess")
     val all = sess.groupBy(col("user_id"), col("sess")).agg(count(lit(1)).as("n_ev"))
     val t1 = sess.filter(col("event_type") === "view")
@@ -531,19 +515,7 @@ object PipelineOps {
   }
 
   val qSessionFunnelOracle: String =
-    """WITH o AS (
-      |  SELECT user_id, event_id, epoch_us(ts) AS us, event_type FROM events
-      |), g AS (
-      |  SELECT user_id, event_id, us, event_type,
-      |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-      |         THEN 1 ELSE 0 END AS new_s
-      |  FROM o WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-      |), se AS (
-      |  SELECT user_id, us, event_type,
-      |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-      |                     ROWS UNBOUNDED PRECEDING) AS sess
-      |  FROM g
-      |), t1 AS (
+    s"""WITH ${Relational.sessionsSql("event_type")}, t1 AS (
       |  SELECT user_id, sess, min(us) AS view_us FROM se
       |  WHERE event_type = 'view' GROUP BY 1, 2
       |), t2 AS (
@@ -900,12 +872,7 @@ object PipelineOps {
         sum(when(yr === 1997, col("o_totalprice")).otherwise(0.0).cast(Dec12))
           .cast("double").as("y"))
       .localCheckpoint()
-    val mom = perCust.agg(count(lit(1)).cast("double").as("n"),
-        sum(col("x").cast(Dec12)).cast("double").as("sx"),
-        sum(col("y").cast(Dec12)).cast("double").as("sy"),
-        sum((col("x") * col("x")).cast(Dec12)).cast("double").as("sxx"),
-        sum((col("x") * col("y")).cast(Dec12)).cast("double").as("sxy"),
-        sum((col("y") * col("y")).cast(Dec12)).cast("double").as("syy"))
+    val mom = perCust.agg(count(lit(1)).cast("double").as("n"), TextAnalysis.momentSums: _*)
       .select(
         (col("sx") / col("n")).as("mx"),
         ((col("sxy") - col("sx") * col("sy") / col("n")) /
@@ -1085,11 +1052,7 @@ object PipelineOps {
        |),
        |m AS (
        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-       |    CAST(sum(CAST(x AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-       |    CAST(sum(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-       |    CAST(sum(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-       |    CAST(sum(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-       |    CAST(sum(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE) AS syy
+       |    ${TextAnalysis.momentSumsSql}
        |  FROM pc
        |),
        |k AS (
@@ -1583,9 +1546,7 @@ object PipelineOps {
     * survive. Integer-exact end to end.
     */
   def qQualityGate(s: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(s, dir)
-      .select(col("source"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val scored = TextAnalysis.tokenDocs(s, dir, "source")
       .select(col("source"), TextFns.stopScore(col("toks"), 10000).as("sq"))
     val cells = scored.groupBy(col("sq")).agg(count(lit(1)).as("c"))
     val wCum = Window.orderBy(col("sq"))
@@ -1684,6 +1645,13 @@ object PipelineOps {
        |FROM w""".stripMargin
   }
 
+  /** The quantity stratum `xb` of a lineitem: quantity / 5, capped at 9. */
+  private def stratum: Column =
+    least(floor(col("l_quantity") / 5.0), lit(9.0)).cast("long").as("xb")
+
+  /** SQL twin of [[stratum]]. */
+  private val stratumSql = "CAST(least(floor(l_quantity / 5.0), 9.0) AS BIGINT) AS xb"
+
   /** Inverse-propensity-weighted (Hájek) average treatment effect of a
     * deep discount (>5 %) on the return probability, adjusting for the
     * quantity-bucket confounder — the weighting-based causal estimator
@@ -1699,13 +1667,9 @@ object PipelineOps {
     * positivity assumption, and their dropped mass is reported.
     */
   def qIpwAte(s: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.lineitem(s, dir)
-      .select(least(floor(col("l_quantity") / 5.0), lit(9.0)).cast("long")
-        .as("xb"),
-        (col("l_discount") > 0.05).as("t"),
-        (col("l_returnflag") === "R").cast("long").as("y"))
+    val cells = Profiling.discountReturn(s, dir, stratum)
       .groupBy(col("xb"), col("t"))
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("ny"))
+      .agg(count(lit(1)).as("n"), sum(col("y").cast("long")).as("ny"))
       .localCheckpoint() // ≤20 rows; feeds propensities AND both folds
     val prop = cells.groupBy(col("xb"))
       .agg(sum(when(col("t"), col("n")).otherwise(0L)).as("nt"),
@@ -1745,7 +1709,7 @@ object PipelineOps {
 
   val qIpwAteOracle: String =
     s"""WITH cells AS (
-       |  SELECT CAST(least(floor(l_quantity / 5.0), 9.0) AS BIGINT) AS xb,
+       |  SELECT $stratumSql,
        |    l_discount > 0.05 AS t,
        |    count(*) AS n,
        |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
@@ -1809,16 +1773,9 @@ object PipelineOps {
     * association spelled identically.
     */
   def qMantelHaenszel(s: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.lineitem(s, dir)
-      .select(least(floor(col("l_quantity") / 5.0), lit(9.0)).cast("long")
-        .as("xb"),
-        (col("l_discount") > 0.05).as("t"),
-        (col("l_returnflag") === "R").as("y"))
+    val cells = Profiling.discountReturn(s, dir, stratum)
       .groupBy(col("xb"))
-      .agg(sum((col("t") && col("y")).cast("long")).as("a"),
-        sum((col("t") && !col("y")).cast("long")).as("b"),
-        sum((!col("t") && col("y")).cast("long")).as("c"),
-        sum((!col("t") && !col("y")).cast("long")).as("d"))
+      .agg(Profiling.twoByTwo.head, Profiling.twoByTwo.tail: _*)
       .withColumn("n", col("a") + col("b") + col("c") + col("d"))
       .filter(col("n") > 1)
     val nD = col("n").cast("double")
@@ -1850,15 +1807,8 @@ object PipelineOps {
 
   val qMantelHaenszelOracle: String =
     s"""WITH cells AS (
-       |  SELECT CAST(least(floor(l_quantity / 5.0), 9.0) AS BIGINT) AS xb,
-       |    CAST(sum(CASE WHEN l_discount > 0.05 AND l_returnflag = 'R'
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS a,
-       |    CAST(sum(CASE WHEN l_discount > 0.05 AND l_returnflag != 'R'
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS b,
-       |    CAST(sum(CASE WHEN l_discount <= 0.05 AND l_returnflag = 'R'
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS c,
-       |    CAST(sum(CASE WHEN l_discount <= 0.05 AND l_returnflag != 'R'
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS d
+       |  SELECT $stratumSql,
+       |    ${Profiling.twoByTwoSql}
        |  FROM lineitem GROUP BY 1
        |),
        |f AS (SELECT *, a + b + c + d AS n FROM cells WHERE a+b+c+d > 1),

@@ -1057,12 +1057,7 @@ object Profiling {
       .select(col("l_returnflag"), col("l_quantity").as("x"),
         col("l_extendedprice").as("y"))
       .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("x").cast(Dec12)).cast("double").as("sx"),
-        sum(col("y").cast(Dec12)).cast("double").as("sy"),
-        sum((col("x") * col("x")).cast(Dec12)).cast("double").as("sxx"),
-        sum((col("x") * col("y")).cast(Dec12)).cast("double").as("sxy"),
-        sum((col("y") * col("y")).cast(Dec12)).cast("double").as("syy"))
+      .agg(count(lit(1)).cast("double").as("n"), TextAnalysis.momentSums: _*)
     val covN = col("sxy") - col("sx") * col("sy") / col("n")
     val varX = col("sxx") - col("sx") * col("sx") / col("n")
     val varY = col("syy") - col("sy") * col("sy") / col("n")
@@ -1078,12 +1073,9 @@ object Profiling {
   val qOlsFitOracle: String =
     s"""WITH m AS (
        |  SELECT l_returnflag, CAST(count(*) AS DOUBLE) AS n,
-       |    CAST(sum(CAST(l_quantity AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-       |    CAST(sum(CAST(l_extendedprice AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-       |    CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-       |    CAST(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-       |    CAST(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,12))) AS DOUBLE) AS syy
-       |  FROM lineitem GROUP BY l_returnflag
+       |    ${TextAnalysis.momentSumsSql}
+       |  FROM (SELECT l_returnflag, l_quantity AS x, l_extendedprice AS y FROM lineitem)
+       |  GROUP BY l_returnflag
        |)
        |SELECT l_returnflag, CAST(n AS BIGINT) AS n_rows,
        |  ${NumFns.roundPortableSql(
@@ -1378,42 +1370,72 @@ object Profiling {
        |  FROM sc0
        |)""".stripMargin
 
-  def qBhFdr(s: SparkSession, dir: String): DataFrame = {
+  /** Ranks a test frame `(keys*, z, p)` by |z| — bit-identical on both
+    * engines, never by p — with ties by the keys: adds `rnk` and the
+    * test count `m`.
+    */
+  private def rankTests(tests: DataFrame, keys: String*): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = testBattery(s, dir)
-    val wRank = Window.orderBy(abs(col("z")).desc, col("event_type"), col("cohort"))
-    val wAll = Window.partitionBy()
-    scored
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .withColumn("m", count(lit(1)).over(wAll))
-      .withColumn("pass", col("p") <= col("rnk") * BhAlpha / col("m"))
-      .withColumn("k_star",
-        coalesce(max(when(col("pass"), col("rnk"))).over(wAll), lit(0L)))
-      .select(col("event_type"), col("cohort"),
-        NumFns.roundPortable(col("z"), 6).as("z"),
-        NumFns.roundPortable(col("p"), 6).as("p_value"),
-        col("rnk"), (col("rnk") <= col("k_star")).as("significant"))
-      .orderBy(col("rnk"))
+    tests
+      .withColumn("rnk", row_number().over(
+        Window.orderBy(abs(col("z")).desc +: keys.map(col): _*)).cast("long"))
+      .withColumn("m", count(lit(1)).over(Window.partitionBy()))
   }
 
-  val qBhFdrOracle: String =
-    s"""WITH $testBatterySql, r AS (
-       |  SELECT event_type, cohort, z, p,
-       |    CAST(row_number() OVER (ORDER BY abs(z) DESC, event_type, cohort)
-       |      AS BIGINT) AS rnk,
-       |    CAST(count(*) OVER () AS BIGINT) AS m
-       |  FROM sc
-       |), f AS (
-       |  SELECT *, coalesce(max(CASE WHEN p <= rnk * $BhAlpha / m
-       |    THEN rnk END) OVER (), 0) AS k_star
-       |  FROM r
-       |)
-       |SELECT event_type, cohort,
-       |  ${NumFns.roundPortableSql("z", 6)} AS z,
+  /** SQL twin of [[rankTests]]: CTE `r` over `src`, with `more` columns. */
+  private def rankTestsSql(src: String, keys: String, more: String*): String =
+    s"""r AS (
+       |  SELECT *,
+       |    CAST(row_number() OVER (ORDER BY abs(z) DESC, $keys) AS BIGINT) AS rnk,
+       |    CAST(count(*) OVER () AS BIGINT) AS m${more.map(",\n    " + _).mkString}
+       |  FROM $src
+       |)""".stripMargin
+
+  /** The BH step-up over ranked tests: `k_star` = max{rnk : p ≤
+    * rnk·α/`scaledM`} (the test count, or π̂₀·m for the adaptive form).
+    */
+  private def stepUp(ranked: DataFrame, scaledM: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    ranked.withColumn("k_star", coalesce(max(when(
+      col("p") <= col("rnk") * BhAlpha / scaledM, col("rnk"))).over(Window.partitionBy()), lit(0L)))
+  }
+
+  /** The BH report of a test frame `(keys*, z, p)`: z rounded at
+    * `zDigits`, p, rank and the step-up verdict, in rank order.
+    */
+  private def bhReport(tests: DataFrame, zDigits: Int, keys: String*): DataFrame =
+    stepUp(rankTests(tests, keys: _*), col("m"))
+      .select(keys.map(col) ++ Seq(NumFns.roundPortable(col("z"), zDigits).as("z"),
+        NumFns.roundPortable(col("p"), 6).as("p_value"),
+        col("rnk"), (col("rnk") <= col("k_star")).as("significant")): _*)
+      .orderBy(col("rnk"))
+
+  /** SQL twin of [[bhReport]] over the test CTE `src`: CTEs and the
+    * final SELECT.
+    */
+  private def bhReportSql(src: String, zDigits: Int, keys: String): String =
+    s"""${rankTestsSql(src, keys)},
+       |${stepUpSql("r", "m")}
+       |SELECT $keys,
+       |  ${NumFns.roundPortableSql("z", zDigits)} AS z,
        |  ${NumFns.roundPortableSql("p", 6)} AS p_value,
        |  rnk, (rnk <= k_star) AS significant
        |FROM f
        |ORDER BY rnk""".stripMargin
+
+  /** SQL twin of [[stepUp]]: CTE `f` over `src`. */
+  private def stepUpSql(src: String, scaledM: String): String =
+    s"""f AS (
+       |  SELECT *, coalesce(max(CASE WHEN p <= rnk * $BhAlpha / $scaledM
+       |    THEN rnk END) OVER (), 0) AS k_star
+       |  FROM $src
+       |)""".stripMargin
+
+  def qBhFdr(s: SparkSession, dir: String): DataFrame =
+    bhReport(testBattery(s, dir), 6, "event_type", "cohort")
+
+  val qBhFdrOracle: String =
+    s"WITH $testBatterySql, ${bhReportSql("sc", 6, "event_type, cohort")}"
 
   /** Holm–Bonferroni step-DOWN correction over the SAME
     * [[testBattery]] frame q_bh_fdr steps UP on — the FWER-controlling
@@ -1428,11 +1450,8 @@ object Profiling {
     */
   def qHolmBonferroni(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val wRank = Window.orderBy(abs(col("z")).desc, col("event_type"), col("cohort"))
     val wAll = Window.partitionBy()
-    testBattery(s, dir)
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .withColumn("m", count(lit(1)).over(wAll))
+    rankTests(testBattery(s, dir), "event_type", "cohort")
       .withColumn("fail", col("p") > lit(BhAlpha) / (col("m") - col("rnk") + 1))
       .withColumn("k_star",
         coalesce(min(when(col("fail"), col("rnk"))).over(wAll) - 1, col("m")))
@@ -1446,13 +1465,7 @@ object Profiling {
   }
 
   val qHolmBonferroniOracle: String =
-    s"""WITH $testBatterySql, r AS (
-       |  SELECT event_type, cohort, z, p,
-       |    CAST(row_number() OVER (ORDER BY abs(z) DESC, event_type, cohort)
-       |      AS BIGINT) AS rnk,
-       |    CAST(count(*) OVER () AS BIGINT) AS m
-       |  FROM sc
-       |), f AS (
+    s"""WITH $testBatterySql, ${rankTestsSql("sc", "event_type, cohort")}, f AS (
        |  SELECT *, coalesce(min(CASE WHEN p > $BhAlpha / (m - rnk + 1)
        |    THEN rnk END) OVER () - 1, m) AS k_star
        |  FROM r
@@ -1480,10 +1493,7 @@ object Profiling {
     * 8-number moment row. Scan-side at any scale.
     */
   def qCronbachAlpha(s: SparkSession, dir: String): DataFrame = {
-    val toks = TextFns.tokens(col("text"))
-    val base = Tables.documents(s, dir)
-      .select(toks.as("toks"))
-      .filter(size(col("toks")) > 0)
+    val base = TextAnalysis.tokenDocs(s, dir)
       .select(
         TextFns.stopScore(col("toks"), 1000).as("i1"),
         floor(lit(1000L) * size(array_distinct(col("toks")))
@@ -1651,6 +1661,29 @@ object Profiling {
        |FROM pd CROSS JOIN obs""".stripMargin
   }
 
+  /** Each document's absolute length deviation from its source's
+    * median: `(source, med, adev)`.
+    */
+  def medianDeviations(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(s, dir).select(col("source"), col("n_chars"))
+    val med = Analytics.exactPercentiles(docs, "source", "n_chars",
+      Seq(0.5 -> "med"))
+    docs.join(broadcast(med), Seq("source"))
+      .select(col("source"), col("med"),
+        abs(col("n_chars") - col("med")).as("adev"))
+  }
+
+  /** SQL twin of [[medianDeviations]]: CTEs `med` and `dev`. */
+  val medianDeviationsSql: String =
+    s"""med AS (
+       |  SELECT source, round(quantile_cont(n_chars, 0.5), 4) AS med
+       |  FROM documents GROUP BY source
+       |),
+       |dev AS (
+       |  SELECT d.source, abs(d.n_chars - m.med) AS adev, m.med
+       |  FROM documents d JOIN med m ON d.source = m.source
+       |)""".stripMargin
+
   /** Robust per-source outlier detection on document length via
     * median/MAD — the companion to q_anomaly_zscore's mean/stddev gate:
     * one pathological 100 MB document shifts a source's mean and stddev
@@ -1667,12 +1700,7 @@ object Profiling {
     * threshold compare runs on identical doubles.
     */
   def qMadOutliers(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("source"), col("n_chars"))
-    val med = Analytics.exactPercentiles(docs, "source", "n_chars",
-      Seq(0.5 -> "med"))
-    val dev = docs.join(broadcast(med), Seq("source"))
-      .select(col("source"), col("med"),
-        abs(col("n_chars") - col("med")).as("adev"))
+    val dev = medianDeviations(s, dir)
     val mad = Analytics.exactPercentiles(
       dev.select(col("source"), col("adev")), "source", "adev",
       Seq(0.5 -> "mad"))
@@ -1691,14 +1719,7 @@ object Profiling {
   }
 
   val qMadOutliersOracle: String =
-    s"""WITH med AS (
-       |  SELECT source, round(quantile_cont(n_chars, 0.5), 4) AS med
-       |  FROM documents GROUP BY source
-       |),
-       |dev AS (
-       |  SELECT d.source, abs(d.n_chars - m.med) AS adev, m.med
-       |  FROM documents d JOIN med m ON d.source = m.source
-       |),
+    s"""WITH $medianDeviationsSql,
        |mad AS (
        |  SELECT source, round(quantile_cont(adev, 0.5), 4) AS mad
        |  FROM dev GROUP BY source
@@ -1729,11 +1750,7 @@ object Profiling {
     * double chain.
     */
   def qLevene(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("source"), col("n_chars"))
-    val med = Analytics.exactPercentiles(docs, "source", "n_chars",
-      Seq(0.5 -> "med"))
-    val z = docs.join(broadcast(med), Seq("source"))
-      .select(col("source"), abs(col("n_chars") - col("med")).as("z"))
+    val z = medianDeviations(s, dir).select(col("source"), col("adev").as("z"))
     val grp = z.groupBy(col("source"))
       .agg(count(lit(1)).as("nj"),
         sum(col("z").cast(Dec12)).as("sz"),
@@ -1762,14 +1779,8 @@ object Profiling {
   }
 
   val qLeveneOracle: String =
-    s"""WITH med AS (
-       |  SELECT source, round(quantile_cont(n_chars, 0.5), 4) AS med
-       |  FROM documents GROUP BY source
-       |),
-       |z AS (
-       |  SELECT d.source, abs(d.n_chars - m.med) AS z
-       |  FROM documents d JOIN med m ON d.source = m.source
-       |),
+    s"""WITH $medianDeviationsSql,
+       |z AS (SELECT source, adev AS z FROM dev),
        |grp AS (
        |  SELECT source, count(*) AS nj,
        |    sum(CAST(z AS DECIMAL(38,12))) AS sz,
@@ -2306,6 +2317,33 @@ object Profiling {
        |    ELSE 'large' END AS magnitude
        |FROM r""".stripMargin
 
+  /** Every lineitem's exposure `t` (a discount over 5 %) and outcome
+    * `y` (returned, 'R'), after the columns `more`.
+    */
+  def discountReturn(s: SparkSession, dir: String, more: Column*): DataFrame =
+    Tables.lineitem(s, dir).select(more :+ (col("l_discount") > 0.05).as("t")
+      :+ (col("l_returnflag") === "R").as("y"): _*)
+
+  /** The t×y 2×2 cells of [[discountReturn]] as aggregate columns: `a`
+    * (t, y), `b` (t, ¬y), `c` (¬t, y), `d` (¬t, ¬y).
+    */
+  def twoByTwo: Seq[Column] = {
+    val (t, y) = (col("t"), col("y"))
+    Seq(sum((t && y).cast("long")).as("a"), sum((t && !y).cast("long")).as("b"),
+      sum((!t && y).cast("long")).as("c"), sum((!t && !y).cast("long")).as("d"))
+  }
+
+  /** SQL twin of [[twoByTwo]] over `lineitem`: a select list. */
+  def twoByTwoSql: String =
+    s"""CAST(sum(CASE WHEN l_discount > 0.05 AND l_returnflag = 'R'
+       |      THEN 1 ELSE 0 END) AS BIGINT) AS a,
+       |    CAST(sum(CASE WHEN l_discount > 0.05 AND l_returnflag != 'R'
+       |      THEN 1 ELSE 0 END) AS BIGINT) AS b,
+       |    CAST(sum(CASE WHEN l_discount <= 0.05 AND l_returnflag = 'R'
+       |      THEN 1 ELSE 0 END) AS BIGINT) AS c,
+       |    CAST(sum(CASE WHEN l_discount <= 0.05 AND l_returnflag != 'R'
+       |      THEN 1 ELSE 0 END) AS BIGINT) AS d""".stripMargin
+
   /** 2×2 odds ratio of return ('R') given a deep discount (> 5 %) with
     * a Wald 95 % CI — the epidemiology-style association readout a
     * curation team uses for binary exposure/outcome pairs where the
@@ -2315,14 +2353,7 @@ object Profiling {
     * 100 TB. Doubles are identical expressions of exact integers.
     */
   def qOddsRatio(s: SparkSession, dir: String): DataFrame = {
-    val c = Tables.lineitem(s, dir)
-      .select((col("l_discount") > 0.05).as("exp"),
-        (col("l_returnflag") === "R").as("out"))
-      .agg(
-        sum((col("exp") && col("out")).cast("long")).as("a"),
-        sum((col("exp") && !col("out")).cast("long")).as("b"),
-        sum((!col("exp") && col("out")).cast("long")).as("c"),
-        sum((!col("exp") && !col("out")).cast("long")).as("d"))
+    val c = discountReturn(s, dir).agg(twoByTwo.head, twoByTwo.tail: _*)
       .filter(col("a") > 0 && col("b") > 0 && col("c") > 0 && col("d") > 0)
     // Cross products in DECIMAL(38,0): cell counts at the 100 TB target
     // (~1e11) make a*d exceed 2^63, which Spark would silently wrap
@@ -2340,15 +2371,7 @@ object Profiling {
 
   val qOddsRatioOracle: String =
     s"""WITH c AS (
-       |  SELECT
-       |    CAST(sum(CASE WHEN l_discount > 0.05 AND l_returnflag = 'R'
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS a,
-       |    CAST(sum(CASE WHEN l_discount > 0.05 AND l_returnflag != 'R'
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS b,
-       |    CAST(sum(CASE WHEN l_discount <= 0.05 AND l_returnflag = 'R'
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS c,
-       |    CAST(sum(CASE WHEN l_discount <= 0.05 AND l_returnflag != 'R'
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS d
+       |  SELECT $twoByTwoSql
        |  FROM lineitem
        |),
        |f AS (SELECT * FROM c WHERE a > 0 AND b > 0 AND c > 0 AND d > 0),
@@ -2380,9 +2403,7 @@ object Profiling {
     // Moments stay integer cents in DECIMAL(38,0): sum(rev^2) reaches
     // ~2e23*SF^2, which overflows the 26 integer digits of DECIMAL(38,12)
     // near SF~50 — full 38-digit headroom holds past any realistic SF.
-    val days = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("d"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("rev"))
+    val days = Temporal.orderDates(s, dir, Temporal.dayCents.as("rev"))
     val m = days.agg(count(lit(1)).as("n"),
       sum(col("rev").cast(Dec0)).as("s1"),
       sum((col("rev").cast(Dec0) * col("rev"))).as("s2"))
@@ -2401,12 +2422,7 @@ object Profiling {
   }
 
   val qGrubbsOutlierOracle: String =
-    s"""WITH days AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS d,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS rev
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${Temporal.orderDatesSql(s"${Temporal.dayCentsSql} AS rev")}),
        |m AS (
        |  SELECT count(*) AS n,
        |    CAST(sum(CAST(rev AS HUGEINT)) AS DOUBLE) / count(*) AS mean,
@@ -2845,9 +2861,7 @@ object Profiling {
     * intermediate exceeds decimal range.
     */
   def qMcc(s: SparkSession, dir: String): DataFrame = {
-    val scored = Tables.documents(s, dir)
-      .select(col("lang"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val scored = TextAnalysis.tokenDocs(s, dir, "lang")
       .select(
         (TextFns.stopScore(col("toks"), 1000) >= MccThreshold).as("pred"),
         (col("lang") === "en").as("truth"))
@@ -2906,6 +2920,36 @@ object Profiling {
             "CAST(tp + tn AS DOUBLE) / (tp + fp + fn + tn)", 6)} AS accuracy
        |FROM c""".stripMargin
 
+  /** Count `n`, mean and sample variance `vr` of the count column `c`,
+    * from exact DECIMAL moments; the variance clears its denominator
+    * (n·Σc² − (Σc)²) before any IEEE division.
+    */
+  private def countMoments(counts: DataFrame): DataFrame = {
+    val nD = col("n").cast("double")
+    counts.agg(count(lit(1)).as("n"),
+      sum(col("c").cast(Dec0)).as("s1"),
+      sum(col("c").cast(Dec0) * col("c")).as("s2"))
+      .select(col("n"), (col("s1").cast("double") / nD).as("mean"),
+        ((col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
+          (nD * (nD - 1.0))).as("vr"))
+  }
+
+  /** SQL twin of [[countMoments]]: CTE `st (n, mean, vr)` over `src`. */
+  private def countMomentsSql(src: String): String =
+    s"""m AS (
+       |  SELECT count(*) AS n,
+       |    sum(CAST(c AS HUGEINT)) AS s1,
+       |    sum(CAST(c AS HUGEINT) * c) AS s2
+       |  FROM $src
+       |),
+       |st AS (
+       |  SELECT n,
+       |    CAST(s1 AS DOUBLE) / n AS mean,
+       |    CAST(n * s2 - s1 * s1 AS DOUBLE)
+       |      / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS vr
+       |  FROM m
+       |)""".stripMargin
+
   /** Poisson dispersion (index-of-dispersion) test of daily order
     * counts: D = s²/x̄ with χ² = (n−1)·D against χ²_{n−1}, z via the
     * Wilson–Hilferty cube-root normalization — "are arrivals Poisson,
@@ -2917,21 +2961,13 @@ object Profiling {
     * IEEE division.
     */
   def qPoissonDispersion(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("d"))
-      .agg(count(lit(1)).as("c"))
-    val m = days.agg(count(lit(1)).cast(Dec0).as("n"),
-      sum(col("c").cast(Dec0)).as("s1"),
-      sum(col("c").cast(Dec0) * col("c")).as("s2"))
-    val nD = col("n").cast("double")
-    val mean = col("s1").cast("double") / nD
-    val vr = (col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
-      (nD * (nD - 1.0))
+    val days = Temporal.orderDates(s, dir, count(lit(1)).as("c"))
+    val (mean, vr) = (col("mean"), col("vr"))
     val disp = vr / mean
-    val k = nD - 1.0
+    val k = col("n").cast("double") - 1.0
     val z = (pow(disp, 1.0 / 3.0) - (lit(1.0) - lit(2.0) / (lit(9.0) * k))) /
       sqrt(lit(2.0) / (lit(9.0) * k))
-    m.select(col("n").cast("long").as("n_days"),
+    countMoments(days).select(col("n").as("n_days"),
       NumFns.roundPortable(mean, 4).as("mean_per_day"),
       NumFns.roundPortable(vr, 4).as("var_per_day"),
       NumFns.roundPortable(disp, 6).as("dispersion"),
@@ -3027,29 +3063,13 @@ object Profiling {
        |FROM c""".stripMargin
 
   val qPoissonDispersionOracle: String =
-    s"""WITH days AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS d, count(*) AS c
-       |  FROM orders GROUP BY 1
-       |),
-       |m AS (
-       |  SELECT CAST(count(*) AS HUGEINT) AS n,
-       |    sum(CAST(c AS HUGEINT)) AS s1,
-       |    sum(CAST(c AS HUGEINT) * c) AS s2
-       |  FROM days
-       |),
-       |st AS (
-       |  SELECT CAST(n AS BIGINT) AS n_days,
-       |    CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mean,
-       |    CAST(n * s2 - s1 * s1 AS DOUBLE)
-       |      / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS vr,
-       |    CAST(n AS DOUBLE) - 1.0 AS k
-       |  FROM m
-       |),
+    s"""WITH days AS (${Temporal.orderDatesSql("count(*) AS c")}),
+       |${countMomentsSql("days")},
        |zz AS (
-       |  SELECT n_days, mean, vr, vr / mean AS disp,
+       |  SELECT n AS n_days, mean, vr, vr / mean AS disp,
        |    (pow(vr / mean, 1.0 / 3.0) - (1.0 - 2.0 / (9.0 * k)))
        |      / sqrt(2.0 / (9.0 * k)) AS z
-       |  FROM st
+       |  FROM (SELECT *, CAST(n AS DOUBLE) - 1.0 AS k FROM st)
        |)
        |SELECT n_days,
        |  ${NumFns.roundPortableSql("mean", 4)} AS mean_per_day,
@@ -3127,7 +3147,6 @@ object Profiling {
     * only compared against thresholds — the q_bh_fdr discipline.
     */
   def qDunnPosthoc(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (sums, ties) = rankSums(Tables.documents(s, dir))
     val groups = sums
       .select(col("source"), col("n_j"), (col("r_j") / col("n_j")).as("rbar"))
@@ -3144,21 +3163,9 @@ object Profiling {
       - col("t").cast("double") / (lit(12.0) * (n - 1.0)))
     val z = (col("ra") - col("rb")) /
       sqrt(sig2 * (lit(1.0) / col("na") + lit(1.0) / col("nb")))
-    val wRank = Window.orderBy(abs(col("z")).desc, col("src_a"), col("src_b"))
-    val wAll = Window.partitionBy()
-    pairs
-      .withColumn("z", z)
+    val tests = pairs.select(col("src_a"), col("src_b"), z.as("z"))
       .withColumn("p", NumFns.normTwoSidedP(col("z")))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .withColumn("m", count(lit(1)).over(wAll))
-      .withColumn("pass", col("p") <= col("rnk") * BhAlpha / col("m"))
-      .withColumn("k_star",
-        coalesce(max(when(col("pass"), col("rnk"))).over(wAll), lit(0L)))
-      .select(col("src_a"), col("src_b"),
-        NumFns.roundPortable(col("z"), 4).as("z"),
-        NumFns.roundPortable(col("p"), 6).as("p_value"),
-        col("rnk"), (col("rnk") <= col("k_star")).as("significant"))
-      .orderBy(col("rnk"))
+    bhReport(tests, 4, "src_a", "src_b")
   }
 
   val qDunnPosthocOracle: String =
@@ -3173,25 +3180,8 @@ object Profiling {
        |  FROM groups a JOIN groups b ON a.source < b.source
        |  CROSS JOIN tt CROSS JOIN ties
        |),
-       |r AS (
-       |  SELECT src_a, src_b, z,
-       |    ${NumFns.normTwoSidedPSql("z")} AS p,
-       |    CAST(row_number() OVER (ORDER BY abs(z) DESC, src_a, src_b)
-       |      AS BIGINT) AS rnk,
-       |    CAST(count(*) OVER () AS BIGINT) AS m
-       |  FROM pr
-       |),
-       |f AS (
-       |  SELECT *, coalesce(max(CASE WHEN p <= rnk * $BhAlpha / m
-       |    THEN rnk END) OVER (), 0) AS k_star
-       |  FROM r
-       |)
-       |SELECT src_a, src_b,
-       |  ${NumFns.roundPortableSql("z", 4)} AS z,
-       |  ${NumFns.roundPortableSql("p", 6)} AS p_value,
-       |  rnk, (rnk <= k_star) AS significant
-       |FROM f
-       |ORDER BY rnk""".stripMargin
+       |pp AS (SELECT *, ${NumFns.normTwoSidedPSql("z")} AS p FROM pr),
+       |${bhReportSql("pp", 4, "src_a, src_b")}""".stripMargin
 
   /** Join-key skew audit for the two hottest fact keys (lineitem.
     * partkey, orders.custkey): per key, the row count distribution
@@ -3524,17 +3514,11 @@ object Profiling {
   def qNegbinFit(s: SparkSession, dir: String): DataFrame = {
     val counts = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("c"))
-    val m = counts.agg(count(lit(1)).as("n"),
-      sum(col("c").cast(Dec0)).as("s1"),
-      sum(col("c").cast(Dec0) * col("c")).as("s2"))
-    val nD = col("n").cast("double")
-    val mean = col("s1").cast("double") / nD
-    val vr = (col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
-      (nD * (nD - 1.0))
+    val (mean, vr) = (col("mean"), col("vr"))
     val r = when(vr > mean, mean * mean / (vr - mean))
     val pp = when(vr > mean, mean * mean / (vr - mean)
       / (mean * mean / (vr - mean) + mean))
-    m.select(col("n").as("n_customers"),
+    countMoments(counts).select(col("n").as("n_customers"),
       NumFns.roundPortable(mean, 4).as("mean_orders"),
       NumFns.roundPortable(vr, 4).as("var_orders"),
       NumFns.roundPortable(r, 4).as("nb_r"),
@@ -3546,19 +3530,7 @@ object Profiling {
     s"""WITH counts AS (
        |  SELECT o_custkey, count(*) AS c FROM orders GROUP BY 1
        |),
-       |m AS (
-       |  SELECT count(*) AS n,
-       |    sum(CAST(c AS HUGEINT)) AS s1,
-       |    sum(CAST(c AS HUGEINT) * c) AS s2
-       |  FROM counts
-       |),
-       |st AS (
-       |  SELECT n,
-       |    CAST(s1 AS DOUBLE) / n AS mean,
-       |    CAST(n * s2 - s1 * s1 AS DOUBLE)
-       |      / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS vr
-       |  FROM m
-       |)
+       |${countMomentsSql("counts")}
        |SELECT n AS n_customers,
        |  ${NumFns.roundPortableSql("mean", 4)} AS mean_orders,
        |  ${NumFns.roundPortableSql("vr", 4)} AS var_orders,
@@ -3587,23 +3559,12 @@ object Profiling {
     */
   def qStoreyPi0(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = testBattery(s, dir)
-    val wRank = Window.orderBy(abs(col("z")).desc, col("event_type"),
-      col("cohort"))
-    val wAll = Window.partitionBy()
-    val ranked = scored
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .withColumn("m", count(lit(1)).over(wAll))
-      .withColumn("nlam",
-        sum(when(col("p") > StoreyLambda, 1L).otherwise(0L)).over(wAll))
+    val ranked = rankTests(testBattery(s, dir), "event_type", "cohort")
+      .withColumn("nlam", sum(when(col("p") > StoreyLambda, 1L).otherwise(0L))
+        .over(Window.partitionBy()))
     val pi0 = least(lit(1.0),
       col("nlam").cast("double") / (col("m") * (1.0 - StoreyLambda)))
-    ranked
-      .withColumn("pi0", pi0)
-      .withColumn("pass",
-        col("p") <= col("rnk") * BhAlpha / (col("pi0") * col("m")))
-      .withColumn("k_star",
-        coalesce(max(when(col("pass"), col("rnk"))).over(wAll), lit(0L)))
+    stepUp(ranked.withColumn("pi0", pi0), col("pi0") * col("m"))
       .agg(max(col("m")).as("m"), max(col("nlam")).as("n_above_lambda"),
         NumFns.roundPortable(max(col("pi0")), 6).as("pi0_hat"),
         max(col("k_star")).as("adaptive_discoveries"))
@@ -3612,26 +3573,15 @@ object Profiling {
   }
 
   val qStoreyPi0Oracle: String =
-    s"""WITH $testBatterySql, r AS (
-       |  SELECT event_type, cohort, z, p,
-       |    CAST(row_number() OVER (ORDER BY abs(z) DESC, event_type, cohort)
-       |      AS BIGINT) AS rnk,
-       |    CAST(count(*) OVER () AS BIGINT) AS m,
-       |    CAST(sum(CASE WHEN p > $StoreyLambda THEN 1 ELSE 0 END) OVER ()
-       |      AS BIGINT) AS nlam
-       |  FROM sc
-       |),
+    s"""WITH $testBatterySql, ${rankTestsSql("sc", "event_type, cohort",
+            s"CAST(sum(CASE WHEN p > $StoreyLambda THEN 1 ELSE 0 END) OVER () AS BIGINT) AS nlam")},
        |e AS (
        |  SELECT *,
        |    least(1.0, CAST(nlam AS DOUBLE) / ((1.0 - $StoreyLambda) * m))
        |      AS pi0
        |  FROM r
        |),
-       |f AS (
-       |  SELECT *, coalesce(max(CASE WHEN p <= rnk * $BhAlpha / (pi0 * m)
-       |    THEN rnk END) OVER (), 0) AS k_star
-       |  FROM e
-       |)
+       |${stepUpSql("e", "(pi0 * m)")}
        |SELECT max(m) AS n_tests, max(nlam) AS n_above_lambda,
        |  ${NumFns.roundPortableSql("max(pi0)", 6)} AS pi0_hat,
        |  CAST(max(k_star) AS BIGINT) AS adaptive_discoveries

@@ -68,13 +68,8 @@ object Recsys {
       .repartition(col("cust"))
       .groupBy(col("cust"), col("part")).agg(lit(1))
       .select(col("cust"), col("part"))
-    val keep = inc.groupBy(col("cust"))
-      .agg(count(lit(1)).as("b"))
-      .filter(col("b") <= CfMaxBasket)
-      .select(col("cust"))
     // capped incidence: feeds marginals and both self-join sides
-    val ki = inc.join(keep.hint("shuffle_hash"), Seq("cust"), "left_semi")
-      .localCheckpoint()
+    val ki = capBaskets(inc)
     val marg = ki.groupBy(col("part")).agg(count(lit(1)).as("c"))
     val pairs = ki.select(col("cust"), col("part").as("pa"))
       .join(ki.select(col("cust"), col("part").as("pb")).hint("shuffle_hash"),
@@ -102,15 +97,31 @@ object Recsys {
       .orderBy(col("part"), col("rk"))
   }
 
+  /** The incidence rows `inc (cust, part, …)` of customers with at most
+    * [[CfMaxBasket]] parts, checkpointed for the consumers that share it.
+    */
+  private def capBaskets(inc: DataFrame): DataFrame = {
+    val keep = inc.groupBy(col("cust"))
+      .agg(count(lit(1)).as("b"))
+      .filter(col("b") <= CfMaxBasket)
+      .select(col("cust"))
+    inc.join(keep.hint("shuffle_hash"), Seq("cust"), "left_semi")
+      .localCheckpoint()
+  }
+
+  /** SQL twin of [[capBaskets]] over the CTE `inc`: CTE `ki`. */
+  private val capBasketsSql: String =
+    s"""keep AS (
+       |  SELECT cust FROM inc GROUP BY cust HAVING count(*) <= $CfMaxBasket
+       |),
+       |ki AS (SELECT inc.* FROM inc JOIN keep USING (cust))""".stripMargin
+
   val qItemCfOracle: String =
     s"""WITH inc AS (
        |  SELECT DISTINCT o_custkey AS cust, l_partkey AS part
        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
        |),
-       |keep AS (
-       |  SELECT cust FROM inc GROUP BY cust HAVING count(*) <= $CfMaxBasket
-       |),
-       |ki AS (SELECT inc.* FROM inc JOIN keep USING (cust)),
+       |$capBasketsSql,
        |marg AS (SELECT part, count(*) AS c FROM ki GROUP BY part),
        |pr AS (
        |  SELECT a.part AS pa, b.part AS pb, count(*) AS c_ab
@@ -281,7 +292,7 @@ object Recsys {
     val catalog = Tables.lineitem(s, dir)
       .select(col("l_partkey")).distinct()
       .agg(count(lit(1)).as("n_catalog"))
-    val cf = cfTable(s, dir).localCheckpoint()
+    val cf = cfTable(s, dir)
     val owners = cf.select(col("part")).distinct()
       .agg(count(lit(1)).as("n_with_recs"))
     val neighbors = cf.select(col("neighbor")).distinct()
@@ -371,10 +382,7 @@ object Recsys {
       .repartition(col("o_custkey"))
       .groupBy(col("o_custkey").as("cust"), col("l_partkey").as("part"))
       .agg(sum(NumFns.roundAwayLong(col("l_quantity"))).as("rq"))
-    val keep = inc.groupBy(col("cust")).agg(count(lit(1)).as("b"))
-      .filter(col("b") <= CfMaxBasket).select(col("cust"))
-    val ki = inc.join(keep.hint("shuffle_hash"), Seq("cust"), "left_semi")
-      .localCheckpoint()
+    val ki = capBaskets(inc)
     // unordered pair enumeration (pa < pb): half the ordered rows
     def halfPairs = ki.select(col("cust"), col("part").as("pa"), col("rq").as("ra"))
       .join(ki.select(col("cust"), col("part").as("pb"), col("rq").as("rb"))
@@ -427,10 +435,7 @@ object Recsys {
        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
        |  GROUP BY 1, 2
        |),
-       |keep AS (
-       |  SELECT cust FROM inc GROUP BY cust HAVING count(*) <= $CfMaxBasket
-       |),
-       |ki AS (SELECT inc.* FROM inc JOIN keep USING (cust)),
+       |$capBasketsSql,
        |dev AS (
        |  SELECT a.part AS pj, b.part AS pi, count(*) AS n_ji,
        |    sum(CAST(a.rq - b.rq AS HUGEINT)) AS sdiff

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.NumFns
 import graft.sources.Tables
+import graft.streaming.EventPipeline
 
 /** Core relational/analytic operators (SURVEY.md §2, table 2).
   *
@@ -23,8 +24,21 @@ import graft.sources.Tables
   */
 object Relational {
 
-  private def revenue: Column =
+  /** A lineitem's discounted revenue. */
+  private[operators] def revenue: Column =
     col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+
+  /** SQL twin of [[revenue]]. */
+  private[operators] val RevSql = "l_extendedprice * (1.0 - l_discount)"
+
+  /** The oracle's summed [[revenue]] select item, then `more`, over
+    * lineitem ⋈ orders ⋈ customer: a FROM clause further joins extend.
+    */
+  private[operators] def customerRevenueSql(more: String*): String =
+    s"""${NumFns.stableSumSql(RevSql, 2)} AS revenue${more.map(", " + _).mkString}
+       |FROM lineitem
+       |JOIN orders ON l_orderkey = o_orderkey
+       |JOIN customer ON o_custkey = c_custkey""".stripMargin
 
   /** TPC-H Q1 shape: one full scan, map-side partial aggregation into a
     * 6-group hash table — no data shuffle beyond the per-task partial
@@ -58,8 +72,8 @@ object Relational {
     s"""SELECT l_returnflag, l_linestatus,
       |  ${NumFns.quantSumSql("l_quantity", 2)} AS sum_qty,
       |  ${NumFns.quantSumSql("l_extendedprice", 2)} AS sum_base_price,
-      |  ${NumFns.quantSumSql("l_extendedprice * (1.0 - l_discount)", 2)} AS sum_disc_price,
-      |  ${NumFns.quantSumSql("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)", 2)} AS sum_charge,
+      |  ${NumFns.quantSumSql(RevSql, 2)} AS sum_disc_price,
+      |  ${NumFns.quantSumSql(s"$RevSql * (1.0 + l_tax)", 2)} AS sum_charge,
       |  ${NumFns.quantMeanSql("l_quantity", "count(*)", 6)} AS avg_qty,
       |  ${NumFns.quantMeanSql("l_discount", "count(*)", 6)} AS avg_disc,
       |  count(*) AS count_order
@@ -94,10 +108,7 @@ object Relational {
     s"""SELECT l_orderkey,
       |  strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
       |  o_orderpriority,
-      |  ${NumFns.stableSumSql("l_extendedprice * (1.0 - l_discount)", 2)} AS revenue
-      |FROM lineitem
-      |JOIN orders ON l_orderkey = o_orderkey
-      |JOIN customer ON o_custkey = c_custkey
+      |  ${customerRevenueSql()}
       |WHERE c_mktsegment = 'BUILDING'
       |  AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
       |  AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
@@ -132,10 +143,7 @@ object Relational {
 
   val q5Oracle: String =
     s"""SELECT n_name,
-      |  ${NumFns.stableSumSql("l_extendedprice * (1.0 - l_discount)", 2)} AS revenue
-      |FROM lineitem
-      |JOIN orders ON l_orderkey = o_orderkey
-      |JOIN customer ON o_custkey = c_custkey
+      |  ${customerRevenueSql()}
       |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
       |JOIN nation ON s_nationkey = n_nationkey
       |JOIN region ON n_regionkey = r_regionkey
@@ -279,37 +287,49 @@ object Relational {
     * sort only. Timestamps are compared at microsecond precision on both
     * engines (Spark truncates parquet ns → µs; oracle uses epoch_us).
     */
-  def qSessionize(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-      .withColumn("prev_us", lag(col("us"), 1).over(byUser))
-      .withColumn("new_s",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > 1800L * 1000000L, 1L)
-          .otherwise(0L))
-      .withColumn("sess", sum(col("new_s")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  def qSessionize(s: SparkSession, dir: String): DataFrame =
+    sessions(s, dir)
       .groupBy(col("user_id"))
       .agg(max(col("sess")).as("n_sessions"), count(lit(1)).as("n_events"))
       .orderBy(col("user_id"))
+
+  /** Every event `(user_id, event_id, us, more*)` with its user's session
+    * number `sess`: a session starts at a user's first event and after
+    * each gap over [[EventPipeline.SessionGapUs]].
+    */
+  def sessions(s: SparkSession, dir: String, more: String*): DataFrame = {
+    val byUser = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
+    Tables.events(s, dir)
+      .select(Seq(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
+        ++ more.map(col): _*)
+      .withColumn("prev_us", lag(col("us"), 1).over(byUser))
+      .withColumn("new_s",
+        when(col("prev_us").isNull || col("us") - col("prev_us") > EventPipeline.SessionGapUs, 1L)
+          .otherwise(0L))
+      .withColumn("sess", sum(col("new_s")).over(
+        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
+  /** SQL twin of [[sessions]]: CTE `se` and the CTEs it reads. */
+  def sessionsSql(more: String*): String =
+    s"""o AS (
+       |  SELECT user_id, event_id, epoch_us(ts) AS us${more.map(", " + _).mkString} FROM events
+       |), g AS (
+       |  SELECT *,
+       |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > ${EventPipeline.SessionGapUs}
+       |         THEN 1 ELSE 0 END AS new_s
+       |  FROM o WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
+       |), se AS (
+       |  SELECT *,
+       |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+       |                     ROWS UNBOUNDED PRECEDING) AS sess
+       |  FROM g
+       |)""".stripMargin
+
   val qSessionizeOracle: String =
-    """WITH o AS (
-      |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-      |), g AS (
-      |  SELECT user_id, us, event_id,
-      |    CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-      |         THEN 1 ELSE 0 END AS new_s
-      |  FROM o WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-      |), s AS (
-      |  SELECT user_id,
-      |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-      |                     ROWS UNBOUNDED PRECEDING) AS sess
-      |  FROM g
-      |)
-      |SELECT user_id, CAST(MAX(sess) AS BIGINT) AS n_sessions, COUNT(*) AS n_events
-      |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin
+    s"""WITH ${sessionsSql()}
+       |SELECT user_id, CAST(MAX(sess) AS BIGINT) AS n_sessions, COUNT(*) AS n_events
+       |FROM se GROUP BY user_id ORDER BY user_id""".stripMargin
 
   /** JSON field extraction from the events.props payload; integer sums are
     * exact so no rounding is needed. At scale this is a pure map + one agg

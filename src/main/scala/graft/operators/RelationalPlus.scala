@@ -24,10 +24,7 @@ import graft.sources.Tables
   */
 object RelationalPlus {
 
-  private def revenue: Column =
-    col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-
-  private val RevSql = "l_extendedprice * (1.0 - l_discount)"
+  import Relational.{RevSql, customerRevenueSql, revenue}
 
   /** TPC-H Q4 shape (order-priority checking): EXISTS over a fact table
     * decorrelates to a left-semi join — the lineitem side is pruned to
@@ -88,10 +85,7 @@ object RelationalPlus {
   val qRegionTradeOracle: String =
     s"""SELECT r1.r_name AS supp_region, r2.r_name AS cust_region,
        |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-       |  ${NumFns.stableSumSql(RevSql, 2)} AS revenue, count(*) AS n_items
-       |FROM lineitem
-       |JOIN orders ON l_orderkey = o_orderkey
-       |JOIN customer ON o_custkey = c_custkey
+       |  ${customerRevenueSql("count(*) AS n_items")}
        |JOIN supplier ON l_suppkey = s_suppkey
        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
@@ -215,10 +209,7 @@ object RelationalPlus {
 
   val qReturnedItemsOracle: String =
     s"""SELECT c_custkey, c_name, n_name,
-       |  ${NumFns.stableSumSql(RevSql, 2)} AS revenue, count(*) AS n_items
-       |FROM lineitem
-       |JOIN orders ON l_orderkey = o_orderkey
-       |JOIN customer ON o_custkey = c_custkey
+       |  ${customerRevenueSql("count(*) AS n_items")}
        |JOIN nation ON c_nationkey = n_nationkey
        |WHERE l_returnflag = 'R'
        |  AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
@@ -824,6 +815,54 @@ object RelationalPlus {
   /** The two calendar years decomposed by [[qRevenueBridge]]. */
   val BridgeYears: (Int, Int) = (1997, 1998)
 
+  /** The orders ⋈ lineitem facts of the two [[BridgeYears]]. */
+  private def bridgeFacts(s: SparkSession, dir: String): DataFrame = {
+    val (y1, y2) = BridgeYears
+    Tables.orders(s, dir)
+      .filter(year(col("o_orderdate")).isin(y1, y2))
+      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
+  }
+
+  /** Per `key` of [[bridgeFacts]] traded in both years, each year's
+    * revenue in integer cents (`r1`, `r2`) and quantity (`q1`, `q2`).
+    */
+  private def bridgeCells(facts: DataFrame, key: String): DataFrame = {
+    val (y1, y2) = BridgeYears
+    def pick(y: Int, c: String) = max(when(col("yr") === y, col(c)))
+    facts.groupBy(col(key), year(col("o_orderdate")).as("yr"))
+      .agg(sum(NumFns.roundAwayLong(col("l_extendedprice") * 100)).as("rev"),
+        sum(NumFns.roundAwayLong(col("l_quantity"))).as("qty"))
+      .groupBy(col(key))
+      .agg(pick(y1, "rev").as("r1"), pick(y1, "qty").as("q1"),
+        pick(y2, "rev").as("r2"), pick(y2, "qty").as("q2"))
+      .filter(col("r1").isNotNull && col("r2").isNotNull)
+  }
+
+  /** SQL twin of [[bridgeCells]]: CTEs `cells` and `w`; `joins` extends
+    * the fact join.
+    */
+  private def bridgeCellsSql(key: String, joins: String = ""): String = {
+    val (y1, y2) = BridgeYears
+    s"""cells AS (
+       |  SELECT $key, year(o_orderdate) AS yr,
+       |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+       |      AS rev,
+       |    CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS qty
+       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey$joins
+       |  WHERE year(o_orderdate) IN ($y1, $y2)
+       |  GROUP BY 1, 2
+       |),
+       |w AS (
+       |  SELECT $key,
+       |    max(CASE WHEN yr = $y1 THEN rev END) AS r1,
+       |    max(CASE WHEN yr = $y1 THEN qty END) AS q1,
+       |    max(CASE WHEN yr = $y2 THEN rev END) AS r2,
+       |    max(CASE WHEN yr = $y2 THEN qty END) AS q2
+       |  FROM cells GROUP BY $key
+       |  HAVING r1 IS NOT NULL AND r2 IS NOT NULL
+       |)""".stripMargin
+  }
+
   /** Revenue bridge — the year-over-year decomposition every revenue
     * review starts from: per region, ΔR splits EXACTLY into a volume
     * effect (ΔV · P₁: how much of the change is selling more units at
@@ -837,70 +876,39 @@ object RelationalPlus {
     * exact integers; effects round portably.
     */
   def qRevenueBridge(s: SparkSession, dir: String): DataFrame = {
-    val (y1, y2) = BridgeYears
-    val cells = Tables.orders(s, dir)
-      .filter(year(col("o_orderdate")).isin(y1, y2))
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Temporal.custRegion(s, dir), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("r_name"), year(col("o_orderdate")).as("yr"))
-      .agg(sum(NumFns.roundAwayLong(col("l_extendedprice") * 100)).as("rev"),
-        sum(NumFns.roundAwayLong(col("l_quantity"))).as("vol"))
-    def pick(y: Int, c: String) = max(when(col("yr") === y, col(c)))
-    val wide = cells.groupBy(col("r_name"))
-      .agg(pick(y1, "rev").as("r1"), pick(y1, "vol").as("v1"),
-        pick(y2, "rev").as("r2"), pick(y2, "vol").as("v2"))
-      .filter(col("r1").isNotNull && col("r2").isNotNull)
-    val p1 = col("r1").cast("double") / col("v1")
-    val p2 = col("r2").cast("double") / col("v2")
+    val wide = bridgeCells(bridgeFacts(s, dir)
+      .join(Temporal.custRegion(s, dir), col("o_custkey") === col("c_custkey")), "r_name")
+    val p1 = col("r1").cast("double") / col("q1")
+    val p2 = col("r2").cast("double") / col("q2")
     wide.select(col("r_name"),
         NumFns.roundPortable(col("r1").cast("double") / 100.0, 2).as("rev_y1"),
         NumFns.roundPortable(col("r2").cast("double") / 100.0, 2).as("rev_y2"),
         NumFns.roundPortable(
           (col("r2") - col("r1")).cast("double") / 100.0, 2).as("delta"),
         NumFns.roundPortable(
-          (col("v2") - col("v1")).cast("double") * p1 / 100.0, 2)
+          (col("q2") - col("q1")).cast("double") * p1 / 100.0, 2)
           .as("volume_effect"),
         NumFns.roundPortable(
-          (p2 - p1) * col("v2") / 100.0, 2).as("price_effect"))
+          (p2 - p1) * col("q2") / 100.0, 2).as("price_effect"))
       .orderBy(col("r_name"))
   }
 
-  val qRevenueBridgeOracle: String = {
-    val (y1, y2) = BridgeYears
-    s"""WITH cells AS (
-       |  SELECT r_name, year(o_orderdate) AS yr,
-       |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS rev,
-       |    CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS vol
-       |  FROM orders
-       |  JOIN lineitem ON o_orderkey = l_orderkey
-       |  JOIN (${Temporal.custRegionSql}) ON o_custkey = c_custkey
-       |  WHERE year(o_orderdate) IN ($y1, $y2)
-       |  GROUP BY 1, 2
-       |),
-       |w AS (
-       |  SELECT r_name,
-       |    max(CASE WHEN yr = $y1 THEN rev END) AS r1,
-       |    max(CASE WHEN yr = $y1 THEN vol END) AS v1,
-       |    max(CASE WHEN yr = $y2 THEN rev END) AS r2,
-       |    max(CASE WHEN yr = $y2 THEN vol END) AS v2
-       |  FROM cells GROUP BY r_name
-       |  HAVING r1 IS NOT NULL AND r2 IS NOT NULL
-       |)
+  val qRevenueBridgeOracle: String =
+    s"""WITH ${bridgeCellsSql("r_name",
+            s"\n  JOIN (${Temporal.custRegionSql}) ON o_custkey = c_custkey")}
        |SELECT r_name,
        |  ${NumFns.roundPortableSql("CAST(r1 AS DOUBLE) / 100.0", 2)} AS rev_y1,
        |  ${NumFns.roundPortableSql("CAST(r2 AS DOUBLE) / 100.0", 2)} AS rev_y2,
        |  ${NumFns.roundPortableSql("CAST(r2 - r1 AS DOUBLE) / 100.0", 2)}
        |    AS delta,
        |  ${NumFns.roundPortableSql(
-            "CAST(v2 - v1 AS DOUBLE) * (CAST(r1 AS DOUBLE) / v1) / 100.0", 2)}
+            "CAST(q2 - q1 AS DOUBLE) * (CAST(r1 AS DOUBLE) / q1) / 100.0", 2)}
        |    AS volume_effect,
        |  ${NumFns.roundPortableSql(
-            "(CAST(r2 AS DOUBLE) / v2 - CAST(r1 AS DOUBLE) / v1) * v2 / 100.0",
+            "(CAST(r2 AS DOUBLE) / q2 - CAST(r1 AS DOUBLE) / q1) * q2 / 100.0",
             2)} AS price_effect
        |FROM w
        |ORDER BY r_name""".stripMargin
-  }
 
   /** Basket-weighted price indices between [[BridgeYears]] — the
     * part-level rigor [[qRevenueBridge]]'s two aggregate effects
@@ -915,18 +923,7 @@ object RelationalPlus {
     * the indices are ratios of exact integers. One row out.
     */
   def qPriceIndex(s: SparkSession, dir: String): DataFrame = {
-    val (y1, y2) = BridgeYears
-    val cells = Tables.orders(s, dir)
-      .filter(year(col("o_orderdate")).isin(y1, y2))
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("l_partkey"), year(col("o_orderdate")).as("yr"))
-      .agg(sum(NumFns.roundAwayLong(col("l_extendedprice") * 100)).as("rev"),
-        sum(NumFns.roundAwayLong(col("l_quantity"))).as("qty"))
-    def pick(y: Int, c: String) = max(when(col("yr") === y, col(c)))
-    val wide = cells.groupBy(col("l_partkey"))
-      .agg(pick(y1, "rev").as("r1"), pick(y1, "qty").as("q1"),
-        pick(y2, "rev").as("r2"), pick(y2, "qty").as("q2"))
-      .filter(col("r1").isNotNull && col("r2").isNotNull)
+    val wide = bridgeCells(bridgeFacts(s, dir), "l_partkey")
     // p_i in cents (exact ratio); cross terms p_i·q_j quantized to an
     // exact integer hundredth-cent before summing — order-free
     val p1 = col("r1").cast("double") / col("q1")
@@ -945,26 +942,8 @@ object RelationalPlus {
       NumFns.roundPortable(sqrt(lasp * paas), 6).as("fisher"))
   }
 
-  val qPriceIndexOracle: String = {
-    val (y1, y2) = BridgeYears
-    s"""WITH cells AS (
-       |  SELECT l_partkey, year(o_orderdate) AS yr,
-       |    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS rev,
-       |    CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS qty
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-       |  WHERE year(o_orderdate) IN ($y1, $y2)
-       |  GROUP BY 1, 2
-       |),
-       |w AS (
-       |  SELECT l_partkey,
-       |    max(CASE WHEN yr = $y1 THEN rev END) AS r1,
-       |    max(CASE WHEN yr = $y1 THEN qty END) AS q1,
-       |    max(CASE WHEN yr = $y2 THEN rev END) AS r2,
-       |    max(CASE WHEN yr = $y2 THEN qty END) AS q2
-       |  FROM cells GROUP BY l_partkey
-       |  HAVING r1 IS NOT NULL AND r2 IS NOT NULL
-       |),
+  val qPriceIndexOracle: String =
+    s"""WITH ${bridgeCellsSql("l_partkey")},
        |ag AS (
        |  SELECT count(*) AS n_parts,
        |    CAST(sum(CAST(round(CAST(r1 AS DOUBLE) / q1 * q1 * 100) AS BIGINT))
@@ -986,7 +965,6 @@ object RelationalPlus {
             "sqrt((CAST(p2q1 AS DOUBLE) / p1q1) * " +
             "(CAST(p2q2 AS DOUBLE) / p1q2))", 6)} AS fisher
        |FROM ag""".stripMargin
-  }
 
   /** Discount elasticity of demand: OLS slope of ln(mean line quantity)
     * on ln(1−discount) across the ≤11 discount levels — "how many more
@@ -1005,16 +983,7 @@ object RelationalPlus {
       .select(col("dpct"),
         log(lit(1.0) - col("dpct") / 100.0).as("x"),
         log(col("sq").cast("double") / col("cnt")).as("y"))
-    val m = cells.agg(count(lit(1)).as("k"),
-      sum(col("x").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
-      sum((col("x") * col("x")).cast(Dec12)).as("sxx"),
-      sum((col("x") * col("y")).cast(Dec12)).as("sxy"),
-      sum((col("y") * col("y")).cast(Dec12)).as("syy"))
-      .select(col("k").cast("double").as("k"),
-        col("sx").cast("double").as("sx"), col("sy").cast("double").as("sy"),
-        col("sxx").cast("double").as("sxx"),
-        col("sxy").cast("double").as("sxy"),
-        col("syy").cast("double").as("syy"))
+    val m = cells.agg(count(lit(1)).cast("double").as("k"), TextAnalysis.momentSums: _*)
     val sxxc = col("k") * col("sxx") - col("sx") * col("sx")
     val sxyc = col("k") * col("sxy") - col("sx") * col("sy")
     val syyc = col("k") * col("syy") - col("sy") * col("sy")
@@ -1037,11 +1006,7 @@ object RelationalPlus {
        |),
        |m AS (
        |  SELECT CAST(count(*) AS DOUBLE) AS k,
-       |    CAST(sum(CAST(x AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-       |    CAST(sum(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-       |    CAST(sum(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-       |    CAST(sum(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-       |    CAST(sum(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE) AS syy
+       |    ${TextAnalysis.momentSumsSql}
        |  FROM xy
        |)
        |SELECT CAST(k AS BIGINT) AS n_levels,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -262,30 +262,64 @@ object Similarity {
     */
   val NumCentroids = 8
 
+  /** The seed centroids `(cent_id, cv, cnsq)`: the first `k` vectors. */
+  private def seedCentroids(e: DataFrame, k: Int): DataFrame =
+    e.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nsq").as("cnsq"))
+
+  /** Every vector of `e` against every centroid of the broadcast `cents`
+    * (`cv`, `cnsq`), its cosine `csim`, grouped by vector: an argmax or
+    * a max over the group collapses the ×centroids expansion map-side in
+    * the same task — a window would shuffle AND sort the expanded rows.
+    */
+  private def centroidSims(e: DataFrame, cents: DataFrame): RelationalGroupedDataset =
+    e.crossJoin(broadcast(cents))
+      .withColumn("csim", VectorFns.cosineWithNorms(
+        VectorFns.dot(col("v"), col("cv")), col("nsq"), col("cnsq")))
+      .groupBy(col("vec_id"))
+
+  /** The nearest centroid of a [[centroidSims]] group, `cell`: ordering
+    * matches the oracle's (csim DESC, cent_id ASC) via the (csim,
+    * -cent_id) struct.
+    */
+  private def nearestCell: Column =
+    max_by(col("cent_id"), struct(col("csim"), (-col("cent_id")).as("nc"))).as("cell")
+
+  /** Each cell's mean vector, flat `(cell, pos, n_vecs, cx)`, over an
+    * assigned frame `(cell, v)`: posexplode partial sums, so the shuffle
+    * carries cells×dims aggregate cells, never vectors.
+    */
+  private def centroidMeans(assigned: DataFrame): DataFrame =
+    assigned
+      .select(col("cell"), posexplode(col("v")))
+      .select(col("cell"), (col("pos") + 1).as("pos"), col("col").as("x"))
+      .groupBy(col("cell"), col("pos"))
+      .agg(count(lit(1)).as("n_vecs"), stableMean4(col("x"), count(lit(1))).as("cx"))
+
   /** IVF cell assignment shared by [[qAnnIvf]] and [[qSemdedup]]:
     * centroids are deterministically the first `NumCentroids` vectors,
-    * broadcast; each vector joins its nearest centroid. Argmax via
-    * max_by, not a window rank: the crossJoin expands each vector ×
-    * NumCentroids, and max_by collapses it map-side in the same task —
-    * a window would shuffle AND sort the expanded rows. Ordering matches
-    * the oracle's (csim DESC, cent_id ASC) via the (csim, -cent_id)
-    * struct.
+    * broadcast; each vector joins its [[nearestCell]].
     */
   private def cellAssigned(s: SparkSession, dir: String): DataFrame = {
     val e = prepared(s, dir)
-    val cents = e.filter(col("vec_id") < NumCentroids)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nsq").as("cnsq"))
-    val csim = VectorFns.cosineWithNorms(
-      VectorFns.dot(col("v"), col("cv")), col("nsq"), col("cnsq"))
-    e.crossJoin(broadcast(cents))
-      .withColumn("csim", csim)
-      .groupBy(col("vec_id"))
+    centroidSims(e, seedCentroids(e, NumCentroids))
       .agg(
         first(col("label")).as("label"),
         first(col("v")).as("v"),
         first(col("nsq")).as("nsq"),
-        max_by(col("cent_id"), struct(col("csim"), (-col("cent_id")).as("nc"))).as("cell"))
+        nearestCell)
       .select(col("vec_id"), col("label"), col("v"), col("nsq"), col("cell"))
+  }
+
+  /** Pairs of distinct vectors in one IVF cell, `a` before `b` by
+    * vec_id. shuffle_hash on the self-join: the cell frame is derived,
+    * so a broadcast would build it on the driver (the r1 cliff).
+    */
+  private def cellPairs(s: SparkSession, dir: String): DataFrame = {
+    val cells = cellAssigned(s, dir)
+    cells.as("a")
+      .join(cells.as("b").hint("shuffle_hash"),
+        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
   }
 
   /** The matching oracle CTE chain ending in `cells(vec_id, v, nsq, cell)`. */
@@ -461,14 +495,9 @@ object Similarity {
     * target_cell_size) — within-cell pairing cost is cells × bound², the
     * same bounded-block argument as the LSH/chunked paths (a hot cell
     * routes through the q_embed_neardup chunk×chunk sub-blocking).
-    * shuffle_hash on the self-join: the cell frame is derived, so a
-    * broadcast would build it on the driver (the r1 cliff).
     */
   def qSemdedup(s: SparkSession, dir: String): DataFrame = {
-    val cells = cellAssigned(s, dir)
-    val pairs = cells.as("a")
-      .join(cells.as("b").hint("shuffle_hash"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
+    val pairs = cellPairs(s, dir)
       .select(col("b.vec_id").as("vec_id"), col("b.cell").as("cell"),
         col("a.vec_id").as("keeper"), simCol.as("sim"))
     graft.plans.Fence.filterNoPushdown(pairs, col("sim") >= NearDupThreshold)
@@ -505,11 +534,7 @@ object Similarity {
     * round's broadcast centroid table.
     */
   def qKmeansStep(s: SparkSession, dir: String): DataFrame =
-    cellAssigned(s, dir)
-      .select(col("cell"), posexplode(col("v")))
-      .select(col("cell"), (col("pos") + 1).as("pos"), col("col").as("x"))
-      .groupBy(col("cell"), col("pos"))
-      .agg(count(lit(1)).as("n_vecs"), stableMean4(col("x"), count(lit(1))).as("cx"))
+    centroidMeans(cellAssigned(s, dir))
       .orderBy(col("cell"), col("pos"))
 
   /** Full distributed k-means: `iters` Lloyd rounds seeded exactly like
@@ -534,24 +559,12 @@ object Similarity {
     val e = prepared(s, dir)
       .select(col("vec_id"), col("v"), col("nsq"))
       .localCheckpoint()
-    var cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nsq").as("cnsq"))
+    var cents = seedCentroids(e, k)
     var flat: DataFrame = null
     var i = 0
     while (i < iters) {
-      val csim = VectorFns.cosineWithNorms(
-        VectorFns.dot(col("v"), col("cv")), col("nsq"), col("cnsq"))
-      val assigned = e.crossJoin(broadcast(cents))
-        .withColumn("csim", csim)
-        .groupBy(col("vec_id"))
-        .agg(first(col("v")).as("v"),
-          max_by(col("cent_id"), struct(col("csim"), (-col("cent_id")).as("nc"))).as("cell"))
-      flat = assigned
-        .select(col("cell"), posexplode(col("v")))
-        .select(col("cell"), (col("pos") + 1).as("pos"), col("col").as("x"))
-        .groupBy(col("cell"), col("pos"))
-        .agg(count(lit(1)).as("n_vecs"), stableMean4(col("x"), count(lit(1))).as("cx"))
-        .localCheckpoint()
+      val assigned = centroidSims(e, cents).agg(first(col("v")).as("v"), nearestCell)
+      flat = centroidMeans(assigned).localCheckpoint()
       cents = flat.groupBy(col("cell"))
         .agg(array_sort(collect_list(struct(col("pos"), col("cx")))).as("pc"))
         .select(col("cell").as("cent_id"), expr("transform(pc, t -> t.cx)").as("cv"))
@@ -980,10 +993,7 @@ object Similarity {
     * hash-stable mean similarities for both classes.
     */
   def qContrastivePairs(s: SparkSession, dir: String): DataFrame = {
-    val cells = cellAssigned(s, dir)
-    val pairs = cells.as("a")
-      .join(cells.as("b").hint("shuffle_hash"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
+    val pairs = cellPairs(s, dir)
       .select(col("a.label").as("label"), col("b.label").as("lb"), simCol.as("sim"))
     val fenced = graft.plans.Fence.filterNoPushdown(pairs, col("sim") >= NearDupThreshold)
     // sims carry 4 decimals, so a decimal-sum ÷ n CAN land exactly on a
@@ -1197,18 +1207,7 @@ object Similarity {
     * tie-breaks on label id; accuracy is an exact integer ratio.
     */
   def qKnnClassify(s: SparkSession, dir: String): DataFrame = {
-    val e = prepared(s, dir)
-    val q = e.filter(col("vec_id") < KnnQueries)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val neigh = broadcast(q).as("a")
-      .join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("a.label").as("true_label"),
-        col("b.vec_id").as("neighbor_id"), col("b.label").as("n_label"),
-        simCol.as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= KnnK)
-    val pred = neigh.groupBy(col("query_id"), col("true_label"), col("n_label"))
+    val pred = knnNeighbors(prepared(s, dir)).groupBy(col("query_id"), col("true_label"), col("n_label"))
       .agg(count(lit(1)).as("votes"))
       .groupBy(col("query_id"), col("true_label"))
       .agg(max_by(col("n_label"),
@@ -1222,6 +1221,24 @@ object Similarity {
           col("n_correct").cast("double") / col("n_queries"), 6)
           .as("accuracy"))
       .orderBy(col("true_label"))
+  }
+
+  /** The [[KnnK]] nearest other vectors of each vector of `corpus
+    * (vec_id, label, v, nsq)` below [[KnnQueries]]: `(query_id,
+    * true_label, neighbor_id, n_label, sim, rank)`, best by (sim desc,
+    * neighbor_id) — a tie at the cutoff keeps the smaller neighbor id,
+    * and ranks run 1..KnnK with no gap. The query set is broadcast.
+    */
+  private[operators] def knnNeighbors(corpus: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("neighbor_id"))
+    broadcast(corpus.filter(col("vec_id") < KnnQueries)).as("a")
+      .join(corpus.as("b"), col("a.vec_id") =!= col("b.vec_id"))
+      .select(col("a.vec_id").as("query_id"), col("a.label").as("true_label"),
+        col("b.vec_id").as("neighbor_id"), col("b.label").as("n_label"),
+        simCol.as("sim"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= KnnK)
   }
 
   val qKnnClassifyOracle: String =
@@ -1334,13 +1351,7 @@ object Similarity {
   def qElbowSse(s: SparkSession, dir: String): DataFrame = {
     val e = prepared(s, dir).localCheckpoint()
     val perK = ElbowKs.map { k =>
-      val cents = e.filter(col("vec_id") < k)
-        .select(col("v").as("cv"), col("nsq").as("cnsq"))
-      val csim = VectorFns.cosineWithNorms(
-        VectorFns.dot(col("v"), col("cv")), col("nsq"), col("cnsq"))
-      e.crossJoin(broadcast(cents))
-        .withColumn("csim", csim)
-        .groupBy(col("vec_id"))
+      centroidSims(e, seedCentroids(e, k))
         .agg((lit(1.0) - max(col("csim"))).as("dist"))
         .agg(count(lit(1)).as("n_vecs"),
           sum(col("dist").cast(Dec12)).as("sse_d"))
@@ -1642,9 +1653,7 @@ object Similarity {
   def qAnnProbeCurve(s: SparkSession, dir: String): DataFrame = {
     val e = prepared(s, dir)
     val cells = cellAssigned(s, dir).localCheckpoint()
-    val cents = e.filter(col("vec_id") < NumCentroids)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nsq").as("cnsq"))
+    val cents = seedCentroids(e, NumCentroids)
     val maxP = ProbeDepths.max
     val q = cells.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -1676,14 +1685,11 @@ object Similarity {
       .localCheckpoint()
     val tt = truth.agg(count(lit(1)).as("n_true"))
     val perDepth = ProbeDepths.map { pd =>
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("neighbor_id"))
-      val top = cand.filter(col("crank") <= pd)
-        .withColumn("rk", row_number().over(w))
-      val nc = top.groupBy(col("query_id")).agg(count(lit(1)).as("ncand"))
+      val probed = cand.filter(col("crank") <= pd)
+      val nc = probed.groupBy(col("query_id")).agg(count(lit(1)).as("ncand"))
         .agg(sum(col("ncand")).as("cand_total"),
           count(lit(1)).as("nq"))
-      val hits = top.filter(col("rk") <= 3)
+      val hits = top3(probed)
         .join(truth, Seq("query_id", "neighbor_id"), "inner")
         .agg(count(lit(1)).as("n_hits"))
       nc.crossJoin(broadcast(hits)).crossJoin(broadcast(tt))
@@ -1696,6 +1702,16 @@ object Similarity {
     }
     perDepth.reduce(_ union _).orderBy(col("nprobe"))
   }
+
+  /** The 3 best of each query's candidates `cand (query_id,
+    * neighbor_id, sim)`, ranked `rk` by (sim desc, neighbor_id): a tie at
+    * the cutoff keeps the smaller neighbor id, and ranks run 1..3 with
+    * no gap.
+    */
+  private[operators] def top3(cand: DataFrame): DataFrame =
+    cand.withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("sim").desc, col("neighbor_id"))))
+      .filter(col("rk") <= 3)
 
   val qAnnProbeCurveOracle: String = {
     val depths = ProbeDepths.map { pd =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NumFns, TextFns}
@@ -23,20 +23,30 @@ object Sketches {
   /** percentile_approx at accuracy=1000 — certify p50 at 2% relative. */
   val PercentileBound = 0.02
 
+  /** The distinct-parts certificate: `approx_parts` within
+    * [[DistinctBound]] of `exact_parts`.
+    */
+  private def partsWithinBound: Column =
+    (abs(col("approx_parts") - col("exact_parts")) <=
+      col("exact_parts") * DistinctBound).as("within_bound")
+
+  /** The oracle of a certified distinct-parts count per return flag;
+    * `more` adds columns before `exact_parts`.
+    */
+  private def distinctPartsOracle(more: String*): String =
+    s"""SELECT l_returnflag,${more.map("\n  " + _ + ",").mkString}
+       |  count(DISTINCT l_partkey) AS exact_parts,
+       |  TRUE AS within_bound
+       |FROM lineitem
+       |GROUP BY l_returnflag
+       |ORDER BY l_returnflag""".stripMargin
+
   def qSketchDistinct(s: SparkSession, dir: String): DataFrame =
     approxDistinctParts(s, dir)
-      .select(col("l_returnflag"), col("exact_parts"),
-        (abs(col("approx_parts") - col("exact_parts")) <=
-          col("exact_parts") * DistinctBound).as("within_bound"))
+      .select(col("l_returnflag"), col("exact_parts"), partsWithinBound)
       .orderBy(col("l_returnflag"))
 
-  val qSketchDistinctOracle: String =
-    """SELECT l_returnflag,
-      |  count(DISTINCT l_partkey) AS exact_parts,
-      |  TRUE AS within_bound
-      |FROM lineitem
-      |GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin
+  val qSketchDistinctOracle: String = distinctPartsOracle()
 
   def qSketchPercentile(s: SparkSession, dir: String): DataFrame =
     approxPercentiles(s, dir)
@@ -112,20 +122,12 @@ object Sketches {
     val exact = li.select(col("l_returnflag"), col("l_partkey")).distinct()
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("exact_parts"))
     merged.join(exact, "l_returnflag")
-      .select(col("l_returnflag"), col("n_shards"), col("exact_parts"),
-        (abs(col("approx_parts") - col("exact_parts")) <=
-          col("exact_parts") * DistinctBound).as("within_bound"))
+      .select(col("l_returnflag"), col("n_shards"), col("exact_parts"), partsWithinBound)
       .orderBy(col("l_returnflag"))
   }
 
   val qSketchMergeOracle: String =
-    """SELECT l_returnflag,
-      |  count(DISTINCT l_linestatus) AS n_shards,
-      |  count(DISTINCT l_partkey) AS exact_parts,
-      |  TRUE AS within_bound
-      |FROM lineitem
-      |GROUP BY l_returnflag
-      |ORDER BY l_returnflag""".stripMargin
+    distinctPartsOracle("count(DISTINCT l_linestatus) AS n_shards")
 
   /** Count-min sketch shape: [[CmsDepth]] independent md5-derived hash
     * rows × [[CmsWidth]] integer cells — 3×1024 counters total,

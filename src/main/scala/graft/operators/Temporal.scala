@@ -97,6 +97,19 @@ object Temporal {
        |FROM sp LEFT JOIN h ON h.user_id = sp.user_id AND h.hour_epoch = sp.hour_epoch
        |ORDER BY sp.user_id, sp.hour_epoch""".stripMargin
 
+  /** `(user_id, event_id, us, event_type)` of every event, `us` its
+    * timestamp in µs.
+    */
+  private def typedEvents(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
+        col("event_type"))
+
+  /** Each user's events in (time, event_id) order: a total order both
+    * engines share.
+    */
+  private val userOrder = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
+
   /** Ordered sequence-pattern match (MATCH_RECOGNIZE-lite): per user,
     * count the CONSECUTIVE view→click→purchase runs in the event stream
     * (tie-broken by event_id — a total order both engines share). Two lag
@@ -107,12 +120,9 @@ object Temporal {
     * form via chained min-aggregates.
     */
   def qSequenceMatch(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"))
-      .withColumn("p1", lag(col("event_type"), 1).over(w))
-      .withColumn("p2", lag(col("event_type"), 2).over(w))
+    typedEvents(s, dir)
+      .withColumn("p1", lag(col("event_type"), 1).over(userOrder))
+      .withColumn("p2", lag(col("event_type"), 2).over(userOrder))
       .withColumn("hit",
         (col("p2") === "view" && col("p1") === "click" &&
           col("event_type") === "purchase").cast("long"))
@@ -142,16 +152,12 @@ object Temporal {
     * each user's events in (time, event_id) order, every event paired
     * with the one before it by one lag window, then one grouped count.
     */
-  private def transitions(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"))
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
+  private def transitions(s: SparkSession, dir: String): DataFrame =
+    typedEvents(s, dir)
+      .withColumn("from_type", lag(col("event_type"), 1).over(userOrder))
       .filter(col("from_type").isNotNull)
       .groupBy(col("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("n"))
-  }
 
   /** SQL twin of [[transitions]]. */
   private val transitionsSql: String =
@@ -192,9 +198,7 @@ object Temporal {
     * a retention pipeline runs at full fact scale.
     */
   def qUnconvertedViews(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
-        col("event_type"))
+    val ev = typedEvents(s, dir)
     val views = ev.filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id"), col("us"))
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -856,13 +860,48 @@ object Temporal {
   def dailyCents(s: SparkSession, dir: String, more: Column*): DataFrame =
     Tables.orders(s, dir)
       .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"), more: _*)
+      .agg(dayCents.as("yc"), more: _*)
 
   /** SQL twin of [[dailyCents]]; `di` and `yc` are BIGINT. */
   def dailyCentsSql(more: String*): String =
     s"""SELECT date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS di,
-       |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS yc${more.map(", " + _).mkString}
+       |  $dayCentsSql AS yc${more.map(", " + _).mkString}
        |FROM orders GROUP BY 1""".stripMargin
+
+  /** One order day's revenue in integer cents, the [[dailyCents]] sum. */
+  def dayCents: Column = sum(NumFns.roundAwayLong(col("o_totalprice") * 100))
+
+  /** SQL twin of [[dayCents]], a BIGINT. */
+  def dayCentsSql: String = "CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)"
+
+  /** The order days keyed by calendar date `d`, with the per-day
+    * aggregates `agg +: more` ([[dayCents]] for the revenue series).
+    */
+  def orderDates(s: SparkSession, dir: String, agg: Column, more: Column*): DataFrame =
+    Tables.orders(s, dir).groupBy(to_date(col("o_orderdate")).as("d")).agg(agg, more: _*)
+
+  /** SQL twin of [[orderDates]]: the body of a CTE. */
+  def orderDatesSql(aggs: String*): String =
+    s"SELECT CAST(o_orderdate AS DATE) AS d, ${aggs.mkString(", ")} FROM orders GROUP BY 1"
+
+  /** Least-squares line y = a + b·di over `days (di, y)` in doubles:
+    * `n`, the [[TextAnalysis.momentSums]] of x = di, `b` and `a`.
+    */
+  private def dayTrend(days: DataFrame): DataFrame =
+    days.select(col("di").as("x"), col("y"))
+      .agg(count(lit(1)).as("n"), TextAnalysis.momentSums: _*)
+      .withColumn("b", (col("n") * col("sxy") - col("sx") * col("sy"))
+        / (col("n") * col("sxx") - col("sx") * col("sx")))
+      .withColumn("a", (col("sy") - col("b") * col("sx")) / col("n"))
+
+  /** SQL twin of [[dayTrend]]: CTE `tr` over the relation `days`. */
+  private def dayTrendSql(days: String): String =
+    s"""tr AS (
+       |  SELECT *, (sy - b * sx) / n AS a FROM (
+       |    SELECT *, (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b FROM (
+       |      SELECT count(*) AS n, ${TextAnalysis.momentSumsSql}
+       |      FROM (SELECT di AS x, y FROM $days)))
+       |)""".stripMargin
 
   /** Autocorrelation of the daily revenue series at lags 1..7 — the
     * seasonality detector behind the DOW profile: a strong lag-7 peak
@@ -2359,20 +2398,10 @@ object Temporal {
       .filter(col("rn") === expr("(np + 1) div 2") ||
         col("rn") === expr("(np + 2) div 2"))
       .agg((sum(col("slope")) / count(lit(1))).as("sen"), max(col("np")).as("np"))
-    val ols = days.agg(count(lit(1)).as("nd"),
-      sum(col("di").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
-      sum((col("di") * col("di")).cast(Dec12)).as("sxx"),
-      sum((col("di") * col("y")).cast(Dec12)).as("sxy"))
-      .select(col("nd"),
-        ((col("nd").cast("double") * col("sxy").cast("double")
-          - col("sx").cast("double") * col("sy").cast("double"))
-          / (col("nd").cast("double") * col("sxx").cast("double")
-            - col("sx").cast("double") * col("sx").cast("double")))
-          .as("ols"))
-    ranked.crossJoin(broadcast(ols))
-      .select(col("nd").as("n_days"), col("np").as("n_pairs"),
+    ranked.crossJoin(broadcast(dayTrend(days)))
+      .select(col("n").as("n_days"), col("np").as("n_pairs"),
         NumFns.roundPortable(col("sen"), 4).as("sen_slope"),
-        NumFns.roundPortable(col("ols"), 4).as("ols_slope"))
+        NumFns.roundPortable(col("b"), 4).as("ols_slope"))
   }
 
   val qTheilSenOracle: String =
@@ -2391,24 +2420,11 @@ object Temporal {
        |sen AS (
        |  SELECT count(*) AS np, quantile_cont(slope, 0.5) AS sen FROM sl
        |),
-       |olm AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS nd,
-       |    CAST(sum(CAST(di AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-       |    CAST(sum(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-       |    CAST(sum(CAST(di * di AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-       |    CAST(sum(CAST(di * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy
-       |  FROM days
-       |),
-       |ols AS (
-       |  SELECT nd,
-       |    (CAST(nd AS DOUBLE) * sxy - sx * sy)
-       |      / (CAST(nd AS DOUBLE) * sxx - sx * sx) AS ols
-       |  FROM olm
-       |)
-       |SELECT nd AS n_days, np AS n_pairs,
+       |${dayTrendSql("days")}
+       |SELECT n AS n_days, np AS n_pairs,
        |  ${NumFns.roundPortableSql("sen", 4)} AS sen_slope,
-       |  ${NumFns.roundPortableSql("ols", 4)} AS ols_slope
-       |FROM sen, ols""".stripMargin
+       |  ${NumFns.roundPortableSql("b", 4)} AS ols_slope
+       |FROM sen, tr""".stripMargin
 
   /** Durbin–Watson autocorrelation test on the residuals of the daily
     * revenue trend — the regression-diagnostic companion to
@@ -2426,24 +2442,7 @@ object Temporal {
     */
   def qDurbinWatson(s: SparkSession, dir: String): DataFrame = {
     val days = dailyCents(s, dir).select(col("di"), (col("yc") / 100.0).as("y"))
-    val m = days.agg(count(lit(1)).as("n"),
-      sum(col("di").cast(Dec12)).as("sx"), sum(col("y").cast(Dec12)).as("sy"),
-      sum((col("di") * col("di")).cast(Dec12)).as("sxx"),
-      sum((col("di") * col("y")).cast(Dec12)).as("sxy"))
-      .select(col("n").cast("double").as("n"),
-        col("sx").cast("double").as("sx"), col("sy").cast("double").as("sy"),
-        col("sxx").cast("double").as("sxx"),
-        col("sxy").cast("double").as("sxy"))
-      .select(col("n"),
-        ((col("n") * col("sxy") - col("sx") * col("sy"))
-          / (col("n") * col("sxx") - col("sx") * col("sx"))).as("b"))
-      .select(col("n"), col("b"))
-    val coef = days.crossJoin(broadcast(
-        m.join(days.agg(
-            sum(col("di").cast(Dec12)).cast("double").as("sx"),
-            sum(col("y").cast(Dec12)).cast("double").as("sy")))
-          .select(col("n"), col("b"),
-            ((col("sy") - col("b") * col("sx")) / col("n")).as("a"))))
+    val coef = days.crossJoin(broadcast(dayTrend(days).select(col("b"), col("a"))))
       .select(col("di"), (col("y") - col("a") - col("b") * col("di")).as("e"),
         col("b"))
     val w = Window.orderBy(col("di"))
@@ -2464,22 +2463,9 @@ object Temporal {
 
   val qDurbinWatsonOracle: String =
     s"""WITH days AS (SELECT di, yc / 100.0 AS y FROM (${dailyCentsSql()})),
-       |m AS (
-       |  SELECT CAST(count(*) AS DOUBLE) AS n,
-       |    CAST(sum(CAST(di AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-       |    CAST(sum(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-       |    CAST(sum(CAST(di * di AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-       |    CAST(sum(CAST(di * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy
-       |  FROM days
-       |),
-       |c AS (
-       |  SELECT n,
-       |    (n * sxy - sx * sy) / (n * sxx - sx * sx) AS b,
-       |    (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n AS a
-       |  FROM m
-       |),
+       |${dayTrendSql("days")},
        |e AS (
-       |  SELECT di, y - a - b * di AS e, b FROM days, c
+       |  SELECT di, y - a - b * di AS e, b FROM days, tr
        |),
        |st AS (
        |  SELECT count(*) AS n, max(b) AS b,
@@ -3486,16 +3472,7 @@ object Temporal {
     */
   def qCooksDistance(s: SparkSession, dir: String): DataFrame = {
     val days = dailyCents(s, dir).select(col("di"), (col("yc") / 100.0).as("y"))
-    val m = days.agg(count(lit(1)).as("nL"),
-      sum(col("di").cast(Dec12)).cast("double").as("sx"),
-      sum(col("y").cast(Dec12)).cast("double").as("sy"),
-      sum((col("di") * col("di")).cast(Dec12)).cast("double").as("sxx"),
-      sum((col("di") * col("y")).cast(Dec12)).cast("double").as("sxy"))
-      .select(col("nL"), col("sx"), col("sy"), col("sxx"), col("sxy"),
-        ((col("nL") * col("sxy") - col("sx") * col("sy"))
-          / (col("nL") * col("sxx") - col("sx") * col("sx"))).as("b"))
-      .select(col("nL"), col("sx"), col("sxx"), col("b"),
-        ((col("sy") - col("b") * col("sx")) / col("nL")).as("a"))
+    val m = dayTrend(days).select(col("n").as("nL"), col("sx"), col("sxx"), col("b"), col("a"))
     val res = days.crossJoin(broadcast(m))
       .select(col("di"), col("y"), col("nL"),
         (col("y") - col("a") - col("b") * col("di")).as("e"),
@@ -3523,20 +3500,8 @@ object Temporal {
 
   val qCooksDistanceOracle: String =
     s"""WITH days AS (SELECT di, yc / 100.0 AS y FROM (${dailyCentsSql()})),
-       |m AS (
-       |  SELECT count(*) AS nL,
-       |    CAST(sum(CAST(di AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-       |    CAST(sum(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-       |    CAST(sum(CAST(di * di AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-       |    CAST(sum(CAST(di * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy
-       |  FROM days
-       |),
-       |cf AS (
-       |  SELECT nL, sx, sxx,
-       |    (nL * sxy - sx * sy) / (nL * sxx - sx * sx) AS b,
-       |    (sy - (nL * sxy - sx * sy) / (nL * sxx - sx * sx) * sx) / nL AS a
-       |  FROM m
-       |),
+       |${dayTrendSql("days")},
+       |cf AS (SELECT n AS nL, sx, sxx, b, a FROM tr),
        |res AS (
        |  SELECT di, y, nL,
        |    y - a - b * di AS e,
@@ -3806,9 +3771,7 @@ object Temporal {
     */
   def qPageTrend(s: SparkSession, dir: String): DataFrame = {
     val k = 7
-    val days = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("d"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = orderDates(s, dir, dayCents.as("yc"))
       .select(col("d"), col("yc"),
         date_trunc("week", col("d")).cast("date").as("wk0"),
         dayofweek(col("d")).as("dw"))
@@ -3837,12 +3800,7 @@ object Temporal {
   }
 
   val qPageTrendOracle: String =
-    s"""WITH days AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS d,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${orderDatesSql(s"$dayCentsSql AS yc")}),
        |keyed AS (
        |  SELECT d, yc, CAST(date_trunc('week', d) AS DATE) AS wk0,
        |    dayofweek(d) AS dw0
@@ -4120,9 +4078,7 @@ object Temporal {
     * scalar.
     */
   def qSeasonalMk(s: SparkSession, dir: String): DataFrame = {
-    val days = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("d"))
-      .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
+    val days = orderDates(s, dir, dayCents.as("yc"))
       .select(col("d"), col("yc"), dayofweek(col("d")).as("dw"))
       .localCheckpoint() // feeds pairs, ties and counts
     val a = days.select(col("dw"), col("d").as("d1"), col("yc").as("y1"))
@@ -4147,12 +4103,7 @@ object Temporal {
   }
 
   val qSeasonalMkOracle: String =
-    s"""WITH days AS (
-       |  SELECT CAST(o_orderdate AS DATE) AS d,
-       |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-       |      AS yc
-       |  FROM orders GROUP BY 1
-       |),
+    s"""WITH days AS (${orderDatesSql(s"$dayCentsSql AS yc")}),
        |k AS (SELECT d, yc, dayofweek(d) AS dw FROM days),
        |sw AS (
        |  SELECT a.dw,

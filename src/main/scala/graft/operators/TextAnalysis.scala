@@ -282,10 +282,36 @@ object TextAnalysis {
     */
   val VocabTopK = 50
 
-  def qVocabCoverage(s: SparkSession, dir: String): DataFrame = {
-    val words = Tables.documents(s, dir)
+  /** Documents with at least one token: `(more*, toks)`. */
+  def tokenDocs(s: SparkSession, dir: String, more: String*): DataFrame =
+    Tables.documents(s, dir)
+      .select(more.map(col) :+ TextFns.tokens(col("text")).as("toks"): _*)
+      .filter(size(col("toks")) > 0)
+
+  /** Corpus word counts `(word, n)`. */
+  private def wordCounts(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
       .select(explode(TextFns.tokens(col("text"))).as("word"))
-    val counts = words.groupBy(col("word")).agg(count(lit(1)).as("n"))
+      .groupBy(col("word")).agg(count(lit(1)).as("n"))
+
+  /** SQL twin of [[wordCounts]]: CTEs `w` and `c (word, n)`. */
+  private val wordCountsSql: String =
+    s"""w AS (
+       |  SELECT unnest($toksSql) AS word FROM documents
+       |),
+       |c AS (SELECT word, count(*) AS n FROM w GROUP BY word)""".stripMargin
+
+  /** The count-of-counts spectrum `(m, vm)`: vm words occur m times. */
+  private def countOfCounts(s: SparkSession, dir: String): DataFrame =
+    wordCounts(s, dir).groupBy(col("n").as("m")).agg(count(lit(1)).as("vm"))
+
+  /** SQL twin of [[countOfCounts]]: CTE `cc (m, vm)`. */
+  private val countOfCountsSql: String =
+    s"""$wordCountsSql,
+       |cc AS (SELECT n AS m, count(*) AS vm FROM c GROUP BY n)""".stripMargin
+
+  def qVocabCoverage(s: SparkSession, dir: String): DataFrame = {
+    val counts = wordCounts(s, dir)
     val total = counts.agg(sum(col("n")).as("tot"))
     val top = counts.orderBy(col("n").desc, col("word")).limit(VocabTopK)
     val w = Window.orderBy(col("n").desc, col("word"))
@@ -299,10 +325,7 @@ object TextAnalysis {
   }
 
   val qVocabCoverageOracle: String =
-    s"""WITH w AS (
-       |  SELECT unnest($toksSql) AS word FROM documents
-       |),
-       |c AS (SELECT word, count(*) AS n FROM w GROUP BY word),
+    s"""WITH $wordCountsSql,
        |t AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM c),
        |top AS (
        |  SELECT word, n, row_number() OVER (ORDER BY n DESC, word) AS rank
@@ -359,8 +382,11 @@ object TextAnalysis {
           log(col("c2") / col("c1").cast("double")), count(lit(1)), 4).as("avg_logp"))
   }
 
-  val qBigramLmOracle: String =
-    s"""WITH t AS (
+  /** SQL twin of [[bigramScores]] over `documents`: CTE `lm (doc_id,
+    * n_bigrams, avg_logp)` and the CTEs it reads.
+    */
+  private val bigramScoresSql: String =
+    s"""t AS (
       |  SELECT doc_id, $toksSql AS toks
       |  FROM documents
       |),
@@ -370,12 +396,16 @@ object TextAnalysis {
       |  WHERE len(toks) >= 2
       |),
       |bc AS (SELECT bigram, count(*) AS c2 FROM bg GROUP BY bigram),
-      |uc AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY w1)
-      |SELECT bg.doc_id, count(*) AS n_bigrams,
-      |  ${graft.functions.NumFns.stableMeanSql("ln(bc.c2 / CAST(uc.c1 AS DOUBLE))", "count(*)", 4)} AS avg_logp
-      |FROM bg JOIN bc USING (bigram) JOIN uc USING (w1)
-      |GROUP BY bg.doc_id
-      |ORDER BY bg.doc_id""".stripMargin
+      |uc AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY w1),
+      |lm AS (
+      |  SELECT bg.doc_id, count(*) AS n_bigrams,
+      |    ${graft.functions.NumFns.stableMeanSql("ln(bc.c2 / CAST(uc.c1 AS DOUBLE))", "count(*)", 4)} AS avg_logp
+      |  FROM bg JOIN bc USING (bigram) JOIN uc USING (w1)
+      |  GROUP BY bg.doc_id
+      |)""".stripMargin
+
+  val qBigramLmOracle: String =
+    s"WITH $bigramScoresSql SELECT doc_id, n_bigrams, avg_logp FROM lm ORDER BY doc_id"
 
   /** Top candidate merges for one BPE training step: corpus-wide counts
     * of adjacent CHARACTER pairs, the argmax of which is the next merge
@@ -577,6 +607,23 @@ object TextAnalysis {
        |  FROM $points
        |)""".stripMargin
 
+  /** The moment sums `(sx, sy, sxx, sxy, syy)` of `(x, y)` as aggregate
+    * columns, each folded exactly in DECIMAL(38,12) and cast to double
+    * once — for fits that run their closed form on doubles.
+    */
+  def momentSums: Seq[Column] = Seq(
+    sum(col("x").cast(Dec12)).cast("double").as("sx"),
+    sum(col("y").cast(Dec12)).cast("double").as("sy"),
+    sum((col("x") * col("x")).cast(Dec12)).cast("double").as("sxx"),
+    sum((col("x") * col("y")).cast(Dec12)).cast("double").as("sxy"),
+    sum((col("y") * col("y")).cast(Dec12)).cast("double").as("syy"))
+
+  /** SQL twin of [[momentSums]]: a select list. */
+  def momentSumsSql: String =
+    Seq("x" -> "sx", "y" -> "sy", "x * x" -> "sxx", "x * y" -> "sxy", "y * y" -> "syy")
+      .map { case (t, a) => s"CAST(sum(CAST($t AS DECIMAL(38,12))) AS DOUBLE) AS $a" }
+      .mkString(",\n    ")
+
   /** Rank-enumeration chunk size for [[qZipfFit]]: one tied-frequency
     * block's rank range is split into runs of this many consecutive
     * integer ranks, each generated and partially aggregated in its own
@@ -605,9 +652,7 @@ object TextAnalysis {
     * round-at-4 gap.
     */
   def qZipfFit(s: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.documents(s, dir)
-      .select(explode(TextFns.tokens(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
+    val counts = wordCounts(s, dir)
     val wOff = Window.orderBy(col("n").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val blocks = counts.groupBy(col("n")).agg(count(lit(1)).as("nw"))
@@ -628,10 +673,7 @@ object TextAnalysis {
   }
 
   val qZipfFitOracle: String =
-    s"""WITH w AS (
-       |  SELECT unnest($toksSql) AS word FROM documents
-       |),
-       |c AS (SELECT word, count(*) AS n FROM w GROUP BY word),
+    s"""WITH $wordCountsSql,
        |r AS (
        |  SELECT ln(CAST(row_number() OVER (ORDER BY n DESC, word) AS DOUBLE)) AS x,
        |    ln(CAST(n AS DOUBLE)) AS y
@@ -1086,64 +1128,64 @@ object TextAnalysis {
        |SELECT k AS n_points, slope AS beta, intercept AS ln_k
        |FROM (${olsFitSql("pts")})""".stripMargin
 
-  /** Corpus predictability profile: unigram entropy H(W), conditional
-    * bigram entropy H(W₂|W₁), and their difference (the mutual
-    * information between adjacent tokens — how much the previous word
-    * tells you about the next). Natural text sits near H(W)≈10 bits-ish
-    * with substantial adjacent-MI; shuffled or templated corpora
-    * collapse one or the other, so this is the sequence-structure twin
-    * of [[qZipfFit]]'s frequency check. All three numbers come from the
-    * SAME bigram-event frame ([[qBigramLm]]'s convention: events are
-    * bigram occurrences, marginals are slot counts): H = −Σ(c/T)ln(c/T)
-    * via the Σ n·ln n identity — integer counts, ln on identical
-    * rationals, DECIMAL-stable sums, vocabulary(²)-bounded frames.
+  /** Bigram events `(w1, w2, more*)` of every document with ≥ 2 tokens,
+    * checkpointed: each caller's marginal aggregates share it.
     */
-  /** Unrounded 1-row entropy frame `(t_pairs, n_types, n_bigram_types,
-    * hu, hc)` over an arbitrary document frame — the exact
-    * [[qCondEntropy]] emission ([[qCondEntropyApprox]] fuses the same
-    * aggregates with its sampled twin over one shared bigram frame).
-    */
-  private def condEntropyCore(docs: DataFrame): DataFrame = {
-    val bg = docs
-      .select(TextFns.tokens(col("text")).as("toks"))
+  private def bigramEvents(docs: DataFrame, more: String*): DataFrame =
+    docs.select(TextFns.tokens(col("text")).as("toks") +: more.map(col): _*)
       .filter(size(col("toks")) >= 2)
-      .select(explode(TextFns.adjacentPairs(col("toks"))).as("b"))
-      .select(col("b.0").as("w1"), col("b.1").as("w2"))
-      .localCheckpoint() // three marginal aggregates share it
-    val pair = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-    val uni = bg.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-    // Σ c2·ln(c2/c1): H(W2|W1) = −(1/T)·Σ; Σ c1·ln(c1/T) gives H(W1)
-    val sPair = pair.join(uni.hint("shuffle_hash"), Seq("w1"))
-      .agg(sum(col("c2")).as("t_pairs"),
-        count(lit(1)).as("n_bigram_types"),
-        sum((col("c2") * log(col("c2") / col("c1").cast("double"))).cast(Dec12))
-          .as("s_cond"))
-    val sUni = uni.agg(count(lit(1)).as("n_types"),
-      sum((col("c1") * log(col("c1").cast("double"))).cast(Dec12)).as("s_nlnn"),
-      sum(col("c1")).as("t_uni"))
-    sPair.crossJoin(broadcast(sUni))
-      .select(col("t_pairs"), col("n_types"), col("n_bigram_types"),
-        (log(col("t_uni").cast("double"))
-          - col("s_nlnn").cast("double") / col("t_uni")).as("hu"),
-        ((-col("s_cond").cast("double")) / col("t_pairs")).as("hc"))
-  }
+      .select(explode(TextFns.adjacentPairs(col("toks"))).as("b") +: more.map(col): _*)
+      .select(col("b.0").as("w1") +: col("b.1").as("w2") +: more.map(col): _*)
+      .localCheckpoint()
 
-  def qCondEntropy(s: SparkSession, dir: String): DataFrame =
-    condEntropyCore(Tables.documents(s, dir))
-      .select(col("t_pairs"), col("n_types"), col("n_bigram_types"),
-        round(col("hu"), 4).as("h_unigram"),
-        round(col("hc"), 4).as("h_cond"),
-        round(col("hu") - col("hc"), 4).as("adjacent_mi"))
-
-  val qCondEntropyOracle: String =
-    s"""WITH t AS (
+  /** SQL twin of [[bigramEvents]]: CTEs `t` and `bg (w1, w2)`. */
+  private val bigramEventsSql: String =
+    s"""t AS (
        |  SELECT $toksSql AS toks FROM documents
        |),
        |bg AS (
        |  SELECT toks[i] AS w1, toks[i+1] AS w2
        |  FROM t, unnest(range(1, len(toks))) AS u(i)
        |  WHERE len(toks) >= 2
-       |),
+       |)""".stripMargin
+
+  /** Unrounded 1-row entropy frame `(t_pairs, n_types, n_bigram_types,
+    * hu, hc)` over the bigram events `bg` — the exact [[qCondEntropy]]
+    * emission. Each 0/1 weight column `w` of `bg` adds `hu_w`/`hc_w`,
+    * the same entropies over the events it keeps ([[qCondEntropyApprox]]
+    * fuses its sampled twin this way over one shared bigram frame).
+    */
+  private def condEntropyCore(bg: DataFrame, weights: String*): DataFrame = {
+    val sfx = "" +: weights.map("_" + _)
+    def counts(c: String) = weights.map(w => sum(col(w)).as(s"${c}_$w"))
+    val pair = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"), counts("c2"): _*)
+    val uni = bg.groupBy(col("w1")).agg(count(lit(1)).as("c1"), counts("c1"): _*)
+    // Σ c2·ln(c2/c1): H(W2|W1) = −(1/T)·Σ; Σ c1·ln(c1/T) gives H(W1);
+    // a weighted count can be 0, whose term is 0
+    val sPair = pair.join(uni.hint("shuffle_hash"), Seq("w1"))
+      .agg(count(lit(1)).as("n_bigram_types"), sfx.flatMap { x =>
+        val (c2, c1) = (col(s"c2$x"), col(s"c1$x"))
+        Seq(sum(c2).as(s"t_pairs$x"),
+          sum(when(c2 > 0, (c2 * log(c2 / c1.cast("double"))).cast(Dec12))).as(s"s_cond$x"))
+      }: _*)
+    val sUni = uni.agg(count(lit(1)).as("n_types"), sfx.flatMap { x =>
+      val c1 = col(s"c1$x")
+      Seq(sum(when(c1 > 0, (c1 * log(c1.cast("double"))).cast(Dec12))).as(s"s_nlnn$x"),
+        sum(c1).as(s"t_uni$x"))
+    }: _*)
+    sPair.crossJoin(broadcast(sUni))
+      .select(Seq(col("t_pairs"), col("n_types"), col("n_bigram_types")) ++ sfx.flatMap { x =>
+        Seq((log(col(s"t_uni$x").cast("double"))
+          - col(s"s_nlnn$x").cast("double") / col(s"t_uni$x")).as(s"hu$x"),
+          ((-col(s"s_cond$x").cast("double")) / col(s"t_pairs$x")).as(s"hc$x"))
+      }: _*)
+  }
+
+  /** SQL twin of [[condEntropyCore]] without weights: [[bigramEventsSql]]
+    * and the 1-row CTE `h (t_pairs, n_types, n_bigram_types, hu, hc)`.
+    */
+  private val condEntropySql: String =
+    s"""$bigramEventsSql,
        |p AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY w1, w2),
        |un AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY w1),
        |sp AS (
@@ -1157,14 +1199,39 @@ object TextAnalysis {
        |    sum(CAST(c1 * ln(CAST(c1 AS DOUBLE)) AS DECIMAL(38,12))) AS s_nlnn,
        |    CAST(sum(c1) AS BIGINT) AS t_uni
        |  FROM un
-       |)
+       |),
+       |h AS (
+       |  SELECT t_pairs, n_types, n_bigram_types,
+       |    ln(CAST(t_uni AS DOUBLE)) - CAST(s_nlnn AS DOUBLE) / t_uni AS hu,
+       |    (-CAST(s_cond AS DOUBLE)) / t_pairs AS hc
+       |  FROM sp CROSS JOIN su
+       |)""".stripMargin
+
+  /** Corpus predictability profile: unigram entropy H(W), conditional
+    * bigram entropy H(W₂|W₁), and their difference (the mutual
+    * information between adjacent tokens — how much the previous word
+    * tells you about the next). Natural text sits near H(W)≈10 bits-ish
+    * with substantial adjacent-MI; shuffled or templated corpora
+    * collapse one or the other, so this is the sequence-structure twin
+    * of [[qZipfFit]]'s frequency check. All three numbers come from the
+    * SAME bigram-event frame ([[qBigramLm]]'s convention: events are
+    * bigram occurrences, marginals are slot counts): H = −Σ(c/T)ln(c/T)
+    * via the Σ n·ln n identity — integer counts, ln on identical
+    * rationals, DECIMAL-stable sums, vocabulary(²)-bounded frames.
+    */
+  def qCondEntropy(s: SparkSession, dir: String): DataFrame =
+    condEntropyCore(bigramEvents(Tables.documents(s, dir)))
+      .select(col("t_pairs"), col("n_types"), col("n_bigram_types"),
+        round(col("hu"), 4).as("h_unigram"),
+        round(col("hc"), 4).as("h_cond"),
+        round(col("hu") - col("hc"), 4).as("adjacent_mi"))
+
+  val qCondEntropyOracle: String =
+    s"""WITH $condEntropySql
        |SELECT t_pairs, n_types, n_bigram_types,
-       |  round(ln(CAST(t_uni AS DOUBLE)) - CAST(s_nlnn AS DOUBLE) / t_uni, 4)
-       |    AS h_unigram,
-       |  round((-CAST(s_cond AS DOUBLE)) / t_pairs, 4) AS h_cond,
-       |  round((ln(CAST(t_uni AS DOUBLE)) - CAST(s_nlnn AS DOUBLE) / t_uni)
-       |    - ((-CAST(s_cond AS DOUBLE)) / t_pairs), 4) AS adjacent_mi
-       |FROM sp CROSS JOIN su""".stripMargin
+       |  round(hu, 4) AS h_unigram, round(hc, 4) AS h_cond,
+       |  round(hu - hc, 4) AS adjacent_mi
+       |FROM h""".stripMargin
 
   /** 1-in-[[CondEntropySampleMod]] deterministic doc-hash sample used
     * by [[qCondEntropyApprox]]'s estimation pass.
@@ -1190,88 +1257,28 @@ object TextAnalysis {
     * relative of exact — a drifting sample estimate reds the row.
     */
   def qCondEntropyApprox(s: SparkSession, dir: String): DataFrame = {
-    // r10 (scaling curve): the r9 form ran condEntropyCore TWICE — two
-    // tokenize/explode passes and two checkpointed bigram frames over
-    // the same corpus. Fused: each bigram carries its document's sample
-    // bit, so ONE scan/checkpoint feeds both the exact aggregates
-    // (count/sum over all rows) and the sampled ones (sum of the bit) —
-    // c2s/c1s are EXACTLY the sample pass's pair/unigram counts, the
-    // per-term doubles are the identical IEEE expressions, and the
-    // DECIMAL sums are order-independent, so the emission is bit-equal
-    // to the two-pass form at half the scan and shuffle cost.
-    val bg = Tables.documents(s, dir)
-      .select(
-        (TextFns.hash28(concat(lit("ce:"), col("doc_id").cast("string")))
-          % CondEntropySampleMod === 0).cast("long").as("samp"),
-        TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("samp"), explode(TextFns.adjacentPairs(col("toks"))).as("b"))
-      .select(col("b.0").as("w1"), col("b.1").as("w2"), col("samp"))
-      .localCheckpoint() // three marginal aggregates share it
-    val pair = bg.groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c2"), sum(col("samp")).as("c2s"))
-    val uni = bg.groupBy(col("w1"))
-      .agg(count(lit(1)).as("c1"), sum(col("samp")).as("c1s"))
-    val sPair = pair.join(uni.hint("shuffle_hash"), Seq("w1"))
-      .agg(sum(col("c2")).as("t_pairs"),
-        count(lit(1)).as("n_bigram_types"),
-        sum((col("c2") * log(col("c2") / col("c1").cast("double"))).cast(Dec12))
-          .as("s_cond"),
-        sum(col("c2s")).as("t_pairs_s"),
-        sum(when(col("c2s") > 0,
-          (col("c2s") * log(col("c2s") / col("c1s").cast("double"))).cast(Dec12)))
-          .as("s_cond_s"))
-    val sUni = uni.agg(count(lit(1)).as("n_types"),
-      sum((col("c1") * log(col("c1").cast("double"))).cast(Dec12)).as("s_nlnn"),
-      sum(col("c1")).as("t_uni"),
-      sum(when(col("c1s") > 0,
-        (col("c1s") * log(col("c1s").cast("double"))).cast(Dec12))).as("s_nlnn_s"),
-      sum(col("c1s")).as("t_uni_s"))
-    sPair.crossJoin(broadcast(sUni))
-      .select(col("t_pairs"), col("n_types"), col("n_bigram_types"),
-        (log(col("t_uni").cast("double"))
-          - col("s_nlnn").cast("double") / col("t_uni")).as("hu"),
-        ((-col("s_cond").cast("double")) / col("t_pairs")).as("hc"),
-        (log(col("t_uni_s").cast("double"))
-          - col("s_nlnn_s").cast("double") / col("t_uni_s")).as("hu_s"),
-        ((-col("s_cond_s").cast("double")) / col("t_pairs_s")).as("hc_s"))
+    // each bigram carries its document's sample bit, so ONE
+    // scan/checkpoint feeds both the exact aggregates and the sampled
+    // ones (sums of the bit): the sampled counts are EXACTLY a separate
+    // sample pass's pair/unigram counts, at half the scan and shuffle cost
+    val docs = Tables.documents(s, dir).withColumn("samp",
+      (TextFns.hash28(concat(lit("ce:"), col("doc_id").cast("string")))
+        % CondEntropySampleMod === 0).cast("long"))
+    condEntropyCore(bigramEvents(docs, "samp"), "samp")
       .select(col("t_pairs"), col("n_types"), col("n_bigram_types"),
         round(col("hu"), 4).as("h_unigram"),
         round(col("hc"), 4).as("h_cond"),
-        (abs(col("hu_s") - col("hu")) <= abs(col("hu")) * CondEntropyBound &&
-          abs(col("hc_s") - col("hc")) <= abs(col("hc")) * CondEntropyBound)
+        (abs(col("hu_samp") - col("hu")) <= abs(col("hu")) * CondEntropyBound &&
+          abs(col("hc_samp") - col("hc")) <= abs(col("hc")) * CondEntropyBound)
           .as("within_bound"))
   }
 
   val qCondEntropyApproxOracle: String =
-    s"""WITH t AS (
-       |  SELECT $toksSql AS toks FROM documents
-       |),
-       |bg AS (
-       |  SELECT toks[i] AS w1, toks[i+1] AS w2
-       |  FROM t, unnest(range(1, len(toks))) AS u(i)
-       |  WHERE len(toks) >= 2
-       |),
-       |p AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY w1, w2),
-       |un AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY w1),
-       |sp AS (
-       |  SELECT CAST(sum(c2) AS BIGINT) AS t_pairs,
-       |    count(*) AS n_bigram_types,
-       |    sum(CAST(c2 * ln(c2 / CAST(c1 AS DOUBLE)) AS DECIMAL(38,12))) AS s_cond
-       |  FROM p JOIN un USING (w1)
-       |),
-       |su AS (
-       |  SELECT count(*) AS n_types,
-       |    sum(CAST(c1 * ln(CAST(c1 AS DOUBLE)) AS DECIMAL(38,12))) AS s_nlnn,
-       |    CAST(sum(c1) AS BIGINT) AS t_uni
-       |  FROM un
-       |)
+    s"""WITH $condEntropySql
        |SELECT t_pairs, n_types, n_bigram_types,
-       |  round(ln(CAST(t_uni AS DOUBLE)) - CAST(s_nlnn AS DOUBLE) / t_uni, 4)
-       |    AS h_unigram,
-       |  round((-CAST(s_cond AS DOUBLE)) / t_pairs, 4) AS h_cond,
+       |  round(hu, 4) AS h_unigram, round(hc, 4) AS h_cond,
        |  TRUE AS within_bound
-       |FROM sp CROSS JOIN su""".stripMargin
+       |FROM h""".stripMargin
 
   /** Skip-gram context radius and the floor that keeps the pair table
     * reportable (the engine computes all pairs; only pairs this frequent
@@ -1391,23 +1398,7 @@ object TextAnalysis {
   }
 
   val qPplBucketOracle: String =
-    s"""WITH t AS (
-      |  SELECT doc_id, $toksSql AS toks
-      |  FROM documents
-      |),
-      |bg AS (
-      |  SELECT doc_id, t.toks[i] || ' ' || t.toks[i+1] AS bigram, t.toks[i] AS w1
-      |  FROM t, unnest(range(1, len(toks))) AS u(i)
-      |  WHERE len(toks) >= 2
-      |),
-      |bc AS (SELECT bigram, count(*) AS c2 FROM bg GROUP BY bigram),
-      |uc AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY w1),
-      |lm AS (
-      |  SELECT bg.doc_id, count(*) AS n_bigrams,
-      |    ${graft.functions.NumFns.stableMeanSql("ln(bc.c2 / CAST(uc.c1 AS DOUBLE))", "count(*)", 4)} AS avg_logp
-      |  FROM bg JOIN bc USING (bigram) JOIN uc USING (w1)
-      |  GROUP BY bg.doc_id
-      |),
+    s"""WITH $bigramScoresSql,
       |scored AS (
       |  SELECT lm.doc_id, lm.n_bigrams, lm.avg_logp, d.source
       |  FROM lm JOIN documents d USING (doc_id)
@@ -1922,13 +1913,7 @@ object TextAnalysis {
     * post-aggregate join moves ≤ 20 rows.
     */
   def qKneserNey(s: SparkSession, dir: String): DataFrame = {
-    val bg = Tables.documents(s, dir)
-      .select(TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(explode(TextFns.adjacentPairs(col("toks"))).as("b"))
-      .select(col("b.0").as("w1"), col("b.1").as("w2"))
-      .localCheckpoint()
-    val pairC = bg.groupBy(col("w1"), col("w2"))
+    val pairC = bigramEvents(Tables.documents(s, dir)).groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
       .localCheckpoint() // feeds top-20, c1, both continuation counts
     val top = pairC.orderBy(col("c12").desc, col("w1"), col("w2")).limit(20)
@@ -1951,14 +1936,7 @@ object TextAnalysis {
   }
 
   val qKneserNeyOracle: String =
-    s"""WITH t AS (
-       |  SELECT ${TextFns.toksSql} AS toks FROM documents
-       |),
-       |bg AS (
-       |  SELECT toks[i] AS w1, toks[i+1] AS w2
-       |  FROM t, unnest(range(1, len(toks))) AS u(i)
-       |  WHERE len(toks) >= 2
-       |),
+    s"""WITH $bigramEventsSql,
        |pc AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY w1, w2),
        |top AS (
        |  SELECT w1, w2, c12 FROM pc
@@ -2128,10 +2106,7 @@ object TextAnalysis {
     * → per-doc bits → one 5-number moment row. Scan-side at any scale.
     */
   def qCochranQ(s: SparkSession, dir: String): DataFrame = {
-    val toks = TextFns.tokens(col("text"))
-    val base = Tables.documents(s, dir)
-      .select(toks.as("toks"))
-      .filter(size(col("toks")) > 0)
+    val base = tokenDocs(s, dir)
       .select(
         when(TextFns.stopCount(col("toks")) > 0, 1L)
           .otherwise(0L).as("c1"),
@@ -2211,9 +2186,7 @@ object TextAnalysis {
     * on ratios of exact integers.
     */
   def qFleissKappa(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-      .select(col("text"), TextFns.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
+    val docs = tokenDocs(s, dir, "text")
     val votes = docs.select(
       (when(TextFns.stopScore(col("toks"), 1000) >= 100L, 1L).otherwise(0L)
         + when(size(col("toks")) >= 50, 1L).otherwise(0L)
@@ -2278,11 +2251,7 @@ object TextAnalysis {
     * where a long product wraps). No vocab-rank window anywhere.
     */
   def qYuleK(s: SparkSession, dir: String): DataFrame = {
-    val cc = Tables.documents(s, dir)
-      .select(explode(TextFns.tokens(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("m"))
-      .groupBy(col("m")).agg(count(lit(1)).as("vm"))
-    cc.agg(
+    countOfCounts(s, dir).agg(
       sum(col("m").cast(Dec0) * col("vm")).as("n_tok"),
       sum(col("vm")).as("n_types"),
       sum(col("m").cast(Dec0) * col("m") * col("vm")).as("s2"))
@@ -2294,11 +2263,7 @@ object TextAnalysis {
   }
 
   val qYuleKOracle: String =
-    s"""WITH toks AS (
-       |  SELECT unnest(${TextFns.toksSql}) AS word FROM documents
-       |),
-       |wc AS (SELECT word, count(*) AS m FROM toks GROUP BY word),
-       |cc AS (SELECT m, count(*) AS vm FROM wc GROUP BY m),
+    s"""WITH $countOfCountsSql,
        |ag AS (
        |  SELECT CAST(sum(CAST(m AS HUGEINT) * vm) AS BIGINT) AS n_tokens,
        |    CAST(sum(vm) AS BIGINT) AS n_types,
@@ -2378,11 +2343,7 @@ object TextAnalysis {
     * ratios.
     */
   def qSpeciesRichness(s: SparkSession, dir: String): DataFrame = {
-    val cc = Tables.documents(s, dir)
-      .select(explode(TextFns.tokens(col("text"))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("m"))
-      .groupBy(col("m")).agg(count(lit(1)).as("vm"))
-    cc.agg(
+    countOfCounts(s, dir).agg(
       sum(col("m").cast(Dec0) * col("vm")).cast("long").as("n_tokens"),
       sum(col("vm")).as("v"),
       sum(when(col("m") === 1, col("vm")).otherwise(0L)).as("v1"),
@@ -2401,11 +2362,7 @@ object TextAnalysis {
   }
 
   val qSpeciesRichnessOracle: String =
-    s"""WITH toks AS (
-       |  SELECT unnest(${TextFns.toksSql}) AS word FROM documents
-       |),
-       |wc AS (SELECT word, count(*) AS m FROM toks GROUP BY word),
-       |cc AS (SELECT m, count(*) AS vm FROM wc GROUP BY m),
+    s"""WITH $countOfCountsSql,
        |ag AS (
        |  SELECT CAST(sum(CAST(m AS HUGEINT) * vm) AS BIGINT) AS n_tokens,
        |    CAST(sum(vm) AS BIGINT) AS v,

@@ -20,7 +20,9 @@ object CloudOptimize {
 
   /** Rewrite `df` at `outPath` partitioned by `partitionCols`, sorted
     * within partitions by `sortCols`, targeting `maxRecordsPerFile` rows
-    * per file (the small-file / giant-file guard).
+    * per file (the small-file / giant-file guard). The write overwrites
+    * what is at `outPath` (only the partitions it writes, with
+    * `partitionOverwriteMode=dynamic` in `extraOptions`).
     *
     * Skew: the shuffle is `repartitionByRange(partitionCols ++ sortCols)`
     * — NOT hash-by-partition-value, which puts ALL of a hot date in one
@@ -43,7 +45,6 @@ object CloudOptimize {
       partitionCols: Seq[String],
       sortCols: Seq[String],
       maxRecordsPerFile: Long = 1000000L,
-      mode: SaveMode = SaveMode.Overwrite,
       numPartitions: Option[Int] = None,
       extraOptions: Map[String, String] = Map.empty,
       format: String = "parquet"): Unit = {
@@ -70,7 +71,7 @@ object CloudOptimize {
           n => df.repartition(n, keys: _*))
       } else df
     sorted.write
-      .mode(mode)
+      .mode(SaveMode.Overwrite)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .options(extraOptions)
       .partitionBy(partitionCols: _*)

@@ -57,7 +57,10 @@ object SynthSource {
   val Categories: Array[String] =
     Array("alpha", "beta", "gamma", "delta", "epsilon")
 
-  /** splitmix64 finalizer — the standard 64-bit avalanche mix. */
+  /** splitmix64 finalizer — the standard 64-bit avalanche mix. Pure
+    * integer arithmetic, no library hash whose seed could differ between
+    * runs; the streaming HLL takes its index and rank bits from it too.
+    */
   def mix(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.sources.Tables
+import graft.sources.{SynthSource, Tables}
 
 /** Structured Streaming mirror of the batch event operators
   * (Relational.qEventsHourly / qSessionize): the same logical
@@ -152,7 +152,6 @@ object EventPipeline {
             batch.toDF().withColumn("ingest_batch", lit(batchId)),
             outPath,
             partitionCols = Seq("ingest_batch", "event_date"), sortCols = Seq("ts"),
-            mode = org.apache.spark.sql.SaveMode.Overwrite,
             extraOptions = Map("partitionOverwriteMode" -> "dynamic"))
       }
       .start()
@@ -311,17 +310,6 @@ object EventPipeline {
   /** Window width in days (matches the batch op). */
   val WauWindow = 7
 
-  /** splitmix64 — the deterministic 64-bit avalanche both the index and
-    * rank bits come from. Pure integer arithmetic, no library hash whose
-    * seed could differ between runs.
-    */
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   /** Streaming trailing-[[WauWindow]]-day distinct actives — the
     * unbounded-input form of the exact batch
     * [[graft.operators.Temporal.qSlidingDistinct]]: each (day, user)
@@ -347,7 +335,7 @@ object EventPipeline {
         case (anchor, vs, state: GroupState[HllState]) =>
           val regs = state.getOption.map(_.regs).getOrElse(new Array[Byte](m))
           vs.foreach { v =>
-            val h = mix64(v.user_id)
+            val h = SynthSource.mix(v.user_id)
             val idx = (h >>> (64 - WauHllP)).toInt
             val rank = (java.lang.Long.numberOfLeadingZeros(h << WauHllP | 1L)
               + 1).toByte

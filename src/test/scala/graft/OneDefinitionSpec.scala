@@ -17,6 +17,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * how an oracle drifts from its engine twin, so this scans `src/main`
   * for the spellings each definition replaced. A genuine variant stays
   * at its call site and is named, with its reason, beside its row.
+  *
+  * The rows name derivations someone found; the window scan catches a
+  * copy of one nobody has named yet. It trims every line of every
+  * `src/main` source and slides a 4-line window over each file: a
+  * window counts when none of its lines starts a comment line (`*`, a
+  * doc-comment opener or `//`), an `import` or a `package` clause, and
+  * its lines add up to at least 100 characters. A window found at two or more places, in one file or
+  * in two, fails the scan, which prints each such window with its
+  * `file:line` sites. The fix is a helper the sites call (and its SQL
+  * twin the oracles splice), not a reworded copy.
   */
 class OneDefinitionSpec extends AnyFunSuite {
 
@@ -59,18 +69,18 @@ class OneDefinitionSpec extends AnyFunSuite {
     ("the token character total is only TextFns.wordChars and its SQL twin",
       """\+ length\(|transform\(col\("toks"\), t => length|list_transform\(toks, x -> len""",
       Seq("TextFns.scala", "TextFns.scala")),
-    // Temporal.dailyCents and its twin; the other keyed or filtered day
-    // series stay where they are, each engine spelling beside its oracle:
+    // Temporal.dailyCents and its twin (Temporal.orderDates keys the
+    // same days by date); the other keyed or filtered day series stay
+    // where they are, each engine spelling beside its oracle:
     // regionDailyCents, qMaxConcurrent's spans, qTheilSen's one year,
-    // qPermutationTest's two years, qTrending's (day, part) cells and the
-    // date-keyed revenue of qGrubbsOutlier, qPageTrend and qSeasonalMk
+    // qPermutationTest's two years and qTrending's (day, part) cells
     ("the order-day series is spelled only at dailyCents and the named day series",
       """datediff\(to_date\(col\("o_orderdate"\)\), lit\("1992-01-01"\)\)""" +
         """|o_orderdate::DATE - DATE '1992-01-01'""" +
         """|DATE '1992-01-01',\s*\|?\s*(?:CAST\(o_orderdate AS DATE\)|o_orderdate::DATE)""" +
         """|groupBy\(to_date\(col\("o_orderdate"\)\)\.as\("d"\)\)\s*\.agg\(sum""" +
         """|CAST\(o_orderdate AS DATE\) AS d,\s*\|\s*CAST\(sum""",
-      Seq.fill(12)("Temporal.scala") ++ Seq.fill(4)("Profiling.scala")
+      Seq.fill(8)("Temporal.scala") ++ Seq.fill(2)("Profiling.scala")
         ++ Seq.fill(2)("Behavioral.scala")),
     ("the nation co-trade edge is only Graph.coTrade and its SQL twin",
       """least\(col\("nc"\)|least\(c_nationkey""", Seq("Graph.scala", "Graph.scala")),
@@ -160,4 +170,19 @@ class OneDefinitionSpec extends AnyFunSuite {
       }
       assert(sites.sorted === expected.sorted)
     }
+
+  test("no 4-line window of src/main is written at two places") {
+    val skip = Seq("*", "/**", "//", "import", "package")
+    val windows = for {
+      (file, text) <- sources
+      lines = text.split("\n", -1).map(_.trim)
+      i <- 0 until lines.length - 3
+      w = lines.slice(i, i + 4).toSeq
+      if !w.exists(l => skip.exists(l.startsWith)) && w.map(_.length).sum >= 100
+    } yield w -> s"$file:${i + 1}"
+    val copies = windows.groupBy(_._1).filter(_._2.size > 1).toSeq.sortBy(_._2.head._2)
+    if (copies.nonEmpty) fail(copies.map { case (w, sites) =>
+      sites.map(_._2).mkString(" ") + w.map("\n    | " + _).mkString
+    }.mkString(s"${copies.size} windows written more than once:\n", "\n", ""))
+  }
 }

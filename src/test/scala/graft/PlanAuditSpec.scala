@@ -5,10 +5,14 @@ package graft
   */
 class PlanAuditSpec extends SparkSpec {
 
+  /** Every query's frame, built once: building one runs its eager
+    * checkpoints, and each walk below reads the same frames.
+    */
+  private lazy val frames: Map[String, org.apache.spark.sql.DataFrame] =
+    SparkEntry.queries.map { case (name, fn) => name -> fn(spark, sf001) }
+
   private lazy val plans: Map[String, String] =
-    SparkEntry.queries.map { case (name, fn) =>
-      name -> fn(spark, sf001).queryExecution.executedPlan.toString
-    }
+    frames.map { case (name, df) => name -> df.queryExecution.executedPlan.toString }
 
   test("no query plans a CartesianProduct") {
     // unhinted cartesians explode at scale; the deliberate tiny
@@ -94,8 +98,8 @@ class PlanAuditSpec extends SparkSpec {
     // sized by construction). Assert the invariant for every query: any
     // partitionless logical Window must have an Aggregate below it.
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
-    SparkEntry.queries.foreach { case (name, fn) =>
-      fn(spark, sf001).queryExecution.optimizedPlan.foreach {
+    frames.foreach { case (name, df) =>
+      df.queryExecution.optimizedPlan.foreach {
         case w: LWindow if w.partitionSpec.isEmpty =>
           assert(w.child.collectFirst { case a: Aggregate => a }.isDefined,
             s"$name plans a single-partition Window over raw (non-aggregated) rows")
@@ -117,8 +121,8 @@ class PlanAuditSpec extends SparkSpec {
       case other => Seq(other)
     }
     var bounded = 0
-    SparkEntry.queries.foreach { case (name, fn) =>
-      fn(spark, sf001).queryExecution.optimizedPlan.foreach {
+    frames.foreach { case (name, df) =>
+      df.queryExecution.optimizedPlan.foreach {
         case Filter(cond, w: LWindow) if w.partitionSpec.nonEmpty =>
           val rns = w.windowExpressions.collect {
             case a @ Alias(WindowExpression(_: RowNumber, _), _) => a.toAttribute
@@ -156,8 +160,8 @@ class PlanAuditSpec extends SparkSpec {
       ("(?i)(custkey|user_?id|suppkey|partkey|orderkey|nationkey|doc_?id|" +
         "vec_?id|neighbor|event_id|session|^word$|^w$|^w1$|^w2$|^part$|" +
         "^cust$|^item$|^pa$|^pb$)").r
-    SparkEntry.queries.foreach { case (name, fn) =>
-      fn(spark, sf001).queryExecution.optimizedPlan.foreach {
+    frames.foreach { case (name, df) =>
+      df.queryExecution.optimizedPlan.foreach {
         case w: LWindow if w.partitionSpec.isEmpty =>
           val limited = w.child.collectFirst {
             case _: GlobalLimit => (); case _: LocalLimit => ()
@@ -286,8 +290,8 @@ class PlanAuditSpec extends SparkSpec {
       visit(n = p)
       out.toSeq
     }
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val plan = fn(spark, sf001).queryExecution.executedPlan
+    val offenders = frames.toSeq.flatMap { case (name, df) =>
+      val plan = df.queryExecution.executedPlan
       val broadcasts = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
       def visit(n: SparkPlan): Unit = {
         n match { case b: BroadcastExchangeExec => broadcasts += b; case _ => }
@@ -369,8 +373,8 @@ class PlanAuditSpec extends SparkSpec {
         unbounded.findFirstIn(r.relation.toString).isDefined
       case other => other.children.exists(growsWithData)
     }
-    val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val analyzed = fn(spark, sf001).queryExecution.analyzed
+    val offenders = frames.toSeq.flatMap { case (name, df) =>
+      val analyzed = df.queryExecution.analyzed
       val bad = scala.collection.mutable.ArrayBuffer.empty[String]
       analyzed.foreach {
         case h: ResolvedHint

@@ -11,6 +11,8 @@ import graft.{CuratePipeline, GraftSession, SparkEntry}
   * rather than transcript excerpts. Besides the rows of
   * `SparkEntry.table`, the name `curated_frame` dumps
   * `CuratePipeline.curatedFrame`, the curate_corpus workload's main plan.
+  * The session is `GraftSession.local()`, the one Verify and Bench run
+  * on, so `SPARK_GRAFT_CPUS` sets its core and partition count.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,8 +24,7 @@ object PlanDump {
       else SparkEntry.select(queryNames).sortBy(_.name).map(q => q.name -> q.engine)
     val frames = rows ++ curated.distinct.map(_ ->
       ((s: SparkSession, d: String) => CuratePipeline.curatedFrame(s, d)))
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     frames.foreach { case (name, frame) =>

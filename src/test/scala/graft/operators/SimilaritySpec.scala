@@ -31,6 +31,36 @@ class SimilaritySpec extends SparkSpec {
     assert(got === Seq(Row(0L, 31L, 1, 1.0), Row(0L, 40L, 2, 1.0), Row(0L, 12L, 3, 0.7071)))
   }
 
+  test("a tie at the kNN vote cutoff keeps the smaller neighbor id and ranks have no gap") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    def vec(x: Double, y: Double) = Seq(x, y) ++ Seq.fill(Similarity.Dims - 2)(0.0)
+    // query 0; 31/40 tie at ranks 1-2, 12/21 at 3-4, 7/13 at the cutoff KnnK = 5
+    val corpus = Seq(0L -> vec(1, 0), 40L -> vec(2, 0), 21L -> vec(1, 1),
+        31L -> vec(1, 0), 13L -> vec(0, 1), 12L -> vec(3, 3), 7L -> vec(0, 2))
+      .toDF("vec_id", "v")
+      .withColumn("label", col("vec_id") % 2)
+      .withColumn("nsq", graft.functions.VectorFns.normSq(col("v")))
+    assert(Similarity.KnnK == 5)
+    val got = Similarity.knnNeighbors(corpus).filter(col("query_id") === 0L)
+      .select("neighbor_id", "rank", "sim").orderBy("rank").collect().toSeq
+    assert(got === Seq(Row(31L, 1, 1.0), Row(40L, 2, 1.0), Row(12L, 3, 0.7071),
+      Row(21L, 4, 0.7071), Row(7L, 5, 0.0)))
+  }
+
+  test("a tie at the probe curve's top-3 cutoff keeps the smaller neighbor id and ranks have no gap") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    // query 0: 3/5 tie at ranks 1-2, 2/8 at the cutoff 3; query 1 ranks alone
+    val cand = Seq((0L, 5L, 0.9), (0L, 3L, 0.9), (0L, 8L, 0.5), (0L, 2L, 0.5),
+        (0L, 1L, 0.1), (1L, 4L, 0.3))
+      .toDF("query_id", "neighbor_id", "sim")
+    val got = Similarity.top3(cand).select("query_id", "neighbor_id", "rk")
+      .orderBy("query_id", "rk").collect().toSeq
+    assert(got === Seq(Row(0L, 3L, 1), Row(0L, 5L, 2), Row(0L, 2L, 3), Row(1L, 4L, 1)))
+  }
+
   test("LSH ANN never returns a cross-bucket pair and sims match brute force") {
     val lsh = Similarity.qAnnLsh(spark, sf001).collect()
     assert(lsh.nonEmpty)

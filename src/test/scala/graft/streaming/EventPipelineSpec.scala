@@ -165,7 +165,6 @@ class EventPipelineSpec extends SparkSpec {
       replayRows.withColumn("ingest_batch", lit(replayId)),
       out,
       partitionCols = Seq("ingest_batch", "event_date"), sortCols = Seq("ts"),
-      mode = org.apache.spark.sql.SaveMode.Overwrite,
       extraOptions = Map("partitionOverwriteMode" -> "dynamic"))
     assert(spark.read.parquet(out).count() == source.count(),
       "batch replay duplicated rows — sink is not idempotent")
