@@ -154,6 +154,18 @@ object NumFns {
       s" - 0.284496736) * $t + 0.254829592) * $t * exp(-($x * $x)))"
   }
 
+  /** Wilson–Hilferty normal z of a chi-square statistic on `k` degrees
+    * of freedom, from its ratio r = χ²/k:
+    * (r^(1/3) − (1 − 2/(9k))) / sqrt(2/(9k)).
+    */
+  def wilsonHilfertyZ(r: Column, k: Column): Column =
+    (pow(r, 1.0 / 3.0) - (lit(1.0) - lit(2.0) / (lit(9.0) * k))) /
+      sqrt(lit(2.0) / (lit(9.0) * k))
+
+  /** SQL twin of [[wilsonHilfertyZ]] — same literals, same association. */
+  def wilsonHilfertyZSql(r: String, k: String): String =
+    s"(pow($r, 1.0 / 3.0) - (1.0 - 2.0 / (9.0 * $k))) / sqrt(2.0 / (9.0 * $k))"
+
   /** Standard normal CDF from the SAME A&S literal as
     * [[normTwoSidedP]]: Φ(z) = 1 − p/2 for z ≥ 0, p/2 otherwise.
     */

@@ -11,6 +11,15 @@ import org.apache.spark.sql.functions._
   */
 object VectorFns {
 
+  /** Every pair of elements of `arr` taken in array order, (arr[i],
+    * arr[j]) with i < j, as `pair(x, y)`: element i pairs with every
+    * later element (slice is 1-based, so it starts at i + 2). A sorted
+    * distinct array yields each unordered pair once.
+    */
+  def orderedPairs(arr: Column)(pair: (Column, Column) => Column): Column =
+    flatten(transform(arr, (x, i) =>
+      transform(slice(arr, i + lit(2), size(arr)), y => pair(x, y))))
+
   /** Cast an Array[Float] embedding column to Array[Double]. */
   def asDouble(v: Column): Column = v.cast("array<double>")
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.NumFns
+import graft.functions.{NumFns, VectorFns}
 import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
@@ -376,10 +376,10 @@ object Behavioral {
     * through one task's sort) and come back as a broadcast 1-row
     * frame; segment assignment is a scan-side comparison; the final
     * grid is segment-count-sized. The per-customer frame feeds both
-    * the threshold derivation and the assignment, so it is
-    * materialized once (localCheckpoint — the repo's reused-derived-
-    * frame discipline). Exactness: recency/frequency are integers,
-    * spend is a DECIMAL-cast sum rounded to cents, thresholds are
+    * the threshold derivation and the assignment; both read its one
+    * aggregation exchange (exchange reuse). Exactness:
+    * recency/frequency are integers, spend is a DECIMAL-cast sum
+    * rounded to cents, thresholds are
     * engine-rounded at 4 digits, and the strict `>` quartile rule
     * compares identical doubles on both engines.
     */
@@ -396,7 +396,6 @@ object Behavioral {
         datediff(col("d_ref"), col("d_last")).cast("long").as("recency"),
         col("frequency"), col("monetary"))
       .withColumn("grp", lit("all"))
-      .localCheckpoint() // feeds thresholds AND segment assignment
     val th = Analytics.exactPercentilesMulti(rfm, "grp", Seq(
       "recency" -> Seq(0.25 -> "r25", 0.5 -> "r50", 0.75 -> "r75"),
       "frequency" -> Seq(0.25 -> "f25", 0.5 -> "f50", 0.75 -> "f75"),
@@ -603,13 +602,10 @@ object Behavioral {
     val marg = byOrder
       .select(explode(col("bs")).as("brand"))
       .groupBy(col("brand")).agg(count(lit(1)).as("c"))
-    // ordered pairs (a < b) from the sorted array: for element i, pair it
-    // with every later element — slice is 1-based, so start at i+2
-    val pairComb = flatten(transform(col("bs"), (x, i) =>
-      transform(slice(col("bs"), i + lit(2), size(col("bs"))),
-        y => struct(x.as("brand_a"), y.as("brand_b")))))
+    // ordered pairs (a < b) from the sorted array
     val pairs = byOrder
-      .select(explode(pairComb).as("p"))
+      .select(explode(VectorFns.orderedPairs(col("bs"))((x, y) =>
+        struct(x.as("brand_a"), y.as("brand_b")))).as("p"))
       .groupBy(col("p.brand_a").as("brand_a"), col("p.brand_b").as("brand_b"))
       .agg(count(lit(1)).as("c_ab"))
       .filter(col("c_ab") >= BasketMinCooc)
@@ -934,7 +930,6 @@ object Behavioral {
         floor(datediff(to_date(col("ts")), lit("2024-01-01")) / 7)
           .cast("long").as("week"))
       .distinct()
-      .localCheckpoint() // presence frame feeds both class passes
     val w = Window.partitionBy(col("user_id")).orderBy(col("week"))
     val classed = pres
       .withColumn("first_week", min(col("week")).over(
@@ -1038,7 +1033,6 @@ object Behavioral {
           && col("v_us") >= col("p_us") - lit(widest), "left")
       .groupBy(col("purchase_id"))
       .agg(min(col("p_us") - col("v_us")).as("min_lag_us"))
-      .localCheckpoint() // one row per purchase, feeds every window term
     val windowCounts = AttribSweepHours.map { h =>
       sum(when(col("min_lag_us") <= h * 3600L * 1000000L, 1L)
         .otherwise(0L)).as(s"n_${h}h")
@@ -1145,14 +1139,12 @@ object Behavioral {
       .select(coalesce(col("mask"), lit(0L)).as("mask"), col("conv"))
     val cells = users.groupBy(col("mask"))
       .agg(sum(col("conv")).as("n_conv"))
-      .localCheckpoint() // ≤16 rows
     val subsets = cells.sparkSession.range(16).select(col("id").as("s"))
     val v = subsets.join(broadcast(cells),
         (col("mask").bitwiseAND(col("s")) === col("mask")) &&
           col("mask") =!= 0, "left")
       .groupBy(col("s"))
       .agg(coalesce(sum(col("n_conv")), lit(0L)).as("v"))
-      .localCheckpoint() // 16 rows
     val channels = cells.sparkSession.range(4).select(col("id").as("ch"))
     val pairs = channels.join(broadcast(v.select(col("s"), col("v"))),
         col("s").bitwiseAND(expr("shiftleft(CAST(1 AS BIGINT), ch)")) === 0)
@@ -1333,7 +1325,6 @@ object Behavioral {
     val act = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).as("d"))
     val first = act.groupBy(col("user_id")).agg(min(col("d")).as("cohort_d"))
-      .localCheckpoint()
     val maxD = act.agg(max(col("d")).as("max_d"))
     val ks = s.range(1, HalflifeMaxOffset + 1).select(col("id").as("k"))
     val eligible = first.crossJoin(broadcast(maxD))
@@ -1608,15 +1599,13 @@ object Behavioral {
   def qSessionGapSensitivity(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    // localCheckpoint: the three threshold aggregates below each consume
-    // this frame — without it they would re-derive the events scan + the
-    // user-partitioned lag window (the shared-sliver discipline of
-    // qDedupThresholdSweep), contradicting "three parameters, one scan"
+    // the three threshold aggregates below each consume this frame;
+    // they share the user-partitioned lag window's exchange, so the
+    // events scan runs once: "three parameters, one scan"
     val gapped = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
       .withColumn("prev", lag(col("us"), 1).over(w))
       .select(col("us"), col("prev")) // 2 longs/row is all the sweeps read
-      .localCheckpoint()
     val perGap = SessionGapsMin.map { g =>
       val gapUs = g * 60L * 1000000L
       gapped.agg(

@@ -1138,7 +1138,6 @@ object Curation {
         sqrt((col("nh") * col("s2") - col("s1") * col("s1")).cast("double")
           / (col("nh").cast("double") * (col("nh") - 1).cast("double")))
           .as("sigma"))
-      .localCheckpoint() // dimension-sized; feeds totals AND the report
     val tot = strata.agg(sum(col("nh")).as("n"),
       sum((col("nh") * col("sigma")).cast(Dec12)).as("snsig"),
       sum((col("nh") * col("sigma") * col("sigma")).cast(Dec12)).as("snsig2"))

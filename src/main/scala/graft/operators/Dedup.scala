@@ -62,12 +62,16 @@ object Dedup {
     * fingerprint table before the pair-generation stages.
     */
   private def shingled(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
+    shingleSets(Tables.documents(s, dir)).localCheckpoint()
+
+  /** (doc_id, hs) of any documents frame, batch or micro-batch: the
+    * distinct 28-bit-hashed 3-shingle set of each document of ≥ 3 tokens.
+    */
+  private def shingleSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"),
         array_distinct(transform(TextFns.shingles(col("t")), TextFns.hash28(_))).as("hs"))
-      .localCheckpoint()
 
   private val shingledSql =
     s"""t AS (SELECT doc_id, $toksSql AS t FROM documents),
@@ -82,11 +86,7 @@ object Dedup {
     * projection per row; no state, no shuffle.
     */
   def bandIndexOf(docs: DataFrame): DataFrame =
-    bandFrame(docs
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"),
-        array_distinct(transform(TextFns.shingles(col("t")), TextFns.hash28(_))).as("hs")))
+    bandFrame(shingleSets(docs))
 
   private def jaccardOut: Column =
     round(TextFns.jaccard(col("hs_a"), col("hs_b")), 6)
@@ -848,11 +848,9 @@ object Dedup {
     * buffered window partition).
     */
   def qSoftDedup(s: SparkSession, dir: String): DataFrame = {
-    // r12 (guide §1.2): clusters feeds BOTH the size aggregate and the
-    // weight join; without the checkpoint the documents⋈labels prefix
-    // (and its sort) planned and ran twice
+    // clusters feeds BOTH the size aggregate and the weight join, which
+    // share its exchange (exchange reuse)
     val clusters = qDedupCluster(s, dir).select(col("doc_id"), col("cluster"))
-      .localCheckpoint()
     val sizes = clusters.groupBy(col("cluster")).agg(count(lit(1)).as("n_cluster"))
     clusters.join(sizes, Seq("cluster"))
       .select(col("doc_id"), col("cluster"), col("n_cluster"),
@@ -1311,7 +1309,6 @@ object Dedup {
       .filter(size(col("t")) >= PrefixTokens)
       .select(col("doc_id"),
         TextFns.hash60(concat_ws(" ", slice(col("t"), 1, PrefixTokens))).as("head_h"))
-      .localCheckpoint()
     t.as("a").join(t.as("b").hint("shuffle_hash"),
         col("a.head_h") === col("b.head_h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -1351,7 +1348,6 @@ object Dedup {
         concat_ws(" ", slice(col("t"), 1, PrefixTokens))).as("fp"),
         col("source"))
       .distinct()
-      .localCheckpoint()
     pres.as("a")
       .join(pres.as("b").hint("shuffle_hash"),
         col("a.fp") === col("b.fp") && col("a.source") < col("b.source"))
@@ -1580,8 +1576,9 @@ object Dedup {
     * near-dup bar actually delete?" policy table (q_lsh_tune picks
     * band geometry for a GIVEN threshold; this shows what the
     * threshold itself costs), the dedup twin of
-    * q_session_gap_sensitivity. Shape: the blocked pair sliver is
-    * scored once; each threshold is a conditional count, and affected
+    * q_session_gap_sensitivity. Shape: the blocked join sides are
+    * shuffled once and every threshold branch reads those exchanges
+    * (exchange reuse); each threshold is a conditional count, and affected
     * docs stack (threshold, doc) pairs → distinct → count over the
     * sliver — nothing rescans the corpus.
     */
@@ -1596,7 +1593,6 @@ object Dedup {
     val scored = a.join(b.hint("shuffle_hash"), Seq("mn", "mx"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"), jaccardOut.as("j"))
-      .localCheckpoint() // pair sliver; feeds all thresholds
     val ths = SweepThresholds
     val edges = ths.map { t =>
       scored.filter(col("j") >= t)

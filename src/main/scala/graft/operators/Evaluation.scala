@@ -237,7 +237,6 @@ object Evaluation {
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("seg"), col("o_orderpriority").as("prio"))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint() // feeds both margins and the contribution join
     val rowTot = cells.groupBy(col("seg")).agg(sum(col("o")).as("r"))
     val colTot = cells.groupBy(col("prio")).agg(sum(col("o")).as("c"))
     val tot = cells.agg(sum(col("o")).as("n"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.NumFns
+import graft.functions.{NumFns, VectorFns}
 import graft.functions.NumFns.{Dec0, Dec12}
 import graft.sources.Tables
 
@@ -208,13 +208,14 @@ object Graph {
     * links two nations when any order ships a supplier's part of one to
     * a customer of the other). The classic clustering-coefficient
     * numerator, computed the scalable way: the [[coTrade]] edge list is
-    * MATERIALIZED once (the fact⋈fact derivation must not run
-    * three times), then [[triangles]] enumerates each triangle once.
+    * derived once (its three readers share the distinct's exchange, so
+    * the fact⋈fact derivation runs once), then [[triangles]] enumerates
+    * each triangle once.
     * At 100 TB the edge frame is the persisted artifact; the joins
     * shuffle bare (node, node) pairs.
     */
   def qTriangleCount(s: SparkSession, dir: String): DataFrame = {
-    val e = coTrade(s, dir).distinct().localCheckpoint()
+    val e = coTrade(s, dir).distinct()
     val nodes = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
       .distinct().agg(count(lit(1)).as("n_nodes"))
     val edges = e.agg(count(lit(1)).as("n_edges"))
@@ -455,15 +456,15 @@ object Graph {
   /** Global clustering coefficient of the nation co-trade graph —
     * 3·triangles / wedges, the "how cliquish is the trade network"
     * number beside the raw q_triangle_count: wedges = Σᵥ C(deg v, 2)
-    * from the [[coTrade]] edge list (materialized once, feeds
-    * the degree aggregate and the triangle join), triangles from
+    * from the [[coTrade]] edge list (derived once: the degree aggregate
+    * and the triangle join share its exchange), triangles from
     * [[triangles]]. Every input is an integer — the ratio is
     * the only double, computed once. Dimension-sized throughout (≤25
     * nation nodes) but the shape is the scalable one: degree counting
     * and wedge summing are one grouped pass at ANY node count.
     */
   def qClusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    val e = coTrade(s, dir).distinct().localCheckpoint()
+    val e = coTrade(s, dir).distinct()
     val deg = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
     val wedges = deg.agg(sum(col("d") * (col("d") - 1) / 2).as("wedges"))
@@ -567,24 +568,22 @@ object Graph {
     * usual L2 normalization (a global sqrt that would drag every score
     * through order-dependent float summation) is replaced by max-scaling
     * with the max as an exact integer, applied in one final projection.
-    * Shape: one distinct edge agg, materialized once (feeds hub agg and
-    * the scatter join), hub degrees joined back shuffle-on-supplier,
-    * authority agg shuffle-on-part — every exchange carries bare (key,
-    * long) pairs; top-25 via a single orderBy+limit over the part-sized
-    * score frame. At 100 TB the edge distinct is the only fact-sized
-    * pass.
+    * Shape: one distinct edge agg, run once (the hub agg and the
+    * scatter join share its exchange), hub degrees joined back
+    * shuffle-on-supplier, authority agg shuffle-on-part — every
+    * exchange carries bare (key, long) pairs; top-25 via a single
+    * orderBy+limit over the part-sized score frame. At 100 TB the edge
+    * distinct is the only fact-sized pass.
     */
   def qHits(s: SparkSession, dir: String): DataFrame = {
     val edges = Tables.lineitem(s, dir)
       .select(col("l_suppkey").as("supp"), col("l_partkey").as("part"))
       .distinct()
-      .localCheckpoint()
     val hub = edges.groupBy(col("supp"))
       .agg(count(lit(1)).as("hub_score"))
     val auth = edges.join(hub.hint("shuffle_hash"), Seq("supp"))
       .groupBy(col("part"))
       .agg(sum(col("hub_score")).as("auth_raw"))
-      .localCheckpoint()
     val mx = auth.agg(max(col("auth_raw")).as("mx"))
     auth.crossJoin(broadcast(mx))
       .select(col("part"), col("auth_raw"),
@@ -671,9 +670,8 @@ object Graph {
     // 10⁸-row aggregate is paid in full; one long key beats a two-long
     // struct on all three
     byCust
-      .select(col("wq"), explode(flatten(transform(col("sus"), (x, i) =>
-        transform(slice(col("sus"), i + lit(2), size(col("sus"))), y =>
-          shiftleft(x.cast("long"), 32).bitwiseOR(y.cast("long"))))))
+      .select(col("wq"), explode(VectorFns.orderedPairs(col("sus"))((x, y) =>
+          shiftleft(x.cast("long"), 32).bitwiseOR(y.cast("long"))))
         .as("pk"))
       .groupBy(col("pk"))
       .agg(count(lit(1)).as("n_common"), sum(col("wq")).as("aa"))
@@ -774,9 +772,8 @@ object Graph {
       .groupBy(col(keyCol).as("p"))
       .agg(sort_array(collect_set(col(itemCol))).as("sus"))
       .filter(size(col("sus")).between(2, CoreMaxFanout.toInt))
-      .select(explode(flatten(transform(col("sus"), (x, i) =>
-        transform(slice(col("sus"), i + lit(2), size(col("sus"))), y =>
-          struct(x.as("sa"), y.as("sb")))))).as("e"))
+      .select(explode(VectorFns.orderedPairs(col("sus"))((x, y) =>
+          struct(x.as("sa"), y.as("sb")))).as("e"))
       .select(col("e.sa").as("sa"), col("e.sb").as("sb")).distinct()
 
   /** SQL twin of [[pairEdgesFrame]]: CTEs `li` and `fan`, then `name`

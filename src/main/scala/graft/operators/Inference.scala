@@ -242,7 +242,6 @@ object Inference {
       .withColumn("r2",
         (col("cum2") - col("c2")).cast("double")
           + (col("c2") + 1).cast("double") / 2)
-      .localCheckpoint()
     val tot = ranked.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"),
       sum((col("c1") * col("rg")).cast(Dec12)).as("sr1"),
       sum((col("c2") * col("rg")).cast(Dec12)).as("sr2"))
@@ -419,7 +418,7 @@ object Inference {
       days.withColumn("t", row_number().over(w))
         .withColumn("cy", sum(col("y").cast(Dec0)).over(wc))) {
       (df, j) => df.withColumn(s"y$j", lag(col("y"), j).over(w))
-    }.localCheckpoint()
+    }
     val tot = lagged.agg(count(lit(1)).as("n"), sum(col("y").cast(Dec0)).as("sy"))
     val j = lagged.crossJoin(broadcast(tot))
       // exact numerator of n·S_t: n·Y_t − t·ΣY  (DECIMAL, no rounding);
@@ -729,7 +728,7 @@ object Inference {
       col("c_mktsegment").as("seg"), col("c_nationkey").as("nat"),
       floor(col("c_acctbal") / TCloseBand).cast("long").as("band"))
     val cls = cust.groupBy(col("seg"), col("nat"), col("band"))
-      .agg(count(lit(1)).as("cc")).localCheckpoint()
+      .agg(count(lit(1)).as("cc"))
     val glob = cls.groupBy(col("band")).agg(sum(col("cc")).as("gc"))
     val sizes = cls.groupBy(col("seg"), col("nat")).agg(sum(col("cc")).as("cn"))
     val tot = glob.agg(sum(col("gc")).as("gn"), count(lit(1)).as("m"))
@@ -1408,7 +1407,6 @@ object Inference {
       .select(floor(col("n_chars") / DcorBand).cast("long").as("x"),
         size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("y"))
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("w"))
-      .localCheckpoint()
     val pairs = cells.select(col("x").as("xa"), col("y").as("ya"),
         col("w").as("wa"))
       .crossJoin(broadcast(cells.select(col("x").as("xb"), col("y").as("yb"),

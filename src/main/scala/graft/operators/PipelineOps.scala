@@ -556,7 +556,6 @@ object PipelineOps {
     val lat = Tables.events(s, dir)
       .select(col("event_type"), col("event_id"), unix_micros(col("ts")).as("us"))
       .withColumn("late_us", max(col("us")).over(wArr) - col("us"))
-      .localCheckpoint()
     val pct = Analytics.exactPercentilesMulti(
       lat.select(col("event_type"), (col("late_us") / lit(1e6)).as("late_s")),
       "event_type",
@@ -610,12 +609,11 @@ object PipelineOps {
     // 10 count exchanges, 10 jobs. Now: lineitem's three keys melt
     // scan-side (unpivot = Expand, ONE lineitem pass), the three frames
     // union BEFORE the count aggregate (one (grp,k) exchange serves all
-    // five keys), and the ≤|distinct keys| count frame is
-    // localCheckpoint'd once so the percentile engine and the sum/max
-    // extremes both read the materialized sliver instead of replaying
-    // the scans. 3 fact scans, 1 count exchange, 2 jobs; identical
-    // counts feed the identical engine, so every output value is
-    // unchanged.
+    // five keys), and the percentile engine and the sum/max extremes
+    // both read the ≤|distinct keys| count frame through that one
+    // exchange (exchange reuse) instead of replaying the scans.
+    // Identical counts feed the identical engine, so every output value
+    // is unchanged.
     val keyed = Tables.lineitem(s, dir)
       .unpivot(
         Array.empty[Column],
@@ -630,7 +628,6 @@ object PipelineOps {
     val counts = keyed.groupBy(col("grp"), col("k"))
       .agg(count(lit(1)).as("c"))
       .select(col("grp"), col("c"))
-      .localCheckpoint() // ≤|distinct keys| rows; feeds stats AND extremes
     val stats = Analytics.exactPercentilesMulti(
       counts.select(col("grp"), col("c").cast("double").as("c")),
       "grp", Seq("c" -> Seq(0.5 -> "p50_rows", 0.99 -> "p99_rows")),
@@ -871,7 +868,6 @@ object PipelineOps {
           .cast("double").as("x"),
         sum(when(yr === 1997, col("o_totalprice")).otherwise(0.0).cast(Dec12))
           .cast("double").as("y"))
-      .localCheckpoint()
     val mom = perCust.agg(count(lit(1)).cast("double").as("n"), TextAnalysis.momentSums: _*)
       .select(
         (col("sx") / col("n")).as("mx"),

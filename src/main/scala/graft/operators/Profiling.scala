@@ -839,7 +839,6 @@ object Profiling {
       .select(col("bin"),
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-      .localCheckpoint() // bins-sized; read by totals and the term pass
     val tot = cells.agg(sum(col("n_ref")).as("tr"), sum(col("n_cur")).as("tc"))
     val terms = cells.crossJoin(broadcast(tot))
       .select(col("bin"), col("n_ref"), col("n_cur"),
@@ -850,7 +849,6 @@ object Profiling {
         NumFns.roundPortable(col("p_cur"), 6).as("p_cur"),
         ((col("p_cur") - col("p_ref")) * log(col("p_cur") / col("p_ref")))
           .cast(Dec12).as("term"))
-      .localCheckpoint() // read per-bin AND by the total fold
     val total = terms.agg(sum(col("term")).as("t"))
     terms.crossJoin(broadcast(total))
       .select(col("bin"), col("n_ref"), col("n_cur"), col("p_ref"), col("p_cur"),
@@ -1288,7 +1286,6 @@ object Profiling {
       .select(col("source"), col("doc_id"), col("n_chars"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= HillK)
-      .localCheckpoint() // feeds the x_(k) aggregate AND the ratio pass
     val xk = topk.groupBy(col("source"))
       .agg(min(col("n_chars")).as("xk"), count(lit(1)).as("k"))
     topk.join(broadcast(xk), Seq("source"))
@@ -1578,7 +1575,6 @@ object Profiling {
       .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01")).as("di"),
         (year(to_date(col("o_orderdate"))) === y2).as("late"))
       .agg(sum(NumFns.roundAwayLong(col("o_totalprice") * 100)).as("yc"))
-      .localCheckpoint() // ≤730 rows; read by the observed AND B perms
     def diffOf(df: DataFrame, armCol: Column): DataFrame =
       df.groupBy()
         .agg(
@@ -2000,11 +1996,8 @@ object Profiling {
         sum((col("l_discount") * col("l_quantity")).cast(Dec12)).as("sxy"),
         sum((col("l_discount") * col("l_discount")).cast(Dec12)).as("sxx"),
         sum((col("l_quantity") * col("l_quantity")).cast(Dec12)).as("syy"))
-      // r12 (guide §1.2): cells feeds BOTH the pooled broadcast and the
-      // per-stratum select; without a checkpoint the ≤3-row aggregate —
-      // and the full lineitem scan under it — planned twice (2 parquet
-      // scans in the before-plan, no exchange reuse). One scan now.
-      .localCheckpoint()
+      // cells feeds BOTH the pooled broadcast and the per-stratum
+      // select, which share its aggregation exchange: one lineitem scan
     def corr(n: Column, sx: Column, sy: Column, sxy: Column, sxx: Column,
         syy: Column): Column =
       (n.cast("double") * sxy.cast("double")
@@ -2797,7 +2790,6 @@ object Profiling {
       .groupBy(col("l_returnflag").as("flag"),
         month(to_date(col("l_shipdate"))).as("mode"))
       .agg(count(lit(1)).as("o"))
-      .localCheckpoint() // ≤36 rows; feeds margins AND the term fold
     val rowTot = cells.groupBy(col("flag")).agg(sum(col("o")).as("r"))
     val colTot = cells.groupBy(col("mode")).agg(sum(col("o")).as("c"))
     val tot = cells.agg(sum(col("o")).as("n"),
@@ -2965,8 +2957,7 @@ object Profiling {
     val (mean, vr) = (col("mean"), col("vr"))
     val disp = vr / mean
     val k = col("n").cast("double") - 1.0
-    val z = (pow(disp, 1.0 / 3.0) - (lit(1.0) - lit(2.0) / (lit(9.0) * k))) /
-      sqrt(lit(2.0) / (lit(9.0) * k))
+    val z = NumFns.wilsonHilfertyZ(disp, k)
     countMoments(days).select(col("n").as("n_days"),
       NumFns.roundPortable(mean, 4).as("mean_per_day"),
       NumFns.roundPortable(vr, 4).as("var_per_day"),
@@ -3067,8 +3058,7 @@ object Profiling {
        |${countMomentsSql("days")},
        |zz AS (
        |  SELECT n AS n_days, mean, vr, vr / mean AS disp,
-       |    (pow(vr / mean, 1.0 / 3.0) - (1.0 - 2.0 / (9.0 * k)))
-       |      / sqrt(2.0 / (9.0 * k)) AS z
+       |    ${NumFns.wilsonHilfertyZSql("vr / mean", "k")} AS z
        |  FROM (SELECT *, CAST(n AS DOUBLE) - 1.0 AS k FROM st)
        |)
        |SELECT n_days,
@@ -3095,7 +3085,6 @@ object Profiling {
       .groupBy(col("l_quantity").cast("long").as("q"))
       .agg(sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("cr"),
         sum(when(col("l_returnflag") =!= "R", 1L).otherwise(0L)).as("ck"))
-      .localCheckpoint() // ≤50 rows; feeds totals AND the term fold
     val tot = cells.agg(sum(col("cr")).as("nr"), sum(col("ck")).as("nk"))
     val bc = cells.crossJoin(broadcast(tot))
       .select(col("nr"), col("nk"),
@@ -3150,7 +3139,6 @@ object Profiling {
     val (sums, ties) = rankSums(Tables.documents(s, dir))
     val groups = sums
       .select(col("source"), col("n_j"), (col("r_j") / col("n_j")).as("rbar"))
-      .localCheckpoint() // ≤|sources| rows; feeds both pair sides
     val tot = groups.agg(sum(col("n_j")).as("nn"))
     val pairs = groups.select(col("source").as("src_a"),
         col("n_j").as("na"), col("rbar").as("ra"))

@@ -580,8 +580,8 @@ object RelationalPlus {
     * aggregate; the correlated MAX becomes a 1-row broadcast aggregate
     * joined back with an equality filter — ALL ties surface (the Q15
     * contract), no row_number cutoff. The revenue frame is fact-derived
-    * and reused for both the max and the equality probe, so it is
-    * localCheckpoint'd once.
+    * and read by both the max and the equality probe, which share its
+    * aggregation exchange, so it is computed once.
     */
   def qTopSupplier(s: SparkSession, dir: String): DataFrame = {
     val rev = Tables.lineitem(s, dir)
@@ -589,7 +589,6 @@ object RelationalPlus {
         col("l_shipdate") < to_timestamp(lit("1997-04-01")))
       .groupBy(col("l_suppkey").as("supplier_no"))
       .agg(NumFns.stableSum(revenue, 2).as("total_revenue"))
-      .localCheckpoint()
     val mx = rev.agg(max(col("total_revenue")).as("mx"))
     Tables.supplier(s, dir)
       .join(rev.hint("shuffle_hash"), col("s_suppkey") === col("supplier_no"))
@@ -732,9 +731,9 @@ object RelationalPlus {
   /** TPC-H Q11 shape (important stock): per-part value held by suppliers
     * of a nation subset, kept only where the part's share exceeds a
     * fixed fraction of the subset's total. The total is a 1-row
-    * aggregate over the SAME grouped frame — computed once from a
-    * localCheckpoint'd per-part aggregate (dimension-sized: ≤ |part|)
-    * and broadcast into the HAVING filter, so the fact table is scanned
+    * aggregate over the SAME grouped frame — the per-part aggregate
+    * (dimension-sized: ≤ |part|) whose exchange both readers share —
+    * broadcast into the HAVING filter, so the fact table is scanned
     * exactly once. Money goes through the exact-decimal sum: a share
     * threshold comparison on an order-dependent double sum would
     * admit/reject boundary parts nondeterministically. The cut is 2× the
@@ -749,7 +748,6 @@ object RelationalPlus {
       .join(broadcast(suppIn), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("l_partkey").as("ps_partkey"))
       .agg(NumFns.stableSum(col("l_extendedprice"), 2).as("value"))
-      .localCheckpoint()
     val total = perPart.agg(NumFns.stableSum(col("value"), 2).as("tot"),
       count(lit(1)).cast("double").as("np"))
     perPart.crossJoin(broadcast(total))

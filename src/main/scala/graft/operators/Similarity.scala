@@ -1592,7 +1592,6 @@ object Similarity {
   def qIvfBalance(s: SparkSession, dir: String): DataFrame = {
     val sizes = cellAssigned(s, dir)
       .groupBy(col("cell")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // ≤k rows; feeds totals AND the entropy fold
     val tot = sizes.agg(sum(col("c")).as("n"), count(lit(1)).as("k"),
       max(col("c")).as("maxc"))
     val ent = sizes.crossJoin(broadcast(tot))
@@ -1778,7 +1777,6 @@ object Similarity {
   def qClusterAgreement(s: SparkSession, dir: String): DataFrame = {
     val ct = cellAssigned(s, dir)
       .groupBy(col("cell"), col("label")).agg(count(lit(1)).as("nij"))
-      .localCheckpoint() // bounded contingency; feeds all four metrics
     val ai = ct.groupBy(col("cell")).agg(sum(col("nij")).as("a"))
     val bj = ct.groupBy(col("label")).agg(sum(col("nij")).as("b"))
     def c2(x: org.apache.spark.sql.Column) =

@@ -917,7 +917,6 @@ object Temporal {
 
   def qAutocorr(s: SparkSession, dir: String): DataFrame = {
     val days = dailyCents(s, dir).select(col("di"), col("yc").as("rev"))
-      .localCheckpoint() // dimension-sized; feeds both join sides x 7 lags
     val lags = s.range(1, AutocorrMaxLag + 1).select(col("id").cast("int").as("lag"))
     // aligned pairs: x at day di, y at day di - lag
     val aligned = days.select(col("di"), col("rev").as("x"))
@@ -984,7 +983,6 @@ object Temporal {
     */
   private def decomposed(s: SparkSession, dir: String): DataFrame = {
     val days = dailyCents(s, dir).select(col("di"), col("yc").as("rev"))
-      .localCheckpoint() // dimension-sized; feeds trend AND seasonal joins
     val w = Window.orderBy(col("di")).rowsBetween(-3, 3)
     val trended = days
       .withColumn("n7", count(lit(1)).over(w))
@@ -993,7 +991,6 @@ object Temporal {
       .select(col("di"), col("rev"),
         (col("s7") / lit(7.0)).as("trend"),
         ((col("di") + 3) % 7).as("dow")) // 1992-01-01 was a Wednesday
-      .localCheckpoint() // read by the seasonal agg AND the final join
     val seasonal = trended
       .groupBy(col("dow"))
       .agg((sum((col("rev") - col("trend")).cast(Dec12)).cast("double")
@@ -1123,7 +1120,6 @@ object Temporal {
     val f = decomposed(s, dir)
       .select(col("di"), col("dow"), col("rev"),
         (col("rev") - col("trend") - col("seasonal")).as("r"))
-      .localCheckpoint() // feeds the 1-row moment agg AND the flag scan
     val m = f.agg(count(lit(1)).as("n"),
       sum(col("r").cast(Dec12)).as("s_r"),
       sum((col("r") * col("r")).cast(Dec12)).as("q_r"))
@@ -1242,7 +1238,6 @@ object Temporal {
     */
   def qPettitt(s: SparkSession, dir: String): DataFrame = {
     val days = dailyCents(s, dir).select(col("di").cast("long").as("di"), col("yc").as("rev"))
-      .localCheckpoint() // feeds the rank cells AND the series walk
     // doubled midrank per VALUE cell: 2·r = 2·below + c + 1 (integer)
     val cells = days.groupBy(col("rev")).agg(count(lit(1)).as("c"))
     val wv = Window.orderBy(col("rev"))
@@ -1452,7 +1447,6 @@ object Temporal {
     */
   def qForecastEval(s: SparkSession, dir: String): DataFrame = {
     val days = dailyCents(s, dir).select(col("di"), col("yc").as("rev"))
-      .localCheckpoint()
     val models = s.range(0, 2).select(
       when(col("id") === 0, "naive_lag1").otherwise("seasonal_naive_lag7").as("model"),
       when(col("id") === 0, 1).otherwise(7).as("lag"))
@@ -1633,7 +1627,6 @@ object Temporal {
       .filter(col("n_days") === 7) // complete weeks only
       .select(col("week"),
         (col("wq").cast("double") / lit(7e6)).as("paa"))
-      .localCheckpoint() // weeks frame feeds moments AND the symbols
     val mom = weeks.agg(count(lit(1)).cast("double").as("n"),
         sum(col("paa").cast(Dec12)).cast("double").as("sx"),
         sum((col("paa") * col("paa")).cast(Dec12)).cast("double").as("sxx"))
@@ -3480,7 +3473,6 @@ object Temporal {
           + (col("di") - col("sx") / col("nL"))
           * (col("di") - col("sx") / col("nL"))
           / (col("sxx") - col("sx") * col("sx") / col("nL"))).as("h"))
-      .localCheckpoint() // day frame; feeds s² AND the ranked report
     val s2 = res.agg(
       (NumFns.stableSum(col("e") * col("e"), 6)
         / (max(col("nL")) - 2)).as("s2"))
@@ -3544,7 +3536,6 @@ object Temporal {
     */
   def qPotGpd(s: SparkSession, dir: String): DataFrame = {
     val days = dailyCents(s, dir)
-      .localCheckpoint() // day frame; feeds the threshold AND exceedances
     val cells = days.groupBy(col("yc")).agg(count(lit(1)).as("c"))
     val tot = cells.agg(sum(col("c")).as("n"))
     val wCum = Window.orderBy(col("yc"))
@@ -3639,7 +3630,6 @@ object Temporal {
     */
   def qEntropyRate(s: SparkSession, dir: String): DataFrame = {
     val cells = transitions(s, dir)
-      .localCheckpoint() // ≤|types|² rows; feeds marginals AND both folds
     val marg = cells.groupBy(col("from_type")).agg(sum(col("n")).as("ni"))
     val tot = cells.agg(sum(col("n")).as("nn"),
       countDistinct(col("from_type")).as("k"))
@@ -3697,7 +3687,6 @@ object Temporal {
     */
   def qBowkerTest(s: SparkSession, dir: String): DataFrame = {
     val cells = transitions(s, dir)
-      .localCheckpoint()
     val pairs = cells.filter(col("from_type") < col("to_type"))
       .select(col("from_type").as("a"), col("to_type").as("b"),
         col("n").as("nab"))
@@ -3713,8 +3702,7 @@ object Temporal {
       .agg(count(lit(1)).as("dof"), sum(col("t")).as("chi2"))
     val k = col("dof").cast("double")
     val c2 = col("chi2").cast("double")
-    val z = (pow(c2 / k, 1.0 / 3.0) - (lit(1.0) - lit(2.0) / (lit(9.0) * k))) /
-      sqrt(lit(2.0) / (lit(9.0) * k))
+    val z = NumFns.wilsonHilfertyZ(c2 / k, k)
     agg.select(col("dof"),
       NumFns.roundPortable(c2, 4).as("bowker_chi2"),
       NumFns.roundPortable(z, 4).as("z"))
@@ -3744,8 +3732,7 @@ object Temporal {
        |),
        |zz AS (
        |  SELECT dof, chi2,
-       |    (pow(chi2 / dof, 1.0 / 3.0) - (1.0 - 2.0 / (9.0 * dof)))
-       |      / sqrt(2.0 / (9.0 * dof)) AS z
+       |    ${NumFns.wilsonHilfertyZSql("chi2 / dof", "dof")} AS z
        |  FROM ag
        |)
        |SELECT dof,

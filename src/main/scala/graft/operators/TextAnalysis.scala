@@ -519,7 +519,6 @@ object TextAnalysis {
     val v = Tables.documents(s, dir)
       .select(col("source"), explode(TextFns.tokenSet(col("text"))).as("w"))
       .distinct()
-      .localCheckpoint()
     val sizes = v.groupBy(col("source")).agg(count(lit(1)).as("nv"))
     val inter = v.as("a")
       .join(v.as("b").hint("shuffle_hash"),
@@ -874,7 +873,6 @@ object TextAnalysis {
     */
   def qCramersV(s: SparkSession, dir: String): DataFrame = {
     val cm = confusion(qTextLangid(s, dir))
-      .localCheckpoint() // feeds the totals and the cell sweep
     val nt = cm.agg(sum(col("n")).as("nt"),
       countDistinct(col("lang")).as("kr"),
       countDistinct(col("predicted")).as("kc"))
@@ -953,7 +951,6 @@ object TextAnalysis {
     val cells = toks.groupBy(col("w"))
       .agg(sum((col("source") === "src0").cast("long")).as("yi"),
         sum((col("source") === "src1").cast("long")).as("yj"))
-      .localCheckpoint() // feeds the totals AND the scored frame
     val tot = cells.agg(sum(col("yi")).as("ni"), sum(col("yj")).as("nj"),
       sum(col("yi") + col("yj")).as("nall"))
     val alphaW = lit(LogOddsAlpha0) * (col("yi") + col("yj")).cast("double") /
@@ -1300,14 +1297,13 @@ object TextAnalysis {
     * ≤ [[SkipWindow]], so the pair stream is linear in corpus size,
     * shuffled once on doc_id (shuffle_hash, derived side never
     * broadcast); everything downstream is vocabulary²-bounded and
-    * count-floored. The positional frame is localCheckpoint'd because
-    * three consumers read it (pair join ×2, marginals).
+    * count-floored. The positional frame is read by both self-join
+    * sides, which share one corpus scan through exchange reuse.
     */
   def qWindowPmi(s: SparkSession, dir: String): DataFrame = {
     val tok = Tables.documents(s, dir)
       .select(col("doc_id"), posexplode(TextFns.tokens(col("text"))))
       .select(col("doc_id"), col("pos"), col("col").as("w"))
-      .localCheckpoint()
     val pairs = tok.as("a")
       .join(tok.as("b").hint("shuffle_hash"),
         col("a.doc_id") === col("b.doc_id") &&
@@ -1315,7 +1311,6 @@ object TextAnalysis {
           col("b.pos") <= col("a.pos") + SkipWindow)
       .groupBy(col("a.w").as("w_a"), col("b.w").as("w_b"))
       .agg(count(lit(1)).as("c_ab"))
-      .localCheckpoint() // totals + marginals + output all read it
     val t = pairs.agg(sum(col("c_ab")).as("t_pairs"))
     val left = pairs.groupBy(col("w_a").as("w")).agg(sum(col("c_ab")).as("cl"))
     val right = pairs.groupBy(col("w_b").as("w")).agg(sum(col("c_ab")).as("cr"))
@@ -1833,7 +1828,6 @@ object TextAnalysis {
     val cum = cc
       .withColumn("words_above", coalesce(sum(col("n_words")).over(w), lit(0L)))
       .withColumn("mass_above", coalesce(sum(col("mass")).over(w), lit(0L)))
-      .localCheckpoint() // cells frame feeds totals AND the straddle join
     val tot = cum.agg(sum(col("n_words")).as("n_vocab"),
       sum(col("mass")).as("total_mass"))
     val ns = cum.sparkSession.createDataFrame(

@@ -131,7 +131,6 @@ object Web {
     val hw = Window.orderBy(col("host"))
     val hostRank = hosts
       .withColumn("host_rank", row_number().over(hw) - 1)
-      .localCheckpoint() // ≤|hosts| rows: feeds the rank join + n_hosts
     val nHosts = hostRank.agg(count(lit(1)).as("n_hosts"))
     val uw = Window.partitionBy(col("host"))
       .orderBy(col("keeper"), col("canonical_url"))

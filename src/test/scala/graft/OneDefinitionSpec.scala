@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * langid confusion cells, the Mann–Kendall z and trend verdict, the
   * user-lifetime frame, the lag design, the OLS moment fit, the trigram
   * hashes, the catalog row with its validity rule, the MinHash
-  * permutation term and band candidates, the langid argmax and the ANN
-  * recall fold) and the
+  * permutation term and band candidates, the langid argmax, the ANN
+  * recall fold, the Wilson–Hilferty z and the in-array element pairs) and the
   * exact-decimal types are each written once per engine; operators and
   * oracles call or splice them. A copy spelled out at a call site is
   * how an oracle drifts from its engine twin, so this scans `src/main`
@@ -161,7 +161,11 @@ class OneDefinitionSpec extends AnyFunSuite {
       """col\("s_es"\) >= col\("s_de"\)|s_es >= s_de""",
       Seq("TextAnalysis.scala", "TextAnalysis.scala")),
     ("the ANN recall fold is only Similarity.recall and its SQL twin",
-      """\.as\("n_hit"\)|\) AS n_hit\b""", Seq("Similarity.scala", "Similarity.scala")))
+      """\.as\("n_hit"\)|\) AS n_hit\b""", Seq("Similarity.scala", "Similarity.scala")),
+    ("the Wilson-Hilferty z is only NumFns.wilsonHilfertyZ and its SQL twin",
+      """lit\(2\.0\) / \(lit\(9\.0\)|(?<!\d)2\.0 / \(9\.0 \*""", Seq.fill(4)("NumFns.scala")),
+    ("the in-array element pairs are only VectorFns.orderedPairs",
+      """slice\([^,]+, i \+ lit\(2\)""", Seq("VectorFns.scala")))
 
   for ((name, pattern, expected) <- definitions)
     test(name) {

@@ -607,4 +607,52 @@ class PlanAuditSpec extends SparkSpec {
     assert(lineitemStages == 1 || edgesReused,
       s"lineitem read in $lineitemStages stages and no reused edge exchange:\n$root")
   }
+
+  /** Queries whose derived frame is read by two or more branches of one
+    * plan and shared by Spark's own exchange reuse, with no eager
+    * localCheckpoint to materialize it while the frame is built.
+    */
+  private val reuseShared = Seq(
+    "q_triangle_count", "q_dedup_prefix", "q_source_vocab_overlap", "q_window_pmi",
+    "q_permutation_test", "q_gtest", "q_brunner_munzel", "q_kpss", "q_t_closeness",
+    "q_distance_corr", "q_hellinger", "q_neyman_allocation", "q_cooks_distance",
+    "q_pot_gpd", "q_entropy_rate", "q_bowker_test", "q_dunn_posthoc",
+    "q_session_gap_sensitivity", "q_ivf_balance", "q_cluster_agreement",
+    "q_rfm_segments", "q_chi2_independence", "q_autocorr", "q_psi_drift",
+    "q_seasonal_decompose", "q_forecast_eval", "q_watermark_audit", "q_join_skew",
+    "q_top_supplier", "q_important_stock", "q_cuped", "q_hits", "q_tail_index",
+    "q_shapley_attribution", "q_coverage_curve", "q_crawl_schedule",
+    "q_clustering_coeff", "q_dup_flow", "q_sax", "q_growth_accounting", "q_simpson",
+    "q_seasonal_strength", "q_retention_halflife", "q_seasonal_anomaly", "q_pettitt",
+    "q_log_odds", "q_cramers_v")
+
+  test("multi-reader frames are built without a job") {
+    // q_attribution_windows folds its per-purchase frame in one
+    // aggregate: one reader, no exchange to reuse
+    (reuseShared :+ "q_attribution_windows").foreach { q =>
+      frames(q) // warm: table schemas
+      assert(jobsDuring(SparkEntry.queries(q)(spark, sf001)) == 0,
+        s"$q runs a job while its frame is built")
+    }
+  }
+
+  test("multi-reader frames execute through a reused exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def reused(p: SparkPlan): Boolean = p.exists {
+      case _: ReusedExchangeExec => true
+      case a: AdaptiveSparkPlanExec => reused(a.executedPlan)
+      case q: QueryStageExec => reused(q.plan)
+      case n => n.subqueries.exists(reused)
+    }
+    // the shared frames of q_soft_dedup and q_dedup_threshold_sweep sit
+    // above a checkpoint that stays (the component loop, the shingle set)
+    (reuseShared ++ Seq("q_soft_dedup", "q_dedup_threshold_sweep")).foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf001)
+      df.collect()
+      assert(reused(df.queryExecution.executedPlan),
+        s"$q executes without a reused exchange:\n${df.queryExecution.executedPlan}")
+    }
+  }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,4 +24,15 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf001 = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; ListenerBusDrain(spark.sparkContext); n.get }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
 }

@@ -1,10 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.{SessionMemo, SparkSpec}
 
 /** The per-session table schema memo: a warm session loads a table
@@ -13,17 +8,6 @@ import graft.{SessionMemo, SparkSpec}
   * entries.
   */
 class TablesSpec extends SparkSpec {
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; ListenerBusDrain(spark.sparkContext); n.get }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
 
   /** A fresh directory holding a two-row documents table. */
   private def docsDir(): String = {
